@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import scala.util.control.NonFatal
 object Bench {
 
   /** The previous committed bench record, as far as cross-round
@@ -185,7 +186,7 @@ object Bench {
         // .count() lets Catalyst prune projections and EliminateSorts drop
         // sorts, benchmarking narrow queries as little more than a scan
         try { fn(spark, sfDir).write.mode("overwrite").format("noop").save() }
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           // a failed query must not score as a plausible-looking time
           failed(i) = true
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
@@ -198,7 +199,7 @@ object Bench {
       if (probeEvery > 0 && i % probeEvery == probeEvery - 1) {
         val t0 = System.nanoTime()
         try calibration(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
         val dt = (System.nanoTime() - t0) / 1e9
         probeTimeline += ((bi + 1, selected(i)._1, dt))
         probeAt += ((bi, i, dt))
@@ -361,7 +362,7 @@ object Bench {
     // decorated or truncated by the launcher
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), fullLine + "\n")
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     spark.stop()
   }
 }

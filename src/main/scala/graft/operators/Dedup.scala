@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 import graft.engine.Partitioning
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
+import org.apache.spark.sql.graft.Materialize
 
 /**
  * Corpus deduplication for training-data pipelines, at five fidelity
@@ -251,7 +252,7 @@ object Dedup {
     // projection was one full extra materialization per batch; the
     // consumers re-derive the projection from the caller's in-memory
     // blocks instead.
-    val ds = if (inputMaterialized) dsRaw else dsRaw.localCheckpoint()
+    val ds = if (inputMaterialized) dsRaw else Materialize.local(dsRaw)
     // per-gram df, per-doc size and per-doc _new as WINDOW functions on
     // the exchanges the prefix computation needs ANYWAY (hash by _g,
     // then hash by _id for the row_number) — the former groupBy+join
@@ -259,9 +260,11 @@ object Dedup {
     // the identical values (r17; guide §2.4 "two operations keyed the
     // same way share one exchange"). The unordered specs keep the
     // whole-partition frame (an orderBy would silently turn count/max
-    // into running aggregates).
+    // into running aggregates). Materialized: both candidate-join sides
+    // read pref, and its window chain is too much plan to compute twice
+    // (measured).
     val widAgg = w.partitionBy("_id")
-    val pref = ds
+    val pref = Materialize.local(ds
       .withColumn("_df", count(lit(1)).over(w.partitionBy("_g")))
       .withColumn("_sz", count(lit(1)).over(widAgg))
       .withColumn("_n", max(col("_new")).over(widAgg))
@@ -269,10 +272,7 @@ object Dedup {
         w.partitionBy("_id").orderBy(col("_df"), col("_g"))).cast(LongType))
       .filter(col("_r") <=
         col("_sz") - expr(s"(($thresholdPpm * _sz) + 999999L) div 1000000L") + lit(1L))
-      .select(col("_id"), col("_g"), col("_sz"), col("_n"))
-      .localCheckpoint() // both candidate-join sides read pref; its own
-                         // window chain is too much plan to compute
-                         // twice (measured)
+      .select(col("_id"), col("_g"), col("_sz"), col("_n")))
     // HOT-GRAM TRIPWIRE (the chiSquareTerms refusal convention), in its
     // ZERO-ACTION form: the candidate join below produces Σ_g pdf(g)²
     // pairs, where pdf is the gram's PREFIX posting length. The prefix
@@ -287,7 +287,7 @@ object Dedup {
     // pairs emit — no separate aggregate, no driver round trip (the
     // eager form cost a groupBy+max+collect per call: ×3 in the ER
     // lifecycle and once per erResolve serving request).
-    val cand = pref
+    val cand = Materialize.local(pref
       .withColumn("_pdf", count(lit(1)).over(w.partitionBy("_g")))
       .filter(assert_true(col("_pdf") <= lit(maxPrefixGramDf),
         concat(lit("setSimPairsFromGrams: a prefix gram appears in "),
@@ -309,14 +309,13 @@ object Dedup {
       // ids, so the distinct's cardinality is unchanged) — the former
       // shape re-derived them at the end through a fresh aggregate over
       // ds and two joins against the verified pairs (r17, guide §2.4)
-      .select("id_a", "id_b", "_sza", "_szb").distinct()
-      .localCheckpoint()
+      .select("id_a", "id_b", "_sza", "_szb").distinct())
     // verify-join §3.2 prefilter: only candidate ids can survive the
     // equi-joins below, so the gram table entering them is semi-filtered
     // to the candidate id set first — at corpus scale the second join's
     // exchange then carries candidate grams, not the full gram table
-    // (cand is checkpointed and pair-bounded, so the semi-join's build
-    // side broadcasts at runtime)
+    // (cand is materialized with its stored size and pair-bounded, so
+    // the semi-join's build side broadcasts from the first plan)
     val candIds = cand.select(col("id_a").as("_id"))
       .unionByName(cand.select(col("id_b").as("_id")))
       .distinct()

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 import org.apache.spark.sql.types.{DecimalType, LongType}
 
 /**
@@ -522,19 +523,17 @@ object Graph {
   }
 
   /** One synchronous min-label round — factored lazy for the longs-only
-    * spec pin: neighbor minima fold in over the symmetric adjacency
-    * (map-side-combined `min` per destination), then each node keeps
-    * the least of its own and its neighborhood's label. The caller
-    * checkpoints.
+    * spec pin: every node's next label is the `min` over its neighbors'
+    * labels (the symmetric adjacency joined to the current labels on the
+    * source) together with its own label, as ONE aggregate grouped by
+    * node; the own-label rows ride the union, so isolated nodes keep
+    * their label. The caller checkpoints.
     */
-  private[graft] def lpaRound(sym: DataFrame, labels: DataFrame): DataFrame = {
-    val fromNbr = sym
-      .join(labels.withColumnRenamed("_v", "_s"), Seq("_s"))
-      .groupBy(col("_d")).agg(min(col("_l")).as("_nl"))
-      .select(col("_d").as("_v"), col("_nl"))
-    labels.join(fromNbr, Seq("_v"), "left")
-      .select(col("_v"), least(col("_l"), coalesce(col("_nl"), col("_l"))).as("_l"))
-  }
+  private[graft] def lpaRound(sym: DataFrame, labels: DataFrame): DataFrame =
+    sym.join(labels.withColumnRenamed("_v", "_s"), Seq("_s"))
+      .select(col("_d").as("_v"), col("_l"))
+      .unionByName(labels.select(col("_v"), col("_l")))
+      .groupBy(col("_v")).agg(min(col("_l")).as("_l"))
 
   /** Synchronous min-label propagation over the undirected
     * simplification of an edge list, a FIXED number of rounds — the
@@ -548,10 +547,17 @@ object Graph {
     *
     *   l₀(v) = v;  l_{k+1}(v) = min(l_k(v), min_{u ∈ N(v)} l_k(u))
     *
-    * Scale shape: round k is ONE shuffle — the symmetric edge list
-    * joined to the current labels (ids only, map-side-combined `min`
-    * per destination) — with `localCheckpoint` cutting the iteration
-    * lineage (the [[pageRankScaled]] discipline). At ≥ `dictThreshold`
+    * Scale shape: the canonical edge list is materialized ONCE and both
+    * the node set and the symmetric adjacency read it. Round k is one
+    * join of the adjacency to the current labels plus ONE `min`
+    * aggregate per node over neighbor labels ∪ own label ([[lpaRound]];
+    * ids only, map-side combined): three shuffles when both sides are
+    * large, and a single shuffle when either side is under the
+    * session's broadcast threshold — every materialization carries its
+    * stored size ([[org.apache.spark.sql.graft.Materialize.local]]), so
+    * the planner broadcasts the small side up front. The
+    * checkpoint cuts the iteration lineage (the [[pageRankScaled]]
+    * discipline). At ≥ `dictThreshold`
     * nodes the rounds carry 8-byte longs; the dict is ORDER-PRESERVING
     * (long-min ≡ string-min), so the min-label contract survives
     * encoding exactly — the [[connectedComponentsMin]] argument. Fixed
@@ -570,32 +576,36 @@ object Graph {
   ): DataFrame = {
     require(rounds >= 1 && rounds <= 16,
       s"labelPropagationMin: rounds must be in [1, 16], got $rounds")
-    val raw = edges
+    // the edge list, computed ONCE: canonical undirected pairs (u ≤ v),
+    // distinct — the node set and the adjacency both read it, so a lazy
+    // upstream (the ER op's verified pairs) never runs twice
+    val e = Materialize.local(edges
       .select(col(srcCol).cast("string").as("_a"), col(dstCol).cast("string").as("_b"))
       .filter(col("_a").isNotNull && col("_b").isNotNull)
-    val nodesS = raw.select(col("_a").as("_v"))
-      .unionByName(raw.select(col("_b").as("_v")))
-      .distinct()
-      .localCheckpoint()
+      .select(least(col("_a"), col("_b")).as("_u"), greatest(col("_a"), col("_b")).as("_v"))
+      .distinct())
+    val nodesS = Materialize.local(e.select(col("_u").as("_v"))
+      .unionByName(e.select(col("_v")))
+      .distinct())
     val dictOpt = graphDict(nodesS, nodesS.count(), dictThreshold)
-    val rawW = dictOpt match {
-      case Some(dct) => encodeIds(raw, dct, Seq("_a", "_b"))
-      case None => raw
+    // self-loops are harmless no-ops (the node keeps its own label);
+    // drop them. The dict is order-preserving, so encoded pairs stay
+    // canonical (u < v), and the symmetric adjacency of distinct
+    // canonical pairs is distinct without an aggregate
+    val simple = dictOpt match {
+      case Some(dct) =>
+        Materialize.local(encodeIds(e.filter(col("_u") =!= col("_v")), dct, Seq("_u", "_v")))
+      case None => e.filter(col("_u") =!= col("_v"))
     }
-    // symmetric simple adjacency (self-loops are harmless no-ops; drop them)
-    val sym = rawW.filter(col("_a") =!= col("_b"))
-      .select(col("_a").as("_s"), col("_b").as("_d"))
-      .unionByName(rawW.filter(col("_a") =!= col("_b"))
-        .select(col("_b").as("_s"), col("_a").as("_d")))
-      .distinct()
-      .localCheckpoint()
+    val sym = simple.select(col("_u").as("_s"), col("_v").as("_d"))
+      .unionByName(simple.select(col("_v").as("_s"), col("_u").as("_d")))
     val nodes = dictOpt match {
       case Some(dct) => dct.select(col("_id").as("_v"))
       case None => nodesS
     }
     var labels = nodes.select(col("_v"), col("_v").as("_l"))
     for (_ <- 0 until rounds) {
-      labels = lpaRound(sym, labels).localCheckpoint()
+      labels = Materialize.local(lpaRound(sym, labels))
     }
     dictOpt match {
       case Some(dct) =>

@@ -189,7 +189,13 @@ object Merge {
         case MergeOp.Inc =>
           coalesce(stV, lit(0L)) + coalesce(inV, lit(0L))
         case MergeOp.AddToSet =>
-          val arrType = collapsed.schema(n).dataType
+          // merge at the ELEMENT-NULLABLE array type: a stored array
+          // re-read from parquet admits null elements and cannot cast to
+          // an incoming `containsNull = false` type
+          val arrType = collapsed.schema(n).dataType match {
+            case at: ArrayType => at.copy(containsNull = true)
+            case other => other
+          }
           array_distinct(
             concat(
               coalesce(stV.cast(arrType), array().cast(arrType)),

@@ -2,7 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.model._
 import graft.operators.{Binning, Merge}
 
@@ -234,11 +236,25 @@ object StreamingOps {
     * `_CURRENT` still decides WHICH version is committed state.
     */
   private def readVersionedState(
-      spark: SparkSession, statePath: String, bucketed: Boolean): Option[DataFrame] =
+      spark: SparkSession, statePath: String, bucketed: Boolean,
+      schema: Option[StructType] = None): Option[DataFrame] =
     if (bucketed)
       currentVersionId(spark, statePath)
         .map(v => spark.table(stateTableName(statePath, v)))
-    else readState(spark, statePath)
+    else schema match {
+      case Some(sc) => currentVersionName(spark, statePath)
+        .map(version => spark.read.schema(sc).parquet(s"$statePath/$version"))
+      case None => readState(spark, statePath)
+    }
+
+  /** The ER store's fixed row shape ([[applyErBatch]]): gram rows
+    * `(kind = "g", id, g)` and label rows `(kind = "l", id, label)`.
+    * Read with it, a batch skips parquet schema inference — a footer
+    * job per batch.
+    */
+  private val ErStateSchema: StructType = StructType(Seq(
+    StructField("kind", StringType), StructField("id", StringType),
+    StructField("g", LongType), StructField("label", StringType)))
 
   /** Write + commit the next state version. `stateBuckets = Some(n)`:
     * the version is written BUCKETED (and bucket-sorted) on `keys` via a
@@ -1523,7 +1539,8 @@ object StreamingOps {
     *  3. re-propagates min labels over (new pairs) ∪ (the committed
     *     labels' node→label STAR edges) — the union-find step: the
     *     stars compress every prior component to diameter 1, so
-    *     `lpaRounds` only has to cover the new merges,
+    *     `lpaRounds` only has to cover the new merges; docs outside
+    *     every edge keep label = self,
     *  4. commits grams ∪ labels as the next version and emits the
     *     FULL canonical table (`node, label, is_canonical`, singletons
     *     included with label = self) to `outPath/batch=<id>`.
@@ -1548,7 +1565,15 @@ object StreamingOps {
     *
     * Scale shape: per-batch cost = the incremental prefix-filter join
     * (∝ new docs × matched rare-gram postings) + `lpaRounds` id-only
-    * edge shuffles + one state rewrite. The state rewrite is the
+    * rounds over the pair and star edges (each one join plus one `min`
+    * aggregate — [[graft.operators.Graph.labelPropagationMin]]) + one
+    * `min` aggregate folding in the singletons + one state rewrite.
+    * Every intermediate is materialized once and carries its stored
+    * size ([[org.apache.spark.sql.graft.Materialize.local]]), so joins
+    * against small intermediates plan as broadcasts from the start.
+    * Measured at 100 docs a batch against a growing store (local[4]):
+    * 37 Spark jobs and 54 stages per steady-state batch. The state
+    * rewrite is the
     * cumulative-store cost the minhash index stream already carries;
     * at 100 TB both would move to an append-log + compaction layout —
     * the protocol (version pointer, replay guard) is unchanged by that
@@ -1591,7 +1616,6 @@ object StreamingOps {
   ): Option[DataFrame] = {
     import graft.operators.{Dedup, Graph}
     import graft.functions.TextFunctions
-    import org.apache.spark.sql.types.{LongType, StringType}
     currentVersionId(spark, statePath) match {
       case Some(cur) if cur >= batchId =>
         log.warn(s"erStream: skipping batch $batchId — state at v$cur " +
@@ -1603,22 +1627,24 @@ object StreamingOps {
               TextFunctions.shingles(col(textCol), shingleSize))).as("_s"))
           .select(col("_id"), xxhash64(col("_s")).as("_g"))
           .distinct()
-        val old = stateIn.orElse(
-          readVersionedState(spark, statePath, stateBuckets.isDefined))
+        val old = stateIn.orElse(readVersionedState(spark, statePath,
+          stateBuckets.isDefined, Some(ErStateSchema)))
         val oldGrams = old.map(_.filter(col("kind") === "g")
           .select(col("id").as("_id"), col("g").as("_g")))
         val oldLabels = old.map(_.filter(col("kind") === "l")
           .select(col("id").as("node"), col("label")))
-        val newGrams = oldGrams match {
-          case Some(og) => newGramsRaw.join(
-            og.select(col("_id")).distinct(), Seq("_id"), "left_anti")
+        // every stored doc has exactly one label row, so the label rows
+        // are the stored id set
+        val newGrams = oldLabels match {
+          case Some(ol) => newGramsRaw.join(
+            ol.select(col("node").as("_id")), Seq("_id"), "left_anti")
           case None => newGramsRaw
         }
-        val allGrams = (oldGrams match {
+        val allGrams = Materialize.local(oldGrams match {
           case Some(og) => og.withColumn("_new", lit(false))
             .unionByName(newGrams.withColumn("_new", lit(true)))
           case None => newGrams.withColumn("_new", lit(true))
-        }).localCheckpoint()
+        })
         val pairs = Dedup.setSimPairsFromGrams(allGrams, thresholdPpm,
             maxPrefixGramDf, inputMaterialized = true)
           .select(col("id_a").as("_a"), col("id_b").as("_b"))
@@ -1628,13 +1654,16 @@ object StreamingOps {
         val lpa =
           if (exactComponents) Graph.connectedComponentsMin(edges, "_a", "_b")
           else Graph.labelPropagationMin(edges, "_a", "_b", lpaRounds)
-        val labels = allGrams.select(col("_id")).distinct()
-          .join(lpa.withColumnRenamed("node", "_id"), Seq("_id"), "left")
-          .select(col("_id").as("node"),
-            coalesce(col("label"), col("_id")).as("label"))
-          .localCheckpoint()
+        // singletons label themselves: a min label never exceeds its own
+        // node, so ONE min aggregate over (LPA labels ∪ every doc as its
+        // own label) is the full table. Singletons stay out of the LPA
+        // rounds, so a batch without pairs (the first one) runs them over
+        // empty inputs
+        val labels = Materialize.local(lpa
+          .unionByName(allGrams.select(col("_id").as("node"), col("_id").as("label")))
+          .groupBy(col("node")).agg(min(col("label")).as("label")))
         // the handle stays LAZY: both union inputs (allGrams, labels) are
-        // already localCheckpointed this batch, so re-deriving the union
+        // already materialized this batch, so re-deriving the union
         // per consumer is a cheap in-memory read — measured FASTER than
         // eagerly checkpointing the full state again (the checkpoint
         // materialization cost more than the page-cached, column-pruned

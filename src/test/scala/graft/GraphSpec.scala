@@ -251,6 +251,43 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  test("labelPropagationMin ≡ driver-side reference LPA on seeded random graphs (self-loops, isolated nodes, duplicate edges, dict path)") {
+    // the reference: synchronous rounds over the undirected simple graph,
+    // every edge endpoint a node (a self-loop-only node is isolated)
+    def reference(edges: Seq[(String, String)], rounds: Int): Map[String, String] = {
+      val e = edges.filter { case (a, b) => a != null && b != null }
+      val nbrs = e.filter { case (a, b) => a != b }
+        .flatMap { case (a, b) => Seq(a -> b, b -> a) }
+        .groupBy(_._1).map { case (v, ps) => v -> ps.map(_._2) }
+      var labels = e.flatMap { case (a, b) => Seq(a, b) }.map(v => v -> v).toMap
+      for (_ <- 0 until rounds) {
+        val prev = labels
+        labels = prev.map { case (v, l) =>
+          v -> (l +: nbrs.getOrElse(v, Nil).map(prev)).min }
+      }
+      labels
+    }
+    for (seed <- 0 until 4) {
+      val rnd = new scala.util.Random(seed)
+      // ids whose string order is unrelated to the graph structure
+      val ids = rnd.shuffle((0 until 24).map(i => f"n$i%02d"))
+      def id() = ids(rnd.nextInt(ids.size))
+      val sparse = Seq.fill(14)((id(), id()))
+      val selfLoops = Seq.fill(4) { val v = id(); (v, v) }
+      val edges = sparse ++ selfLoops ++ sparse.take(5) ++
+        sparse.take(3).map(_.swap) ++ Seq((id(), null: String), (null: String, id()))
+      val df = edges.toDF("src", "dst")
+      for (rounds <- 1 to 4; dict <- Seq(1L, Long.MaxValue)
+           if dict == Long.MaxValue || rounds == 1 + seed % 4) {
+        val got = Graph.labelPropagationMin(df, "src", "dst", rounds, dictThreshold = dict)
+          .as[(String, String)].collect()
+        val want = reference(edges, rounds)
+        assert(got.length == want.size, s"seed $seed rounds $rounds dict $dict: duplicate nodes")
+        assert(got.toMap == want, s"seed $seed rounds $rounds dict $dict")
+      }
+    }
+  }
+
   test("iterative family: dict branch ≡ string branch on every operator (adaptive label compression)") {
     // one fixture with multi-edges, a self-loop, direction, two components,
     // and ids whose STRING order differs from insertion order — so an

@@ -70,6 +70,22 @@ class MergeOpsSpec extends SparkSpec {
     assert(once.select(array_sort($"tags")).as[Seq[String]].collect()(0) == Seq("a", "b", "c"))
   }
 
+  test("$addToSet with non-null-element incoming arrays merges across two stored batches") {
+    // array(lit(..)) is ARRAY<STRING> with containsNull = false; the state
+    // re-read from parquet admits null elements, so the second batch
+    // merges a nullable stored array with a non-null incoming one
+    val path = java.nio.file.Files.createTempDirectory("graft-addtoset").toString
+    val spec = MergeSpec(Seq("key"), Seq(MergeFieldSpec("tags", MergeOp.AddToSet)))
+    def batch(tag: String) = spark.range(1)
+      .select(lit("k").as("key"), lit(1).as("seq"), array(lit(tag)).as("tags"))
+    assert(!batch("a").schema("tags").dataType
+      .asInstanceOf[org.apache.spark.sql.types.ArrayType].containsNull)
+    graft.streaming.StreamingOps.applyMergeBatch(spark, batch("a"), 0L, spec, "seq", path)
+    graft.streaming.StreamingOps.applyMergeBatch(spark, batch("b"), 1L, spec, "seq", path)
+    val state = graft.streaming.StreamingOps.readState(spark, path).get
+    assert(state.select(array_sort($"tags")).as[Seq[String]].collect().toSeq == Seq(Seq("a", "b")))
+  }
+
   test("parent.child $set updates the nested struct field, preserving siblings") {
     val state = Seq((1L, ("old", 9L)), (2L, ("keep", 1L))).toDF("k", "info")
       .select($"k", $"info._1".as("status"), $"info._2".as("score"))

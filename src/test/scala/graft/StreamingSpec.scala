@@ -1285,6 +1285,52 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(s"$work/out/batch=0").count() == 1)
   }
 
+  test("applyErBatch job pin: a steady-state batch runs each ER phase once (verified pairs are not recomputed)") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // 12-token docs; a variant swaps its last token, so it shares 9 of
+    // its 10 trigram shingles with its root (J = 9/11, over threshold)
+    val rnd = new scala.util.Random(11)
+    val vocab = (0 until 300).map(i => f"w$i%03d")
+    val texts = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def fresh(id: String) = { texts(id) = Seq.fill(12)(vocab(rnd.nextInt(300))).mkString(" "); id }
+    def variant(id: String, of: String) = {
+      texts(id) = texts(of).split(" ").dropRight(1).mkString(" ") + " zz" + id; id }
+    val batches = Seq(
+      (0 until 8).map(i => fresh(f"d0$i")),
+      (0 until 6).map(i => fresh(f"d1$i")) ++ Seq(variant("d16", "d00"), variant("d17", "d03")),
+      (0 until 6).map(i => fresh(f"d2$i")) ++ Seq(variant("d26", "d01"), variant("d27", "d12")))
+    val work = Files.createTempDirectory("graft-er-pin").toString
+    val group = "graft-er-pin"
+    val jobCount = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobCount.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      batches.zipWithIndex.foreach { case (ids, i) =>
+        val b = ids.map(id => (id, texts(id))).toDF("doc_id", "text")
+        if (i == 2) spark.sparkContext.setJobGroup(group, "er batch 3")
+        try StreamingOps.applyErBatch(spark, b, i.toLong, "doc_id", "text",
+          shingleSize = 3, thresholdPpm = 500000L, lpaRounds = 4,
+          s"$work/state", s"$work/out")
+        finally spark.sparkContext.clearJobGroup()
+      }
+      org.apache.spark.sql.graft.ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val labels = spark.read.parquet(s"$work/out/batch=2").select("node", "label")
+      .as[(String, String)].collect().toMap
+    assert(labels.size == 24)
+    assert(Seq("d16" -> "d00", "d17" -> "d03", "d26" -> "d01", "d27" -> "d12")
+      .forall { case (v, root) => labels(v) == labels(root) }, labels.toString)
+    // 37 is this fixture's measured count; recomputing the verified
+    // pairs — the lazy edge list read by both the LPA node set and its
+    // adjacency — or a join-back LPA round adds jobs above it
+    val jobs = jobCount.get
+    assert(jobs > 0 && jobs <= 37, s"batch 3 ran $jobs jobs")
+  }
+
   test("er stream: cross-batch merges, incremental equals batch pipeline, replay + re-delivery no-op") {
     import graft.operators.{Dedup, Graph}
     val work = Files.createTempDirectory("graft-er-spec").toString
