@@ -7,10 +7,11 @@ object Bench {
   /** The previous committed bench record, as far as cross-round
     * comparison needs it: per-query min seconds, calibrated mins when
     * the record carries them, its probe floor (box-speed unit), and
-    * the sf it ran at.
+    * the sf and core count it ran at.
     */
   private case class PrevRecord(
       sf: String,
+      cpus: String,
       mins: Map[String, Double],
       minsCalibrated: Map[String, Double],
       probeFloor: Option[Double])
@@ -30,6 +31,7 @@ object Bench {
         case _ => Map.empty
       }
       val sf = j \ "sf" match { case JString(s) => s; case _ => "" }
+      val cpus = j \ "cpus" match { case JString(s) => s; case _ => "" }
       val probes = j \ "probe_timeline" match {
         case JArray(xs) => xs.collect {
           case JArray(List(_, _, JDouble(t))) => t
@@ -43,7 +45,7 @@ object Bench {
         case Nil => None
         case xs => Some(xs.min)
       }
-      PrevRecord(sf, mins, numMap("queries_min_calibrated"), floor)
+      PrevRecord(sf, cpus, mins, numMap("queries_min_calibrated"), floor)
     }.toOption
 
   def main(args: Array[String]): Unit = {
@@ -287,13 +289,13 @@ object Bench {
     // sums and median per-query ratio, raw AND calibrated (each side's
     // numbers divided by its own probe floor — the box-speed unit — so
     // a slower/faster box cancels out). Only computed when the previous
-    // record ran at the SAME sf; prev calibrated mins are used when the
-    // record carries them, raw mins otherwise.
+    // record ran at the SAME sf and core count; prev calibrated mins are
+    // used when the record carries them, raw mins otherwise.
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted; s(s.length / 2)
     }
     val vsPrev: String = prev match {
-      case Some(p) if p.sf == sfDir =>
+      case Some(p) if p.sf == sfDir && p.cpus == cpus =>
         val curMins = ok.filterNot(_._1 == "calibration_cpu")
           .map(r => r._1 -> r._3).toMap
         val shared = curMins.keySet.intersect(p.mins.keySet)
@@ -329,8 +331,10 @@ object Bench {
             f""","ratio_raw":${sumCur / sumPrev}%.4f""" +
             f""","median_ratio_raw":${median(ratios)}%.4f""" + calBlock + "}"
         }
-      case Some(p) =>
+      case Some(p) if p.sf != sfDir =>
         s"""{"prev":"$prevPath","skipped":"sf mismatch: prev ran at ${p.sf}"}"""
+      case Some(p) =>
+        s"""{"prev":"$prevPath","skipped":"cpus mismatch: prev ran at ${if (p.cpus.isEmpty) "an unrecorded core count" else p.cpus}"}"""
       case None => "null"
     }
     // STDOUT LINE vs FULL RECORD (r16 verdict #2): the r15 driver
@@ -348,14 +352,14 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs""" +
       s""","queries_min":$mins,"failed_queries":$failedNames""" +
       s""","vs_prev":$vsPrev,"order":"$order"""" +
-      s""","runs_per_query":$runsPerQuery,"stat":"median","interleaved":"two-block","sf":"$sfDir"}"""
+      s""","runs_per_query":$runsPerQuery,"stat":"median","interleaved":"two-block","sf":"$sfDir","cpus":"$cpus"}"""
     val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs""" +
       s""","queries_min":$mins,"queries_p25":$p25s,"queries_runs":$runsJson""" +
       s""","queries_gc_ms":$gcJson,"failed_queries":$failedNames""" +
       s""","probe_timeline":$probeJson""" +
       s""","queries_min_calibrated":$minsCal,"queries_probe_local":$probeLocal""" +
       s""","vs_prev":$vsPrev,"order":"$order"""" +
-      s""","runs_per_query":$runsPerQuery,"stat":"median","interleaved":"two-block","sf":"$sfDir"}"""
+      s""","runs_per_query":$runsPerQuery,"stat":"median","interleaved":"two-block","sf":"$sfDir","cpus":"$cpus"}"""
     println(compactLine)
     // belt-and-braces: the full record persists where the driver (and
     // the next round's parsePrev) can read it even if stdout is

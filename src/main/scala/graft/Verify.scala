@@ -73,7 +73,8 @@ object Verify {
       require(decType == org.apache.spark.sql.types.StringType,
         s"[verify] decimal_probe_dec emits $decType, not the canonical pinned-scale STRING — raw DECIMAL columns are driver-hash-divergent (adjudicated r16)")
     }
-    require(SparkEntry.oracleSql("hugeint_probe").contains("CAST(sum(v) AS BIGINT) AS sum_v"),
+    require("""CAST\s*\(\s*sum\s*\(\s*v\s*\)\s+AS\s+BIGINT\s*\)\s+AS\s+sum_v""".r
+        .findFirstIn(SparkEntry.oracleSql("hugeint_probe")).isDefined,
       "[verify] hugeint_probe oracle lost its BIGINT cast — an uncast " +
         "DuckDB sum() (HUGEINT) is driver-hash-divergent (adjudicated r16)")
     System.err.println("[verify] probes: expected-red = (none; " +

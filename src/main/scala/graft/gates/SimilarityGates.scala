@@ -221,16 +221,6 @@ private[graft] object SimilarityGates {
         lpad(col("doc_id").cast("string"), 8, "0").as("doc_id"), col("text"))
       val work = java.nio.file.Files
         .createTempDirectory("graft-er-stream").toString
-      // NOT handle-threaded: at gate scale the committed state's parquet
-      // re-reads are page-cached and column-pruned, and threading the
-      // in-memory handle measured ~1.5 s SLOWER at matched calibration
-      // (README round-14 measurements) — the handle is the
-      // larger-than-page-cache path, spec-pinned, not a gate win.
-      // NOT bucketed either: stateBuckets = Some(8) measured 13.4 s vs
-      // 9.9 plain at matched probes (round-15 A/B) — nine bucketed
-      // catalog-table writes cost more than the avoided state-side
-      // exchanges at this state size; the option exists for states that
-      // outgrow a batch (same scale argument as the dedup stores)
       def step(b: DataFrame, id: Long): Unit =
         StreamingOps.applyErBatch(s, b, id, "doc_id", "text",
           shingleSize = 3, thresholdPpm = 500000L, lpaRounds = 4,

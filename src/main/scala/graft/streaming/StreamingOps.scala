@@ -128,18 +128,9 @@ object StreamingOps {
     * the file-based stand-in for a transactional MERGE target (Delta/
     * Iceberg in production; swap the body of foreachBatch). Each
     * micro-batch is collapsed per key and merged into the state table
-    * exactly like the batch operator.
-    *
-    * Crash safety: each batch writes a NEW version dir, then atomically
-    * swaps the `_CURRENT` pointer (FileContext rename with OVERWRITE is
-    * atomic on HDFS/local) — a crash at any point leaves the previous
-    * state intact and the checkpoint replays the batch. Versions older
-    * than the previous one are pruned. Replay is IDEMPOTENT: version
-    * names are the batch id, so if a crash lands after commitVersion but
-    * before the streaming checkpoint commits, the replayed batch sees
-    * `_CURRENT` already at `v{batchId}` (which includes it) and skips the
-    * merge — re-merging would double-apply non-idempotent ops ($inc sums
-    * twice, $each appends twice).
+    * exactly like the batch operator, under the [[versionedBatch]]
+    * protocol: a crash at any point leaves the previous state intact and
+    * the checkpoint replays the batch.
     *
     * Note the I/O profile: O(|state|) per batch (read + rewrite). That is
     * inherent to a full-table file target, not to this operator — use
@@ -156,41 +147,39 @@ object StreamingOps {
       checkpointPath: String,
       trigger: Trigger = Trigger.ProcessingTime(0L),
       stateBuckets: Option[Int] = None
-  ): StreamingQuery = {
-    val spark = incoming.sparkSession
+  ): StreamingQuery =
+    foreachBatchStream(incoming, "update", checkpointPath, trigger) { (batch, batchId) =>
+      applyMergeBatch(incoming.sparkSession, batch, batchId, spec, orderCol,
+        statePath, stateBuckets)
+    }
+
+  /** Start `incoming` as a query that hands every micro-batch and its id
+    * to `apply` — the micro-batch loop of each `*Stream` wrapper over
+    * an `apply*Batch` op.
+    */
+  private def foreachBatchStream(
+      incoming: DataFrame,
+      outputMode: String,
+      checkpointPath: String,
+      trigger: Trigger
+  )(apply: (DataFrame, Long) => Unit): StreamingQuery =
     incoming.writeStream
-      .outputMode("update")
+      .outputMode(outputMode)
       .option("checkpointLocation", checkpointPath)
       .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyMergeBatch(spark, batch.toDF(), batchId, spec, orderCol, statePath,
-          stateBuckets)
-      }
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) => apply(batch.toDF(), batchId) }
       .start()
-  }
 
   /** One micro-batch of [[mergeStream]]: merge into the current state
-    * version and commit `v{batchId}`. Replay guard: `_CURRENT` at a
-    * version >= this batch id means the batch was already merged (crash
-    * between commitVersion and the checkpoint commit) — skip instead of
-    * double-applying $inc/$each. Factored out of foreachBatch so the
-    * at-least-once contract is directly testable.
+    * version and commit `v{batchId}`. The replay guard is correctness
+    * here: re-merging a committed batch would double-apply $inc (sums
+    * twice) and $each (appends twice). Factored out of foreachBatch so
+    * the at-least-once contract is directly testable.
     *
-    * `stateBuckets = Some(n)`: state versions are written BUCKETED (and
-    * bucket-sorted) on the merge keys via a per-version catalog table —
-    * the recurring-join contract of [[graft.engine.Partitioning
-    * .writeBucketed]]. Every batch's merge re-joins the whole state on
-    * exactly those keys, so an unbucketed state pays a full state
-    * shuffle per batch forever; bucketing pays the shuffle once at
-    * write, and each subsequent merge reads the state side exchange-free
-    * (only the small batch side shuffles, to the bucket count). Commit
-    * and replay semantics are unchanged — `_CURRENT` stays the single
-    * commit marker; a crash between table write and commit leaves an
-    * orphan table for the uncommitted version, which the replay simply
-    * overwrites. When to bucket is a MEASURED contract, not a guess —
-    * see the crossover table on `writeVersionedState` (short form:
-    * `None` below a few million committed state rows, `Some(n)` once
-    * the state is a real corpus slice).
+    * `stateBuckets = Some(n)` buckets the state on the merge keys: every
+    * batch's merge re-joins the whole state on exactly those keys, so
+    * the state side reads exchange-free (see [[versionedBatch]] for
+    * when bucketing pays).
     */
   def applyMergeBatch(
       spark: SparkSession,
@@ -200,28 +189,13 @@ object StreamingOps {
       orderCol: String,
       statePath: String,
       stateBuckets: Option[Int] = None
-  ): Unit = {
-    currentVersionId(spark, statePath) match {
-      case Some(cur) if cur >= batchId =>
-        // crash-replay of the previous batch is expected (cur == batchId);
-        // anything further behind means a NEW checkpoint was pointed at an
-        // OLD statePath — every batch would be skipped forever, so shout
-        val msg = s"mergeStream: skipping batch $batchId — state at v$cur already includes it" +
-          (if (cur > batchId)
-            s". batchId is ${cur - batchId} behind the committed version: this looks like a " +
-              "fresh checkpoint reusing an existing statePath; merges will be skipped until " +
-              s"batchIds pass v$cur. Use a fresh statePath (or restore the old checkpoint)."
-          else "")
-        log.warn(msg)
-      case _ =>
-        val state = readVersionedState(spark, statePath, stateBuckets.isDefined)
-          .getOrElse(
-            spark.createDataFrame(spark.sparkContext.emptyRDD[Row], batch.schema))
-        val merged = Merge.upsertBatch(state, batch, spec, orderCol).state
-        writeVersionedState(spark, statePath, batchId, merged,
-          spec.keyFields, stateBuckets)
+  ): Unit =
+    versionedBatch(spark, "mergeStream", statePath, batchId, stateBuckets,
+        spec.keyFields) { state =>
+      val current = state.getOrElse(
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], batch.schema))
+      Some(Merge.upsertBatch(current, batch, spec, orderCol).state)
     }
-  }
 
   /** Catalog table name for a bucketed state version: stable per
     * (statePath, version) so replays resolve the same table.
@@ -237,7 +211,7 @@ object StreamingOps {
     */
   private def readVersionedState(
       spark: SparkSession, statePath: String, bucketed: Boolean,
-      schema: Option[StructType] = None): Option[DataFrame] =
+      schema: Option[StructType]): Option[DataFrame] =
     if (bucketed)
       currentVersionId(spark, statePath)
         .map(v => spark.table(stateTableName(statePath, v)))
@@ -256,19 +230,50 @@ object StreamingOps {
     StructField("kind", StringType), StructField("id", StringType),
     StructField("g", LongType), StructField("label", StringType)))
 
-  /** Write + commit the next state version. `stateBuckets = Some(n)`:
-    * the version is written BUCKETED (and bucket-sorted) on `keys` via a
-    * per-version catalog table — the recurring-join contract of
-    * [[graft.engine.Partitioning.writeBucketed]]. Every subsequent batch
+  /** The versioned-store protocol of the `apply*Batch` ops: one batch
+    * against a store that is a directory of versions `v<batchId>` plus a
+    * `_CURRENT` file naming the committed one. In order:
+    *
+    *  1. Replay guard. `_CURRENT` at a version >= `batchId` means the
+    *     batch is already in the state — the stream crashed after the
+    *     commit but before its checkpoint did — so the batch is skipped
+    *     and nothing is written. A version further ahead than the
+    *     expected replay means a fresh checkpoint is pointed at an old
+    *     `statePath`, and every batch would be skipped until the ids pass
+    *     it: that warns loudly.
+    *  2. State read, on the step's first use of it: the bucketed catalog
+    *     table when `stateBuckets` is set, parquet with `stateSchema` when
+    *     given (no schema-inference job), plain parquet otherwise; `None`
+    *     before the first commit.
+    *  3. `step` writes the batch's outputs (whole-directory overwrites)
+    *     and returns the next state, or `None` to commit nothing (a
+    *     scoring batch against a frozen reference, an empty first
+    *     reference).
+    *  4. The next state is written to `v<batchId>`.
+    *  5. `_CURRENT` is renamed to `v<batchId>` last (FileContext rename
+    *     with OVERWRITE, atomic on HDFS and local), and versions before
+    *     `batchId - 1` are pruned: the committed version and the one
+    *     before it stay, which a pinned-version as-of replay
+    *     ([[applyAsOfEnrichBatch]]) reads.
+    *
+    * A crash before the rename leaves `_CURRENT` at the previous
+    * version: the replay recomputes against it and overwrites the
+    * outputs and the orphaned version directory bit-identically. A crash
+    * after the rename replays into the guard, with the outputs already on
+    * disk because they were written first.
+    *
+    * `stateBuckets = Some(n)`: the version is written BUCKETED (and
+    * bucket-sorted) on `bucketKeys` via a per-version catalog table —
+    * the recurring-join contract of
+    * [[graft.engine.Partitioning.writeBucketed]]. Every later batch
     * re-joins the whole state on exactly those keys (the merge's key
     * join, the dedup/novelty/graph-profile stores' anti-joins), so an
     * unbucketed state pays a full state exchange per batch FOREVER;
     * bucketing pays the bucket-id sort once at write, and each later
-    * batch reads the state side exchange-free (only the small batch side
-    * shuffles, to the bucket count). Commit and replay semantics are
-    * unchanged — `_CURRENT` stays the single commit marker; a crash
-    * between table write and commit leaves an orphan table for the
-    * uncommitted version, which the replay simply overwrites.
+    * batch reads the state side exchange-free. `_CURRENT` stays the
+    * single commit marker: a crash between table write and commit
+    * leaves an orphan table the replay overwrites, and catalog entries
+    * of pruned versions are dropped after the commit.
     *
     * ==WHEN TO BUCKET (measured contract — do not guess)==
     * The crossover is ABSOLUTE STATE SIZE, not the state:batch ratio:
@@ -287,59 +292,61 @@ object StreamingOps {
     * Re-run the tool on your own hardware before flipping a
     * production store.
     */
-  private def writeVersionedState(
+  private def versionedBatch(
       spark: SparkSession,
+      op: String,
       statePath: String,
       batchId: Long,
-      state: DataFrame,
-      keys: Seq[String],
-      stateBuckets: Option[Int]): Unit =
-    writeVersionedStateKeeping(spark, statePath, batchId, state, keys,
-      stateBuckets, keepFrom = batchId - 1)
-
-  /** [[writeVersionedState]] with the retention bound exposed — the ER
-    * store keeps only the current version (`keepFrom = batchId`); the
-    * dedup-family stores keep one back.
-    */
-  private def writeVersionedStateKeeping(
-      spark: SparkSession,
-      statePath: String,
-      batchId: Long,
-      state: DataFrame,
-      keys: Seq[String],
-      stateBuckets: Option[Int],
-      keepFrom: Long): Unit = {
-    val version = s"v$batchId"
-    stateBuckets match {
-      case Some(n) =>
-        state.write.mode("overwrite")
-          .option("path", s"$statePath/$version")
-          .bucketBy(n, keys.head, keys.tail: _*)
-          .sortBy(keys.head, keys.tail: _*)
-          .format("parquet")
-          .saveAsTable(stateTableName(statePath, batchId))
-      case None =>
-        state.write.mode("overwrite").parquet(s"$statePath/$version")
+      stateBuckets: Option[Int] = None,
+      bucketKeys: Seq[String] = Nil,
+      stateSchema: Option[StructType] = None
+  )(step: (=> Option[DataFrame]) => Option[DataFrame]): Unit =
+    currentVersionId(spark, statePath) match {
+      case Some(cur) if cur >= batchId =>
+        log.warn(s"$op: skipping batch $batchId — state at v$cur already includes it" +
+          (if (cur > batchId)
+            s". batchId is ${cur - batchId} behind the committed version: this looks like a " +
+              "fresh checkpoint reusing an existing statePath; batches will be skipped until " +
+              s"batchIds pass v$cur. Use a fresh statePath (or restore the old checkpoint)."
+          else ""))
+      case _ =>
+        lazy val state =
+          readVersionedState(spark, statePath, stateBuckets.isDefined, stateSchema)
+        step(state).foreach { next =>
+          val version = s"v$batchId"
+          stateBuckets match {
+            case Some(n) =>
+              next.write.mode("overwrite")
+                .option("path", s"$statePath/$version")
+                .bucketBy(n, bucketKeys.head, bucketKeys.tail: _*)
+                .sortBy(bucketKeys.head, bucketKeys.tail: _*)
+                .format("parquet")
+                .saveAsTable(stateTableName(statePath, batchId))
+            case None =>
+              next.write.mode("overwrite").parquet(s"$statePath/$version")
+          }
+          val keepFrom = batchId - 1
+          commitVersion(spark, statePath, version, keepFrom)
+          // drop catalog entries for pruned versions (dirs already
+          // deleted) — enumerate the catalog for THIS store's prefix
+          // rather than sweeping a fixed window back from batchId: batch
+          // ids can jump by more than any fixed window (checkpoint reset,
+          // long no-op stretches) and a bounded sweep would leak the
+          // entries it skips permanently
+          if (stateBuckets.isDefined) {
+            val prefix = stateTableName(statePath, 0L).dropRight(1) // "..._v"
+            spark.catalog.listTables().collect()
+              .map(_.name)
+              .filter(n => n.startsWith(prefix) &&
+                n.drop(prefix.length).nonEmpty &&
+                n.drop(prefix.length).forall(_.isDigit))
+              .map(n => n.drop(prefix.length).toLong)
+              .filter(_ < keepFrom)
+              .foreach(g =>
+                spark.sql(s"DROP TABLE IF EXISTS ${stateTableName(statePath, g)}"))
+          }
+        }
     }
-    commitVersion(spark, statePath, version, keepFrom = keepFrom)
-    // drop catalog entries for pruned versions (dirs already deleted) —
-    // enumerate the catalog for THIS store's prefix rather than sweeping
-    // a fixed window back from batchId: batch ids can jump by more than
-    // any fixed window (checkpoint reset, long no-op stretches) and a
-    // bounded sweep would leak the entries it skips permanently
-    if (stateBuckets.isDefined) {
-      val prefix = stateTableName(statePath, 0L).dropRight(1) // "..._v"
-      spark.catalog.listTables().collect()
-        .map(_.name)
-        .filter(n => n.startsWith(prefix) &&
-          n.drop(prefix.length).nonEmpty &&
-          n.drop(prefix.length).forall(_.isDigit))
-        .map(n => n.drop(prefix.length).toLong)
-        .filter(_ < keepFrom)
-        .foreach(g =>
-          spark.sql(s"DROP TABLE IF EXISTS ${stateTableName(statePath, g)}"))
-    }
-  }
 
   /** The version name `_CURRENT` points at, if any. */
   private def currentVersionName(spark: SparkSession, statePath: String): Option[String] = {
@@ -403,8 +410,9 @@ object StreamingOps {
     * advances) and the data write is a whole-directory overwrite — so
     * at-least-once replays are idempotent bit-for-bit. A pinned version
     * already pruned by the merge stream's retention falls back to the
-    * current version with a warning (retention bounds the replay
-    * window; widen `keepFrom` upstream if replays can lag further).
+    * current version with a warning: the store keeps the committed
+    * version and the one before it ([[versionedBatch]]), which bounds
+    * the replay window.
     *
     * Requires a committed state version (`_CURRENT` present): without
     * one the match-struct schema is unknowable and emitting a
@@ -421,18 +429,11 @@ object StreamingOps {
       payloadCols: Seq[String] = Seq.empty,
       tolerance: Option[org.apache.spark.sql.Column] = None,
       trigger: Trigger = Trigger.ProcessingTime(0L)
-  ): StreamingQuery = {
-    val spark = incoming.sparkSession
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyAsOfEnrichBatch(spark, batch.toDF(), batchId, statePath, keys,
-          leftTs, rightTs, outPath, payloadCols, tolerance)
-      }
-      .start()
-  }
+  ): StreamingQuery =
+    foreachBatchStream(incoming, "append", checkpointPath, trigger) { (batch, batchId) =>
+      applyAsOfEnrichBatch(incoming.sparkSession, batch, batchId, statePath, keys,
+        leftTs, rightTs, outPath, payloadCols, tolerance)
+    }
 
   /** One micro-batch of [[asOfEnrichStream]]; factored out so the pin/
     * replay contract is directly testable.
@@ -516,15 +517,8 @@ object StreamingOps {
     * row per in-batch fingerprint (the [[graft.operators.Dedup]] keep
     * rule, deterministic under replay) → anti-join against the store →
     * write survivors to `outPath/batch=<id>/` → commit the union as the
-    * next state version.
-    *
-    * Ordering is crash-safe: survivors are written BEFORE the state
-    * version commits, and the replay guard (same `_CURRENT` version
-    * protocol as [[applyMergeBatch]]) skips a batch the state already
-    * includes — so a crash in the commit-to-checkpoint window replays to
-    * a no-op with the survivors already on disk, and a crash before the
-    * commit replays the full batch against the OLD state (same result;
-    * the survivor write is a whole-directory overwrite).
+    * next state version ([[versionedBatch]]: a replay before the commit
+    * re-dedups against the OLD store and picks the same survivors).
     *
     * Scale: per-batch cost is one fingerprint scan of the batch plus an
     * equi-join against the store on the 8-byte fingerprint, and an
@@ -541,25 +535,18 @@ object StreamingOps {
       checkpointPath: String,
       trigger: Trigger = Trigger.ProcessingTime(0L),
       stateBuckets: Option[Int] = None
-  ): StreamingQuery = {
-    val spark = incoming.sparkSession
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyDedupBatch(spark, batch.toDF(), batchId, textCol, idCol,
-          statePath, outPath, stateBuckets)
-      }
-      .start()
-  }
+  ): StreamingQuery =
+    foreachBatchStream(incoming, "append", checkpointPath, trigger) { (batch, batchId) =>
+      applyDedupBatch(incoming.sparkSession, batch, batchId, textCol, idCol,
+        statePath, outPath, stateBuckets)
+    }
 
   /** One micro-batch of [[dedupStreamPersistent]]; factored out so the
     * replay contract is directly testable. `stateBuckets = Some(n)`
     * writes the fingerprint store bucketed on `_fp` so every later
-    * batch's anti-join reads the state side exchange-free (the
-    * [[applyMergeBatch]] bucketed-state contract — without it the
-    * anti-join re-shuffles the whole committed store every micro-batch).
+    * batch's anti-join reads the state side exchange-free — without it
+    * the anti-join re-shuffles the whole committed store every
+    * micro-batch.
     */
   def applyDedupBatch(
       spark: SparkSession,
@@ -570,46 +557,36 @@ object StreamingOps {
       statePath: String,
       outPath: String,
       stateBuckets: Option[Int] = None
-  ): Unit = {
-    currentVersionId(spark, statePath) match {
-      case Some(cur) if cur >= batchId =>
-        log.warn(s"dedupStreamPersistent: skipping batch $batchId — state at " +
-          s"v$cur already includes it (survivors were written before the commit)")
-      case _ =>
-        import org.apache.spark.sql.functions._
-        val fp = xxhash64(
-          graft.functions.TextFunctions.normalizeForFingerprint(col(textCol)))
-        val stamped = batch.withColumn("_fp", fp)
-        // deterministic in-batch keep: min idCol per fingerprint — replays
-        // of the same batch pick the same survivors regardless of
-        // partitioning (arrival-order dropDuplicates would not)
-        val inBatch = stamped
-          .groupBy(col("_fp"))
-          .agg(min_by(struct(batch.columns.map(col): _*), col(idCol)).as("_r"))
-          .select(col("_fp") +: batch.columns.map(c => col(s"_r.$c").as(c)): _*)
-        val state = readVersionedState(spark, statePath, stateBuckets.isDefined)
-        // checkpoint: the survivors write AND the state-union write both
-        // consume `fresh` — left lazy, the in-batch keep-one aggregate
-        // and the state anti-join executed TWICE per batch (r16 measure)
-        val fresh = (state match {
-          case Some(st) => inBatch.join(st, Seq("_fp"), "left_anti")
-          case None => inBatch
-        }).localCheckpoint()
-        // survivors FIRST (so the replay-skip branch always has them),
-        // then the fingerprint union as the next committed version.
-        // No distinct() on the union: the store is distinct by induction
-        // (in-batch keep-one + the anti-join make `fresh`'s fingerprints
-        // unique AND disjoint from it), so the state rewrite is a
-        // copy+append, not a full re-shuffle per batch
-        fresh.drop("_fp").write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        val newState = state match {
-          case Some(st) => st.unionByName(fresh.select(col("_fp")))
-          case None => fresh.select(col("_fp"))
-        }
-        writeVersionedState(spark, statePath, batchId, newState,
-          Seq("_fp"), stateBuckets)
+  ): Unit =
+    versionedBatch(spark, "dedupStreamPersistent", statePath, batchId,
+        stateBuckets, Seq("_fp")) { state =>
+      val fp = xxhash64(
+        graft.functions.TextFunctions.normalizeForFingerprint(col(textCol)))
+      val stamped = batch.withColumn("_fp", fp)
+      // deterministic in-batch keep: min idCol per fingerprint — replays
+      // of the same batch pick the same survivors regardless of
+      // partitioning (arrival-order dropDuplicates would not)
+      val inBatch = stamped
+        .groupBy(col("_fp"))
+        .agg(min_by(struct(batch.columns.map(col): _*), col(idCol)).as("_r"))
+        .select(col("_fp") +: batch.columns.map(c => col(s"_r.$c").as(c)): _*)
+      // checkpoint: the survivors write AND the state-union write both
+      // consume `fresh` — left lazy, the in-batch keep-one aggregate
+      // and the state anti-join executed TWICE per batch (r16 measure)
+      val fresh = (state match {
+        case Some(st) => inBatch.join(st, Seq("_fp"), "left_anti")
+        case None => inBatch
+      }).localCheckpoint()
+      fresh.drop("_fp").write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      // no distinct() on the union: the store is distinct by induction
+      // (in-batch keep-one + the anti-join make `fresh`'s fingerprints
+      // unique AND disjoint from it), so the state rewrite is a
+      // copy+append, not a full re-shuffle per batch
+      Some(state match {
+        case Some(st) => st.unionByName(fresh.select(col("_fp")))
+        case None => fresh.select(col("_fp"))
+      })
     }
-  }
 
   /** Streaming per-group TOKEN budget — the continuous face of
     * [[graft.operators.Sampling.tokenQuotaPerGroup]]: each micro-batch
@@ -620,11 +597,9 @@ object StreamingOps {
     * operator on the concatenated input EXACTLY (parity is spec-pinned).
     *
     * State is the per-group consumed-token table `(_g, consumed)` — ≤
-    * |groups| rows, metadata-sized next to the corpus — versioned and
-    * committed under the `_CURRENT` protocol with the same crash-replay
-    * guard as the merge/dedup streams (kept rows are written BEFORE the
-    * version commit, so a replayed batch no-ops with its output
-    * already on disk). Within a batch the prefix sums ride the batch
+    * |groups| rows, metadata-sized next to the corpus. The replay guard
+    * is correctness: re-adding a committed batch's tokens would spend
+    * its budget twice. Within a batch the prefix sums ride the batch
     * operator's two-level bucketed machinery; the state join adds one
     * broadcast-sized offset per group.
     *
@@ -642,48 +617,17 @@ object StreamingOps {
       budget: Long,
       statePath: String,
       outPath: String
-  ): Unit = {
-    currentVersionId(spark, statePath) match {
-      case Some(cur) if cur >= batchId =>
-        log.warn(s"tokenQuotaStream: skipping batch $batchId — state at " +
-          s"v$cur already includes it (kept rows were written before the commit)")
-      case _ =>
-        import org.apache.spark.sql.functions._
-        // checkpoint: the kept-rows write and the consumed-total state
-        // write both consume `q` — left lazy, the two-level prefix-sum
-        // machinery executed twice per batch (r16 measure)
-        val q = graft.operators.Sampling.tokenQuotaPerGroup(
-          batch, keyCol, groupCol, tokensCol, budget)
-          .localCheckpoint()
-        val state = readState(spark, statePath) // (_g, consumed)
-        val withOff = state match {
-          case Some(st) =>
-            q.join(broadcast(st.withColumnRenamed("_g", groupCol)),
-                Seq(groupCol), "left")
-              .withColumn("_off", coalesce(col("consumed"), lit(0L)))
-          case None => q.withColumn("_off", lit(0L))
-        }
-        val kept = withOff
-          .filter(col("_off") + col("cum_tokens") <= budget)
-          .select(col(groupCol), col(keyCol), col("n_tokens"),
-            (col("_off") + col("cum_tokens")).as("cum_tokens"))
-        kept.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        // consumed accumulates ALL seen tokens (kept or dropped): the
-        // batch rule's cum counts dropped rows, so the stream must too
-        val batchTotals = q.groupBy(col(groupCol).as("_g"))
-          .agg(sum(col("n_tokens")).as("_bt"))
-        val newState = state match {
-          case Some(st) => st.join(batchTotals, Seq("_g"), "full")
-            .select(col("_g"),
-              (coalesce(col("consumed"), lit(0L)) +
-                coalesce(col("_bt"), lit(0L))).as("consumed"))
-          case None => batchTotals.select(col("_g"), col("_bt").as("consumed"))
-        }
-        val version = s"v$batchId"
-        newState.write.mode("overwrite").parquet(s"$statePath/$version")
-        commitVersion(spark, statePath, version, keepFrom = batchId - 1)
+  ): Unit =
+    versionedBatch(spark, "tokenQuotaStream", statePath, batchId) { state =>
+      // checkpoint: the kept-rows write and the consumed-total state
+      // write both consume `q` — left lazy, the two-level prefix-sum
+      // machinery executed twice per batch (r16 measure)
+      val q = graft.operators.Sampling.tokenQuotaPerGroup(
+        batch, keyCol, groupCol, tokensCol, budget)
+        .localCheckpoint()
+      tokenQuotaStep(q, state, groupCol, keyCol, lit(budget),
+        s"$outPath/batch=$batchId")
     }
-  }
 
   /** [[applyTokenQuotaBatch]] with PER-GROUP budgets — the streaming
     * face of [[graft.operators.Sampling.tokenQuotaPerGroupBudgets]],
@@ -691,9 +635,8 @@ object StreamingOps {
     * is enforced on a live ingest: each group keeps rows while its
     * running token total (across every batch, dropped rows included)
     * stays within ITS OWN budget; groups absent from the map drop.
-    * Same consumed-token state table, `_CURRENT` protocol, and
-    * crash-replay guard as the single-budget form; the budget lookup
-    * is the driver-known CASE chain, no extra join.
+    * Same consumed-token state table as the single-budget form; the
+    * budget lookup is the driver-known CASE chain, no extra join.
     */
   def applyTokenQuotaBudgetsBatch(
       spark: SparkSession,
@@ -707,49 +650,58 @@ object StreamingOps {
       outPath: String
   ): Unit = {
     require(budgets.nonEmpty, "applyTokenQuotaBudgetsBatch: budgets must be non-empty")
-    currentVersionId(spark, statePath) match {
-      case Some(cur) if cur >= batchId =>
-        log.warn(s"tokenQuotaStream(budgets): skipping batch $batchId — state at " +
-          s"v$cur already includes it (kept rows were written before the commit)")
-      case _ =>
-        import org.apache.spark.sql.functions._
-        val budgetCase = budgets.toSeq.sortBy(_._1)
-          .foldRight(lit(-1L): org.apache.spark.sql.Column) { case ((g, b), els) =>
-            when(col(groupCol) === g, lit(b)).otherwise(els)
-          }
-        // the within-batch cumulative machinery (keep column recomputed
-        // below against the offset + per-group budget); checkpointed —
-        // the kept-rows write and the consumed-total state write both
-        // consume it (the applyTokenQuotaBatch rationale)
-        val q = graft.operators.Sampling.tokenQuotaPerGroupBudgets(
-          batch, keyCol, groupCol, tokensCol, budgets)
-          .localCheckpoint()
-        val state = readState(spark, statePath) // (_g, consumed)
-        val withOff = state match {
-          case Some(st) =>
-            q.join(broadcast(st.withColumnRenamed("_g", groupCol)),
-                Seq(groupCol), "left")
-              .withColumn("_off", coalesce(col("consumed"), lit(0L)))
-          case None => q.withColumn("_off", lit(0L))
+    versionedBatch(spark, "tokenQuotaStream(budgets)", statePath, batchId) { state =>
+      val budgetCase = budgets.toSeq.sortBy(_._1)
+        .foldRight(lit(-1L): org.apache.spark.sql.Column) { case ((g, b), els) =>
+          when(col(groupCol) === g, lit(b)).otherwise(els)
         }
-        val kept = withOff
-          .filter(col("_off") + col("cum_tokens") <= budgetCase)
-          .select(col(groupCol), col(keyCol), col("n_tokens"),
-            (col("_off") + col("cum_tokens")).as("cum_tokens"))
-        kept.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        val batchTotals = q.groupBy(col(groupCol).as("_g"))
-          .agg(sum(col("n_tokens")).as("_bt"))
-        val newState = state match {
-          case Some(st) => st.join(batchTotals, Seq("_g"), "full")
-            .select(col("_g"),
-              (coalesce(col("consumed"), lit(0L)) +
-                coalesce(col("_bt"), lit(0L))).as("consumed"))
-          case None => batchTotals.select(col("_g"), col("_bt").as("consumed"))
-        }
-        val version = s"v$batchId"
-        newState.write.mode("overwrite").parquet(s"$statePath/$version")
-        commitVersion(spark, statePath, version, keepFrom = batchId - 1)
+      // the within-batch cumulative machinery (keep column recomputed
+      // against the offset + per-group budget); checkpointed for the
+      // applyTokenQuotaBatch reason
+      val q = graft.operators.Sampling.tokenQuotaPerGroupBudgets(
+        batch, keyCol, groupCol, tokensCol, budgets)
+        .localCheckpoint()
+      tokenQuotaStep(q, state, groupCol, keyCol, budgetCase,
+        s"$outPath/batch=$batchId")
     }
+  }
+
+  /** The shared step of the token-quota streams: offset the batch's
+    * within-batch running totals `q` by each group's committed
+    * consumption, write the rows still within `budget` to `out`, and
+    * return the consumed-token table with ALL of the batch's tokens
+    * added — kept or dropped, since the batch rule's cum counts dropped
+    * rows too.
+    */
+  private def tokenQuotaStep(
+      q: DataFrame,
+      state: Option[DataFrame],
+      groupCol: String,
+      keyCol: String,
+      budget: Column,
+      out: String
+  ): Option[DataFrame] = {
+    val withOff = state match {
+      case Some(st) =>
+        q.join(broadcast(st.withColumnRenamed("_g", groupCol)),
+            Seq(groupCol), "left")
+          .withColumn("_off", coalesce(col("consumed"), lit(0L)))
+      case None => q.withColumn("_off", lit(0L))
+    }
+    withOff
+      .filter(col("_off") + col("cum_tokens") <= budget)
+      .select(col(groupCol), col(keyCol), col("n_tokens"),
+        (col("_off") + col("cum_tokens")).as("cum_tokens"))
+      .write.mode("overwrite").parquet(out)
+    val batchTotals = q.groupBy(col(groupCol).as("_g"))
+      .agg(sum(col("n_tokens")).as("_bt"))
+    Some(state match {
+      case Some(st) => st.join(batchTotals, Seq("_g"), "full")
+        .select(col("_g"),
+          (coalesce(col("consumed"), lit(0L)) +
+            coalesce(col("_bt"), lit(0L))).as("consumed"))
+      case None => batchTotals.select(col("_g"), col("_bt").as("consumed"))
+    })
   }
 
   /** Streaming exact-substring removal with a persistent WINDOW
@@ -763,11 +715,10 @@ object StreamingOps {
     * next state version — a future verbatim copy of anything seen here
     * excises even when this batch's own copy was itself cut.
     *
-    * Same `_CURRENT` crash-replay protocol as the merge/dedup streams:
-    * survivors write before the commit, replayed batches no-op. State
-    * is 8 bytes per distinct window fingerprint, never text; the state
-    * rewrite stays distinct by induction (batch fingerprints anti-join
-    * the store before the union — no per-batch distinct over history).
+    * State is 8 bytes per distinct window fingerprint, never text; the
+    * state rewrite stays distinct by induction (batch fingerprints
+    * anti-join the store before the union — no per-batch distinct over
+    * history).
     */
   def windowDedupStreamPersistent(
       incoming: DataFrame,
@@ -779,26 +730,18 @@ object StreamingOps {
       window: Int = 50,
       trigger: Trigger = Trigger.ProcessingTime(0L),
       stateBuckets: Option[Int] = None
-  ): StreamingQuery = {
-    val spark = incoming.sparkSession
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyWindowDedupBatch(spark, batch.toDF(), batchId, textCol, idCol,
-          statePath, outPath, window, stateBuckets)
-      }
-      .start()
-  }
+  ): StreamingQuery =
+    foreachBatchStream(incoming, "append", checkpointPath, trigger) { (batch, batchId) =>
+      applyWindowDedupBatch(incoming.sparkSession, batch, batchId, textCol, idCol,
+        statePath, outPath, window, stateBuckets)
+    }
 
   /** One micro-batch of [[windowDedupStreamPersistent]]; factored out
     * so the replay contract is directly testable. `stateBuckets =
     * Some(n)` writes the window-fingerprint store bucketed on `_h` so
     * BOTH per-batch joins against it (the semi-join that finds
     * historical cuts and the anti-join that appends fresh fingerprints)
-    * read the state side exchange-free — the [[applyMergeBatch]]
-    * bucketed-state contract.
+    * read the state side exchange-free.
     */
   def applyWindowDedupBatch(
       spark: SparkSession,
@@ -810,47 +753,39 @@ object StreamingOps {
       outPath: String,
       windowSize: Int = 50,
       stateBuckets: Option[Int] = None
-  ): Unit = {
-    currentVersionId(spark, statePath) match {
-      case Some(cur) if cur >= batchId =>
-        log.warn(s"windowDedupStreamPersistent: skipping batch $batchId — " +
-          s"state at v$cur already includes it")
-      case _ =>
-        import org.apache.spark.sql.functions._
-        import graft.operators.Dedup
-        val base = batch.select(col(idCol).as("_id"),
-          graft.functions.TextFunctions.tokens(col(textCol)).as("_toks"))
-        // checkpoint the narrow (_id, _s, _h, _n) fingerprint table: the
-        // cleaned-output write (keeper spans + historical semi-join) and
-        // the state append both consume it — left lazy, the tokenize +
-        // window-fingerprint chain executed once per consumer (r16)
-        val wins = Dedup.tokenWindowFingerprints(base, windowSize)
-          .localCheckpoint()
-        val inBatch = Dedup.nonKeeperSpans(wins, windowSize)
-        val state = readVersionedState(spark, statePath, stateBuckets.isDefined)
-        val cuts = state match {
-          case Some(st) =>
-            // anything the store has seen cuts UNCONDITIONALLY — the
-            // historical keeper already shipped in an earlier batch
-            val fromState = wins.join(st, Seq("_h"), "left_semi")
-              .select(col("_id"), col("_s"),
-                least(col("_s") + lit(windowSize.toLong), col("_n").cast("long"))
-                  .as("_e"))
-            inBatch.unionByName(fromState).dropDuplicates("_id", "_s")
-          case None => inBatch
-        }
-        val out = Dedup.rebuildWithoutSpans(base, cuts, idCol)
-        out.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        val batchFps = wins.select(col("_h")).distinct()
-        val newState = state match {
-          case Some(st) =>
-            st.unionByName(batchFps.join(st, Seq("_h"), "left_anti"))
-          case None => batchFps
-        }
-        writeVersionedState(spark, statePath, batchId, newState,
-          Seq("_h"), stateBuckets)
+  ): Unit =
+    versionedBatch(spark, "windowDedupStreamPersistent", statePath, batchId,
+        stateBuckets, Seq("_h")) { state =>
+      import graft.operators.Dedup
+      val base = batch.select(col(idCol).as("_id"),
+        graft.functions.TextFunctions.tokens(col(textCol)).as("_toks"))
+      // checkpoint the narrow (_id, _s, _h, _n) fingerprint table: the
+      // cleaned-output write (keeper spans + historical semi-join) and
+      // the state append both consume it — left lazy, the tokenize +
+      // window-fingerprint chain executed once per consumer (r16)
+      val wins = Dedup.tokenWindowFingerprints(base, windowSize)
+        .localCheckpoint()
+      val inBatch = Dedup.nonKeeperSpans(wins, windowSize)
+      val cuts = state match {
+        case Some(st) =>
+          // anything the store has seen cuts UNCONDITIONALLY — the
+          // historical keeper already shipped in an earlier batch
+          val fromState = wins.join(st, Seq("_h"), "left_semi")
+            .select(col("_id"), col("_s"),
+              least(col("_s") + lit(windowSize.toLong), col("_n").cast("long"))
+                .as("_e"))
+          inBatch.unionByName(fromState).dropDuplicates("_id", "_s")
+        case None => inBatch
+      }
+      Dedup.rebuildWithoutSpans(base, cuts, idCol)
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      val batchFps = wins.select(col("_h")).distinct()
+      Some(state match {
+        case Some(st) =>
+          st.unionByName(batchFps.join(st, Seq("_h"), "left_anti"))
+        case None => batchFps
+      })
     }
-  }
 
   /** Incrementally maintained BM25 postings index — the continuous
     * face of [[graft.operators.Retrieval]]: each micro-batch of NEW
@@ -860,14 +795,13 @@ object StreamingOps {
     * [[readState]] serves queries against any committed version.
     * APPEND-ONLY contract: doc ids are assumed new (re-ingesting an id
     * double-counts its terms — route re-ingests through
-    * [[dedupStreamPersistent]] first, or rebuild the index).
+    * [[dedupStreamPersistent]] first, or rebuild the index), which is
+    * also why the replay guard is correctness here.
     *
-    * Same `_CURRENT` version protocol and crash-replay guard as the
-    * merge/dedup streams: a batch already covered by the committed
-    * version no-ops. Per-batch work is one scan of the batch plus an
-    * O(|state|) rewrite of the postings table (inherent to a full-table
-    * file target; the rows are (term-hashable, 8-byte id, count) — swap
-    * in a MERGE-capable table format when the rewrite dominates).
+    * Per-batch work is one scan of the batch plus an O(|state|) rewrite
+    * of the postings table (inherent to a full-table file target; the
+    * rows are (term-hashable, 8-byte id, count) — swap in a
+    * MERGE-capable table format when the rewrite dominates).
     */
   def bm25IndexStream(
       incoming: DataFrame,
@@ -876,18 +810,11 @@ object StreamingOps {
       statePath: String,
       checkpointPath: String,
       trigger: Trigger = Trigger.ProcessingTime(0L)
-  ): StreamingQuery = {
-    val spark = incoming.sparkSession
-    incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBm25IndexBatch(spark, batch.toDF(), batchId, textCol, idCol,
-          statePath)
-      }
-      .start()
-  }
+  ): StreamingQuery =
+    foreachBatchStream(incoming, "append", checkpointPath, trigger) { (batch, batchId) =>
+      applyBm25IndexBatch(incoming.sparkSession, batch, batchId, textCol, idCol,
+        statePath)
+    }
 
   /** One micro-batch of [[bm25IndexStream]]; factored out so the replay
     * contract is directly testable.
@@ -899,43 +826,28 @@ object StreamingOps {
       textCol: String,
       idCol: String,
       statePath: String
-  ): Unit = {
-    currentVersionId(spark, statePath) match {
-      case Some(cur) if cur >= batchId =>
-        log.warn(s"bm25IndexStream: skipping batch $batchId — index at " +
-          s"v$cur already includes it")
-      case _ =>
-        val slice = graft.operators.Retrieval
-          .buildPostings(batch, idCol, textCol)
-        // append-only: batch ids are new, so the union IS the new index
-        // (no re-aggregation of historical postings)
-        val newState = readState(spark, statePath) match {
-          case Some(st) => st.unionByName(slice)
-          case None => slice
-        }
-        val version = s"v$batchId"
-        newState.write.mode("overwrite").parquet(s"$statePath/$version")
-        commitVersion(spark, statePath, version, keepFrom = batchId - 1)
+  ): Unit =
+    versionedBatch(spark, "bm25IndexStream", statePath, batchId) { state =>
+      val slice = graft.operators.Retrieval
+        .buildPostings(batch, idCol, textCol)
+      // append-only: batch ids are new, so the union IS the new index
+      // (no re-aggregation of historical postings)
+      Some(state.fold(slice)(_.unionByName(slice)))
     }
-  }
 
   /** Streaming corpus-drift guard — the distribution-shift monitor a
     * continuously-ingesting curation pipeline runs against its accepted
     * snapshot. The FIRST batch commits the reference token-bucket
-    * histogram as versioned state (`_CURRENT`-pointed, the merge-store
-    * convention); every later batch compresses to its own histogram
-    * map-side and scores against the COMMITTED reference with the exact
-    * integer drift arithmetic
+    * histogram as versioned state; every later batch compresses to its
+    * own histogram map-side and scores against the COMMITTED reference
+    * with the exact integer drift arithmetic
     * ([[graft.operators.ImportanceScoring.driftFromHistograms]] — per-
     * bucket cross-normalized gap, no KL/ln), writing per-batch drift
-    * rows to `outPath/batch=<id>/`.
-    *
-    * Replay idempotence, both roles: a replayed reference batch no-ops
-    * (the version guard sees `_CURRENT` at its own id), and a replayed
-    * scoring batch recomputes against the PINNED committed version and
-    * overwrites its own directory bit-identically. State is a
-    * ≤`buckets`-row histogram — metadata-sized at any corpus scale;
-    * token payloads never cross a shuffle on either path.
+    * rows to `outPath/batch=<id>/` and committing nothing, so a
+    * replayed scoring batch recomputes against the same frozen
+    * reference and overwrites its own directory bit-identically. State
+    * is a ≤`buckets`-row histogram — metadata-sized at any corpus
+    * scale; token payloads never cross a shuffle on either path.
     */
   def applyDriftBatch(
       spark: SparkSession,
@@ -946,37 +858,29 @@ object StreamingOps {
       outPath: String,
       buckets: Int = graft.operators.ImportanceScoring.DefaultBuckets,
       salt: String = "drift"
-  ): Unit = {
-    import graft.operators.ImportanceScoring
-    val hist = ImportanceScoring.hashedBucketCounts(batch, textCol, buckets, salt)
-    currentVersionId(spark, statePath) match {
-      case None =>
-        val version = s"v$batchId"
-        hist.write.mode("overwrite").parquet(s"$statePath/$version")
-        commitVersion(spark, statePath, version, keepFrom = batchId)
-      case Some(cur) if cur >= batchId =>
-        log.warn(s"driftStream: batch $batchId is not newer than the " +
-          s"committed reference v$cur — skipping (replay no-op)")
-      case Some(_) =>
-        val reference = readState(spark, statePath).getOrElse(
-          sys.error(s"driftStream: _CURRENT exists but no state at $statePath"))
-        ImportanceScoring.driftFromHistograms(reference, hist)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+  ): Unit =
+    versionedBatch(spark, "driftStream", statePath, batchId) { state =>
+      import graft.operators.ImportanceScoring
+      val hist = ImportanceScoring.hashedBucketCounts(batch, textCol, buckets, salt)
+      state match {
+        case None => Some(hist)
+        case Some(reference) =>
+          ImportanceScoring.driftFromHistograms(reference, hist)
+            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+          None
+      }
     }
-  }
 
   /** One micro-batch of STREAMING numeric-shift monitoring — the
     * continuous face of
-    * [[graft.operators.Profile.distributionShift]]: batch 0's value
-    * histogram commits as the versioned REFERENCE state (replay
-    * no-ops under the `_CURRENT` guard); every later batch builds its
-    * own histogram and emits the exact two-sample KS + 1-Wasserstein
-    * against the committed reference to `outPath/batch=<id>` as one
-    * `(n, n_ref, ks_ppm, w1_e6)` row — the "is today's feed still
-    * shaped like the reference" alert. Emission is idempotent: a
-    * replayed batch at or below the committed version skips, and a
-    * re-emitted output overwrites bit-identically (pure integer
-    * arithmetic against frozen state).
+    * [[graft.operators.Profile.distributionShift]]: the first non-empty
+    * batch's value histogram commits as the versioned REFERENCE state;
+    * every later batch builds its own histogram and emits the exact
+    * two-sample KS + 1-Wasserstein against the committed reference to
+    * `outPath/batch=<id>` as one `(n, n_ref, ks_ppm, w1_e6)` row — the
+    * "is today's feed still shaped like the reference" alert. Scoring
+    * batches commit nothing; a re-emitted output overwrites
+    * bit-identically (pure integer arithmetic against frozen state).
     *
     * Scale shape: state is the reference VALUE HISTOGRAM (integer
     * measures by contract — quantize first; never rows), each batch
@@ -990,41 +894,34 @@ object StreamingOps {
       valueCol: String,
       statePath: String,
       outPath: String
-  ): Unit = {
-    import graft.operators.Profile
-    val hist = batch
-      .select(col(valueCol).cast("long").as("_v"))
-      .filter(col("_v").isNotNull)
-      .groupBy(col("_v")).agg(count(lit(1)).as("_cr"))
-    currentVersionId(spark, statePath) match {
-      case None =>
+  ): Unit =
+    versionedBatch(spark, "shiftStream", statePath, batchId) { state =>
+      import graft.operators.Profile
+      val hist = batch
+        .select(col(valueCol).cast("long").as("_v"))
+        .filter(col("_v").isNotNull)
+        .groupBy(col("_v")).agg(count(lit(1)).as("_cr"))
+      state match {
         // An EMPTY first batch must NOT become the reference: every
         // later batch would be dropped by the n_ref > 0 filter in
         // shiftFromHistograms and the monitor would silently emit
-        // empty alerts forever. Skip WITHOUT committing so the first
-        // non-empty batch takes the reference slot instead.
-        if (hist.isEmpty) {
+        // empty alerts forever. Commit nothing so the first non-empty
+        // batch takes the reference slot instead.
+        case None if hist.isEmpty =>
           log.warn(s"shiftStream: batch $batchId has no non-null values " +
             "— refusing to commit an empty reference histogram; waiting " +
             "for the first non-empty batch")
-        } else {
-          val version = s"v$batchId"
-          hist.write.mode("overwrite").parquet(s"$statePath/$version")
-          commitVersion(spark, statePath, version, keepFrom = batchId)
-        }
-      case Some(cur) if cur >= batchId =>
-        log.warn(s"shiftStream: batch $batchId is not newer than the " +
-          s"committed reference v$cur — skipping (replay no-op)")
-      case Some(_) =>
-        val reference = readState(spark, statePath).getOrElse(
-          sys.error(s"shiftStream: _CURRENT exists but no state at $statePath"))
-        val oth = hist.select(lit("batch").as("_g"), col("_v"),
-          col("_cr").as("_c"))
-        Profile.shiftFromHistograms(oth, reference, "_gout")
-          .select(col("n"), col("n_ref"), col("ks_ppm"), col("w1_e6"))
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+          None
+        case None => Some(hist)
+        case Some(reference) =>
+          val oth = hist.select(lit("batch").as("_g"), col("_v"),
+            col("_cr").as("_c"))
+          Profile.shiftFromHistograms(oth, reference, "_gout")
+            .select(col("n"), col("n_ref"), col("ks_ppm"), col("w1_e6"))
+            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+          None
+      }
     }
-  }
 
   /** One micro-batch of STREAMING EXACT QUANTILES — the continuous
     * face of [[graft.operators.Profile.exactPercentiles]]: the
@@ -1038,12 +935,8 @@ object StreamingOps {
     * identical [[graft.operators.Profile.interpolateRanks]]
     * arithmetic runs over the merged histogram
     * ([[graft.operators.Profile.exactPercentilesFromHistogram]]), so
-    * DuckDB's `quantile_cont` reproduces every decimal.
-    *
-    * Replay idempotence: a batch at or below the committed version
-    * no-ops (re-merging would double-count — the guard is
-    * correctness); a torn commit recomputes against the OLD state and
-    * overwrites bit-identically.
+    * DuckDB's `quantile_cont` reproduces every decimal. The replay
+    * guard is correctness: re-merging a committed batch double-counts.
     *
     * Scale shape: state is histogram rows (≤ distinct quantized
     * values), each batch pays one map-side-combined histogram
@@ -1062,38 +955,27 @@ object StreamingOps {
     import graft.operators.Profile
     require(probs.nonEmpty && probs.forall(p => p >= 0d && p <= 1d),
       s"quantileStream: probs must be in [0, 1], got $probs")
-    currentVersionId(spark, statePath) match {
-      case Some(cur) if cur >= batchId =>
-        log.warn(s"quantileStream: skipping batch $batchId — state at " +
-          s"v$cur already includes it (merging again would double-count)")
-      case _ =>
-        val own = batch
-          .select(col(valueCol).cast("long").as("v"))
-          .filter(col("v").isNotNull)
-          .groupBy(col("v")).agg(count(lit(1)).as("cnt"))
-        val merged = (readState(spark, statePath) match {
-          case Some(st) => st.unionByName(own)
-          case None => own
-        }).groupBy(col("v")).agg(sum(col("cnt")).as("cnt"))
-          .localCheckpoint()
-        val n = merged.agg(coalesce(sum(col("cnt")), lit(0L)))
-          .collect()(0).getLong(0)
-        val version = s"v$batchId"
-        merged.write.mode("overwrite").parquet(s"$statePath/$version")
-        // an empty prefix has UNDEFINED quantiles: emit zero rows (the
-        // batch operator's Option.None face), never NaN placeholders
-        val rows = Profile.exactPercentilesFromHistogram(merged, probs) match {
-          case Some(vals) => probs.zip(vals).map { case (p, v) => (p, v, n) }
-          case None => Seq.empty[(Double, Double, Long)]
-        }
-        import spark.implicits._
-        rows.toDF("prob", "value", "n")
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        // commit LAST: a crash before this line replays into the recompute
-        // branch (old _CURRENT) and rewrites state + output bit-identically;
-        // committing first would skip the replay with the output missing.
-        commitVersion(spark, statePath, version, keepFrom = batchId)
+    versionedBatch(spark, "quantileStream", statePath, batchId) { state =>
+      val own = batch
+        .select(col(valueCol).cast("long").as("v"))
+        .filter(col("v").isNotNull)
+        .groupBy(col("v")).agg(count(lit(1)).as("cnt"))
+      val merged = state.fold(own)(_.unionByName(own))
+        .groupBy(col("v")).agg(sum(col("cnt")).as("cnt"))
+        .localCheckpoint()
+      val n = merged.agg(coalesce(sum(col("cnt")), lit(0L)))
+        .collect()(0).getLong(0)
+      // an empty prefix has UNDEFINED quantiles: emit zero rows (the
+      // batch operator's Option.None face), never NaN placeholders
+      val rows = Profile.exactPercentilesFromHistogram(merged, probs) match {
+        case Some(vals) => probs.zip(vals).map { case (p, v) => (p, v, n) }
+        case None => Seq.empty[(Double, Double, Long)]
+      }
+      import spark.implicits._
+      rows.toDF("prob", "value", "n")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      Some(merged)
     }
   }
 
@@ -1112,12 +994,8 @@ object StreamingOps {
     * healthy crawl keeps minting terms; new_terms → 0 says the tail
     * is re-crawls). After any prefix the cumulative pair equals the
     * batch operator over the union (exact over fingerprints, the
-    * dedup family's 2⁻⁶⁴ collision argument).
-    *
-    * Replay: a batch at or below the committed version no-ops (the
-    * union would re-add its terms' tokens — the guard is
-    * correctness); a torn commit recomputes against the OLD state and
-    * overwrites bit-identically.
+    * dedup family's 2⁻⁶⁴ collision argument). The replay guard is
+    * correctness: the union would re-add a committed batch's tokens.
     *
     * Scale shape: per-batch cost = one tokenize pass map-side-combined
     * to distinct fingerprints + one 8-byte anti-join against the
@@ -1131,55 +1009,44 @@ object StreamingOps {
       textCol: String,
       statePath: String,
       outPath: String
-  ): Unit = {
-    import graft.functions.TextFunctions
-    currentVersionId(spark, statePath) match {
-      case Some(cur) if cur >= batchId =>
-        log.warn(s"vocabGrowthStream: skipping batch $batchId — state at " +
-          s"v$cur already includes it (re-merging would double-count)")
-      case _ =>
-        // ONE tokenize pass: group straight to per-fingerprint counts so the
-        // batch token total (sum) and the distinct-term frame (keys) both
-        // come from the same map-side-combined aggregate — tokenizing twice
-        // would double the dominant cost and break the scaladoc's claim.
-        val hCounts = batch.select(
-            explode(TextFunctions.tokens(lower(col(textCol)))).as("_t"))
-          .groupBy(xxhash64(col("_t")).as("h"))
-          .agg(count(lit(1)).as("_hc"))
-          .localCheckpoint()
-        val batchTokens = hCounts.agg(coalesce(sum(col("_hc")), lit(0L)))
-          .collect()(0).getLong(0)
-        val batchTerms = hCounts.select(col("h"))
-        val old = readState(spark, statePath)
-        val oldTerms = old.map(_.filter(col("h").isNotNull).select(col("h")))
-        val oldTokens = old.map(_.filter(col("h").isNull)
-          .select(col("cnt")).head().getLong(0)).getOrElse(0L)
-        val newTerms = (oldTerms match {
-          case Some(ot) => batchTerms.join(ot, Seq("h"), "left_anti")
-          case None => batchTerms
-        }).localCheckpoint()
-        val nNew = newTerms.count()
-        val mergedTerms = (oldTerms match {
-          case Some(ot) => ot.unionByName(newTerms)
-          case None => newTerms
-        }).localCheckpoint()
-        val nDistinct = mergedTerms.count()
-        val totalTokens = oldTokens + batchTokens
-        import spark.implicits._
-        val state = mergedTerms.select(col("h"), lit(1L).as("cnt"))
-          .unionByName(Seq((Option.empty[Long], totalTokens))
-            .toDF("h", "cnt"))
-        val version = s"v$batchId"
-        state.write.mode("overwrite").parquet(s"$statePath/$version")
-        Seq((nDistinct, totalTokens, nNew))
-          .toDF("distinct_terms", "total_tokens", "new_terms")
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        // commit LAST (the applyDedupBatch order): a torn run replays into
-        // the recompute branch and rewrites state + output bit-identically.
-        commitVersion(spark, statePath, version, keepFrom = batchId)
+  ): Unit =
+    versionedBatch(spark, "vocabGrowthStream", statePath, batchId) { old =>
+      import graft.functions.TextFunctions
+      // ONE tokenize pass: group straight to per-fingerprint counts so the
+      // batch token total (sum) and the distinct-term frame (keys) both
+      // come from the same map-side-combined aggregate — tokenizing twice
+      // would double the dominant cost and break the scaladoc's claim.
+      val hCounts = batch.select(
+          explode(TextFunctions.tokens(lower(col(textCol)))).as("_t"))
+        .groupBy(xxhash64(col("_t")).as("h"))
+        .agg(count(lit(1)).as("_hc"))
+        .localCheckpoint()
+      val batchTokens = hCounts.agg(coalesce(sum(col("_hc")), lit(0L)))
+        .collect()(0).getLong(0)
+      val batchTerms = hCounts.select(col("h"))
+      val oldTerms = old.map(_.filter(col("h").isNotNull).select(col("h")))
+      val oldTokens = old.map(_.filter(col("h").isNull)
+        .select(col("cnt")).head().getLong(0)).getOrElse(0L)
+      val newTerms = (oldTerms match {
+        case Some(ot) => batchTerms.join(ot, Seq("h"), "left_anti")
+        case None => batchTerms
+      }).localCheckpoint()
+      val nNew = newTerms.count()
+      val mergedTerms = (oldTerms match {
+        case Some(ot) => ot.unionByName(newTerms)
+        case None => newTerms
+      }).localCheckpoint()
+      val nDistinct = mergedTerms.count()
+      val totalTokens = oldTokens + batchTokens
+      import spark.implicits._
+      Seq((nDistinct, totalTokens, nNew))
+        .toDF("distinct_terms", "total_tokens", "new_terms")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      Some(mergedTerms.select(col("h"), lit(1L).as("cnt"))
+        .unionByName(Seq((Option.empty[Long], totalTokens))
+          .toDF("h", "cnt")))
     }
-  }
 
   /** One micro-batch of STREAMING changepoint monitoring — the
     * continuous face of
@@ -1190,13 +1057,9 @@ object StreamingOps {
     * changepoint estimate over the accumulated series to
     * `outPath/batch=<id>` — the alert a feed monitor re-evaluates as
     * data arrives. After the last batch the emitted row equals the
-    * batch operator on the full series exactly.
-    *
-    * Replay idempotence: a batch at or below the committed version
-    * no-ops (the merge would double-count its events otherwise — the
-    * version guard is CORRECTNESS here, not just hygiene); a torn
-    * commit recomputes against the OLD state and overwrites
-    * bit-identically before committing.
+    * batch operator on the full series exactly. The replay guard is
+    * correctness here, not just hygiene: the merge would double-count
+    * a committed batch's events.
     */
   def applyChangepointBatch(
       spark: SparkSession,
@@ -1205,28 +1068,20 @@ object StreamingOps {
       periodCol: String,
       statePath: String,
       outPath: String
-  ): Unit = {
-    import graft.operators.ImportanceScoring
-    currentVersionId(spark, statePath) match {
-      case Some(cur) if cur >= batchId =>
-        log.warn(s"changepointStream: skipping batch $batchId — state at " +
-          s"v$cur already includes it (merging again would double-count)")
-      case _ =>
-        val own = batch.select(col(periodCol).cast("long").as("_p"))
-          .filter(col("_p").isNotNull)
-          .groupBy(col("_p")).agg(count(lit(1)).as("_c"))
-        val merged = (readState(spark, statePath) match {
-          case Some(st) => st.unionByName(own)
-            .groupBy(col("_p")).agg(sum(col("_c")).as("_c"))
-          case None => own
-        }).localCheckpoint()
-        ImportanceScoring.cusumFromCounts(merged)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        val version = s"v$batchId"
-        merged.write.mode("overwrite").parquet(s"$statePath/$version")
-        commitVersion(spark, statePath, version, keepFrom = batchId - 1)
+  ): Unit =
+    versionedBatch(spark, "changepointStream", statePath, batchId) { state =>
+      val own = batch.select(col(periodCol).cast("long").as("_p"))
+        .filter(col("_p").isNotNull)
+        .groupBy(col("_p")).agg(count(lit(1)).as("_c"))
+      val merged = (state match {
+        case Some(st) => st.unionByName(own)
+          .groupBy(col("_p")).agg(sum(col("_c")).as("_c"))
+        case None => own
+      }).localCheckpoint()
+      graft.operators.ImportanceScoring.cusumFromCounts(merged)
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      Some(merged)
     }
-  }
 
   /** One micro-batch of STREAMING n-gram novelty — the continuous face
     * of [[graft.operators.Vocab.ngramNovelty]]: a persistent
@@ -1235,15 +1090,9 @@ object StreamingOps {
     * novelty_ppm)` — how much NEW information the batch carries (a
     * re-crawl or templated feed scores near zero). The batch's novel
     * fingerprints then append to the store as the next committed
-    * version (`_CURRENT` protocol).
-    *
-    * Replay idempotence: a batch at or below the committed version
-    * no-ops (its row was written before the commit); a torn commit
-    * replays against the OLD store and converges bit-identically (the
-    * [[applyDedupBatch]] argument). The exchange carries 8-byte
-    * fingerprints only; the store append is a shuffle-free copy+append
-    * (novel fps are distinct and disjoint from the store by
-    * construction).
+    * version. The exchange carries 8-byte fingerprints only; the store
+    * append is a shuffle-free copy+append (novel fps are distinct and
+    * disjoint from the store by construction).
     */
   def applyNoveltyBatch(
       spark: SparkSession,
@@ -1257,33 +1106,24 @@ object StreamingOps {
   ): Unit = {
     import spark.implicits._
     require(n >= 1, s"applyNoveltyBatch: n must be positive, got $n")
-    currentVersionId(spark, statePath) match {
-      case Some(cur) if cur >= batchId =>
-        log.warn(s"noveltyStream: skipping batch $batchId — state at " +
-          s"v$cur already includes it")
-      case _ =>
-        val grams = batch
-          .select(explode(array_distinct(
-            graft.functions.TextFunctions.shingles(col(textCol), n))).as("_s"))
-          .select(xxhash64(col("_s")).as("_fp"))
-          .distinct()
-          .localCheckpoint()
-        val state = readVersionedState(spark, statePath, stateBuckets.isDefined)
-        val novel = (state match {
-          case Some(st) => grams.join(st, Seq("_fp"), "left_anti")
-          case None => grams
-        }).localCheckpoint()
-        val total = grams.count()
-        val nov = novel.count()
-        Seq((batchId, nov, total, nov * 1000000L / math.max(total, 1L)))
-          .toDF("batch_id", "novel_ngrams", "distinct_ngrams", "novelty_ppm")
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        val newState = state match {
-          case Some(st) => st.unionByName(novel)
-          case None => novel
-        }
-        writeVersionedState(spark, statePath, batchId, newState,
-          Seq("_fp"), stateBuckets)
+    versionedBatch(spark, "noveltyStream", statePath, batchId, stateBuckets,
+        Seq("_fp")) { state =>
+      val grams = batch
+        .select(explode(array_distinct(
+          graft.functions.TextFunctions.shingles(col(textCol), n))).as("_s"))
+        .select(xxhash64(col("_s")).as("_fp"))
+        .distinct()
+        .localCheckpoint()
+      val novel = (state match {
+        case Some(st) => grams.join(st, Seq("_fp"), "left_anti")
+        case None => grams
+      }).localCheckpoint()
+      val total = grams.count()
+      val nov = novel.count()
+      Seq((batchId, nov, total, nov * 1000000L / math.max(total, 1L)))
+        .toDF("batch_id", "novel_ngrams", "distinct_ngrams", "novelty_ppm")
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      Some(state.fold(novel)(_.unionByName(novel)))
     }
   }
 
@@ -1296,13 +1136,8 @@ object StreamingOps {
     * the batch operator over (committed state ∪ batch) and commits the
     * winner set; after any prefix of the stream the state is
     * bit-identical to the batch sample of everything seen, which is
-    * what the gate's oracle recomputes.
-    *
-    * Replay idempotence: a batch at or below the committed version
-    * no-ops (the [[applyNoveltyBatch]] guard). Torn commits cannot
-    * corrupt: state writes land at a new version directory and the
-    * `_CURRENT` pointer flips last. State is ≤ n rows — driver-bounded
-    * by construction, at any corpus scale.
+    * what the gate's oracle recomputes. State is ≤ n rows —
+    * driver-bounded by construction, at any corpus scale.
     */
   def applySampleExactNBatch(
       spark: SparkSession,
@@ -1314,23 +1149,13 @@ object StreamingOps {
       statePath: String
   ): Unit = {
     require(n >= 1, s"applySampleExactNBatch: n must be positive, got $n")
-    currentVersionId(spark, statePath) match {
-      case Some(cur) if cur >= batchId =>
-        log.warn(s"sampleExactNStream: skipping batch $batchId — state at " +
-          s"v$cur already includes it")
-      case _ =>
-        val cand = readState(spark, statePath) match {
-          case Some(st) => st.unionByName(batch)
-          case None => batch
-        }
-        // no checkpoint: the write below is the winner set's only
-        // consumer (and it lands in a NEW version dir, so there is no
-        // read-overwrite hazard) — the eager materialization was one
-        // full extra pass per batch (r16 measure)
-        val next = graft.operators.Sampling.sampleExactN(cand, keyCol, n, salt)
-        val version = s"v$batchId"
-        next.write.mode("overwrite").parquet(s"$statePath/$version")
-        commitVersion(spark, statePath, version, keepFrom = batchId - 1)
+    versionedBatch(spark, "sampleExactNStream", statePath, batchId) { state =>
+      // no checkpoint: the version write is the winner set's only
+      // consumer (and it lands in a NEW version dir, so there is no
+      // read-overwrite hazard) — the eager materialization was one
+      // full extra pass per batch (r16 measure)
+      Some(graft.operators.Sampling.sampleExactN(
+        state.fold(batch)(_.unionByName(batch)), keyCol, n, salt))
     }
   }
 
@@ -1355,23 +1180,14 @@ object StreamingOps {
       statePath: String
   ): Unit = {
     require(n >= 1, s"applySampleExactNPerGroupBatch: n must be positive, got $n")
-    currentVersionId(spark, statePath) match {
-      case Some(cur) if cur >= batchId =>
-        log.warn(s"sampleExactNPerGroupStream: skipping batch $batchId — " +
-          s"state at v$cur already includes it")
-      case _ =>
-        val slim = batch.select(col(groupCol), col(keyCol))
-        val cand = readState(spark, statePath) match {
-          case Some(st) => st.select(col(groupCol), col(keyCol)).unionByName(slim)
-          case None => slim
-        }
-        // no checkpoint — single consumer, new version dir (see
-        // applySampleExactNBatch)
-        val next = graft.operators.Sampling
-          .sampleExactNPerGroup(cand, keyCol, groupCol, n, salt)
-        val version = s"v$batchId"
-        next.write.mode("overwrite").parquet(s"$statePath/$version")
-        commitVersion(spark, statePath, version, keepFrom = batchId - 1)
+    versionedBatch(spark, "sampleExactNPerGroupStream", statePath, batchId) { state =>
+      val slim = batch.select(col(groupCol), col(keyCol))
+      val cand = state.fold(slim)(
+        _.select(col(groupCol), col(keyCol)).unionByName(slim))
+      // no checkpoint — single consumer, new version dir (see
+      // applySampleExactNBatch)
+      Some(graft.operators.Sampling
+        .sampleExactNPerGroup(cand, keyCol, groupCol, n, salt))
     }
   }
 
@@ -1391,25 +1207,17 @@ object StreamingOps {
       statePath: String,
       depth: Int = 4,
       width: Int = 1024
-  ): Unit = {
-    currentVersionId(spark, statePath) match {
-      case Some(cur) if cur >= batchId =>
-        log.warn(s"cmsStream: skipping batch $batchId — state at v$cur " +
-          "already includes it")
-      case _ =>
-        val fresh = graft.operators.Profile.cmsSketch(batch, item, depth, width)
-        // no checkpoint — the version write below is the merge's only
-        // consumer, into a new version dir (r16: the eager pass was waste)
-        val merged = readState(spark, statePath) match {
-          case Some(st) => st.unionByName(fresh)
-            .groupBy("row", "col").agg(sum(col("cnt")).as("cnt"))
-          case None => fresh
-        }
-        val version = s"v$batchId"
-        merged.write.mode("overwrite").parquet(s"$statePath/$version")
-        commitVersion(spark, statePath, version, keepFrom = batchId - 1)
+  ): Unit =
+    versionedBatch(spark, "cmsStream", statePath, batchId) { state =>
+      val fresh = graft.operators.Profile.cmsSketch(batch, item, depth, width)
+      // no checkpoint — the version write is the merge's only consumer,
+      // into a new version dir (r16: the eager pass was waste)
+      Some(state match {
+        case Some(st) => st.unionByName(fresh)
+          .groupBy("row", "col").agg(sum(col("cnt")).as("cnt"))
+        case None => fresh
+      })
     }
-  }
 
   /** One micro-batch of the STREAMING MinHash/LSH near-dup index — the
     * text sibling of [[applyAnnIndexBatch]]: the state is the
@@ -1435,30 +1243,20 @@ object StreamingOps {
     require(numHashes % bands == 0,
       "applyMinhashIndexBatch: numHashes must be divisible by bands")
     import graft.operators.Dedup
-    currentVersionId(spark, statePath) match {
-      case Some(cur) if cur >= batchId =>
-        log.warn(s"minhashIndexStream: skipping batch $batchId — index at " +
-          s"v$cur already includes it")
-      case _ =>
-        val sigs = batch.select(col(idCol).as("id"),
-            Dedup.minHashSignature(col(textCol), numHashes).as("sig"),
-            xxhash64(graft.functions.TextFunctions
-              .normalizeForFingerprint(col(textCol))).as("fp"))
-          .filter(col("sig").isNotNull)
-        val fresh = sigs.select(col("id"), col("sig"), col("fp"),
-            explode(Dedup.lshBandKeys(col("sig"), bands, numHashes / bands))
-              .as("_bk"))
-          .select(col("id"), col("sig"), col("fp"),
-            col("_bk.band").as("band"), col("_bk.h").as("h"))
-        // no checkpoint — single consumer, new version dir (the
-        // applyCmsBatch rationale)
-        val merged = (readState(spark, statePath) match {
-          case Some(st) => st.unionByName(fresh)
-          case None => fresh
-        }).dropDuplicates("id", "band")
-        val version = s"v$batchId"
-        merged.write.mode("overwrite").parquet(s"$statePath/$version")
-        commitVersion(spark, statePath, version, keepFrom = batchId - 1)
+    versionedBatch(spark, "minhashIndexStream", statePath, batchId) { state =>
+      val sigs = batch.select(col(idCol).as("id"),
+          Dedup.minHashSignature(col(textCol), numHashes).as("sig"),
+          xxhash64(graft.functions.TextFunctions
+            .normalizeForFingerprint(col(textCol))).as("fp"))
+        .filter(col("sig").isNotNull)
+      val fresh = sigs.select(col("id"), col("sig"), col("fp"),
+          explode(Dedup.lshBandKeys(col("sig"), bands, numHashes / bands))
+            .as("_bk"))
+        .select(col("id"), col("sig"), col("fp"),
+          col("_bk.band").as("band"), col("_bk.h").as("h"))
+      // no checkpoint — single consumer, new version dir (the
+      // applyCmsBatch rationale)
+      Some(state.fold(fresh)(_.unionByName(fresh)).dropDuplicates("id", "band"))
     }
   }
 
@@ -1509,17 +1307,6 @@ object StreamingOps {
     verified.filter(col("overlap") >= minOverlap)
   }
 
-  /** One micro-batch of the STREAMING HLL distinct sketch: the state is
-    * the per-(group, bucket) max-ρ register table — HLL's defining
-    * property is that registers MAX-MERGE, so each batch unions its own
-    * registers ([[graft.operators.Profile.hllRegisters]]) with the
-    * committed state and takes the per-bucket max. After any prefix of
-    * the stream the state is bit-identical to the batch sketch of
-    * everything ingested (associative + commutative + idempotent merge —
-    * re-delivered ITEMS are harmless by construction; re-delivered
-    * BATCHES additionally no-op via the version guard). State is
-    * ≤ 1024·|groups| rows, metadata-sized at any corpus scale.
-    */
   /** One micro-batch of STREAMING ENTITY RESOLUTION — the continuous
     * face of the batch setsim → label-propagation pipeline (the
     * `pipeline_entity_resolution` gate). The versioned state carries
@@ -1541,9 +1328,9 @@ object StreamingOps {
     *     stars compress every prior component to diameter 1, so
     *     `lpaRounds` only has to cover the new merges; docs outside
     *     every edge keep label = self,
-    *  4. commits grams ∪ labels as the next version and emits the
-    *     FULL canonical table (`node, label, is_canonical`, singletons
-    *     included with label = self) to `outPath/batch=<id>`.
+    *  4. emits the FULL canonical table (`node, label, is_canonical`,
+    *     singletons included with label = self) to `outPath/batch=<id>`
+    *     and commits grams ∪ labels as the next version.
     *
     * After the last batch the emitted table equals the batch pipeline
     * over all docs, PROVIDED `lpaRounds` fully converges both
@@ -1556,12 +1343,8 @@ object StreamingOps {
     * min propagation TO CONVERGENCE) instead of bounded rounds, making
     * the canonical labels exact at any component diameter for an
     * O(log d)-round cost. Labels are MIN by STRING order — callers
-    * feed order-consistent ids (the gate lpads).
-    *
-    * Replay: a batch at or below the committed version no-ops (the
-    * gram union would double rows otherwise — the guard is
-    * correctness); a torn commit recomputes against the OLD `_CURRENT`
-    * and overwrites bit-identically.
+    * feed order-consistent ids (the gate lpads). The replay guard is
+    * correctness: the gram union would double rows otherwise.
     *
     * Scale shape: per-batch cost = the incremental prefix-filter join
     * (∝ new docs × matched rare-gram postings) + `lpaRounds` id-only
@@ -1578,24 +1361,6 @@ object StreamingOps {
     * at 100 TB both would move to an append-log + compaction layout —
     * the protocol (version pointer, replay guard) is unchanged by that
     * swap.
-    *
-    * State-handle fast path (the Decontamination probe-hash-handle
-    * discipline): the committed state is consumed THREE times per batch
-    * (new-id anti-join, gram union, label star edges), each a full
-    * parquet scan of the store. A caller driving consecutive batches in
-    * one process can pass `stateIn` — the handle RETURNED by the
-    * previous call: a LAZY frame over that batch's localCheckpointed
-    * inputs, row-identical to what `_CURRENT` points at, so each scan
-    * becomes an in-memory union read instead of a parquet pass (lazy
-    * deliberately — eagerly re-checkpointing the full state measured
-    * SLOWER than the page-cached parquet re-reads it replaced; README
-    * round-14 measurements). With `cacheState = true` the call returns
-    * the new committed state (`Some`); the replay-skip branch returns
-    * `stateIn` unchanged so a driving loop can thread blindly. Purely an
-    * optimization: the version guard, commit order, and written bytes
-    * are identical with or without the handle, and a `stateIn` that is
-    * NOT the committed frame is a caller bug (the contract is the
-    * returned handle, nothing else).
     */
   def applyErBatch(
       spark: SparkSession,
@@ -1609,89 +1374,58 @@ object StreamingOps {
       statePath: String,
       outPath: String,
       exactComponents: Boolean = false,
-      maxPrefixGramDf: Long = 100000L,
-      stateIn: Option[DataFrame] = None,
-      cacheState: Boolean = false,
-      stateBuckets: Option[Int] = None
-  ): Option[DataFrame] = {
-    import graft.operators.{Dedup, Graph}
-    import graft.functions.TextFunctions
-    currentVersionId(spark, statePath) match {
-      case Some(cur) if cur >= batchId =>
-        log.warn(s"erStream: skipping batch $batchId — state at v$cur " +
-          "already includes it (re-resolving would duplicate gram rows)")
-        stateIn
-      case _ =>
-        val newGramsRaw = batch.select(col(idCol).cast(StringType).as("_id"),
-            explode(array_distinct(
-              TextFunctions.shingles(col(textCol), shingleSize))).as("_s"))
-          .select(col("_id"), xxhash64(col("_s")).as("_g"))
-          .distinct()
-        val old = stateIn.orElse(readVersionedState(spark, statePath,
-          stateBuckets.isDefined, Some(ErStateSchema)))
-        val oldGrams = old.map(_.filter(col("kind") === "g")
-          .select(col("id").as("_id"), col("g").as("_g")))
-        val oldLabels = old.map(_.filter(col("kind") === "l")
-          .select(col("id").as("node"), col("label")))
-        // every stored doc has exactly one label row, so the label rows
-        // are the stored id set
-        val newGrams = oldLabels match {
-          case Some(ol) => newGramsRaw.join(
-            ol.select(col("node").as("_id")), Seq("_id"), "left_anti")
-          case None => newGramsRaw
-        }
-        val allGrams = Materialize.local(oldGrams match {
-          case Some(og) => og.withColumn("_new", lit(false))
-            .unionByName(newGrams.withColumn("_new", lit(true)))
-          case None => newGrams.withColumn("_new", lit(true))
-        })
-        val pairs = Dedup.setSimPairsFromGrams(allGrams, thresholdPpm,
-            maxPrefixGramDf, inputMaterialized = true)
-          .select(col("id_a").as("_a"), col("id_b").as("_b"))
-        val starEdges = oldLabels.map(_.filter(col("node") =!= col("label"))
-          .select(col("node").as("_a"), col("label").as("_b")))
-        val edges = starEdges.map(pairs.unionByName(_)).getOrElse(pairs)
-        val lpa =
-          if (exactComponents) Graph.connectedComponentsMin(edges, "_a", "_b")
-          else Graph.labelPropagationMin(edges, "_a", "_b", lpaRounds)
-        // singletons label themselves: a min label never exceeds its own
-        // node, so ONE min aggregate over (LPA labels ∪ every doc as its
-        // own label) is the full table. Singletons stay out of the LPA
-        // rounds, so a batch without pairs (the first one) runs them over
-        // empty inputs
-        val labels = Materialize.local(lpa
-          .unionByName(allGrams.select(col("_id").as("node"), col("_id").as("label")))
-          .groupBy(col("node")).agg(min(col("label")).as("label")))
-        // the handle stays LAZY: both union inputs (allGrams, labels) are
-        // already materialized this batch, so re-deriving the union
-        // per consumer is a cheap in-memory read — measured FASTER than
-        // eagerly checkpointing the full state again (the checkpoint
-        // materialization cost more than the page-cached, column-pruned
-        // parquet re-reads it replaced; README round-14 measurements)
-        val state = allGrams.select(lit("g").as("kind"), col("_id").as("id"),
-            col("_g").as("g"), lit(null).cast(StringType).as("label"))
-          .unionByName(labels.select(lit("l").as("kind"), col("node").as("id"),
-            lit(null).cast(LongType).as("g"), col("label")))
-        // plain store: state write, output, commit LAST (the
-        // applyDedupBatch order). Bucketed store: output first, then the
-        // bucketed writer owns state-write+commit as one unit — a crash
-        // at any point still replays into the recompute branch and
-        // rewrites everything bit-identically (_CURRENT flips last in
-        // both orders).
-        if (stateBuckets.isEmpty)
-          state.write.mode("overwrite").parquet(s"$statePath/v$batchId")
-        labels.select(col("node"), col("label"),
-            (col("node") === col("label")).as("is_canonical"))
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        stateBuckets match {
-          case None =>
-            commitVersion(spark, statePath, s"v$batchId", keepFrom = batchId)
-          case Some(_) => writeVersionedStateKeeping(spark, statePath,
-            batchId, state, Seq("id"), stateBuckets, keepFrom = batchId)
-        }
-        if (cacheState) Some(state) else None
+      maxPrefixGramDf: Long = 100000L
+  ): Unit =
+    versionedBatch(spark, "erStream", statePath, batchId,
+        stateSchema = Some(ErStateSchema)) { old =>
+      import graft.operators.{Dedup, Graph}
+      import graft.functions.TextFunctions
+      val newGramsRaw = batch.select(col(idCol).cast(StringType).as("_id"),
+          explode(array_distinct(
+            TextFunctions.shingles(col(textCol), shingleSize))).as("_s"))
+        .select(col("_id"), xxhash64(col("_s")).as("_g"))
+        .distinct()
+      val oldGrams = old.map(_.filter(col("kind") === "g")
+        .select(col("id").as("_id"), col("g").as("_g")))
+      val oldLabels = old.map(_.filter(col("kind") === "l")
+        .select(col("id").as("node"), col("label")))
+      // every stored doc has exactly one label row, so the label rows
+      // are the stored id set
+      val newGrams = oldLabels match {
+        case Some(ol) => newGramsRaw.join(
+          ol.select(col("node").as("_id")), Seq("_id"), "left_anti")
+        case None => newGramsRaw
+      }
+      val allGrams = Materialize.local(oldGrams match {
+        case Some(og) => og.withColumn("_new", lit(false))
+          .unionByName(newGrams.withColumn("_new", lit(true)))
+        case None => newGrams.withColumn("_new", lit(true))
+      })
+      val pairs = Dedup.setSimPairsFromGrams(allGrams, thresholdPpm,
+          maxPrefixGramDf, inputMaterialized = true)
+        .select(col("id_a").as("_a"), col("id_b").as("_b"))
+      val starEdges = oldLabels.map(_.filter(col("node") =!= col("label"))
+        .select(col("node").as("_a"), col("label").as("_b")))
+      val edges = starEdges.map(pairs.unionByName(_)).getOrElse(pairs)
+      val lpa =
+        if (exactComponents) Graph.connectedComponentsMin(edges, "_a", "_b")
+        else Graph.labelPropagationMin(edges, "_a", "_b", lpaRounds)
+      // singletons label themselves: a min label never exceeds its own
+      // node, so ONE min aggregate over (LPA labels ∪ every doc as its
+      // own label) is the full table. Singletons stay out of the LPA
+      // rounds, so a batch without pairs (the first one) runs them over
+      // empty inputs
+      val labels = Materialize.local(lpa
+        .unionByName(allGrams.select(col("_id").as("node"), col("_id").as("label")))
+        .groupBy(col("node")).agg(min(col("label")).as("label")))
+      labels.select(col("node"), col("label"),
+          (col("node") === col("label")).as("is_canonical"))
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      Some(allGrams.select(lit("g").as("kind"), col("_id").as("id"),
+          col("_g").as("g"), lit(null).cast(StringType).as("label"))
+        .unionByName(labels.select(lit("l").as("kind"), col("node").as("id"),
+          lit(null).cast(LongType).as("g"), col("label"))))
     }
-  }
 
   /** READ-ONLY entity lookup against the committed ER state — the
     * SERVING face of [[applyErBatch]]: resolve which canonical entity
@@ -1777,6 +1511,17 @@ object StreamingOps {
     newOut.unionByName(storeOut)
   }
 
+  /** One micro-batch of the STREAMING HLL distinct sketch: the state is
+    * the per-(group, bucket) max-ρ register table — HLL's defining
+    * property is that registers MAX-MERGE, so each batch unions its own
+    * registers ([[graft.operators.Profile.hllRegisters]]) with the
+    * committed state and takes the per-bucket max. After any prefix of
+    * the stream the state is bit-identical to the batch sketch of
+    * everything ingested (associative + commutative + idempotent merge —
+    * re-delivered ITEMS are harmless by construction; re-delivered
+    * BATCHES additionally no-op via the version guard). State is
+    * ≤ 1024·|groups| rows, metadata-sized at any corpus scale.
+    */
   def applyHllBatch(
       spark: SparkSession,
       batch: DataFrame,
@@ -1784,25 +1529,17 @@ object StreamingOps {
       groupCol: String,
       item: Column,
       statePath: String
-  ): Unit = {
-    currentVersionId(spark, statePath) match {
-      case Some(cur) if cur >= batchId =>
-        log.warn(s"hllStream: skipping batch $batchId — state at v$cur " +
-          "already includes it")
-      case _ =>
-        val fresh = graft.operators.Profile.hllRegisters(batch, groupCol, item)
-        // no checkpoint — single consumer, new version dir (the
-        // applyCmsBatch rationale)
-        val merged = readState(spark, statePath) match {
-          case Some(st) => st.unionByName(fresh)
-            .groupBy("group", "bucket").agg(max(col("m_rho")).as("m_rho"))
-          case None => fresh
-        }
-        val version = s"v$batchId"
-        merged.write.mode("overwrite").parquet(s"$statePath/$version")
-        commitVersion(spark, statePath, version, keepFrom = batchId - 1)
+  ): Unit =
+    versionedBatch(spark, "hllStream", statePath, batchId) { state =>
+      val fresh = graft.operators.Profile.hllRegisters(batch, groupCol, item)
+      // no checkpoint — single consumer, new version dir (the
+      // applyCmsBatch rationale)
+      Some(state match {
+        case Some(st) => st.unionByName(fresh)
+          .groupBy("group", "bucket").agg(max(col("m_rho")).as("m_rho"))
+        case None => fresh
+      })
     }
-  }
 
   /** One micro-batch of the STREAMING graph profile — structural
     * monitoring of a continuously-ingested link graph: the committed
@@ -1814,13 +1551,9 @@ object StreamingOps {
     * slice appends (see [[graphProfileMergeState]]) — never a distinct()
     * over the accumulated set. The batch writes the one-row
     * [[graft.operators.Graph.graphProfile]] over the MERGED set to
-    * `outPath/batch=<id>` BEFORE committing state (the documented
-    * output-first crash-replay order: a torn run replays into the
-    * recompute branch and rewrites bit-identically). Replay at or
-    * below the committed version no-ops on the version guard. The
-    * final batch's profile equals the batch operator on the full
-    * accumulated edge list — the stream-vs-batch contract the gate
-    * hashes against the batch oracle.
+    * `outPath/batch=<id>`. The final batch's profile equals the batch
+    * operator on the full accumulated edge list — the stream-vs-batch
+    * contract the gate hashes against the batch oracle.
     *
     * Scale shape: per batch, one in-batch distinct + one anti-join of
     * the (small) batch against state, then a shuffle-free copy+append
@@ -1838,54 +1571,26 @@ object StreamingOps {
       statePath: String,
       outPath: String,
       stateBuckets: Option[Int] = None
-  ): Unit = {
-    currentVersionId(spark, statePath) match {
-      case Some(cur) if cur >= batchId =>
-        log.warn(s"graphProfileStream: skipping batch $batchId — state at " +
-          s"v$cur already includes it")
-      case _ =>
-        val inBatch = batch
-          .select(col(srcCol).cast("string").as("src"),
-            col(dstCol).cast("string").as("dst"))
-          .filter(col("src").isNotNull && col("dst").isNotNull &&
-            col("src") =!= col("dst"))
-          .distinct()
-        val state = readVersionedState(spark, statePath, stateBuckets.isDefined)
-        val merged = graphProfileMergeState(state, inBatch).localCheckpoint()
-        // NOT the over-distinct seam: the state union's partitioning is the
-        // bucketed-store read ∪ the batch anti-join, and graphProfile's
-        // "redundant" distinct is ALSO the AQE coalesce that collapses that
-        // to one partition before the profile's ~10 downstream jobs —
-        // skipping it measured 8.75 → 9.91 s (matched-schedule A/B, r16)
-        graft.operators.Graph.graphProfile(merged, "src", "dst")
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        writeVersionedState(spark, statePath, batchId, merged,
-          Seq("src", "dst"), stateBuckets)
+  ): Unit =
+    versionedBatch(spark, "graphProfileStream", statePath, batchId,
+        stateBuckets, Seq("src", "dst")) { state =>
+      val inBatch = batch
+        .select(col(srcCol).cast("string").as("src"),
+          col(dstCol).cast("string").as("dst"))
+        .filter(col("src").isNotNull && col("dst").isNotNull &&
+          col("src") =!= col("dst"))
+        .distinct()
+      val merged = graphProfileMergeState(state, inBatch).localCheckpoint()
+      // NOT the over-distinct seam: the state union's partitioning is the
+      // bucketed-store read ∪ the batch anti-join, and graphProfile's
+      // "redundant" distinct is ALSO the AQE coalesce that collapses that
+      // to one partition before the profile's ~10 downstream jobs —
+      // skipping it measured 8.75 → 9.91 s (matched-schedule A/B, r16)
+      graft.operators.Graph.graphProfile(merged, "src", "dst")
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      Some(merged)
     }
-  }
 
-  /** One micro-batch of STREAMING Bradley–Terry preference aggregation —
-    * the continuous face of
-    * [[graft.operators.Preference.bradleyTerryScaled]]: preference logs
-    * arrive as comparison events, the committed state is the ORIENTED
-    * WIN-COUNT table `(_i, _j, _wn)` ("i beat j _wn times" — counts are
-    * additive, so the merge is one sum-aggregate; the state is
-    * pair-stats-sized, metadata next to the log, the quantile-stream
-    * histogram argument), and each batch writes the full rating table
-    * over the ACCUMULATED counts to `outPath/batch=<id>` BEFORE
-    * committing state (the output-first crash-replay order: a torn run
-    * replays into the recompute branch against the OLD state and
-    * rewrites bit-identically). Replay at or below the committed
-    * version no-ops. The final batch's ratings equal the batch operator
-    * on the concatenated log — the stream-vs-batch contract the gate
-    * hashes against the batch oracle.
-    *
-    * Scale shape: per batch, one map-side-combined count of the batch's
-    * comparisons, one sum-merge over (state ∪ batch counts) — the
-    * merge re-aggregates the pair-stat table, which is bounded by
-    * distinct compared pairs, not by log rows — and the bounded-round
-    * MM refit over those stats. Raw comparison rows never enter state.
-    */
   /** One micro-batch of STREAMING annotation QA — the continuous face
     * of [[graft.operators.Annotation]]: rating rows arrive
     * continuously, the committed state is the `(_u, _l, _c)`
@@ -1897,9 +1602,8 @@ object StreamingOps {
     * batch by construction: the final outputs equal
     * [[graft.operators.Annotation.consensusLabels]] /
     * [[graft.operators.Annotation.krippendorffAlphaNominalE6]] on the
-    * concatenated log. Replay guard: `_CURRENT` at a version >= this
-    * batch id means the batch was already counted — skip instead of
-    * double-counting (outputs were written before the commit).
+    * concatenated log. The replay guard is correctness: re-merging a
+    * committed batch double-counts its ratings.
     */
   def applyAnnotationBatch(
       spark: SparkSession,
@@ -1909,28 +1613,21 @@ object StreamingOps {
       labelCol: String,
       statePath: String,
       outPath: String
-  ): Unit = {
-    currentVersionId(spark, statePath) match {
-      case Some(cur) if cur >= batchId =>
-        log.warn(s"annotationStream: skipping batch $batchId — state at " +
-          s"v$cur already includes it")
-      case _ =>
-        val inBatch = graft.operators.Annotation
-          .ratingCounts(batch, unitCol, labelCol)
-        val merged = (readState(spark, statePath) match {
-          case Some(st) => st.unionByName(inBatch)
-            .groupBy("_u", "_l").agg(sum(col("_c")).as("_c"))
-          case None => inBatch
-        }).localCheckpoint()
-        graft.operators.Annotation.consensusFromCounts(merged)
-          .write.mode("overwrite").parquet(s"$outPath/consensus/batch=$batchId")
-        graft.operators.Annotation.alphaNominalFromCountsE6(merged)
-          .write.mode("overwrite").parquet(s"$outPath/alpha/batch=$batchId")
-        val version = s"v$batchId"
-        merged.write.mode("overwrite").parquet(s"$statePath/$version")
-        commitVersion(spark, statePath, version, keepFrom = batchId - 1)
+  ): Unit =
+    versionedBatch(spark, "annotationStream", statePath, batchId) { state =>
+      val inBatch = graft.operators.Annotation
+        .ratingCounts(batch, unitCol, labelCol)
+      val merged = (state match {
+        case Some(st) => st.unionByName(inBatch)
+          .groupBy("_u", "_l").agg(sum(col("_c")).as("_c"))
+        case None => inBatch
+      }).localCheckpoint()
+      graft.operators.Annotation.consensusFromCounts(merged)
+        .write.mode("overwrite").parquet(s"$outPath/consensus/batch=$batchId")
+      graft.operators.Annotation.alphaNominalFromCountsE6(merged)
+        .write.mode("overwrite").parquet(s"$outPath/alpha/batch=$batchId")
+      Some(merged)
     }
-  }
 
   /** One micro-batch of STREAMING rater-reliability monitoring — the
     * continuous face of
@@ -1941,7 +1638,7 @@ object StreamingOps {
     * reliability reduction to `outPath/batch=N` — so a
     * systematically-off annotator surfaces while the annotation run is
     * still in flight, not after their labels shipped. Stream ≡ batch
-    * on the concatenated log; the usual replay guard.
+    * on the concatenated log.
     */
   def applyRaterBatch(
       spark: SparkSession,
@@ -1952,32 +1649,44 @@ object StreamingOps {
       labelCol: String,
       statePath: String,
       outPath: String
-  ): Unit = {
-    currentVersionId(spark, statePath) match {
-      case Some(cur) if cur >= batchId =>
-        log.warn(s"raterStream: skipping batch $batchId — state at " +
-          s"v$cur already includes it")
-      case _ =>
-        val inBatch = batch
-          .select(col(unitCol).cast("string").as("_u"),
-            col(raterCol).cast("string").as("_r"),
-            col(labelCol).cast("string").as("_l"))
-          .filter(col("_u").isNotNull && col("_r").isNotNull &&
-            col("_l").isNotNull)
-          .groupBy("_u", "_r", "_l").agg(count(lit(1)).as("_c"))
-        val merged = (readState(spark, statePath) match {
-          case Some(st) => st.unionByName(inBatch)
-            .groupBy("_u", "_r", "_l").agg(sum(col("_c")).as("_c"))
-          case None => inBatch
-        }).localCheckpoint()
-        graft.operators.Annotation.raterReliabilityFromCounts(merged)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        val version = s"v$batchId"
-        merged.write.mode("overwrite").parquet(s"$statePath/$version")
-        commitVersion(spark, statePath, version, keepFrom = batchId - 1)
+  ): Unit =
+    versionedBatch(spark, "raterStream", statePath, batchId) { state =>
+      val inBatch = batch
+        .select(col(unitCol).cast("string").as("_u"),
+          col(raterCol).cast("string").as("_r"),
+          col(labelCol).cast("string").as("_l"))
+        .filter(col("_u").isNotNull && col("_r").isNotNull &&
+          col("_l").isNotNull)
+        .groupBy("_u", "_r", "_l").agg(count(lit(1)).as("_c"))
+      val merged = (state match {
+        case Some(st) => st.unionByName(inBatch)
+          .groupBy("_u", "_r", "_l").agg(sum(col("_c")).as("_c"))
+        case None => inBatch
+      }).localCheckpoint()
+      graft.operators.Annotation.raterReliabilityFromCounts(merged)
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      Some(merged)
     }
-  }
 
+  /** One micro-batch of STREAMING Bradley–Terry preference aggregation —
+    * the continuous face of
+    * [[graft.operators.Preference.bradleyTerryScaled]]: preference logs
+    * arrive as comparison events, the committed state is the ORIENTED
+    * WIN-COUNT table `(_i, _j, _wn)` ("i beat j _wn times" — counts are
+    * additive, so the merge is one sum-aggregate; the state is
+    * pair-stats-sized, metadata next to the log, the quantile-stream
+    * histogram argument), and each batch writes the full rating table
+    * over the ACCUMULATED counts to `outPath/batch=<id>`. The final
+    * batch's ratings equal the batch operator on the concatenated log —
+    * the stream-vs-batch contract the gate hashes against the batch
+    * oracle.
+    *
+    * Scale shape: per batch, one map-side-combined count of the batch's
+    * comparisons, one sum-merge over (state ∪ batch counts) — the
+    * merge re-aggregates the pair-stat table, which is bounded by
+    * distinct compared pairs, not by log rows — and the bounded-round
+    * MM refit over those stats. Raw comparison rows never enter state.
+    */
   def applyBtBatch(
       spark: SparkSession,
       batch: DataFrame,
@@ -1988,52 +1697,45 @@ object StreamingOps {
       statePath: String,
       outPath: String,
       tieCol: Option[String] = None
-  ): Unit = {
-    currentVersionId(spark, statePath) match {
-      case Some(cur) if cur >= batchId =>
-        log.warn(s"btStream: skipping batch $batchId — state at v$cur " +
-          "already includes it")
-      case _ =>
-        // tieCol: the half-win convention in HALF-UNITS (decisive row =
-        // 2 to its oriented pair, tie = 1 per orientation) — counts
-        // stay additive, so the versioned state merge is unchanged and
-        // the accumulated table equals
-        // [[graft.operators.Preference.bradleyTerryScaledWithTies]] on
-        // the concatenated log (the stream-vs-batch contract)
-        val inBatch = tieCol match {
-          case None => batch
-            .select(col(winnerCol).cast("string").as("_i"),
-              col(loserCol).cast("string").as("_j"))
-            .filter(col("_i").isNotNull && col("_j").isNotNull &&
-              col("_i") =!= col("_j"))
-            .groupBy("_i", "_j").agg(count(lit(1)).as("_wn"))
-          case Some(tc) =>
-            val c = batch
-              .select(col(winnerCol).cast("string").as("_w"),
-                col(loserCol).cast("string").as("_l"),
-                col(tc).cast("boolean").as("_t"))
-              .filter(col("_w").isNotNull && col("_l").isNotNull &&
-                col("_w") =!= col("_l") && col("_t").isNotNull)
-              .localCheckpoint() // both orientations of the tie slice
-            c.select(col("_w").as("_i"), col("_l").as("_j"),
-                when(col("_t"), lit(1L)).otherwise(lit(2L)).as("_wn"))
-              .unionByName(c.filter(col("_t"))
-                .select(col("_l").as("_i"), col("_w").as("_j"),
-                  lit(1L).as("_wn")))
-              .groupBy("_i", "_j").agg(sum(col("_wn")).as("_wn"))
-        }
-        val merged = (readState(spark, statePath) match {
-          case Some(st) => st.unionByName(inBatch)
+  ): Unit =
+    versionedBatch(spark, "btStream", statePath, batchId) { state =>
+      // tieCol: the half-win convention in HALF-UNITS (decisive row =
+      // 2 to its oriented pair, tie = 1 per orientation) — counts
+      // stay additive, so the versioned state merge is unchanged and
+      // the accumulated table equals
+      // [[graft.operators.Preference.bradleyTerryScaledWithTies]] on
+      // the concatenated log (the stream-vs-batch contract)
+      val inBatch = tieCol match {
+        case None => batch
+          .select(col(winnerCol).cast("string").as("_i"),
+            col(loserCol).cast("string").as("_j"))
+          .filter(col("_i").isNotNull && col("_j").isNotNull &&
+            col("_i") =!= col("_j"))
+          .groupBy("_i", "_j").agg(count(lit(1)).as("_wn"))
+        case Some(tc) =>
+          val c = batch
+            .select(col(winnerCol).cast("string").as("_w"),
+              col(loserCol).cast("string").as("_l"),
+              col(tc).cast("boolean").as("_t"))
+            .filter(col("_w").isNotNull && col("_l").isNotNull &&
+              col("_w") =!= col("_l") && col("_t").isNotNull)
+            .localCheckpoint() // both orientations of the tie slice
+          c.select(col("_w").as("_i"), col("_l").as("_j"),
+              when(col("_t"), lit(1L)).otherwise(lit(2L)).as("_wn"))
+            .unionByName(c.filter(col("_t"))
+              .select(col("_l").as("_i"), col("_w").as("_j"),
+                lit(1L).as("_wn")))
             .groupBy("_i", "_j").agg(sum(col("_wn")).as("_wn"))
-          case None => inBatch
-        }).localCheckpoint()
-        graft.operators.Preference.bradleyTerryFromCounts(merged, rounds)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        val version = s"v$batchId"
-        merged.write.mode("overwrite").parquet(s"$statePath/$version")
-        commitVersion(spark, statePath, version, keepFrom = batchId - 1)
+      }
+      val merged = (state match {
+        case Some(st) => st.unionByName(inBatch)
+          .groupBy("_i", "_j").agg(sum(col("_wn")).as("_wn"))
+        case None => inBatch
+      }).localCheckpoint()
+      graft.operators.Preference.bradleyTerryFromCounts(merged, rounds)
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      Some(merged)
     }
-  }
 
   /** One micro-batch of STREAMING calibration monitoring — the
     * continuous face of
@@ -2043,13 +1745,11 @@ object StreamingOps {
     * `(bucket, n, n_pos, sum_p)` (merge = one sum over ≤ 2·buckets
     * rows — the quantile-stream histogram argument), and each batch
     * writes the full reliability rows + ECE over the ACCUMULATED stats
-    * to `outPath/batch=<id>` BEFORE committing state (output-first
-    * torn-commit order; replay at or below the committed version
-    * no-ops). The final batch's rows equal the batch operator on the
-    * concatenated examples — the stream-vs-batch contract the gate
-    * hashes against the batch oracle. This is the "is my quality
-    * classifier drifting out of calibration" monitor, sitting beside
-    * the distribution-drift timeline.
+    * to `outPath/batch=<id>`. The final batch's rows equal the batch
+    * operator on the concatenated examples — the stream-vs-batch
+    * contract the gate hashes against the batch oracle. This is the "is
+    * my quality classifier drifting out of calibration" monitor,
+    * sitting beside the distribution-drift timeline.
     */
   def applyCalibrationBatch(
       spark: SparkSession,
@@ -2060,29 +1760,22 @@ object StreamingOps {
       buckets: Int,
       statePath: String,
       outPath: String
-  ): Unit = {
-    currentVersionId(spark, statePath) match {
-      case Some(cur) if cur >= batchId =>
-        log.warn(s"calibrationStream: skipping batch $batchId — state at " +
-          s"v$cur already includes it")
-      case _ =>
-        val inBatch = graft.operators.QualityModel.calibrationSuffStats(
-          batch, probPpmCol, labelCol, buckets)
-        val merged = (readState(spark, statePath) match {
-          case Some(st) => st.unionByName(inBatch)
-            .groupBy("bucket").agg(sum(col("n")).as("n"),
-              sum(col("n_pos")).as("n_pos"),
-              sum(col("sum_p")).cast(
-                org.apache.spark.sql.types.DecimalType(38, 0)).as("sum_p"))
-          case None => inBatch
-        }).localCheckpoint()
-        graft.operators.QualityModel.calibrationFromStats(merged)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        val version = s"v$batchId"
-        merged.write.mode("overwrite").parquet(s"$statePath/$version")
-        commitVersion(spark, statePath, version, keepFrom = batchId - 1)
+  ): Unit =
+    versionedBatch(spark, "calibrationStream", statePath, batchId) { state =>
+      val inBatch = graft.operators.QualityModel.calibrationSuffStats(
+        batch, probPpmCol, labelCol, buckets)
+      val merged = (state match {
+        case Some(st) => st.unionByName(inBatch)
+          .groupBy("bucket").agg(sum(col("n")).as("n"),
+            sum(col("n_pos")).as("n_pos"),
+            sum(col("sum_p")).cast(
+              org.apache.spark.sql.types.DecimalType(38, 0)).as("sum_p"))
+        case None => inBatch
+      }).localCheckpoint()
+      graft.operators.QualityModel.calibrationFromStats(merged)
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      Some(merged)
     }
-  }
 
   /** State merge for [[applyGraphProfileBatch]], exposed as a seam so the
     * plan-shape spec can pin the contract: the store is distinct BY
@@ -2111,14 +1804,8 @@ object StreamingOps {
     * exact integers — the [[graft.operators.ImportanceScoring.driftTimeline]]
     * arithmetic) and then commits its OWN histogram as the new rolling
     * reference. The first batch emits nothing (no predecessor) and
-    * seeds the state.
-    *
-    * Replay idempotence: a batch at or below the committed version
-    * no-ops (its output row, if any, already stands). Torn commit: a
-    * crash between the out-write and the state commit leaves the
-    * reference at the PREVIOUS version, so the replay recomputes
-    * against the same predecessor and overwrites bit-identically
-    * before committing. State is one ≤`buckets`-row histogram —
+    * seeds the state. A replay before the commit scores against the
+    * same predecessor. State is one ≤`buckets`-row histogram —
     * metadata-sized at any corpus scale; token payloads never shuffle.
     */
   def applyDriftTimelineBatch(
@@ -2130,39 +1817,31 @@ object StreamingOps {
       outPath: String,
       buckets: Int = graft.operators.ImportanceScoring.DefaultBuckets,
       salt: String = "drift"
-  ): Unit = {
-    import graft.operators.ImportanceScoring
-    val hist = ImportanceScoring.hashedBucketCounts(batch, textCol, buckets, salt)
-    currentVersionId(spark, statePath) match {
-      case Some(cur) if cur >= batchId =>
-        log.warn(s"driftTimelineStream: batch $batchId is not newer than " +
-          s"the committed rolling reference v$cur — skipping (replay no-op)")
-      case prev =>
-        prev.foreach { _ =>
-          val reference = readState(spark, statePath).getOrElse(
-            sys.error(s"driftTimelineStream: _CURRENT exists but no state at $statePath"))
-          ImportanceScoring.l1Drift(
-              ImportanceScoring.driftFromHistograms(reference, hist))
-            .select(lit(batchId).as("period"),
-              col("n_a").as("n_prev"), col("n_b").as("n_cur"), col("l1_e9"))
-            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        }
-        val version = s"v$batchId"
-        hist.write.mode("overwrite").parquet(s"$statePath/$version")
-        commitVersion(spark, statePath, version, keepFrom = batchId - 1)
+  ): Unit =
+    versionedBatch(spark, "driftTimelineStream", statePath, batchId) { state =>
+      import graft.operators.ImportanceScoring
+      val hist = ImportanceScoring.hashedBucketCounts(batch, textCol, buckets, salt)
+      state.foreach { reference =>
+        ImportanceScoring.l1Drift(
+            ImportanceScoring.driftFromHistograms(reference, hist))
+          .select(lit(batchId).as("period"),
+            col("n_a").as("n_prev"), col("n_b").as("n_cur"), col("l1_e9"))
+          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      }
+      Some(hist)
     }
-  }
 
   /** One micro-batch of a STREAMING IVF index build — the embedding
     * sibling of [[applyBm25IndexBatch]]: batch 0 trains the coarse
     * quantizer (hash-seeded + one Lloyd refinement on that batch) and
-    * commits it ONCE — the drift-reference protocol, so replays no-op
-    * and every later batch assigns against the same frozen centroids;
-    * each batch then appends its assigned vectors as the next committed
-    * postings version (`_CURRENT` protocol, crash-replay guarded).
-    * Queries ([[queryAnnIndex]]) read committed state only, so a torn
-    * batch never serves. Appends are append-only — re-ingested ids are
-    * the caller's to dedup (compose with [[applyDedupBatch]]).
+    * commits it ONCE under `statePath/centroids`, so every later batch
+    * assigns against the same frozen centroids; each batch then appends
+    * its assigned vectors as the next committed postings version under
+    * `statePath/postings` (the [[versionedBatch]] store). A replay that
+    * finds the centroids already committed reuses them. Queries
+    * ([[queryAnnIndex]]) read committed state only, so a torn batch
+    * never serves. Appends are append-only — re-ingested ids are the
+    * caller's to dedup (compose with [[applyDedupBatch]]).
     *
     * Scale note: the versioned-postings rewrite is a parquet overwrite
     * (the dedupStreamPersistent trade — swap for a Delta/Iceberg append
@@ -2181,31 +1860,20 @@ object StreamingOps {
   ): Unit = {
     import graft.operators.Similarity
     val centPath = s"$statePath/centroids"
-    val postPath = s"$statePath/postings"
-    currentVersionId(spark, postPath) match {
-      case Some(cur) if cur >= batchId =>
-        log.warn(s"annIndexStream: skipping batch $batchId — postings at " +
-          s"v$cur already include it")
-      case _ =>
-        if (currentVersionId(spark, centPath).isEmpty) {
-          require(batchId == 0L,
-            s"annIndexStream: no committed centroids at batch $batchId — batch 0 trains them")
-          val cents = Similarity.refineCentroids(batch, idCol, vecCol,
-            Similarity.seedCentroids(batch, idCol, vecCol, c), iterations = 1)
-          cents.write.mode("overwrite").parquet(s"$centPath/v0")
-          commitVersion(spark, centPath, "v0", keepFrom = 0L)
-        }
-        val cents = readState(spark, centPath).getOrElse(
-          sys.error(s"annIndexStream: _CURRENT exists but no centroids at $centPath"))
-        val assigned = Similarity.assignToCentroids(
-          batch.select(col(idCol), col(vecCol)), idCol, vecCol, cents)
-        val newPost = readState(spark, postPath) match {
-          case Some(st) => st.unionByName(assigned)
-          case None => assigned
-        }
-        val version = s"v$batchId"
-        newPost.write.mode("overwrite").parquet(s"$postPath/$version")
-        commitVersion(spark, postPath, version, keepFrom = batchId - 1)
+    versionedBatch(spark, "annIndexStream", s"$statePath/postings", batchId) { state =>
+      if (currentVersionId(spark, centPath).isEmpty) {
+        require(batchId == 0L,
+          s"annIndexStream: no committed centroids at batch $batchId — batch 0 trains them")
+        val cents = Similarity.refineCentroids(batch, idCol, vecCol,
+          Similarity.seedCentroids(batch, idCol, vecCol, c), iterations = 1)
+        cents.write.mode("overwrite").parquet(s"$centPath/v0")
+        commitVersion(spark, centPath, "v0", keepFrom = 0L)
+      }
+      val cents = readState(spark, centPath).getOrElse(
+        sys.error(s"annIndexStream: _CURRENT exists but no centroids at $centPath"))
+      val assigned = Similarity.assignToCentroids(
+        batch.select(col(idCol), col(vecCol)), idCol, vecCol, cents)
+      Some(state.fold(assigned)(_.unionByName(assigned)))
     }
   }
 
@@ -2736,12 +2404,11 @@ object StreamingOps {
     * `retrain = l1_e9 ≥ retrainThresholdE9` the re-train flag a
     * pipeline alerts on.
     *
-    * Replay idempotence (the [[applyDriftBatch]] shape): a replayed
-    * reference batch no-ops under the `_CURRENT` guard; a replayed
-    * scoring batch recomputes against the PINNED reference and
-    * overwrites its output bit-identically. State is one ≤ c-row
-    * histogram; per-batch cost is the narrow assignment projection +
-    * a c-key aggregate — vectors never shuffle.
+    * Scoring batches commit nothing (the [[applyDriftBatch]] shape): a
+    * replay recomputes against the same frozen reference and overwrites
+    * its output bit-identically. State is one ≤ c-row histogram;
+    * per-batch cost is the narrow assignment projection + a c-key
+    * aggregate — vectors never shuffle.
     */
   def applyPqDriftBatch(
       spark: SparkSession,
@@ -2757,49 +2424,36 @@ object StreamingOps {
     import graft.operators.{ImportanceScoring, Similarity}
     require(retrainThresholdE9 >= 0,
       s"pqDriftStream: retrainThresholdE9 must be >= 0, got $retrainThresholdE9")
-    val cells = readState(spark, s"$indexStatePath/cells").getOrElse(
-      sys.error(s"pqDriftStream: no committed cells under $indexStatePath"))
-    val occ = Similarity.ivfResidualsE6(batch, idCol, vecCol, cells)
-      .groupBy(col("centroid_id").as("bucket"))
-      .agg(count(lit(1)).as("cnt"))
-      // LAZY checkpoint: the scoring branch reads occ twice (the
-      // empty-occupancy guard, then the drift compare) — left unchecked
-      // the narrow assignment + aggregate ran twice per batch; lazy so
-      // the replay-skip branch, which never touches occ, stays zero-job
-      .localCheckpoint(eager = false)
-    currentVersionId(spark, statePath) match {
-      case None =>
+    versionedBatch(spark, "pqDriftStream", statePath, batchId) { state =>
+      val cells = readState(spark, s"$indexStatePath/cells").getOrElse(
+        sys.error(s"pqDriftStream: no committed cells under $indexStatePath"))
+      val occ = Similarity.ivfResidualsE6(batch, idCol, vecCol, cells)
+        .groupBy(col("centroid_id").as("bucket"))
+        .agg(count(lit(1)).as("cnt"))
+        // LAZY checkpoint: read twice (the empty-occupancy guard, then
+        // the reference write or the drift compare) — left unchecked the
+        // narrow assignment + aggregate ran twice per batch
+        .localCheckpoint(eager = false)
+      if (occ.isEmpty) {
         // an empty reference would null every later compare (the
-        // applyShiftBatch guard): wait for the first non-empty batch
-        if (occ.isEmpty) {
-          log.warn(s"pqDriftStream: batch $batchId has no assignable " +
-            "vectors — refusing to commit an empty reference occupancy")
-        } else {
-          val version = s"v$batchId"
-          occ.write.mode("overwrite").parquet(s"$statePath/$version")
-          commitVersion(spark, statePath, version, keepFrom = batchId)
-        }
-      case Some(cur) if cur >= batchId =>
-        log.warn(s"pqDriftStream: batch $batchId is not newer than the " +
-          s"committed reference v$cur — skipping (replay no-op)")
-      case Some(_) if occ.isEmpty =>
-        // mirror the empty-REFERENCE guard: an empty scoring occupancy
-        // puts n_cur = 0 into l1Drift's `div (2·n)` — a null/failed row
-        // instead of a signal. Skip loudly; the next non-empty batch
-        // compares against the same pinned reference.
+        // applyShiftBatch guard), and an empty scoring occupancy puts
+        // n_cur = 0 into l1Drift's `div (2·n)`: skip loudly, the next
+        // non-empty batch takes the reference slot or compares
         log.warn(s"pqDriftStream: batch $batchId has no assignable " +
-          "vectors — skipping the drift compare (an empty occupancy " +
-          "would divide the scaled-L1 by zero)")
-      case Some(_) =>
-        val reference = readState(spark, statePath).getOrElse(
-          sys.error(s"pqDriftStream: _CURRENT exists but no state at $statePath"))
-        ImportanceScoring.l1Drift(
-            ImportanceScoring.driftFromHistograms(reference, occ))
-          .select(col("n_a").as("n_ref"), col("n_b").as("n_cur"),
-            col("l1_e9"),
-            (col("l1_e9") >= retrainThresholdE9).as("retrain"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+          "vectors — nothing to commit as a reference or to compare")
+        None
+      } else state match {
+        case None => Some(occ)
+        case Some(reference) =>
+          ImportanceScoring.l1Drift(
+              ImportanceScoring.driftFromHistograms(reference, occ))
+            .select(col("n_a").as("n_ref"), col("n_b").as("n_cur"),
+              col("l1_e9"),
+              (col("l1_e9") >= retrainThresholdE9).as("retrain"))
+            .coalesce(1)
+            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+          None
+      }
     }
   }
 
@@ -2816,12 +2470,10 @@ object StreamingOps {
     *    global max-event-time watermark (the tracker sees every row;
     *    only the stateful operator drops);
     *  - surviving rows increment their tumbling window
-    *    `w_start = ts div windowUs × windowUs`;
-    *  - the new state (window counts + the advanced watermark) commits
-    *    under the `_CURRENT` version protocol with the same crash-replay
-    *    guard as the other streams (per-batch increments are written to
-    *    `outPath/batch=<id>` BEFORE the commit, so a replayed batch
-    *    no-ops with its output already on disk).
+    *    `w_start = ts div windowUs × windowUs`, written to
+    *    `outPath/batch=<id>`;
+    *  - the window counts plus the advanced watermark commit as the
+    *    next state version.
     *
     * State layout: `(w_start, cnt)` rows, plus ONE sentinel row with
     * `w_start IS NULL` carrying the watermark in `cnt`. State size is
@@ -2842,40 +2494,30 @@ object StreamingOps {
     require(windowUs > 0, s"applyLateWindowBatch: windowUs must be positive, got $windowUs")
     require(lagUs >= 0, s"applyLateWindowBatch: lagUs must be non-negative, got $lagUs")
     import spark.implicits._
-    currentVersionId(spark, statePath) match {
-      case Some(cur) if cur >= batchId =>
-        log.warn(s"lateWindowStream: skipping batch $batchId — state at " +
-          s"v$cur already includes it (increments were written before the commit)")
-      case _ =>
-        val state = readState(spark, statePath)
-        val wmPrev: Long = state
-          .flatMap(_.filter(col("w_start").isNull)
-            .select(col("cnt")).head(1).headOption.map(_.getLong(0)))
-          .getOrElse(Long.MinValue)
-        val counts = state
-          .map(_.filter(col("w_start").isNotNull))
-          .getOrElse(Seq.empty[(Long, Long)].toDF("w_start", "cnt"))
-        val rows = batch
-          .select(col(tsUsCol).cast("long").as("_us"))
-          .filter(col("_us").isNotNull)
-        // the event-time tracker sees EVERY row, late ones included
-        val mx = Option(rows.agg(max(col("_us"))).head().get(0))
-          .map(_.asInstanceOf[Long])
-        val wmNew = mx.map(m => math.max(wmPrev, m - lagUs)).getOrElse(wmPrev)
-        val inc = rows.filter(col("_us") >= wmPrev)
-          .select((expr(s"_us div ${windowUs}L") * windowUs).as("w_start"))
-          .groupBy("w_start").agg(count(lit(1)).as("cnt"))
-        // increments FIRST (the replay-skip branch's contract) …
-        inc.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        // … then the merged counts + advanced watermark as the next version
-        val merged = counts.unionByName(inc)
-          .groupBy("w_start").agg(sum(col("cnt")).as("cnt"))
-        val wmRow = spark.range(1).select(
-          lit(null).cast("long").as("w_start"), lit(wmNew).as("cnt"))
-        val version = s"v$batchId"
-        merged.unionByName(wmRow)
-          .write.mode("overwrite").parquet(s"$statePath/$version")
-        commitVersion(spark, statePath, version, keepFrom = batchId - 1)
+    versionedBatch(spark, "lateWindowStream", statePath, batchId) { state =>
+      val wmPrev: Long = state
+        .flatMap(_.filter(col("w_start").isNull)
+          .select(col("cnt")).head(1).headOption.map(_.getLong(0)))
+        .getOrElse(Long.MinValue)
+      val counts = state
+        .map(_.filter(col("w_start").isNotNull))
+        .getOrElse(Seq.empty[(Long, Long)].toDF("w_start", "cnt"))
+      val rows = batch
+        .select(col(tsUsCol).cast("long").as("_us"))
+        .filter(col("_us").isNotNull)
+      // the event-time tracker sees EVERY row, late ones included
+      val mx = Option(rows.agg(max(col("_us"))).head().get(0))
+        .map(_.asInstanceOf[Long])
+      val wmNew = mx.map(m => math.max(wmPrev, m - lagUs)).getOrElse(wmPrev)
+      val inc = rows.filter(col("_us") >= wmPrev)
+        .select((expr(s"_us div ${windowUs}L") * windowUs).as("w_start"))
+        .groupBy("w_start").agg(count(lit(1)).as("cnt"))
+      inc.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      val wmRow = spark.range(1).select(
+        lit(null).cast("long").as("w_start"), lit(wmNew).as("cnt"))
+      Some(counts.unionByName(inc)
+        .groupBy("w_start").agg(sum(col("cnt")).as("cnt"))
+        .unionByName(wmRow))
     }
   }
 

@@ -784,68 +784,6 @@ class StreamingSpec extends SparkSpec {
     assert(exactLbl == (0 until 6).map(i => f"d$i" -> "d0").toMap, exactLbl.toString)
   }
 
-  test("applyErBatch state handle: threaded fast path is byte-identical to the parquet path; replay returns the handle") {
-    val words = (0 until 18).map(i => f"w$i%02d")
-    def doc(i: Int) = words.slice(2 * i, 2 * i + 8).mkString(" ")
-    val all = (0 until 6).map(i => (f"d$i", doc(i)))
-    val b0 = all.take(3).toDF("doc_id", "text")
-    val b1 = all.drop(3).toDF("doc_id", "text")
-    // plain path (no handle)
-    val wa = Files.createTempDirectory("graft-er-plain").toString
-    def plain(b: org.apache.spark.sql.DataFrame, id: Long) =
-      StreamingOps.applyErBatch(spark, b, id, "doc_id", "text",
-        shingleSize = 3, thresholdPpm = 500000L, lpaRounds = 1,
-        s"$wa/state", s"$wa/out", exactComponents = true)
-    assert(plain(b0, 0L).isEmpty) // cacheState off -> no handle returned
-    plain(b1, 1L)
-    // handle path
-    val wb = Files.createTempDirectory("graft-er-handle").toString
-    var h: Option[org.apache.spark.sql.DataFrame] = None
-    def handled(b: org.apache.spark.sql.DataFrame, id: Long) =
-      h = StreamingOps.applyErBatch(spark, b, id, "doc_id", "text",
-        shingleSize = 3, thresholdPpm = 500000L, lpaRounds = 1,
-        s"$wb/state", s"$wb/out", exactComponents = true,
-        stateIn = h, cacheState = true)
-    handled(b0, 0L)
-    assert(h.isDefined)
-    // the handle IS the committed frame
-    assert(rows(h.get.orderBy("kind", "id", "g")) ==
-      rows(StreamingOps.readState(spark, s"$wb/state").get
-        .orderBy("kind", "id", "g")))
-    handled(b1, 1L)
-    // outputs and final state identical across paths
-    assert(rows(spark.read.parquet(s"$wb/out/batch=1").orderBy("node")) ==
-      rows(spark.read.parquet(s"$wa/out/batch=1").orderBy("node")))
-    assert(rows(StreamingOps.readState(spark, s"$wb/state").get
-        .orderBy("kind", "id", "g")) ==
-      rows(StreamingOps.readState(spark, s"$wa/state").get
-        .orderBy("kind", "id", "g")))
-    // replay at the committed version no-ops and hands the handle back
-    val before = h
-    handled(b1, 1L)
-    assert(h eq before)
-
-    // bucketed-store option: value-identical to the plain path (the
-    // gate keeps the plain store — bucketed writes MEASURED slower at
-    // gate-scale state, see the er_stream gate note — but the option's
-    // correctness is pinned here for states that outgrow a batch)
-    val wc = Files.createTempDirectory("graft-er-bucketed").toString
-    def bucketed(b: org.apache.spark.sql.DataFrame, id: Long) =
-      StreamingOps.applyErBatch(spark, b, id, "doc_id", "text",
-        shingleSize = 3, thresholdPpm = 500000L, lpaRounds = 1,
-        s"$wc/state", s"$wc/out", exactComponents = true,
-        stateBuckets = Some(4))
-    bucketed(b0, 0L)
-    bucketed(b1, 1L)
-    bucketed(b1, 1L) // replay no-op on the bucketed store too
-    assert(rows(spark.read.parquet(s"$wc/out/batch=1").orderBy("node")) ==
-      rows(spark.read.parquet(s"$wa/out/batch=1").orderBy("node")))
-    assert(rows(spark.table(StreamingOps.stateTableName(s"$wc/state", 1L))
-        .orderBy("kind", "id", "g")) ==
-      rows(StreamingOps.readState(spark, s"$wa/state").get
-        .orderBy("kind", "id", "g")))
-  }
-
   test("pq drift stream: stable feed under threshold, drifted feed trips retrain, replay no-ops, empty reference refused") {
     import org.apache.spark.sql.functions.transform
     val work = Files.createTempDirectory("graft-pqdrift-spec").toString
