@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -11,22 +10,7 @@ object Verify {
     // optional third arg (local iteration only; the driver passes two):
     // comma-separated query names — run just those, dump all oracles
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // byte-based AQE coalescing under-parallelizes CPU-heavy text stages
-      // on small local files; 16k floor keeps them spread across cores
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-      // InferFiltersFromGenerate clones the full generator-input expression
-      // tree (regex tokenization) into a scan-level filter — pure overhead
-      // for our explode pipelines, whose generators drop nothing
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // fail FAST and LOUDLY on testdata schema drift — in round 7 a
     // regenerated events.parquet silently dropped 22 queries from the

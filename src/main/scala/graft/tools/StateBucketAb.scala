@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Reproducible A/B for the versioned-state-store `stateBuckets`
@@ -30,14 +29,7 @@ object StateBucketAb {
     val sizes = args.lift(0).getOrElse("100000,2000000")
       .split(",").map(_.trim.toLong).toSeq
     val nBatches = args.lift(1).map(_.toInt).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     def runConfig(stateRows: Long, buckets: Option[Int]): Double = {
       val batchRows = math.max(1L, stateRows / nBatches)
       val work = java.nio.file.Files

@@ -75,9 +75,7 @@ class BpeEncodeCountSpec extends SparkSpec {
     val big = (0 until 2000).map { i =>
       (s"s${i % 97}", s"t${(i * 31) % 89}")
     } ++ merges
-    val prev = spark.conf.getOption("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
+    withConf("spark.sql.codegen.fallback" -> "false") {
       // non-foldable source (a literal table constant-folds to a
       // LocalTableScan before codegen ever runs)
       val df = spark.range(2).select(
@@ -91,11 +89,6 @@ class BpeEncodeCountSpec extends SparkSpec {
       val gotBase = df.select(TF.bpeTokenCount($"t", merges).as("n"))
         .as[Long].collect().toSeq
       assert(gotBig == gotBase, s"big=$gotBig base=$gotBase")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
-        case None => spark.conf.unset("spark.sql.codegen.fallback")
-      }
     }
   }
 

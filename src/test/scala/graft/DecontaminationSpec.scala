@@ -44,12 +44,10 @@ class DecontaminationSpec extends SparkSpec {
 
   test("oversized probe set takes the shuffle semi-join fallback, never the broadcast hint") {
     val probes = Seq("the lazy dog tonight phrase appears here").toDF("text")
-    val thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // disable size-based auto-broadcast so the assertion isolates the
       // HINT: past the cap the plan must carry no forced broadcast (the
       // planner may still choose one from real stats — that's safe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val flagged = Decontamination.contaminationFlags(
         docs, "text", "doc_id", probes, "text", n = 3,
         maxBroadcastProbeHashes = 1L)
@@ -58,7 +56,7 @@ class DecontaminationSpec extends SparkSpec {
       val out = flagged.select("doc_id", "contaminated")
         .as[(Long, Boolean)].collect().toMap
       assert(out(1L) && out(3L) && !out(2L) && !out(4L), out.toString)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
+    }
   }
 
   test("overlapStats grades partial contamination; flag equals ratio > 0") {

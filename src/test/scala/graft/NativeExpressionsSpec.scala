@@ -706,9 +706,7 @@ class NativeExpressionsSpec extends SparkSpec {
     import org.apache.spark.sql.graft.ColumnBridge
     import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
     import graft.operators.Dedup
-    val prev = spark.conf.getOption("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
+    withConf("spark.sql.codegen.fallback" -> "false") {
       val df = Seq(
         (1L, "the quick brown fox jumps over the lazy dog",
          "https://user:pw@www.example.co.uk:8443/a?b#c",
@@ -768,11 +766,6 @@ class NativeExpressionsSpec extends SparkSpec {
           ColumnBridge.expression(array(lit("x")))))).as("cc"))
         .collect()
       assert(pairs.length == 2)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
-        case None => spark.conf.unset("spark.sql.codegen.fallback")
-      }
     }
   }
 

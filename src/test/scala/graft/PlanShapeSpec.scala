@@ -180,9 +180,7 @@ class PlanShapeSpec extends SparkSpec {
     val b = t("orders").select(col("o_orderkey"), col("o_totalprice"))
     Partitioning.writeBucketed(a, "g_bucket_a", s"$wh/a", Seq("o_orderkey"), 4)
     Partitioning.writeBucketed(b, "g_bucket_b", s"$wh/b", Seq("o_orderkey"), 4)
-    val thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") { // force SMJ
       val joined = spark.table("g_bucket_a").join(spark.table("g_bucket_b"), "o_orderkey")
       val plan = physical(joined)
       // both sides scan pre-bucketed files with matching distribution: the
@@ -190,7 +188,6 @@ class PlanShapeSpec extends SparkSpec {
       assert(!plan.contains("Exchange"), plan)
       assert(joined.count() == a.count())
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
       spark.sql("DROP TABLE IF EXISTS g_bucket_a")
       spark.sql("DROP TABLE IF EXISTS g_bucket_b")
     }

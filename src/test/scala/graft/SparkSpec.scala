@@ -4,18 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for all suites (sbt runs suites in one forked
-  * JVM; a session per suite would dominate test time).
+  * JVM; a session per suite would dominate test time). It is the
+  * [[GraftSession]] every main runs, at 4 cores and 4 shuffle partitions.
   */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
@@ -30,6 +24,19 @@ abstract class SparkSpec extends AnyFunSuite {
     */
   def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
+
+  /** Run `body` with the given session confs set, then restore each key's
+    * previous value, or unset it if it had none.
+    */
+  def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 
   /** Shuffle Exchange nodes of a query's physical plan, unwrapping the
     * AQE root (AdaptiveSparkPlanExec reports no children to `collect`,

@@ -123,9 +123,7 @@ class StreamingSpec extends SparkSpec {
     // the recurring-merge contract: the state side of the per-batch merge
     // join reads pre-bucketed files and replans NO exchange of the state;
     // vs the same merge against a plain-parquet state, which shuffles it
-    val thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val batch = Seq((1L, "d", 1L, 3)).toDF("k", "s", "n", "seq")
       val bucketedState = spark.table(StreamingOps.stateTableName(s"$dir/state", 1L))
       val plainState = StreamingOps.readState(spark, s"$dir/state").get
@@ -139,7 +137,7 @@ class StreamingSpec extends SparkSpec {
         .queryExecution.executedPlan.toString
       assert(exchanges(bucketedPlan) < exchanges(plainPlan),
         s"bucketed:\n$bucketedPlan\nplain:\n$plainPlan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
+    }
   }
 
   test("applyMergeBatch bucketed: replay idempotence and version pruning hold") {
@@ -1716,9 +1714,7 @@ class StreamingSpec extends SparkSpec {
     // the per-batch anti-join contract: with broadcast off, the bucketed
     // state side replans NO exchange — only the batch side shuffles (1
     // Exchange hash total); the same join against plain parquet pays 2
-    val thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val batchFps = Seq(10L, 20L).toDF("_fp")
       val bucketed = batchFps.join(st, Seq("_fp"), "left_anti")
       assert(hashExchanges(bucketed) == 1,
@@ -1727,7 +1723,7 @@ class StreamingSpec extends SparkSpec {
       val unbucketed = batchFps.join(plain, Seq("_fp"), "left_anti")
       assert(hashExchanges(unbucketed) == 2,
         unbucketed.queryExecution.executedPlan.toString)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
+    }
     // replay no-op + version pruning (the applyMergeBatch bucketed contract)
     StreamingOps.applyDedupBatch(spark, b1, 1L, "text", "id",
       s"$dir/state", s"$dir/out", Some(4))
@@ -1774,9 +1770,7 @@ class StreamingSpec extends SparkSpec {
     assert(rows(spark.read.parquet(s"$gp/out/batch=1")) ==
       rows(graft.operators.Graph.graphProfile(e0.unionByName(e1), "src", "dst")))
 
-    val thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // window-dedup store shape (key _h): semi and anti both 1 exchange
       val wdSt = spark.table(StreamingOps.stateTableName(s"$wd/state", 1L))
       val probeH = Seq(10L, 20L).toDF("_h")
@@ -1793,7 +1787,7 @@ class StreamingSpec extends SparkSpec {
       assert(hashExchanges(mBucketed) < hashExchanges(mPlain),
         s"bucketed:\n${mBucketed.queryExecution.executedPlan}\n" +
           s"plain:\n${mPlain.queryExecution.executedPlan}")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
+    }
   }
 }
 
