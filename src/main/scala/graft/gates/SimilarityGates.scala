@@ -1984,7 +1984,9 @@ private[graft] object SimilarityGates {
          |), $rounds
          |SELECT v AS node, l AS label FROM l8 ORDER BY node""".stripMargin
     },
-    // the same edges lpad'd into the er_serve min-propagation rounds
+    // the same edges lpad'd into the er_serve min-propagation rounds;
+    // bsym and l0 are MATERIALIZED (as in the _probed sibling) so DuckDB
+    // evaluates each once instead of inlining them into every round
     "pipeline_embedding_clusters" -> {
       val rounds = (1 to 8).map { k =>
         s"""c$k AS (
@@ -1999,9 +2001,9 @@ private[graft] object SimilarityGates {
          | SELECT lpad(CAST(id_a AS VARCHAR), 12, '0') AS a,
          |        lpad(CAST(id_b AS VARCHAR), 12, '0') AS b
          | FROM me
-         |), bsym AS (
+         |), bsym AS MATERIALIZED (
          | SELECT a AS _s, b AS _d FROM le UNION SELECT b, a FROM le
-         |), l0 AS (
+         |), l0 AS MATERIALIZED (
          | SELECT v, v AS l FROM (SELECT DISTINCT _s AS v FROM bsym)
          |), $rounds
          |SELECT v AS node, l AS label FROM l8 ORDER BY node""".stripMargin

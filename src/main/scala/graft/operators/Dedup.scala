@@ -569,7 +569,9 @@ object Dedup {
     * MapReduce connected components): each round every node takes the min
     * of its own label and its neighbors' labels; converges in O(cluster
     * diameter) rounds — dup clusters from LSH candidates are near-cliques,
-    * so 2-3 rounds in practice, `maxIter` as a backstop. Each round is
+    * so 2-3 rounds in practice, `maxIter` as a backstop: a chain still
+    * moving at `maxIter` refuses loudly instead of returning partial
+    * labels (the [[Graph.connectedComponentsMin]] convention). Each round is
     * one shuffle of the EDGE list (ids only, never payloads), and the
     * lineage is cut with localCheckpoint so plans don't grow with rounds.
     * At 100 TB the pair list is output-bound (∝ actual duplication), so
@@ -605,6 +607,11 @@ object Dedup {
       comp = next.drop("_chg")
       i += 1
     }
+    require(converged,
+      s"connectedComponents: labels still moving after $maxIter rounds — a dup " +
+        "chain is longer than the round budget, so the partial labels would " +
+        "split one cluster into several; raise maxIter (rounds grow with the " +
+        "longest chain) or use Graph.connectedComponentsMin (pointer jumping)")
     comp
   }
 

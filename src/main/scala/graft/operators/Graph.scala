@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Materialize
 import org.apache.spark.sql.types.{DecimalType, LongType}
@@ -14,18 +14,26 @@ import org.apache.spark.sql.types.{DecimalType, LongType}
  * all arithmetic in scaled BIGINT with floor division, a fixed
  * iteration count, no doubles anywhere.
  *
- * LABEL COMPRESSION (whole family): every iterative operator here
- * shuffles its node-id frame once per round, so at scale the id WIDTH
- * multiplies into O(rounds) shuffles. At or above
- * [[Graph.GraphDictThreshold]] nodes, each operator dictionary-encodes
- * node strings ONCE to dense longs ([[orderPreservingIdDict]] —
- * order-preserving, so long-min ≡ string-min and MIN-label semantics
- * survive), iterates over 8-byte longs only, and translates back at
- * the end. Below the threshold the strings iterate as-is: the dict's
- * fixed stages (build + encode/decode joins) cost more than the
- * string bytes they remove when the whole label table is a few MB —
- * the adaptive trade [[Profile.rankCorrelationByGroup]] established
- * with its rank-window threshold.
+ * ONE INPUT PROLOGUE (whole iterative family): each operator
+ * normalizes its edge list (its own output semantics: directed or
+ * canonical, distinct or not, self-loops kept or dropped) and hands it
+ * to [[GraphIds]], which materializes it, derives and counts the node
+ * set, gates the id dictionary and encodes/decodes ids. Every
+ * materialization in this file is [[Materialize.local]], so the
+ * planner sees each intermediate's stored size.
+ *
+ * LABEL COMPRESSION: every iterative operator shuffles its node-id
+ * frame once per round, so at scale the id WIDTH multiplies into
+ * O(rounds) shuffles. At or above [[Graph.GraphDictThreshold]] nodes,
+ * [[GraphIds]] dictionary-encodes node strings ONCE to dense longs
+ * ([[orderPreservingIdDict]] — order-preserving, so long-min ≡
+ * string-min and MIN-label semantics survive), the rounds iterate over
+ * 8-byte longs only, and the output translates back at the end. Below
+ * the threshold the strings iterate as-is: the dict's fixed stages
+ * (build + encode/decode joins) cost more than the string bytes they
+ * remove when the whole label table is a few MB — the adaptive trade
+ * [[Profile.rankCorrelationByGroup]] established with its rank-window
+ * threshold.
  */
 object Graph {
 
@@ -39,45 +47,99 @@ object Graph {
     */
   val GraphDictThreshold: Long = 1L << 21
 
-  /** Adaptive dictionary gate for the iterative family: at or above
-    * `threshold` nodes build the order-preserving long dictionary
-    * (checkpointed — every caller reads it at least twice: encode and
-    * decode); below it return None and the strings iterate as-is.
+  /** The graph-input prologue every iterative operator shares, computed
+    * once per call:
+    *
+    *  - `strings`: the caller's normalized STRING edge frame,
+    *    materialized (a lazy upstream never runs twice);
+    *  - `nodeStrings`: the node set `(_v STRING)` over both endpoint
+    *    columns, materialized, and its count `n`;
+    *  - the dictionary gate: at `n ≥ dictThreshold` the
+    *    order-preserving long dictionary (materialized — encode and
+    *    decode both read it), and `edges` are the encoded edges,
+    *    materialized; below it `edges` is `strings` and ids stay
+    *    strings;
+    *  - `nodes`: the node set `(_v)` in the rounds' id type.
+    *
+    * [[encode]] and [[decode]] are the identity and a plain rename
+    * when there is no dictionary, so an operator is written once for
+    * both branches.
     */
-  private[graft] def graphDict(
-      nodes: DataFrame,
-      n: Long,
-      threshold: Long
-  ): Option[DataFrame] =
-    if (n >= threshold) Some(orderPreservingIdDict(nodes).localCheckpoint())
-    else None
+  private[graft] final class GraphIds private (
+      strings: DataFrame,
+      val nodeStrings: DataFrame,
+      val n: Long,
+      dict: Option[DataFrame],
+      endpointCols: Seq[String]
+  ) {
+    val edges: DataFrame =
+      dict.fold(strings)(_ => Materialize.local(encode(strings, endpointCols: _*)))
 
-  /** Inner-join-encode string id columns to dictionary longs. The dict
-    * covers every node in the edge universe by construction, so no rows
-    * drop; it is 1:1, so edge multiplicities are preserved.
-    */
-  private[graft] def encodeIds(
-      df: DataFrame,
-      dict: DataFrame,
-      cols: Seq[String]
-  ): DataFrame =
-    cols.foldLeft(df) { (d, c) =>
-      d.join(dict.select(col("_v").as(c), col("_id").as(c + "_enc")), Seq(c))
-        .drop(c).withColumnRenamed(c + "_enc", c)
+    val nodes: DataFrame = dict.fold(nodeStrings)(_.select(col("_id").as("_v")))
+
+    /** Inner-join-encode string id columns to dictionary longs. The
+      * dict covers every node in the edge universe by construction, so
+      * no rows drop; it is 1:1, so multiplicities are preserved.
+      */
+    def encode(df: DataFrame, cols: String*): DataFrame = dict.fold(df) { d =>
+      cols.foldLeft(df) { (acc, c) =>
+        acc.join(d.select(col("_v").as(c), col("_id").as(c + "_enc")), Seq(c))
+          .drop(c).withColumnRenamed(c + "_enc", c)
+      }
     }
 
-  /** Translate long id columns back to node strings: for each
-    * `(idCol, outName)` pair, join the dict and surface the string as
-    * `outName`. The caller selects its output columns afterwards.
-    */
-  private[graft] def decodeIds(
-      df: DataFrame,
-      dict: DataFrame,
-      cols: Seq[(String, String)]
-  ): DataFrame =
-    cols.foldLeft(df) { case (d, (c, out)) =>
-      d.join(dict.select(col("_id").as(c), col("_v").as(out)), Seq(c))
+    /** Translate id columns back to node strings: each `(idCol,
+      * outName)` pair surfaces the string as `outName`. The caller
+      * selects its output columns afterwards.
+      */
+    def decode(df: DataFrame, cols: (String, String)*): DataFrame =
+      cols.foldLeft(df) { case (acc, (c, out)) =>
+        dict.fold(acc.withColumnRenamed(c, out)) { d =>
+          acc.join(d.select(col("_id").as(c), col("_v").as(out)), Seq(c))
+        }
+      }
+
+    /** One node as a literal of the rounds' id type: its dict id (one
+      * ≤1-row driver lookup), or the string itself. A node absent from
+      * the graph matches nothing in either branch (-1 is outside the
+      * dense range).
+      */
+    def idOf(node: String): Column = dict.fold(lit(node)) { d =>
+      lit(d.filter(col("_v") === node).select("_id")
+        .collect().headOption.map(_.getLong(0)).getOrElse(-1L))
     }
+  }
+
+  private[graft] object GraphIds {
+    def apply(edges: DataFrame, endpointA: String, endpointB: String,
+        dictThreshold: Long): GraphIds = {
+      val e = Materialize.local(edges)
+      val nodes = Materialize.local(e.select(col(endpointA).as("_v"))
+        .unionByName(e.select(col(endpointB).as("_v")))
+        .distinct())
+      val n = nodes.count()
+      val dict =
+        if (n >= dictThreshold) Some(Materialize.local(orderPreservingIdDict(nodes)))
+        else None
+      new GraphIds(e, nodes, n, dict, Seq(endpointA, endpointB))
+    }
+  }
+
+  /** The edge list's endpoints as non-null strings `(a, b)` — the one
+    * normalization every graph operator starts from.
+    */
+  private def endpoints(edges: DataFrame, srcCol: String, dstCol: String,
+      a: String = "_s", b: String = "_d"): DataFrame =
+    edges.select(col(srcCol).cast("string").as(a), col(dstCol).cast("string").as(b))
+      .filter(col(a).isNotNull && col(b).isNotNull)
+
+  /** Canonical undirected pairs `(_u ≤ _v)` from an `(_s, _d)` frame:
+    * direction and multi-edges collapse; self-loops stay unless the
+    * caller filtered them.
+    */
+  private def undirected(e: DataFrame): DataFrame =
+    e.select(least(col("_s"), col("_d")).as("_u"), greatest(col("_s"), col("_d")).as("_v"))
+      .distinct()
 
   /** One PageRank contribution round — factored lazy so the longs-only
     * shuffle contract is spec-inspectable (the [[ccMinRound]]
@@ -116,7 +178,7 @@ object Graph {
     *
     * Scale shape: per round, ONE shuffle of the edge list joined to the
     * current ranks (ids + longs, never payloads) and a map-side-combined
-    * sum per destination; `localCheckpoint` cuts the growing iteration
+    * sum per destination; a materialization cuts the growing iteration
     * lineage (the [[Dedup.connectedComponents]] discipline). Node and
     * out-degree tables build once. At ≥ `dictThreshold` nodes every
     * round shuffles 8-byte longs only (file-header label-compression
@@ -138,41 +200,43 @@ object Graph {
     require(iterations >= 1, s"pageRankScaled: iterations must be >= 1, got $iterations")
     require(dampingPpm >= 0L && dampingPpm <= 1000000L,
       s"pageRankScaled: dampingPpm must be in [0, 1e6], got $dampingPpm")
-    val scale = 1000000000L
-    val eS = edges
-      .select(col(srcCol).cast("string").as("_s"), col(dstCol).cast("string").as("_d"))
-      .filter(col("_s").isNotNull && col("_d").isNotNull)
-      .localCheckpoint()
-    val nodesS = eS.select(col("_s").as("_v"))
-      .unionByName(eS.select(col("_d").as("_v")))
-      .distinct()
-      .localCheckpoint()
-    val n = nodesS.count()
+    val ids = GraphIds(endpoints(edges, srcCol, dstCol), "_s", "_d", dictThreshold)
+    val n = ids.n
     require(n > 0, "pageRankScaled: empty graph")
     // n·10⁶ would overflow Long past ~9.2e12 nodes (the unimaxBudgets
     // guard discipline); no real graph gets there, but fail loudly
     require(n <= Long.MaxValue / 1000000L,
       s"pageRankScaled: node count $n overflows the ppm product")
-    val dictOpt = graphDict(nodesS, n, dictThreshold)
-    val (e, nodes) = dictOpt match {
-      case Some(dct) => (encodeIds(eS, dct, Seq("_s", "_d")).localCheckpoint(),
-        dct.select(col("_id").as("_v")))
-      case None => (eS, nodesS)
-    }
-    val outdeg = e.groupBy("_s").agg(count(lit(1)).as("_od")).localCheckpoint()
-    val base = (scale * (1000000L - dampingPpm)) / (n * 1000000L)
-    var ranks = nodes.select(col("_v"), lit(scale / n).as("_r"))
+    powerIteration(ids, iterations, dampingPpm,
+      initRank = lit(PpbScale / n),
+      restart = lit((PpbScale * (1000000L - dampingPpm)) / (n * 1000000L)))
+  }
+
+  /** Rank mass in parts-per-billion. */
+  private val PpbScale = 1000000000L
+
+  /** The power-iteration loop both PageRanks share: ranks start at
+    * `initRank`, and every round each node's rank is its `restart` mass
+    * plus its [[contribRound]] inflow. Both columns read `_v`, the node
+    * in the rounds' id type. Out-degrees build once; each round's ranks
+    * are materialized (the loop's lineage cut).
+    */
+  private def powerIteration(
+      ids: GraphIds,
+      iterations: Int,
+      dampingPpm: Long,
+      initRank: Column,
+      restart: Column
+  ): DataFrame = {
+    val e = ids.edges
+    val outdeg = Materialize.local(e.groupBy("_s").agg(count(lit(1)).as("_od")))
+    var ranks = ids.nodes.select(col("_v"), initRank.as("_r"))
     for (_ <- 0 until iterations) {
       val contrib = contribRound(e, outdeg, ranks, dampingPpm)
-      ranks = nodes.join(contrib, Seq("_v"), "left")
-        .select(col("_v"), (lit(base) + coalesce(col("_in"), lit(0L))).as("_r"))
-        .localCheckpoint()
+      ranks = Materialize.local(ids.nodes.join(contrib, Seq("_v"), "left")
+        .select(col("_v"), (restart + coalesce(col("_in"), lit(0L))).as("_r")))
     }
-    dictOpt match {
-      case Some(dct) => decodeIds(ranks, dct, Seq("_v" -> "node"))
-        .select(col("node"), col("_r").as("rank_ppb"))
-      case None => ranks.select(col("_v").as("node"), col("_r").as("rank_ppb"))
-    }
+    ids.decode(ranks, "_v" -> "node").select(col("node"), col("_r").as("rank_ppb"))
   }
 
   /** One bounded-BFS level — factored lazy for the longs-only spec pin:
@@ -209,7 +273,7 @@ object Graph {
     *
     * Scale shape: level d is ONE shuffle of the (u, v) pair frontier
     * joined to the edge list — ids only, never payloads — plus an
-    * anti-join against the visited pair set; `localCheckpoint` cuts the
+    * anti-join against the visited pair set; a materialization cuts the
     * per-level lineage (the [[pageRankScaled]] discipline). At
     * ≥ `dictThreshold` nodes the frontier pairs are PAIRS OF LONGS, not
     * pairs of strings — on this operator the dict pays off fastest
@@ -247,44 +311,27 @@ object Graph {
           "dense for this depth. Lower maxDepth, shard the graph, or raise " +
           "maxFrontierPairs knowingly (memory/shuffle grow with the frontier).")
     }
-    val eS = edges
-      .select(col(srcCol).cast("string").as("_s"), col(dstCol).cast("string").as("_d"))
-      .filter(col("_s").isNotNull && col("_d").isNotNull)
-      .distinct()
-      .localCheckpoint()
-    val nodesS = eS.select(col("_s").as("_v"))
-      .unionByName(eS.select(col("_d").as("_v")))
-      .distinct()
-      .localCheckpoint()
-    val dictOpt = graphDict(nodesS, nodesS.count(), dictThreshold)
-    val (e, nodes) = dictOpt match {
-      case Some(dct) => (encodeIds(eS, dct, Seq("_s", "_d")).localCheckpoint(),
-        dct.select(col("_id").as("_v")))
-      case None => (eS, nodesS)
-    }
-    var frontier = e.filter(col("_s") =!= col("_d"))
-      .select(col("_s").as("_u"), col("_d").as("_w"))
-      .localCheckpoint()
+    val ids = GraphIds(endpoints(edges, srcCol, dstCol).distinct(), "_s", "_d",
+      dictThreshold)
+    val e = ids.edges
+    var frontier = Materialize.local(e.filter(col("_s") =!= col("_d"))
+      .select(col("_s").as("_u"), col("_d").as("_w")))
     frontierTripwire(frontier, 1)
     var visited = frontier
     var contribs = Seq(frontier.groupBy(col("_w"))
       .agg((count(lit(1)) * lit(1000000L / 1)).as("_c")))
     for (d <- 2 to maxDepth) {
-      frontier = harmonicLevelRound(frontier, e, visited).localCheckpoint()
+      frontier = Materialize.local(harmonicLevelRound(frontier, e, visited))
       frontierTripwire(frontier, d)
-      visited = visited.unionByName(frontier).localCheckpoint()
+      visited = Materialize.local(visited.unionByName(frontier))
       contribs = contribs :+ frontier.groupBy(col("_w"))
         .agg((count(lit(1)) * lit(1000000L / d)).as("_c"))
     }
     val allContribs = contribs.reduce(_ unionByName _)
       .groupBy(col("_w")).agg(sum(col("_c")).as("_h"))
-    val out = nodes.join(allContribs.withColumnRenamed("_w", "_v"), Seq("_v"), "left")
+    val out = ids.nodes.join(allContribs.withColumnRenamed("_w", "_v"), Seq("_v"), "left")
       .select(col("_v"), coalesce(col("_h"), lit(0L)).as("harmonic_ppm"))
-    dictOpt match {
-      case Some(dct) => decodeIds(out, dct, Seq("_v" -> "node"))
-        .select(col("node"), col("harmonic_ppm"))
-      case None => out.select(col("_v").as("node"), col("harmonic_ppm"))
-    }
+    ids.decode(out, "_v" -> "node").select(col("node"), col("harmonic_ppm"))
   }
 
   /** Personalized PageRank — [[pageRankScaled]] with the restart mass
@@ -313,44 +360,12 @@ object Graph {
       s"personalizedPageRankScaled: iterations must be >= 1, got $iterations")
     require(dampingPpm >= 0L && dampingPpm <= 1000000L,
       s"personalizedPageRankScaled: dampingPpm must be in [0, 1e6], got $dampingPpm")
-    val scale = 1000000000L
-    val eS = edges
-      .select(col(srcCol).cast("string").as("_s"), col(dstCol).cast("string").as("_d"))
-      .filter(col("_s").isNotNull && col("_d").isNotNull)
-      .localCheckpoint()
-    val nodesS = eS.select(col("_s").as("_v"))
-      .unionByName(eS.select(col("_d").as("_v")))
-      .distinct()
-      .localCheckpoint()
-    val dictOpt = graphDict(nodesS, nodesS.count(), dictThreshold)
-    // in the encoded branch the seed becomes its dict id (one ≤1-row
-    // driver lookup — metadata scale); a seed absent from the graph
-    // matches nothing in either branch (-1 is outside the dense range)
-    val (e, nodes, seedLit) = dictOpt match {
-      case Some(dct) =>
-        val sid = dct.filter(col("_v") === seed).select("_id")
-          .collect().headOption.map(_.getLong(0)).getOrElse(-1L)
-        (encodeIds(eS, dct, Seq("_s", "_d")).localCheckpoint(),
-          dct.select(col("_id").as("_v")), lit(sid))
-      case None => (eS, nodesS, lit(seed))
-    }
-    val outdeg = e.groupBy("_s").agg(count(lit(1)).as("_od")).localCheckpoint()
-    val base = scale * (1000000L - dampingPpm) / 1000000L
-    var ranks = nodes.select(col("_v"),
-      when(col("_v") === seedLit, lit(scale)).otherwise(lit(0L)).as("_r"))
-    for (_ <- 0 until iterations) {
-      val contrib = contribRound(e, outdeg, ranks, dampingPpm)
-      ranks = nodes.join(contrib, Seq("_v"), "left")
-        .select(col("_v"),
-          (when(col("_v") === seedLit, lit(base)).otherwise(lit(0L)) +
-            coalesce(col("_in"), lit(0L))).as("_r"))
-        .localCheckpoint()
-    }
-    dictOpt match {
-      case Some(dct) => decodeIds(ranks, dct, Seq("_v" -> "node"))
-        .select(col("node"), col("_r").as("rank_ppb"))
-      case None => ranks.select(col("_v").as("node"), col("_r").as("rank_ppb"))
-    }
+    val ids = GraphIds(endpoints(edges, srcCol, dstCol), "_s", "_d", dictThreshold)
+    val isSeed = col("_v") === ids.idOf(seed)
+    powerIteration(ids, iterations, dampingPpm,
+      initRank = when(isSeed, lit(PpbScale)).otherwise(lit(0L)),
+      restart = when(isSeed, lit(PpbScale * (1000000L - dampingPpm) / 1000000L))
+        .otherwise(lit(0L)))
   }
 
   /** Per-node triangle counts + local clustering coefficient over the
@@ -392,62 +407,27 @@ object Graph {
       dstCol: String,
       dictThreshold: Long = GraphDictThreshold
   ): DataFrame = {
-    val raw = edges
-      .select(col(srcCol).cast("string").as("_a"), col(dstCol).cast("string").as("_b"))
-      .filter(col("_a").isNotNull && col("_b").isNotNull && col("_a") =!= col("_b"))
-    // canonical undirected simple edges: (u < v), multi-edges collapsed
-    val ceS = raw
-      .select(least(col("_a"), col("_b")).as("_u"), greatest(col("_a"), col("_b")).as("_v"))
-      .distinct()
-      .localCheckpoint()
-    val nodesS = ceS.select(col("_u").as("_n"))
-      .unionByName(ceS.select(col("_v").as("_n")))
-      .distinct()
-    val dictOpt = graphDict(nodesS.select(col("_n").as("_v")), nodesS.count(),
-      dictThreshold)
-    // canonical order survives encoding (order-preserving dict), so the
-    // (_u < _v) invariant holds on longs without re-canonicalizing
-    val (ce, nodes) = dictOpt match {
-      case Some(dct) => (encodeIds(ceS, dct, Seq("_u", "_v")).localCheckpoint(),
-        dct.select(col("_id").as("_n")))
-      case None => (ceS, nodesS)
-    }
-    val deg = ce.select(col("_u").as("_n")).unionByName(ce.select(col("_v").as("_n")))
-      .groupBy("_n").agg(count(lit(1)).as("_deg"))
-      .localCheckpoint()
-    // degree-ordered orientation: (deg, node) smaller endpoint → larger
-    val oriented = ce
-      .join(deg.select(col("_n").as("_u"), col("_deg").as("_du")), Seq("_u"))
-      .join(deg.select(col("_n").as("_v"), col("_deg").as("_dv")), Seq("_v"))
-      .select(
-        when(col("_du") < col("_dv") ||
-             (col("_du") === col("_dv") && col("_u") < col("_v")), col("_u"))
-          .otherwise(col("_v")).as("_lo"),
-        when(col("_du") < col("_dv") ||
-             (col("_du") === col("_dv") && col("_u") < col("_v")), col("_v"))
-          .otherwise(col("_u")).as("_hi"))
-      .localCheckpoint()
-    // wedges at the orientation-minimal vertex; close against canonical edges
-    val wedges = oriented.select(col("_lo").as("_c"), col("_hi").as("_x"))
-      .join(oriented.select(col("_lo").as("_c"), col("_hi").as("_y")), Seq("_c"))
-      .filter(col("_x") < col("_y"))
-    val triangles = wedges
-      .join(ce.select(col("_u").as("_x"), col("_v").as("_y")), Seq("_x", "_y"), "left_semi")
-    val perNode = triangles
+    // canonical undirected simple edges: (u < v), multi-edges collapsed;
+    // the order-preserving dict keeps (_u < _v) on longs
+    val ids = GraphIds(
+      undirected(endpoints(edges, srcCol, dstCol).filter(col("_s") =!= col("_d"))),
+      "_u", "_v", dictThreshold)
+    val ce = ids.edges
+    val deg = Materialize.local(
+      ce.select(col("_u").as("_n")).unionByName(ce.select(col("_v").as("_n")))
+        .groupBy("_n").agg(count(lit(1)).as("_deg")))
+    val perNode = triangleList(ce, deg)
       .select(explode(array(col("_c"), col("_x"), col("_y"))).as("_n"))
       .groupBy("_n").agg(count(lit(1)).as("_t"))
-    val out = nodes.join(deg, Seq("_n")).join(perNode, Seq("_n"), "left")
+    val out = ids.nodes.withColumnRenamed("_v", "_n")
+      .join(deg, Seq("_n")).join(perNode, Seq("_n"), "left")
       .select(col("_n"), col("_deg").as("degree"),
         coalesce(col("_t"), lit(0L)).as("triangles"),
         when(col("_deg") >= 2,
           expr("(2 * coalesce(_t, 0L) * 1000000L) div (_deg * (_deg - 1))"))
           .otherwise(lit(0L)).as("clustering_ppm"))
-    dictOpt match {
-      case Some(dct) => decodeIds(out, dct, Seq("_n" -> "node"))
-        .select(col("node"), col("degree"), col("triangles"), col("clustering_ppm"))
-      case None => out.select(col("_n").as("node"), col("degree"),
-        col("triangles"), col("clustering_ppm"))
-    }
+    ids.decode(out, "_n" -> "node")
+      .select(col("node"), col("degree"), col("triangles"), col("clustering_ppm"))
   }
 
   /** One k-core peel round — factored lazy for the longs-only spec pin:
@@ -477,7 +457,7 @@ object Graph {
     * Scale shape: round k is ONE degree aggregate over the surviving
     * symmetric adjacency (ids only — 8-byte longs at ≥ `dictThreshold`
     * nodes) + two semi-joins filtering edge endpoints against the keep
-    * set, `localCheckpoint` cutting the iteration lineage. Output:
+    * set, a materialization cutting the iteration lineage. Output:
     * `(node STRING, deg BIGINT)` — degrees WITHIN the surviving
     * subgraph after the last round; peeled and isolated nodes emit
     * nothing.
@@ -493,33 +473,17 @@ object Graph {
     require(k >= 1, s"kCoreBounded: k must be >= 1, got $k")
     require(rounds >= 1 && rounds <= 16,
       s"kCoreBounded: rounds must be in [1, 16], got $rounds")
-    val raw = edges
-      .select(col(srcCol).cast("string").as("_a"), col(dstCol).cast("string").as("_b"))
-      .filter(col("_a").isNotNull && col("_b").isNotNull && col("_a") =!= col("_b"))
-    val ceS = raw
-      .select(least(col("_a"), col("_b")).as("_u"), greatest(col("_a"), col("_b")).as("_v"))
-      .distinct()
-      .localCheckpoint()
-    val nodesS = ceS.select(col("_u").as("_v"))
-      .unionByName(ceS.select(col("_v")))
-      .distinct()
-    val dictOpt = graphDict(nodesS, nodesS.count(), dictThreshold)
-    val ce = dictOpt match {
-      case Some(dct) => encodeIds(ceS, dct, Seq("_u", "_v"))
-      case None => ceS
-    }
-    var sym = ce.select(col("_u").as("_s"), col("_v").as("_d"))
-      .unionByName(ce.select(col("_v").as("_s"), col("_u").as("_d")))
-      .localCheckpoint()
+    val ids = GraphIds(
+      undirected(endpoints(edges, srcCol, dstCol).filter(col("_s") =!= col("_d"))),
+      "_u", "_v", dictThreshold)
+    val ce = ids.edges
+    var sym = Materialize.local(ce.select(col("_u").as("_s"), col("_v").as("_d"))
+      .unionByName(ce.select(col("_v").as("_s"), col("_u").as("_d"))))
     for (_ <- 0 until rounds) {
-      sym = kCoreRound(sym, k).localCheckpoint()
+      sym = Materialize.local(kCoreRound(sym, k))
     }
     val out = sym.groupBy(col("_s")).agg(count(lit(1)).as("deg"))
-    dictOpt match {
-      case Some(dct) => decodeIds(out, dct, Seq("_s" -> "node"))
-        .select(col("node"), col("deg"))
-      case None => out.select(col("_s").as("node"), col("deg"))
-    }
+    ids.decode(out, "_s" -> "node").select(col("node"), col("deg"))
   }
 
   /** One synchronous min-label round — factored lazy for the longs-only
@@ -576,43 +540,24 @@ object Graph {
   ): DataFrame = {
     require(rounds >= 1 && rounds <= 16,
       s"labelPropagationMin: rounds must be in [1, 16], got $rounds")
-    // the edge list, computed ONCE: canonical undirected pairs (u ≤ v),
-    // distinct — the node set and the adjacency both read it, so a lazy
-    // upstream (the ER op's verified pairs) never runs twice
-    val e = Materialize.local(edges
-      .select(col(srcCol).cast("string").as("_a"), col(dstCol).cast("string").as("_b"))
-      .filter(col("_a").isNotNull && col("_b").isNotNull)
-      .select(least(col("_a"), col("_b")).as("_u"), greatest(col("_a"), col("_b")).as("_v"))
-      .distinct())
-    val nodesS = Materialize.local(e.select(col("_u").as("_v"))
-      .unionByName(e.select(col("_v")))
-      .distinct())
-    val dictOpt = graphDict(nodesS, nodesS.count(), dictThreshold)
+    // canonical undirected pairs (u ≤ v), distinct, self-loops kept in
+    // the node universe; the node set and the adjacency both read the one
+    // materialized edge list, so a lazy upstream (the ER op's verified
+    // pairs) never runs twice
+    val ids = GraphIds(undirected(endpoints(edges, srcCol, dstCol)), "_u", "_v",
+      dictThreshold)
     // self-loops are harmless no-ops (the node keeps its own label);
     // drop them. The dict is order-preserving, so encoded pairs stay
     // canonical (u < v), and the symmetric adjacency of distinct
     // canonical pairs is distinct without an aggregate
-    val simple = dictOpt match {
-      case Some(dct) =>
-        Materialize.local(encodeIds(e.filter(col("_u") =!= col("_v")), dct, Seq("_u", "_v")))
-      case None => e.filter(col("_u") =!= col("_v"))
-    }
+    val simple = ids.edges.filter(col("_u") =!= col("_v"))
     val sym = simple.select(col("_u").as("_s"), col("_v").as("_d"))
       .unionByName(simple.select(col("_v").as("_s"), col("_u").as("_d")))
-    val nodes = dictOpt match {
-      case Some(dct) => dct.select(col("_id").as("_v"))
-      case None => nodesS
-    }
-    var labels = nodes.select(col("_v"), col("_v").as("_l"))
+    var labels = ids.nodes.select(col("_v"), col("_v").as("_l"))
     for (_ <- 0 until rounds) {
       labels = Materialize.local(lpaRound(sym, labels))
     }
-    dictOpt match {
-      case Some(dct) =>
-        decodeIds(labels, dct, Seq("_v" -> "node", "_l" -> "label"))
-          .select(col("node"), col("label"))
-      case None => labels.select(col("_v").as("node"), col("_l").as("label"))
-    }
+    ids.decode(labels, "_v" -> "node", "_l" -> "label").select(col("node"), col("label"))
   }
 
   /** EXACT connected components — min-label propagation with POINTER
@@ -662,28 +607,13 @@ object Graph {
   ): DataFrame = {
     require(maxRounds >= 1 && maxRounds <= 64,
       s"connectedComponentsMin: maxRounds must be in [1, 64], got $maxRounds")
-    val raw = edges
-      .select(col(srcCol).cast("string").as("_a"), col(dstCol).cast("string").as("_b"))
-      .filter(col("_a").isNotNull && col("_b").isNotNull)
-    val nodes = raw.select(col("_a").as("_v"))
-      .unionByName(raw.select(col("_b").as("_v")))
-      .distinct()
-      .localCheckpoint()
-    val dictOpt = graphDict(nodes, nodes.count(), dictThreshold)
-    val rawW = dictOpt match {
-      case Some(dct) => encodeIds(raw.filter(col("_a") =!= col("_b"))
-        .select(col("_a"), col("_b")), dct, Seq("_a", "_b"))
-      case None => raw.filter(col("_a") =!= col("_b")).select(col("_a"), col("_b"))
-    }
-    val symL = rawW.select(col("_a").as("_s"), col("_b").as("_d"))
-    val sym = symL
+    val ids = GraphIds(endpoints(edges, srcCol, dstCol), "_s", "_d", dictThreshold)
+    val symL = ids.edges.filter(col("_s") =!= col("_d"))
+    val sym = Materialize.local(symL
       .unionByName(symL.select(col("_d").as("_s"), col("_s").as("_d")))
-      .distinct()
-      .localCheckpoint()
-    var labels = (dictOpt match {
-      case Some(dct) => dct.select(col("_id").as("_v"), col("_id").as("_l"))
-      case None => nodes.select(col("_v"), col("_v").as("_l"))
-    }).localCheckpoint()
+      .distinct())
+    // a projection of the materialized node set: nothing to re-materialize
+    var labels = ids.nodes.select(col("_v"), col("_v").as("_l"))
     var converged = false
     var round = 0
     while (!converged && round < maxRounds) {
@@ -703,12 +633,7 @@ object Graph {
         "with pointer jumping that indicates malformed input (e.g. unstable " +
         "ids), not an undersized budget; inspect the edge list or raise " +
         "maxRounds knowingly")
-    dictOpt match {
-      case Some(dct) =>
-        decodeIds(labels, dct, Seq("_v" -> "node", "_l" -> "label"))
-          .select(col("node"), col("label"))
-      case None => labels.select(col("_v").as("node"), col("_l").as("label"))
-    }
+    ids.decode(labels, "_v" -> "node", "_l" -> "label").select(col("node"), col("label"))
   }
 
   /** One propagate-and-jump round over encoded labels — factored so the
@@ -723,13 +648,11 @@ object Graph {
       .join(labels.select(col("_v").as("_s"), col("_l")), Seq("_s"))
       .groupBy(col("_d")).agg(min(col("_l")).as("_nl"))
       .select(col("_d").as("_v"), col("_nl"))
-    val prop = labels.join(fromNbr, Seq("_v"), "left")
-      .select(col("_v"), least(col("_l"), coalesce(col("_nl"), col("_l"))).as("_l"))
-      .localCheckpoint()
-    prop
+    val prop = Materialize.local(labels.join(fromNbr, Seq("_v"), "left")
+      .select(col("_v"), least(col("_l"), coalesce(col("_nl"), col("_l"))).as("_l")))
+    Materialize.local(prop
       .join(prop.select(col("_v").as("_l"), col("_l").as("_l2")), Seq("_l"), "left")
-      .select(col("_v"), coalesce(col("_l2"), col("_l")).as("_l"))
-      .localCheckpoint()
+      .select(col("_v"), coalesce(col("_l2"), col("_l")).as("_l")))
   }
 
   /** Order-preserving dense ids for a distinct single-column `_v`
@@ -753,12 +676,12 @@ object Graph {
     val nb = if (buckets > 0) buckets
              else nodes.sparkSession.sessionState.conf.numShufflePartitions
     val w = org.apache.spark.sql.expressions.Window
-    val parted = nodes
+    // materialized: freezes partition ids + local positions
+    val parted = Materialize.local(nodes
       .repartitionByRange(nb, col("_v"))
       .sortWithinPartitions(col("_v"))
       .select(col("_v"), spark_partition_id().as("_p"),
-        monotonically_increasing_id().as("_mid"))
-      .localCheckpoint() // freeze partition ids + local positions
+        monotonically_increasing_id().as("_mid")))
     val stats = parted.groupBy(col("_p"))
       .agg(count(lit(1)).as("_c"), min(col("_mid")).as("_m0"),
         max(col("_mid")).as("_m1"))
@@ -808,7 +731,7 @@ object Graph {
     * Scale shape: round k is ONE shuffle of the edge list joined to the
     * previous walk counts (ids + longs, never payloads — 8-byte long
     * ids at ≥ `dictThreshold` nodes) with map-side combine,
-    * `localCheckpoint` cutting the iteration lineage; the final
+    * a materialization cutting the iteration lineage; the final
     * weighted sum runs in DECIMAL(38,0) and casts to BIGINT
     * ANSI-checked (walk counts grow like λ_max^k — at web-graph scale
     * with small `rounds` the attenuated sum fits int64 comfortably;
@@ -829,41 +752,24 @@ object Graph {
       s"katzCentralityScaled: rounds must be in [1, 8], got $rounds")
     require(alphaPpm > 0L && alphaPpm < 1000000L,
       s"katzCentralityScaled: alphaPpm must be in (0, 1e6), got $alphaPpm")
-    val eS = edges
-      .select(col(srcCol).cast("string").as("_s"), col(dstCol).cast("string").as("_d"))
-      .filter(col("_s").isNotNull && col("_d").isNotNull)
-      .localCheckpoint()
-    val nodesS = eS.select(col("_s").as("_v"))
-      .unionByName(eS.select(col("_d").as("_v")))
-      .distinct()
-      .localCheckpoint()
-    val dictOpt = graphDict(nodesS, nodesS.count(), dictThreshold)
-    val (e, nodes) = dictOpt match {
-      case Some(dct) => (encodeIds(eS, dct, Seq("_s", "_d")).localCheckpoint(),
-        dct.select(col("_id").as("_v")))
-      case None => (eS, nodesS)
-    }
+    val ids = GraphIds(endpoints(edges, srcCol, dstCol), "_s", "_d", dictThreshold)
     // attenuation ladder, driver-side exact integers
     val atten = Iterator.iterate(alphaPpm)(a => a * alphaPpm / 1000000L)
       .take(rounds).toSeq
-    var walks = nodes.select(col("_v"), lit(1L).as("_w")) // w_0 ≡ 1
+    var walks = ids.nodes.select(col("_v"), lit(1L).as("_w")) // w_0 ≡ 1
     val d38 = DecimalType(38, 0)
     var contribs = Seq.empty[DataFrame]
     for (k <- 1 to rounds) {
-      walks = walkRound(e, walks).localCheckpoint()
+      walks = Materialize.local(walkRound(ids.edges, walks))
       contribs = contribs :+ walks.select(col("_v"),
         (col("_w").cast(d38) * lit(atten(k - 1)).cast(d38)).as("_c"))
     }
     val total = contribs.reduce(_ unionByName _)
       .groupBy(col("_v")).agg(sum(col("_c")).as("_k"))
-    val out = nodes.join(total, Seq("_v"), "left")
+    val out = ids.nodes.join(total, Seq("_v"), "left")
       .select(col("_v"),
         coalesce(col("_k"), lit(0).cast(d38)).cast(LongType).as("katz_e6"))
-    dictOpt match {
-      case Some(dct) => decodeIds(out, dct, Seq("_v" -> "node"))
-        .select(col("node"), col("katz_e6"))
-      case None => out.select(col("_v").as("node"), col("katz_e6"))
-    }
+    ids.decode(out, "_v" -> "node").select(col("node"), col("katz_e6"))
   }
 
   /** α_m·10⁶ for the ANF register count — the published HLL constants
@@ -1024,31 +930,19 @@ object Graph {
       s"anfHyperBall: maxDepth must be in [1, 16], got $maxDepth")
     require(m >= 16 && m <= 1024 && Integer.bitCount(m) == 1,
       s"anfHyperBall: m must be a power of two in [16, 1024], got $m")
-    val eS = edges
-      .select(col(srcCol).cast("string").as("_src"), col(dstCol).cast("string").as("_dst"))
-      .filter(col("_src").isNotNull && col("_dst").isNotNull &&
-        col("_src") =!= col("_dst")) // self-loops: u is in every B_t(u) already
-      .distinct()
-      .localCheckpoint()
-    val nodesS = eS.select(col("_src").as("_v"))
-      .unionByName(eS.select(col("_dst").as("_v")))
-      .distinct()
-      .localCheckpoint()
-    val initS = anfInitRegisters(nodesS, m)
-    val dictOpt = graphDict(nodesS, nodesS.count(), dictThreshold)
-    val (e, state0, nodes) = dictOpt match {
-      case Some(dct) => (
-        encodeIds(eS, dct, Seq("_src", "_dst")),
-        encodeIds(initS, dct, Seq("_v")).withColumnRenamed("_v", "_n"),
-        dct.select(col("_id").as("_n")))
-      case None => (eS, initS.withColumnRenamed("_v", "_n"), nodesS.select(col("_v").as("_n")))
-    }
+    val ids = GraphIds(
+      endpoints(edges, srcCol, dstCol, "_src", "_dst")
+        .filter(col("_src") =!= col("_dst")) // self-loops: u is in every B_t(u) already
+        .distinct(),
+      "_src", "_dst", dictThreshold)
     // the join side every round reuses: partitioned by destination once
-    val eByDst = e.repartition(col("_dst")).localCheckpoint()
-    var state = state0.localCheckpoint()
+    val eByDst = Materialize.local(ids.edges.repartition(col("_dst")))
+    // registers hash the original strings, before any encoding
+    var state = Materialize.local(
+      ids.encode(anfInitRegisters(ids.nodeStrings, m), "_v").withColumnRenamed("_v", "_n"))
     var ests = Seq.empty[DataFrame]
     for (t <- 1 to maxDepth) {
-      state = anfRound(eByDst, state).localCheckpoint()
+      state = Materialize.local(anfRound(eByDst, state))
       ests = ests :+ state.select(col("_n"),
         expr(anfEstimateSql(m)).as(s"ball${t}_est"),
         expr("aggregate(_regs, 0L, (acc, r) -> acc + IF(r = 0, 1L, 0L))")
@@ -1069,16 +963,12 @@ object Graph {
           col(s"_vz$t") > lit(0L),
         element_at(lcCol, col(s"_vz$t").cast("int")))
       .otherwise(col(s"ball${t}_est"))
-    val out = nodes.join(joined, Seq("_n"))
+    val out = ids.nodes.withColumnRenamed("_v", "_n").join(joined, Seq("_n"))
       .withColumn("harmonic_est_ppm", expr(s"CAST($harmonic AS BIGINT)"))
     val cols = (1 to maxDepth).map(t => col(s"ball${t}_est")) ++
       (1 to maxDepth).map(t => lc(t).as(s"ball${t}_lc_est")) :+
       col("harmonic_est_ppm")
-    dictOpt match {
-      case Some(dct) => decodeIds(out, dct, Seq("_n" -> "node"))
-        .select(col("node") +: cols: _*)
-      case None => out.select(col("_n").as("node") +: cols: _*)
-    }
+    ids.decode(out, "_n" -> "node").select(col("node") +: cols: _*)
   }
 
   /** The global neighborhood function and effective diameter off an
@@ -1111,10 +1001,10 @@ object Graph {
     val levels = sums.select(
       expr(s"stack($maxDepth, $stackArgs) AS (t, _np)"))
     val tot = sums.select(col(s"b$maxDepth").as("_tot"))
-    val shares = levels.crossJoin(broadcast(tot))
+    // two consumers: the rows and the min-t fold
+    val shares = Materialize.local(levels.crossJoin(broadcast(tot))
       .select(col("t"), col("_np"),
-        expr("(_np * CAST(1000000 AS DECIMAL(38,0))) div _tot").as("share_ppm"))
-      .localCheckpoint() // two consumers: the rows and the min-t fold
+        expr("(_np * CAST(1000000 AS DECIMAL(38,0))) div _tot").as("share_ppm")))
     val eff = shares.filter(col("share_ppm") >= 900000L)
       .agg(min(col("t")).as("eff_diameter"))
     // the DECIMAL(38,0) sums exist because int64 pair counts overflow
@@ -1133,36 +1023,40 @@ object Graph {
       .orderBy("t")
   }
 
-  /** Triangle SUPPORT per canonical undirected edge — factored lazy
-    * for the spec pins and shared by every [[kTrussBounded]] round:
-    * the degree-ordered orientation bounds each oriented out-list by
-    * O(√m), one wedge self-join + one semi-less inner join against
-    * the canonical edge set finds each triangle once (the
-    * [[triangleCountsScaled]] shape), and each triangle credits its
-    * THREE edges (re-canonicalized `least/greatest` — orientation
-    * order is degree order, not id order). Output:
+  /** Every triangle of a canonical edge list `(_u < _v)` exactly once,
+    * as `(_c, _x, _y)` with `_x < _y`, given its degree table
+    * `(_n, _deg)`: each edge is directed from its (degree, node)-smaller
+    * endpoint to the larger (materialized — the wedge self-join reads
+    * it twice), wedges form at the orientation-minimal vertex `_c`, and
+    * a semi-join against the canonical edges closes them.
+    */
+  private def triangleList(ce: DataFrame, deg: DataFrame): DataFrame = {
+    val uFirst = col("_du") < col("_dv") ||
+      (col("_du") === col("_dv") && col("_u") < col("_v"))
+    val oriented = Materialize.local(ce
+      .join(deg.select(col("_n").as("_u"), col("_deg").as("_du")), Seq("_u"))
+      .join(deg.select(col("_n").as("_v"), col("_deg").as("_dv")), Seq("_v"))
+      .select(when(uFirst, col("_u")).otherwise(col("_v")).as("_lo"),
+        when(uFirst, col("_v")).otherwise(col("_u")).as("_hi")))
+    oriented.select(col("_lo").as("_c"), col("_hi").as("_x"))
+      .join(oriented.select(col("_lo").as("_c"), col("_hi").as("_y")), Seq("_c"))
+      .filter(col("_x") < col("_y"))
+      .join(ce.select(col("_u").as("_x"), col("_v").as("_y")), Seq("_x", "_y"), "left_semi")
+  }
+
+  /** Triangle SUPPORT per canonical undirected edge — shared by every
+    * [[kTrussBounded]] round: the degree-ordered orientation bounds
+    * each oriented out-list by O(√m), [[triangleList]] finds each
+    * triangle once (the [[triangleCountsScaled]] shape), and each
+    * triangle credits its THREE edges (re-canonicalized
+    * `least/greatest` — orientation order is degree order, not id
+    * order). Output:
     * `(_u, _v, _sup BIGINT)` — edges with zero support are absent.
     */
   private[graft] def edgeSupport(ce: DataFrame): DataFrame = {
     val deg = ce.select(col("_u").as("_n")).unionByName(ce.select(col("_v").as("_n")))
       .groupBy("_n").agg(count(lit(1)).as("_deg"))
-    val oriented = ce
-      .join(deg.select(col("_n").as("_u"), col("_deg").as("_du")), Seq("_u"))
-      .join(deg.select(col("_n").as("_v"), col("_deg").as("_dv")), Seq("_v"))
-      .select(
-        when(col("_du") < col("_dv") ||
-             (col("_du") === col("_dv") && col("_u") < col("_v")), col("_u"))
-          .otherwise(col("_v")).as("_lo"),
-        when(col("_du") < col("_dv") ||
-             (col("_du") === col("_dv") && col("_u") < col("_v")), col("_v"))
-          .otherwise(col("_u")).as("_hi"))
-      .localCheckpoint()
-    val triangles = oriented.select(col("_lo").as("_c"), col("_hi").as("_x"))
-      .join(oriented.select(col("_lo").as("_c"), col("_hi").as("_y")), Seq("_c"))
-      .filter(col("_x") < col("_y"))
-      .join(ce.select(col("_u").as("_x"), col("_v").as("_y")), Seq("_x", "_y"),
-        "left_semi")
-    triangles
+    triangleList(ce, deg)
       .select(explode(array(
         struct(least(col("_c"), col("_x")).as("_u"),
           greatest(col("_c"), col("_x")).as("_v")),
@@ -1208,35 +1102,19 @@ object Graph {
     require(k >= 3, s"kTrussBounded: k must be >= 3, got $k")
     require(rounds >= 1 && rounds <= 16,
       s"kTrussBounded: rounds must be in [1, 16], got $rounds")
-    val raw = edges
-      .select(col(srcCol).cast("string").as("_a"), col(dstCol).cast("string").as("_b"))
-      .filter(col("_a").isNotNull && col("_b").isNotNull && col("_a") =!= col("_b"))
-    val ceS = raw
-      .select(least(col("_a"), col("_b")).as("_u"), greatest(col("_a"), col("_b")).as("_v"))
-      .distinct()
-      .localCheckpoint()
-    val nodesS = ceS.select(col("_u").as("_v"))
-      .unionByName(ceS.select(col("_v")))
-      .distinct()
-    val dictOpt = graphDict(nodesS, nodesS.count(), dictThreshold)
-    var cur = (dictOpt match {
-      case Some(dct) => encodeIds(ceS, dct, Seq("_u", "_v"))
-      case None => ceS
-    }).localCheckpoint()
+    val ids = GraphIds(
+      undirected(endpoints(edges, srcCol, dstCol).filter(col("_s") =!= col("_d"))),
+      "_u", "_v", dictThreshold)
+    var cur = ids.edges
     for (_ <- 0 until rounds) {
       val sup = edgeSupport(cur)
-      cur = cur.join(sup, Seq("_u", "_v"), "left")
+      cur = Materialize.local(cur.join(sup, Seq("_u", "_v"), "left")
         .filter(coalesce(col("_sup"), lit(0L)) >= (k - 2).toLong)
-        .select(col("_u"), col("_v"))
-        .localCheckpoint()
+        .select(col("_u"), col("_v")))
     }
     val out = cur.join(edgeSupport(cur), Seq("_u", "_v"), "left")
       .select(col("_u"), col("_v"), coalesce(col("_sup"), lit(0L)).as("support"))
-    dictOpt match {
-      case Some(dct) => decodeIds(out, dct, Seq("_u" -> "u", "_v" -> "v"))
-        .select(col("u"), col("v"), col("support"))
-      case None => out.select(col("_u").as("u"), col("_v").as("v"), col("support"))
-    }
+    ids.decode(out, "_u" -> "u", "_v" -> "v").select(col("u"), col("v"), col("support"))
   }
 
   /** One random-walk advance — factored lazy for the spec pins. TWO
@@ -1288,7 +1166,7 @@ object Graph {
     * by real out-degrees); each step shuffles only the live walk
     * state — fixed-width rows: two longs, an int, and the 8·`steps`-
     * byte entropy array — through two equi-joins with NO degree
-    * fan-out (see [[walkStep]]), and `localCheckpoint` cuts the
+    * fan-out (see [[walkStep]]), and a materialization cuts the
     * lineage per step. At ≥ `dictThreshold` nodes ids ride 8-byte
     * dict longs; start/node strings translate back once at the end.
     *
@@ -1310,59 +1188,60 @@ object Graph {
       s"randomWalks: walksPerNode must be in [1, 1024], got $walksPerNode")
     require(!seed.contains("#"),
       s"randomWalks: seed must not contain '#' (the entropy separator), got '$seed'")
+    val ids = walkGraph(edges, srcCol, dstCol, dictThreshold)
+    val outdeg = Materialize.local(ids.edges.groupBy("_s").agg(count(lit(1)).as("_od")))
+    walkCorpus(ids, steps, walksPerNode, seed, Seq("_cur"))(
+      (cur, nbrIdx, t) => walkStep(cur, outdeg, nbrIdx, t))
+  }
+
+  /** The walk operators' graph: distinct directed edges with self-loops
+    * dropped, matching anfHyperBall and the oracle's src <> dst edge CTE
+    * — a loop is not a pickable neighbor.
+    */
+  private def walkGraph(edges: DataFrame, srcCol: String, dstCol: String,
+      dictThreshold: Long): GraphIds =
+    GraphIds(endpoints(edges, srcCol, dstCol).filter(col("_s") =!= col("_d")).distinct(),
+      "_s", "_d", dictThreshold)
+
+  /** The walk driver [[randomWalks]] and [[node2vecWalks]] share: per-walk
+    * entropy from the ORIGINAL start strings (before any encoding), the
+    * start frame `(_start, _k, _hs, <startAs…>)` with every `startAs`
+    * column set to the start node, the neighbor index (rank in
+    * destination order — the order-preserving dict gives identical
+    * ranks on either branch; built once), `steps` materialized
+    * applications of `step(cur, nbrIdx, t)`, and the decoded corpus
+    * `(start, walk, step, node)`.
+    */
+  private def walkCorpus(
+      ids: GraphIds,
+      steps: Int,
+      walksPerNode: Int,
+      seed: String,
+      startAs: Seq[String]
+  )(step: (DataFrame, DataFrame, Int) => DataFrame): DataFrame = {
     import org.apache.spark.sql.graft.ColumnBridge
-    // self-loops dropped, matching anfHyperBall/node2vecWalks and the
-    // oracle's src <> dst edge CTE — a loop is not a pickable neighbor
-    val eS = edges
-      .select(col(srcCol).cast("string").as("_s"), col(dstCol).cast("string").as("_d"))
-      .filter(col("_s").isNotNull && col("_d").isNotNull && col("_s") =!= col("_d"))
-      .distinct()
-      .localCheckpoint()
-    val nodesS = eS.select(col("_s").as("_v"))
-      .unionByName(eS.select(col("_d").as("_v")))
-      .distinct()
-      .localCheckpoint()
-    // per-walk entropy from ORIGINAL strings, before any encoding
     def h(t: Int) = ColumnBridge.column(graft.plans.FnvHash64(
       ColumnBridge.expression(concat_ws("#", col("_v"), col("_k"),
         lit(seed), lit(t.toString)))))
-    val walks0S = nodesS
+    val walks0 = ids.encode(ids.nodeStrings
       .select(col("_v"), explode(expr(s"sequence(0, ${walksPerNode - 1})")).as("_k"))
       .select(col("_v"), col("_k").cast("long").as("_k"),
-        array((1 to steps).map(h): _*).as("_hs"))
-    val dictOpt = graphDict(nodesS, nodesS.count(), dictThreshold)
-    val (e, walks0) = dictOpt match {
-      case Some(dct) => (encodeIds(eS, dct, Seq("_s", "_d")),
-        encodeIds(walks0S, dct, Seq("_v")))
-      case None => (eS, walks0S)
-    }
-    // neighbor index: rank in destination order (order-preserving dict
-    // ⇒ identical ranks either branch) + out-degrees; built once
+        array((1 to steps).map(h): _*).as("_hs")), "_v")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("_s").orderBy("_d")
-    val nbrIdx = e
-      .withColumn("_rank", (row_number().over(w) - 1).cast("long"))
-      .localCheckpoint()
-    val outdeg = e.groupBy("_s").agg(count(lit(1)).as("_od")).localCheckpoint()
-    var cur = walks0
-      .select(col("_v").as("_start"), col("_k"), col("_hs"), col("_v").as("_cur"))
-      .localCheckpoint()
+    val nbrIdx = Materialize.local(ids.edges
+      .withColumn("_rank", (row_number().over(w) - 1).cast("long")))
+    var cur = Materialize.local(walks0.select(
+      Seq(col("_v").as("_start"), col("_k"), col("_hs")) ++ startAs.map(col("_v").as(_)): _*))
     var out = Seq(cur.select(col("_start"), col("_k"), lit(0L).as("_t"),
       col("_cur").as("_node")))
     for (t <- 1 to steps) {
-      cur = walkStep(cur, outdeg, nbrIdx, t).localCheckpoint()
+      cur = Materialize.local(step(cur, nbrIdx, t))
       out = out :+ cur.select(col("_start"), col("_k"), lit(t.toLong).as("_t"),
         col("_cur").as("_node"))
     }
-    val all = out.reduce(_ unionByName _)
-    dictOpt match {
-      case Some(dct) =>
-        decodeIds(all, dct, Seq("_start" -> "start", "_node" -> "node"))
-          .select(col("start"), col("_k").as("walk"), col("_t").as("step"),
-            col("node"))
-      case None => all.select(col("_start").as("start"), col("_k").as("walk"),
-        col("_t").as("step"), col("_node").as("node"))
-    }
+    ids.decode(out.reduce(_ unionByName _), "_start" -> "start", "_node" -> "node")
+      .select(col("start"), col("_k").as("walk"), col("_t").as("step"), col("node"))
   }
 
   /** One node2vec advance — factored lazy for the spec pins. Unlike
@@ -1486,58 +1365,12 @@ object Graph {
       s"node2vecWalks: pPpm and qPpm must be in [1, 10^12], got ($pPpm, $qPpm)")
     require(!seed.contains("#"),
       s"node2vecWalks: seed must not contain '#' (the entropy separator), got '$seed'")
-    import org.apache.spark.sql.graft.ColumnBridge
     val wRet = 1000000000000L / pPpm
     val wIn = 1000000L
     val wOut = 1000000000000L / qPpm
-    val eS = edges
-      .select(col(srcCol).cast("string").as("_s"), col(dstCol).cast("string").as("_d"))
-      .filter(col("_s").isNotNull && col("_d").isNotNull && col("_s") =!= col("_d"))
-      .distinct()
-      .localCheckpoint()
-    val nodesS = eS.select(col("_s").as("_v"))
-      .unionByName(eS.select(col("_d").as("_v")))
-      .distinct()
-      .localCheckpoint()
-    def h(t: Int) = ColumnBridge.column(graft.plans.FnvHash64(
-      ColumnBridge.expression(concat_ws("#", col("_v"), col("_k"),
-        lit(seed), lit(t.toString)))))
-    val walks0S = nodesS
-      .select(col("_v"), explode(expr(s"sequence(0, ${walksPerNode - 1})")).as("_k"))
-      .select(col("_v"), col("_k").cast("long").as("_k"),
-        array((1 to steps).map(h): _*).as("_hs"))
-    val dictOpt = graphDict(nodesS, nodesS.count(), dictThreshold)
-    val (e, walks0) = dictOpt match {
-      case Some(dct) => (encodeIds(eS, dct, Seq("_s", "_d")).localCheckpoint(),
-        encodeIds(walks0S, dct, Seq("_v")))
-      case None => (eS, walks0S)
-    }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("_s").orderBy("_d")
-    val nbrIdx = e
-      .withColumn("_rank", (row_number().over(w) - 1).cast("long"))
-      .localCheckpoint()
-    var cur = walks0
-      .select(col("_v").as("_start"), col("_k"), col("_hs"),
-        col("_v").as("_prev"), col("_v").as("_cur"))
-      .localCheckpoint()
-    var out = Seq(cur.select(col("_start"), col("_k"), lit(0L).as("_t"),
-      col("_cur").as("_node")))
-    for (t <- 1 to steps) {
-      cur = node2vecStep(cur, nbrIdx, e, t, wRet, wIn, wOut, maxOutDegree)
-        .localCheckpoint()
-      out = out :+ cur.select(col("_start"), col("_k"), lit(t.toLong).as("_t"),
-        col("_cur").as("_node"))
-    }
-    val all = out.reduce(_ unionByName _)
-    dictOpt match {
-      case Some(dct) =>
-        decodeIds(all, dct, Seq("_start" -> "start", "_node" -> "node"))
-          .select(col("start"), col("_k").as("walk"), col("_t").as("step"),
-            col("node"))
-      case None => all.select(col("_start").as("start"), col("_k").as("walk"),
-        col("_t").as("step"), col("_node").as("node"))
-    }
+    val ids = walkGraph(edges, srcCol, dstCol, dictThreshold)
+    walkCorpus(ids, steps, walksPerNode, seed, Seq("_prev", "_cur"))(
+      (cur, nbrIdx, t) => node2vecStep(cur, nbrIdx, ids.edges, t, wRet, wIn, wOut, maxOutDegree))
   }
 
   /** One-row structural profile of a directed graph — the summary a
@@ -1563,23 +1396,19 @@ object Graph {
     * max_indeg, assort_spearman_e6, assort_kendall_e6)`.
     */
   def graphProfile(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val e = edges
-      .select(col(srcCol).cast("string").as("_s"), col(dstCol).cast("string").as("_d"))
-      .filter(col("_s").isNotNull && col("_d").isNotNull && col("_s") =!= col("_d"))
-      .distinct()
-      .localCheckpoint()
+    val e = Materialize.local(
+      endpoints(edges, srcCol, dstCol).filter(col("_s") =!= col("_d")).distinct())
     // nodes LOOKS single-consumer (the basics broadcast below), but the
     // isolated 7-run A/B kept the eager checkpoint: lazy measured 3.25 vs
     // 2.89 s (batch) and 12.61 vs 11.35 s (stream) — the materialized
     // one-partition node table beats re-deriving the union+distinct under
     // the broadcast build (r16 adjudication; earlier "lazy wins" reads
     // were confounded with other wave-1 changes)
-    val nodes = e.select(col("_s").as("_v"))
+    val nodes = Materialize.local(e.select(col("_s").as("_v"))
       .unionByName(e.select(col("_d").as("_v")))
-      .distinct()
-      .localCheckpoint()
-    val outdeg = e.groupBy("_s").agg(count(lit(1)).as("_od")).localCheckpoint()
-    val indeg = e.groupBy("_d").agg(count(lit(1)).as("_id")).localCheckpoint()
+      .distinct())
+    val outdeg = Materialize.local(e.groupBy("_s").agg(count(lit(1)).as("_od")))
+    val indeg = Materialize.local(e.groupBy("_d").agg(count(lit(1)).as("_id")))
     val recip = e.join(
         e.select(col("_d").as("_s"), col("_s").as("_d")), Seq("_s", "_d"), "left_semi")
       .agg(count(lit(1)).as("reciprocal_edges"))
@@ -1688,7 +1517,7 @@ object Graph {
     * Scale shape per epoch: two hash joins of the pair table against
     * the n·d-long embedding table, one map-side-combined elemsum, one
     * update join — no collect, no per-dim row explosion, no window.
-    * State between epochs is exactly n·d longs, localCheckpointed so
+    * State between epochs is exactly n·d longs, materialized so
     * the lineage never re-runs a prior epoch.
     *
     * Output: `(node STRING, emb ARRAY<BIGINT>)` ×10⁶.
@@ -1711,7 +1540,8 @@ object Graph {
     import org.apache.spark.sql.graft.ColumnBridge
     val spark = pairs.sparkSession
     graft.plans.ElemSumAggregate.register(spark)
-    val p = pairs.select(col("center").cast("string").as("center"),
+    val p = Materialize.local(pairs
+      .select(col("center").cast("string").as("center"),
         col("other").cast("string").as("other"),
         col("label").cast("long").as("label"),
         col("weight").cast("long").as("weight"))
@@ -1722,8 +1552,7 @@ object Graph {
         col("weight") >= 1L && col("weight") <= 1000L,
         lit("sgnsEpochs: label must be 0/1 and weight in [1, 1000] — " +
           "clamp or rescale heavier pairs upstream (the bound keeps the " +
-          "step scale inside exact int64)")).isNull)
-      .localCheckpoint()
+          "step scale inside exact int64)")).isNull))
     val nodes = p.select(col("center").as("_v"))
       .unionByName(p.select(col("other").as("_v")))
       .distinct()
@@ -1732,8 +1561,8 @@ object Graph {
         lit(seed)))))
     val initDims = (0 until dims).map(i =>
       shiftrightunsigned(h(i), 1) % lit(125001L) - lit(62500L))
-    var emb = nodes.select(col("_v").as("node"), array(initDims: _*).as("emb"))
-      .localCheckpoint()
+    var emb = Materialize.local(
+      nodes.select(col("_v").as("node"), array(initDims: _*).as("emb")))
     val tbl = sigmoidTablePpm()
     val tblCol = typedLit(tbl)
     val hi = 6000000000000L // the table's ±6.0 range in the ×10¹² dot scale
@@ -1743,7 +1572,8 @@ object Graph {
     def deltaExpr(vecCol: String) = expr(
       s"transform($vecCol, vi -> (_s * (vi div 1000L)) div 1000000000L)")
     for (_ <- 1 to epochs) {
-      val scored = p
+      // materialized: both delta sides read the scored pairs
+      val scored = Materialize.local(p
         .join(emb.select(col("node").as("center"), col("emb").as("_u")),
           Seq("center"))
         .join(emb.select(col("node").as("other"), col("emb").as("_v")),
@@ -1753,20 +1583,18 @@ object Graph {
         .withColumn("_sig", element_at(tblCol,
           (expr(idxSql) + lit(1L)).cast("int")))
         .withColumn("_s",
-          lit(lrPpm) * col("weight") * (col("label") * lit(1000000L) - col("_sig")))
-        .localCheckpoint() // both delta sides read the scored pairs
+          lit(lrPpm) * col("weight") * (col("label") * lit(1000000L) - col("_sig"))))
       val deltas = scored.select(col("center").as("node"), deltaExpr("_v").as("_d"))
         .unionByName(
           scored.select(col("other").as("node"), deltaExpr("_u").as("_d")))
         .groupBy("node")
         .agg(call_function("graft_elemsum", col("_d")).as("_delta"))
-      emb = emb.join(deltas, Seq("node"), "left")
+      emb = Materialize.local(emb.join(deltas, Seq("node"), "left")
         .select(col("node"),
           when(col("_delta").isNull, col("emb"))
             .otherwise(zip_with(col("emb"), col("_delta"), (e, d) =>
               greatest(lit(-10000000L), least(lit(10000000L), e + d))))
-            .as("emb"))
-        .localCheckpoint()
+            .as("emb")))
     }
     emb
   }

@@ -365,6 +365,13 @@ class DedupSpec extends SparkSpec {
     val comps = Dedup.connectedComponents(pairs)
       .as[(Long, Long)].collect().toMap
     assert(comps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
+    // a 31-node chain needs more rounds than maxIter = 20: refused, not
+    // returned as 11 partial components
+    val chain = (0L until 30L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalArgumentException] {
+      Dedup.connectedComponents(chain).collect()
+    }
+    assert(e.getMessage.contains("raise maxIter"), e.getMessage)
   }
 
   test("dedupByComponents keeps cluster representatives and untouched rows") {

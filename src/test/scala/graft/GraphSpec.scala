@@ -1005,4 +1005,48 @@ class GraphSpec extends SparkSpec {
       Option(e.getCause).flatMap(c => Option(c.getMessage)).getOrElse("")
     assert(msg.contains("null slot"), e.toString)
   }
+
+  test("degenerate inputs, whole family: empty, all-null and self-loop-only edge lists on both dict branches") {
+    import org.apache.spark.sql.DataFrame
+    import Graph._
+    val ops: Seq[(String, (DataFrame, Long) => DataFrame)] = Seq(
+      "pageRank" -> ((e, thr) => pageRankScaled(e, "src", "dst", 2, dictThreshold = thr)),
+      "ppr" -> ((e, thr) =>
+        personalizedPageRankScaled(e, "src", "dst", "a", 2, dictThreshold = thr)),
+      "harmonic" -> ((e, thr) =>
+        harmonicCentralityScaled(e, "src", "dst", 2, dictThreshold = thr)),
+      "triangles" -> ((e, thr) => triangleCountsScaled(e, "src", "dst", dictThreshold = thr)),
+      "kCore" -> ((e, thr) => kCoreBounded(e, "src", "dst", 1, 2, dictThreshold = thr)),
+      "lpa" -> ((e, thr) => labelPropagationMin(e, "src", "dst", 2, dictThreshold = thr)),
+      "cc" -> ((e, thr) => connectedComponentsMin(e, "src", "dst", dictThreshold = thr)),
+      "katz" -> ((e, thr) => katzCentralityScaled(e, "src", "dst", 2, dictThreshold = thr)),
+      "anf" -> ((e, thr) => anfHyperBall(e, "src", "dst", 2, 16, dictThreshold = thr)),
+      "kTruss" -> ((e, thr) => kTrussBounded(e, "src", "dst", 3, 1, dictThreshold = thr)),
+      "walks" -> ((e, thr) => randomWalks(e, "src", "dst", 2, dictThreshold = thr)),
+      "node2vec" -> ((e, thr) => node2vecWalks(e, "src", "dst", 2, dictThreshold = thr)),
+      "profile" -> ((e, _) => graphProfile(e, "src", "dst")))
+    val empty = Seq.empty[(String, String)].toDF("src", "dst")
+    val allNull = Seq[(String, String)]((null, null), ("a", null), (null, "b"))
+      .toDF("src", "dst")
+    val loops = Seq(("a", "a"), ("b", "b")).toDF("src", "dst")
+    val onLoops: Map[String, Seq[Seq[Any]]] = Map(
+      "pageRank" -> Seq(Seq("a", 500000000L), Seq("b", 500000000L)),
+      "ppr" -> Seq(Seq("a", 1000000000L), Seq("b", 0L)),
+      "harmonic" -> Seq(Seq("a", 0L), Seq("b", 0L)),
+      "lpa" -> Seq(Seq("a", "a"), Seq("b", "b")),
+      "cc" -> Seq(Seq("a", "a"), Seq("b", "b")),
+      "katz" -> Seq(Seq("a", 110000L), Seq("b", 110000L))
+    ).withDefaultValue(Seq.empty)
+    for (thr <- Seq(1L, Long.MaxValue); (name, op) <- ops) {
+      for ((input, label) <- Seq(empty -> "empty", allNull -> "all-null")) {
+        if (name == "pageRank") {
+          val e = intercept[IllegalArgumentException](op(input, thr))
+          assert(e.getMessage.contains("empty graph"), s"$name $label thr=$thr: $e")
+        } else {
+          assert(rows(op(input, thr)).isEmpty, s"$name $label thr=$thr")
+        }
+      }
+      assert(rows(op(loops, thr)) == onLoops(name), s"$name self-loops thr=$thr")
+    }
+  }
 }
