@@ -808,9 +808,6 @@ private[graft] object SimilarityGates {
       Similarity.kCenterGreedyE6(emb, "vec_id", "embedding", k = 5)
         .orderBy("rank")
     }),
-    // ---- hubness diagnostic: k-NN in-degree distribution over the
-    //      evaluation sample (vec_id < 128) — heavy right tail = hub
-    //      points distorting ANN recall; exact e6 integer k-NN graph
     // ---- mutual k-NN graph over embeddings (brute-force sample tier):
     //      directed 3-NN by exact e6 squared-L2, kept iff reciprocal —
     //      the density-robust neighborhood graph an embedding-cluster
@@ -911,6 +908,9 @@ private[graft] object SimilarityGates {
       graft.operators.Graph.labelPropagationMin(e, "src", "dst", rounds = 8)
         .orderBy("node")
     }),
+    // ---- hubness diagnostic: k-NN in-degree distribution over the
+    //      evaluation sample (vec_id < 128) — heavy right tail = hub
+    //      points distorting ANN recall; exact e6 integer k-NN graph
     "knn_hubness" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings").filter(col("vec_id") < 128)
         .select(col("vec_id"), col("embedding"))

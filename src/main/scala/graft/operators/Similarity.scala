@@ -4,25 +4,38 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graft.{ColumnBridge, Materialize}
 import graft.functions.VectorFunctions._
-import graft.plans.TopKAggregate
+import graft.plans.{NearestCentroidE6, NearestCentroidsE6, TopKAggregate}
 
 /**
- * Approximate-nearest-neighbor search over an embedding column.
+ * Nearest-neighbor search, clustering and index evaluation over an
+ * embedding column.
  *
- * Two paths:
- *  - `bruteForceTopK`: exact top-k — the correctness baseline. Queries
- *    broadcast against the corpus (one narrow scan), then a two-stage
- *    top-k via the bounded `graft_topk` aggregate: map-side partial
- *    aggregation truncates each input partition to k rows per query, so
- *    the final shuffle carries #partitions × k rows per query — never the
- *    scored corpus. At 100 TB this is one pass over the corpus with a
- *    k-bounded reduction.
- *  - `ivfTopK`: IVF-style pruning — corpus pre-assigned to the nearest of
- *    C centroids (one narrow pass, zero shuffles; assignment persisted
- *    with the data at real scale); a query probes only its `nprobe`
- *    nearest centroids' partitions, cutting the scanned fraction to
- *    ~nprobe/C, with the same k-bounded reduction.
+ * Every search operator is filter-and-refine: a candidate generator
+ * proposes (query, neighbor) pairs, an exact scorer scores them, and
+ * [[topKPerQuery]] keeps the k best per query through the bounded
+ * `graft_topk` aggregate. Map-side partial aggregation truncates each
+ * input partition to k rows per query, so the final shuffle carries
+ * #partitions × k rows per query, never the scored candidates.
+ *
+ * The exact-e6 family (vectors floor-quantized ×10⁶, squared L2 as an
+ * exact BIGINT, ties to the smaller id) runs on one kernel:
+ *  - three candidate generators, each emitting
+ *    `(query_id, neighbor_id, _qa, _a)`: `allPairs` (the sample tier,
+ *    with a `maxPoints` refusal), `cellPairs` (queries probe their
+ *    `nprobe` nearest cells against home-cell lists that one
+ *    `occupancyTripwire` guards) and `cellPairs` over `readProbedCells`
+ *    (a layout persisted by cell, pruned to the probe union by a literal
+ *    IN on the partition column);
+ *  - one scorer, `negL2E6`, ranked by `nearestE6`;
+ *  - one reciprocity filter, `mutualEdges`.
+ *
+ * The cosine/double family (`bruteForceTopK`, `ivfTopK`,
+ * `ivfTopKPartitioned`, `lshTopK`) shares only the partition reader with
+ * it. Doubles match an external engine only under identical elementwise
+ * arithmetic, and each family's DuckDB oracle pins its own, so the two
+ * scorers stay separate.
  *
  * Ids must be numeric (the rank tie-break negates them inside the
  * lexicographic top-k struct).
@@ -47,6 +60,116 @@ object Similarity {
       col(s"_e.$scoreCol").as(scoreCol),
       (col("_pos") + 1).cast(IntegerType).as("rank"))
   }
+
+  // ------------------------------------------------------------------
+  // The exact-e6 kNN kernel: candidates → score → top-k → mutuality.
+  // A generator emits `(query_id, neighbor_id, _qa, _a)`, both vectors
+  // e6 arrays. Contract: ids are a key of the point set. Then every
+  // generator emits an ordered (query, neighbor) pair at most once (all
+  // pairs by construction; the cell join because a point lists under
+  // its one home cell), so each top-k list holds a pair at most once and
+  // `mutualEdges` can test reciprocity by counting.
+  // ------------------------------------------------------------------
+
+  /** Exact BIGINT squared L2 of two e6 arrays, negated so the top-k heap
+    * (largest first) keeps the nearest. A null element or a length
+    * mismatch scores null.
+    */
+  private def negL2E6(a: Column, b: Column): Column =
+    lit(0L) - aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
+      lit(0L), (acc, d) => acc + d)
+
+  /** The k nearest per query of a candidate frame: `(query_id,
+    * neighbor_id, _negd, rank)`, ties to the smaller neighbor id.
+    */
+  private def nearestE6(candidates: DataFrame, k: Int): DataFrame =
+    topKPerQuery(candidates.select(col("query_id"), col("neighbor_id"),
+      negL2E6(col("_qa"), col("_a")).as("_negd")), "_negd", k)
+
+  /** All-pairs candidates: every `queries (query_id, _qa)` × `points
+    * (neighbor_id, _a)` pair with distinct ids. With `cap = (maxPoints,
+    * refusal)` the point count is checked first and refused with the
+    * caller's remedy, so a corpus handed to an n² construction fails
+    * before the scan starts.
+    */
+  private def allPairs(
+      queries: DataFrame,
+      points: DataFrame,
+      cap: Option[(Long, Long => String)] = None): DataFrame = {
+    cap.foreach { case (maxPoints, refusal) =>
+      val n = points.count()
+      require(n <= maxPoints, refusal(n))
+    }
+    queries.crossJoin(points).filter(col("query_id") =!= col("neighbor_id"))
+  }
+
+  /** Cell candidates: `probes (query_id, _qa, <cell>)`, one row per probed
+    * cell, joined to `home (<cell>, neighbor_id, _a)`, each point listed
+    * under its one home cell.
+    */
+  private def cellPairs(probes: DataFrame, home: DataFrame, cell: String): DataFrame =
+    probes.join(home, Seq(cell)).filter(col("query_id") =!= col("neighbor_id"))
+
+  /** Each query's `nprobe` nearest cells as one row per probed cell:
+    * `(query_id, _qa)` → `(query_id, _qa, <cell>)`. A query whose vector
+    * has the wrong length or a null element probes nothing.
+    */
+  private def probeRows(queries: DataFrame, cells: E6Cells, nprobe: Int,
+      cell: String): DataFrame =
+    queries.filter(size(col("_qa")) === cells.dim)
+      .withColumn("_probes", cells.probes(col("_qa"), nprobe))
+      .filter(col("_probes").isNotNull)
+      .select(col("query_id"), col("_qa"), explode(col("_probes")).as(cell))
+
+  /** The hot-cell tripwire: operator `op` refuses any `cell` holding more
+    * than `maxCellSize` rows, saying `why` that costs. Zero actions: the
+    * occupancy count is a window partitioned by the cell, which rides the
+    * candidate join's own hash distribution (the setsim hot-gram
+    * pattern).
+    */
+  private def occupancyTripwire(df: DataFrame, cell: String, maxCellSize: Long,
+      op: String, why: String): DataFrame =
+    df.withColumn("_occ", count(lit(1)).over(Window.partitionBy(cell)))
+      .filter(assert_true(col("_occ") <= lit(maxCellSize),
+        lit(s"$op: a coarse cell holds more than maxCellSize=$maxCellSize " +
+          s"vectors — $why. Train more (or better) cells, or raise " +
+          "maxCellSize knowingly.")).isNull)
+      .drop("_occ")
+
+  /** Reciprocity: `(id_a, id_b)` with `id_a < id_b` iff both orientations
+    * are in `kn (query_id, neighbor_id)`. Each ordered pair occurs at most
+    * once (the kernel contract), so both present ⟺ the unordered pair
+    * counts 2: one aggregate, no second read of the lists.
+    */
+  private def mutualEdges(kn: DataFrame): DataFrame =
+    kn.groupBy(least(col("query_id"), col("neighbor_id")).as("id_a"),
+        greatest(col("query_id"), col("neighbor_id")).as("id_b"))
+      .agg(count(lit(1)).as("_c"))
+      .filter(col("_c") === 2L)
+      .select(col("id_a"), col("id_b"))
+
+  /** The probed cells of a layout persisted partitioned by `centroid_id`
+    * ([[writeAssigned]], [[writeAssignedE6]], [[buildIvfPqIndex]]). The
+    * probe union becomes a literal IN on the partition column, so pruning
+    * happens at file listing (the scan's `PartitionFilters`): unprobed
+    * directories are never listed, let alone read. The ids are
+    * driver-side, ≤ |queries| × nprobe by the query contract, and a
+    * literal prunes statically at planning, where the join form (dynamic
+    * partition pruning) prunes only when its runtime conditions line up.
+    * An empty union reads nothing, so an empty query frame gives zero
+    * rows with the operator's normal columns. `centroid_id` comes back as
+    * BIGINT (a cast of a partition column stays prunable).
+    */
+  private def readProbedCells(spark: SparkSession, path: String,
+      probedIds: Seq[Long]): DataFrame =
+    spark.read.parquet(path)
+      .filter(col("centroid_id").isin(probedIds: _*))
+      .withColumn("centroid_id", col("centroid_id").cast(LongType))
+
+  /** The distinct cell ids of a probe frame's `centroid_id` column. */
+  private def probeUnion(probes: DataFrame): Seq[Long] =
+    probes.select(col("centroid_id")).distinct()
+      .collect().map(_.getLong(0)).sorted.toSeq
 
   /** Exact top-k for each query row by `metric` (default cosine).
     * `queries` is expected to be small (broadcast); `corpus` is the big
@@ -109,7 +232,6 @@ object Similarity {
       centroids: DataFrame, // columns: centroid_id, centroid_vec
       metric: CentroidMetric = CentroidMetric.Cosine
   ): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
     val elemType = centroids.schema("centroid_vec").dataType
       .asInstanceOf[ArrayType].elementType
     val cents = centroids
@@ -133,10 +255,6 @@ object Similarity {
     corpus.withColumn("centroid_id", ColumnBridge.column(expr))
   }
 
-  /** IVF top-k: probe only the `nprobe` centroids nearest to each query.
-    * `assigned` = corpus with a `centroid_id` column (from
-    * [[assignToCentroids]], precomputed/persisted at scale).
-    */
   /** The per-query probe set: each query's `nprobe` nearest centroids —
     * (queryId, queryVec, centroid_id). A queries × C expression, tiny on
     * both sides, so the window's shuffle moves q×C rows (fine).
@@ -161,6 +279,10 @@ object Similarity {
       .drop("_sim", "_rn", "centroid_vec")
   }
 
+  /** IVF top-k: probe only the `nprobe` centroids nearest to each query.
+    * `assigned` = corpus with a `centroid_id` column (from
+    * [[assignToCentroids]], precomputed/persisted at scale).
+    */
   def ivfTopK(
       assigned: DataFrame,
       corpusId: String,
@@ -202,17 +324,9 @@ object Similarity {
     assigned.write.mode("overwrite").partitionBy("centroid_id").parquet(path)
 
   /** IVF top-k over a corpus persisted by [[writeAssigned]]: the probed
-    * centroid ids become a LITERAL IN-predicate on the partition column,
-    * so pruning happens at file-listing time — the scan's
-    * `PartitionFilters` (plan-spec'd), not a post-scan row filter.
-    *
-    * The probe set is collected driver-side to build the literal list:
-    * it is metadata-sized (≤ |queries| × nprobe ids — the same scale as
-    * the centroid matrix [[assignToCentroids]] already collects), and a
-    * literal predicate prunes STATICALLY at planning; the join-based
-    * alternative (dynamic partition pruning) only prunes at runtime when
-    * DPP conditions line up. One extra tiny job (the probe window over
-    * q×C rows) buys a corpus scan of nprobe/C of the files.
+    * centroid ids prune the scan at file listing (`readProbedCells`).
+    * One extra tiny job (the probe window over q×C rows) buys a corpus
+    * scan of nprobe/C of the files.
     */
   def ivfTopKPartitioned(
       assignedPath: String,
@@ -228,19 +342,11 @@ object Similarity {
       scoreName: String = "cosine",
       queryScoreVec: Option[String] = None
   ): DataFrame = {
-    val spark = queries.sparkSession
-    val probes = probeSet(centroids, queries, queryId, queryVec, nprobe)
-      .localCheckpoint() // probes are reused: once collected (ids), once joined
-    val probedIds = probes.select(col("centroid_id")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    require(probedIds.nonEmpty, "ivfTopKPartitioned: empty probe set")
-    val corpus = spark.read.parquet(assignedPath)
-      // literal IN on the partition column → PartitionFilters → unprobed
-      // directories are never listed, let alone read
-      .filter(col("centroid_id").isin(probedIds: _*))
-      // partition-dir values read back as the inferred type; normalize to
-      // BIGINT for the probe join (cast of a partition attr stays prunable)
-      .withColumn("centroid_id", col("centroid_id").cast(LongType))
+    // probes are read twice: collected (the probe union), then joined
+    val probes = Materialize.local(
+      probeSet(centroids, queries, queryId, queryVec, nprobe))
+    val corpus = readProbedCells(queries.sparkSession, assignedPath,
+      probeUnion(probes))
     // probes always select by FLOAT-vector cosine against the centroids;
     // the candidate scan scores with `metric` over `queryScoreVec` (or
     // the probe vector) vs the stored corpus column — the seam that lets
@@ -337,14 +443,14 @@ object Similarity {
         .select(col("centroid_id"),
           transform(col("ims"), e => e.getField("m").cast(elemType))
             .as("centroid_vec"))
-      // empty clusters: keep the old centroid (left join, coalesce)
-      cents = cents.select(col("centroid_id"), col("centroid_vec").as("_old"))
-        .join(means, Seq("centroid_id"), "left")
-        .select(col("centroid_id"),
-          coalesce(col("centroid_vec"), col("_old")).as("centroid_vec"))
-      // each iteration collects C vectors driver-side anyway (metadata
-      // scale); localCheckpoint keeps the plan from nesting per iteration
-      cents = cents.localCheckpoint()
+      // empty clusters: keep the old centroid (left join, coalesce).
+      // The next iteration both collects and joins these C rows;
+      // materializing keeps the plan from nesting per iteration
+      cents = Materialize.local(
+        cents.select(col("centroid_id"), col("centroid_vec").as("_old"))
+          .join(means, Seq("centroid_id"), "left")
+          .select(col("centroid_id"),
+            coalesce(col("centroid_vec"), col("_old")).as("centroid_vec")))
     }
     cents
   }
@@ -437,11 +543,10 @@ object Similarity {
       s"kmeansStepE6: centroid dims differ, expected $dim")
     val ids = sorted.map(_._1).toSeq
     val matrix = sorted.flatMap(_._2).toSeq
-    import org.apache.spark.sql.graft.ColumnBridge
     val corp = corpus.select(col(corpusId).as("_id"),
       toE6(col(corpusVec)).as("_a"))
     corp
-      .select(ColumnBridge.column(graft.plans.NearestCentroidE6(
+      .select(ColumnBridge.column(NearestCentroidE6(
           ColumnBridge.expression(col("_a")), ids, matrix, dim)).as("_cid"),
         col("_a"))
       .filter(col("_cid").isNotNull) // malformed vectors get no assignment
@@ -505,10 +610,9 @@ object Similarity {
       subdim: Int,
       subCents: IndexedSeq[(Seq[Long], Seq[Long])]
   ): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
     val codes = array((0 until m).map { j =>
       val (ids, mat) = subCents(j)
-      ColumnBridge.column(graft.plans.NearestCentroidE6(
+      ColumnBridge.column(NearestCentroidE6(
         ColumnBridge.expression(slice(col("_a"), j * subdim + 1, subdim)),
         ids, mat, subdim))
     }: _*)
@@ -551,12 +655,11 @@ object Similarity {
       codebooks: DataFrame // (sub_id, code_id, centroid_e6)
   ): DataFrame = {
     val (m, subdim, subCents) = collectCodebooks(codebooks)
-    import org.apache.spark.sql.graft.ColumnBridge
     val corp = corpus.select(col(corpusId), toE6(col(corpusVec)).as("_a"))
       .filter(size(col("_a")) === m * subdim)
     val codes = array((0 until m).map { j =>
       val (ids, mat) = subCents(j)
-      ColumnBridge.column(graft.plans.NearestCentroidE6(
+      ColumnBridge.column(NearestCentroidE6(
         ColumnBridge.expression(slice(col("_a"), j * subdim + 1, subdim)),
         ids, mat, subdim))
     }: _*)
@@ -652,11 +755,25 @@ object Similarity {
     }
   }
 
-  /** Collect whole-vector e6 centroids `(centroid_id, centroid_e6)` to
-    * (sorted ids, flat row-major matrix, dim) — the coarse-cell twin of
-    * [[collectCodebooks]].
+  /** A collected e6 cell table: ids ascending (the argmin tie order),
+    * the row-major matrix and the dimension, with the two narrow
+    * codegen'd assignments over it.
     */
-  private def collectE6Whole(centroidsE6: DataFrame): (Seq[Long], Seq[Long], Int) = {
+  private case class E6Cells(ids: Seq[Long], matrix: Seq[Long], dim: Int) {
+    /** The nearest cell ([[graft.plans.NearestCentroidE6]]). */
+    def home(v: Column): Column = ColumnBridge.column(
+      NearestCentroidE6(ColumnBridge.expression(v), ids, matrix, dim))
+    /** The `nprobe` nearest cells, nearest first
+      * ([[graft.plans.NearestCentroidsE6]]; element 0 is [[home]]).
+      */
+    def probes(v: Column, nprobe: Int): Column = ColumnBridge.column(
+      NearestCentroidsE6(ColumnBridge.expression(v), ids, matrix, dim, nprobe))
+  }
+
+  /** Collect whole-vector e6 centroids `(centroid_id, centroid_e6)` —
+    * the coarse-cell twin of [[collectCodebooks]].
+    */
+  private def collectE6Whole(centroidsE6: DataFrame): E6Cells = {
     val rows = centroidsE6
       .select(col("centroid_id").cast(LongType), col("centroid_e6"))
       .collect()
@@ -664,7 +781,7 @@ object Similarity {
     val sorted = rows.map(r => (r.getLong(0), r.getSeq[Long](1))).sortBy(_._1)
     val dim = sorted.head._2.length
     require(sorted.forall(_._2.length == dim), "ivfpq: coarse centroid dims differ")
-    (sorted.map(_._1).toSeq, sorted.flatMap(_._2).toSeq, dim)
+    E6Cells(sorted.map(_._1).toSeq, sorted.flatMap(_._2).toSeq, dim)
   }
 
   /** e6 floor quantization of one numeric element — the scalar twin of
@@ -756,55 +873,54 @@ object Similarity {
       queryId: String,
       queryVec: String,
       k: Int
+  ): DataFrame =
+    ivfRecallPerQuery(corpus, corpusId, corpusVec, centroidsE6,
+      queries, queryId, queryVec, k).drop("_qcid")
+
+  /** [[ivfRecallExactE6]]'s rows plus `_qcid`, the query's own cell —
+    * the assignment [[ivfRecallByBucketE6]] groups by.
+    */
+  private def ivfRecallPerQuery(
+      corpus: DataFrame,
+      corpusId: String,
+      corpusVec: String,
+      centroidsE6: DataFrame,
+      queries: DataFrame,
+      queryId: String,
+      queryVec: String,
+      k: Int
   ): DataFrame = {
     require(k > 0, s"ivfRecallExactE6: k must be positive, got $k")
     val cents = broadcast(centroidsE6.select(
       col("centroid_id").cast(LongType).as("_cid"),
       col("centroid_e6").as("_c")))
-    val l2 = (a: Column, b: Column) => aggregate(
-      zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, d) => acc + d)
-    val corp = corpus.select(col(corpusId).as("_id"),
-      toE6(col(corpusVec)).as("_a"))
-    val assigned = corp.crossJoin(cents)
-      .select(col("_id"), col("_a"), col("_cid"),
-        l2(col("_a"), col("_c")).as("_d"))
-      .groupBy("_id")
-      .agg(min_by(struct(col("_cid"), col("_a")),
-        struct(col("_d"), col("_cid"))).as("_w"))
-      .select(col("_id"), col("_w._cid").as("_acid"), col("_w._a").as("_a"))
-    val qAssigned = queries
-      .select(col(queryId).as("_qid"), toE6(col(queryVec)).as("_qa"))
-      .crossJoin(cents)
-      .select(col("_qid"), col("_qa"), col("_cid"),
-        l2(col("_qa"), col("_c")).as("_d"))
-      .groupBy("_qid")
-      .agg(min_by(struct(col("_cid"), col("_qa")),
-        struct(col("_d"), col("_cid"))).as("_w"))
-      .select(col("_qid"), col("_w._cid").as("_qcid"), col("_w._qa").as("_qa"))
-    val qdist = l2(col("_qa"), col("_a"))
-    val approxScored = assigned
-      .join(broadcast(qAssigned), col("_acid") === col("_qcid"))
-      .filter(col("_qid") =!= col("_id"))
-      .select(col("_qid").as("query_id"), col("_id").as("neighbor_id"),
-        (lit(0L) - qdist).as("_negd"))
-    val approx = topKPerQuery(approxScored, "_negd", k)
+    // argmin cell by (distance, cell id), carrying the vector along
+    def assign(df: DataFrame, id: String, vec: String): DataFrame =
+      df.crossJoin(cents)
+        .select(col(id), col(vec), col("_cid"),
+          (-negL2E6(col(vec), col("_c"))).as("_d"))
+        .groupBy(id)
+        .agg(min_by(struct(col("_cid"), col(vec)),
+          struct(col("_d"), col("_cid"))).as("_w"))
+        .select(col(id), col("_w._cid").as("_cell"), col(s"_w.$vec").as(vec))
+    val points = assign(corpus.select(col(corpusId).as("neighbor_id"),
+      toE6(col(corpusVec)).as("_a")), "neighbor_id", "_a")
+    val qAssigned = assign(queries.select(col(queryId).as("query_id"),
+      toE6(col(queryVec)).as("_qa")), "query_id", "_qa")
+    val approx = nearestE6(cellPairs(broadcast(qAssigned), points, "_cell"), k)
       .select(col("query_id"), col("neighbor_id"))
-    val exactScored = assigned.crossJoin(broadcast(qAssigned))
-      .filter(col("_qid") =!= col("_id"))
-      .select(col("_qid").as("query_id"), col("_id").as("neighbor_id"),
-        (lit(0L) - qdist).as("_negd"))
-    val exact = topKPerQuery(exactScored, "_negd", k)
+    val exact = nearestE6(allPairs(broadcast(qAssigned), points), k)
       .select(col("query_id"), col("neighbor_id"))
     val hits = approx.join(exact, Seq("query_id", "neighbor_id"), "left_semi")
       .groupBy("query_id").agg(count(lit(1)).cast(LongType).as("_h"))
-    qAssigned.select(col("_qid").as("query_id"))
+    qAssigned.select(col("query_id"), col("_cell").as("_qcid"))
       .join(hits, Seq("query_id"), "left")
       .select(col("query_id"),
         coalesce(col("_h"), lit(0L)).as("n_hits"),
         lit(k.toLong).as("k"),
         expr(s"CAST(coalesce(_h, 0) * 1000000 div $k AS BIGINT)")
-          .as("recall_ppm"))
+          .as("recall_ppm"),
+        col("_qcid"))
   }
 
   /** Exact-integer IVF top-k SERVING in e6 space — the query path for
@@ -852,41 +968,20 @@ object Similarity {
     require(nprobe > 0, s"ivfTopKExactE6: nprobe must be positive, got $nprobe")
     require(maxCellSize >= 2,
       s"ivfTopKExactE6: maxCellSize must be >= 2, got $maxCellSize")
-    import org.apache.spark.sql.graft.ColumnBridge
-    val (cids, cmat, cdim) = collectE6Whole(centroidsE6)
-    val homeCell = ColumnBridge.column(graft.plans.NearestCentroidE6(
-      ColumnBridge.expression(col("_a")), cids, cmat, cdim))
-    val probeList = ColumnBridge.column(graft.plans.NearestCentroidsE6(
-      ColumnBridge.expression(col("_qa")), cids, cmat, cdim, nprobe))
-    val l2 = (a: Column, b: Column) => aggregate(
-      zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, d) => acc + d)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("_cell")
-    val home = corpus
-      .select(col(corpusId).cast(LongType).as("_id"), col(corpusVec).as("_a"))
-      .filter(size(col("_a")) === cdim)
-      .withColumn("_cell", homeCell)
-      .filter(col("_cell").isNotNull)
-      .withColumn("_occ", count(lit(1)).over(w))
-      .filter(assert_true(col("_occ") <= lit(maxCellSize),
-        lit(s"ivfTopKExactE6: a coarse cell holds more than " +
-          s"maxCellSize=$maxCellSize vectors — the candidate join is " +
-          "nprobe × occupancy pairs per query against that cell's list. " +
-          "Train more (or better) cells, or raise maxCellSize knowingly."))
-        .isNull)
-      .select(col("_cell"), col("_id"), col("_a"))
-    val q = queries
-      .select(col(queryId).cast(LongType).as("query_id"),
-        col(queryVec).as("_qa"))
-      .filter(size(col("_qa")) === cdim)
-      .withColumn("_probes", probeList)
-      .filter(col("_probes").isNotNull)
-      .select(col("query_id"), col("_qa"), explode(col("_probes")).as("_cell"))
-    val scored = q.join(home, Seq("_cell"))
-      .filter(col("query_id") =!= col("_id"))
-      .select(col("query_id"), col("_id").as("neighbor_id"),
-        (lit(0L) - l2(col("_qa"), col("_a"))).as("_negd"))
-    topKPerQuery(scored, "_negd", k)
+    val cells = collectE6Whole(centroidsE6)
+    val home = occupancyTripwire(corpus
+        .select(col(corpusId).cast(LongType).as("neighbor_id"),
+          col(corpusVec).as("_a"))
+        .filter(size(col("_a")) === cells.dim)
+        .withColumn("_cell", cells.home(col("_a")))
+        .filter(col("_cell").isNotNull),
+      "_cell", maxCellSize, "ivfTopKExactE6",
+      "the candidate join is nprobe × occupancy pairs per query against " +
+        "that cell's list")
+    val probes = probeRows(queries.select(
+      col(queryId).cast(LongType).as("query_id"), col(queryVec).as("_qa")),
+      cells, nprobe, "_cell")
+    nearestE6(cellPairs(probes, home, "_cell"), k)
       .select(col("query_id"), col("neighbor_id"),
         (lit(0L) - col("_negd")).as("dist_e12"), col("rank"))
   }
@@ -914,22 +1009,13 @@ object Similarity {
   ): Unit = {
     require(maxCellSize >= 2,
       s"writeAssignedE6: maxCellSize must be >= 2, got $maxCellSize")
-    import org.apache.spark.sql.graft.ColumnBridge
-    val (cids, cmat, cdim) = collectE6Whole(centroidsE6)
-    val cell = ColumnBridge.column(graft.plans.NearestCentroidE6(
-      ColumnBridge.expression(col(corpusVec)), cids, cmat, cdim))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("centroid_id")
-    corpus.select(col(corpusId), col(corpusVec))
-      .filter(size(col(corpusVec)) === cdim)
-      .withColumn("centroid_id", cell)
-      .filter(col("centroid_id").isNotNull)
-      .withColumn("_occ", count(lit(1)).over(w))
-      .filter(assert_true(col("_occ") <= lit(maxCellSize),
-        lit(s"writeAssignedE6: a coarse cell holds more than " +
-          s"maxCellSize=$maxCellSize vectors — every probe of that cell " +
-          "scans its whole list. Train more (or better) cells, or raise " +
-          "maxCellSize knowingly.")).isNull)
-      .drop("_occ")
+    val cells = collectE6Whole(centroidsE6)
+    occupancyTripwire(corpus.select(col(corpusId), col(corpusVec))
+        .filter(size(col(corpusVec)) === cells.dim)
+        .withColumn("centroid_id", cells.home(col(corpusVec)))
+        .filter(col("centroid_id").isNotNull),
+      "centroid_id", maxCellSize, "writeAssignedE6",
+      "every probe of that cell scans its whole list")
       .write.mode("overwrite").partitionBy("centroid_id").parquet(path)
   }
 
@@ -960,44 +1046,16 @@ object Similarity {
     require(k > 0, s"ivfTopKExactE6Partitioned: k must be positive, got $k")
     require(nprobe > 0,
       s"ivfTopKExactE6Partitioned: nprobe must be positive, got $nprobe")
-    import org.apache.spark.sql.graft.ColumnBridge
-    val spark = queries.sparkSession
-    val (cids, cmat, cdim) = collectE6Whole(centroidsE6)
-    val probeList = ColumnBridge.column(graft.plans.NearestCentroidsE6(
-      ColumnBridge.expression(col("_qa")), cids, cmat, cdim, nprobe))
-    val q = queries
-      .select(col(queryId).cast(LongType).as("query_id"),
-        col(queryVec).as("_qa"))
-      .filter(size(col("_qa")) === cdim)
-      .withColumn("_probes", probeList)
-      .filter(col("_probes").isNotNull)
-      .select(col("query_id"), col("_qa"),
-        explode(col("_probes")).as("centroid_id"))
-      .localCheckpoint() // collected once (ids), joined once
-    val probedIds = q.select(col("centroid_id")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    if (probedIds.isEmpty) {
-      // no queries survived the dim/null guards — the in-memory
-      // ivfTopKExactE6 returns empty here and the two paths are
-      // documented value-identical, so this one must too
-      import spark.implicits._
-      return Seq.empty[(Long, Long, Long, Int)]
-        .toDF("query_id", "neighbor_id", "dist_e12", "rank")
-    }
-    val corpus = spark.read.parquet(assignedPath)
-      // literal IN on the partition column → PartitionFilters → unprobed
-      // directories are never listed, let alone read
-      .filter(col("centroid_id").isin(probedIds: _*))
-      .withColumn("centroid_id", col("centroid_id").cast(LongType))
-    val l2 = (a: Column, b: Column) => aggregate(
-      zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, d) => acc + d)
-    val scored = corpus.join(broadcast(q), Seq("centroid_id"))
-      .select(col("query_id"),
-        col(corpusId).cast(LongType).as("neighbor_id"),
-        (lit(0L) - l2(col("_qa"), col(corpusVec))).as("_negd"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-    topKPerQuery(scored, "_negd", k)
+    val cells = collectE6Whole(centroidsE6)
+    // read twice: collected (the probe union), then joined
+    val probes = Materialize.local(probeRows(queries.select(
+      col(queryId).cast(LongType).as("query_id"), col(queryVec).as("_qa")),
+      cells, nprobe, "centroid_id"))
+    val home = readProbedCells(queries.sparkSession, assignedPath,
+        probeUnion(probes))
+      .select(col("centroid_id"),
+        col(corpusId).cast(LongType).as("neighbor_id"), col(corpusVec).as("_a"))
+    nearestE6(cellPairs(broadcast(probes), home, "centroid_id"), k)
       .select(col("query_id"), col("neighbor_id"),
         (lit(0L) - col("_negd")).as("dist_e12"), col("rank"))
   }
@@ -1011,9 +1069,8 @@ object Similarity {
     * (n_queries·k)` — exact integers over the per-query recall rows.
     *
     * Scale shape: the per-query recall machinery is unchanged
-    * (query-sample-sized); the stratification adds one broadcast
-    * argmin over the QUERY side and a ≤C-row aggregate — no new
-    * corpus work.
+    * (query-sample-sized) and already assigns each query its cell; the
+    * stratification adds only a ≤C-row aggregate — no new corpus work.
     */
   def ivfRecallByBucketE6(
       corpus: DataFrame,
@@ -1024,29 +1081,15 @@ object Similarity {
       queryId: String,
       queryVec: String,
       k: Int
-  ): DataFrame = {
-    val perQuery = ivfRecallExactE6(corpus, corpusId, corpusVec,
-      centroidsE6, queries, queryId, queryVec, k)
-    val cents = broadcast(centroidsE6.select(
-      col("centroid_id").cast(LongType).as("_cid"),
-      col("centroid_e6").as("_c")))
-    val l2 = (a: Column, b: Column) => aggregate(
-      zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, d) => acc + d)
-    val qAssigned = queries
-      .select(col(queryId).as("query_id"), toE6(col(queryVec)).as("_qa"))
-      .crossJoin(cents)
-      .select(col("query_id"), col("_cid"), l2(col("_qa"), col("_c")).as("_d"))
-      .groupBy("query_id")
-      .agg(min_by(col("_cid"), struct(col("_d"), col("_cid"))).as("_qcid"))
-    perQuery.join(qAssigned, Seq("query_id"))
+  ): DataFrame =
+    ivfRecallPerQuery(corpus, corpusId, corpusVec, centroidsE6,
+        queries, queryId, queryVec, k)
       .groupBy(col("_qcid"))
       .agg(count(lit(1)).as("n_queries"), sum(col("n_hits")).as("total_hits"))
       .select(col("_qcid").as("centroid_id"),
         col("n_queries"), col("total_hits"), lit(k.toLong).as("k"),
         expr(s"CAST(total_hits * 1000000 div (n_queries * $k) AS BIGINT)")
           .as("recall_ppm"))
-  }
 
   /** End-to-end IVF index build: seed `c` centroids deterministically,
     * refine with `iterations` Lloyd passes, assign the corpus, persist
@@ -1125,15 +1168,13 @@ object Similarity {
       codebooks: DataFrame,
       residual: Boolean = false
   ): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
     val (m, subdim, subCents) = collectCodebooks(codebooks)
-    val (cids, cmat, cdim) = collectE6Whole(centroidsE6)
-    require(cdim == m * subdim,
-      s"ivfPqEncode: coarse dim $cdim != codebook dim ${m * subdim}")
+    val cells = collectE6Whole(centroidsE6)
+    require(cells.dim == m * subdim,
+      s"ivfPqEncode: coarse dim ${cells.dim} != codebook dim ${m * subdim}")
     val corp = corpus.select(col(corpusId), toE6(col(corpusVec)).as("_a"))
-      .filter(size(col("_a")) === cdim)
-    val cell = ColumnBridge.column(graft.plans.NearestCentroidE6(
-      ColumnBridge.expression(col("_a")), cids, cmat, cdim))
+      .filter(size(col("_a")) === cells.dim)
+    val cell = cells.home(col("_a"))
     val base =
       if (!residual) corp.withColumn("_cell", cell)
       else corp.withColumn("_cell", cell)
@@ -1143,7 +1184,7 @@ object Similarity {
         .withColumn("_a", zip_with(col("_a"), col("_cv"), (a, c) => a - c))
     val codes = array((0 until m).map { j =>
       val (ids, mat) = subCents(j)
-      ColumnBridge.column(graft.plans.NearestCentroidE6(
+      ColumnBridge.column(NearestCentroidE6(
         ColumnBridge.expression(slice(col("_a"), j * subdim + 1, subdim)),
         ids, mat, subdim))
     }: _*)
@@ -1187,13 +1228,10 @@ object Similarity {
       corpusVec: String,
       centroidsE6: DataFrame
   ): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    val (cids, cmat, cdim) = collectE6Whole(centroidsE6)
-    val cell = ColumnBridge.column(graft.plans.NearestCentroidE6(
-      ColumnBridge.expression(col("_a")), cids, cmat, cdim))
+    val cells = collectE6Whole(centroidsE6)
     corpus.select(col(corpusId), toE6(col(corpusVec)).as("_a"))
-      .filter(size(col("_a")) === cdim)
-      .withColumn("_cell", cell)
+      .filter(size(col("_a")) === cells.dim)
+      .withColumn("_cell", cells.home(col("_a")))
       .join(broadcast(centroidsE6.select(
         col("centroid_id").cast(LongType).as("_cell"),
         col("centroid_e6").as("_cv"))), Seq("_cell"))
@@ -1241,7 +1279,7 @@ object Similarity {
     val spark = queries.sparkSession
     import spark.implicits._
     val (m, subdim, subCents) = collectCodebooks(codebooks)
-    val (cids, cmat, cdim) = collectE6Whole(centroidsE6)
+    val E6Cells(cids, cmat, cdim) = collectE6Whole(centroidsE6)
     require(cdim == m * subdim,
       s"ivfPqTopKE6: coarse dim $cdim != codebook dim ${m * subdim}")
     val qrows = collectQueriesE6(queries, queryId, queryVec)
@@ -1273,20 +1311,8 @@ object Similarity {
         (qid, cid, lut)
       }
     }
-    // an EMPTY query frame is a legal degenerate input (an evaluation
-    // sample can be empty): degrade to zero rows, the pqAdcTopKE6 face —
-    // the per-query requires above still reject genuinely malformed input
-    if (probes.isEmpty) {
-      return Seq.empty[(Long, Long, Long, Int)]
-        .toDF("query_id", "neighbor_id", "adist", "rank")
-    }
     val probeDf = probes.toDF("query_id", "centroid_id", "_lut")
-    val probedIds = probes.map(_._2).distinct.sorted
-    val corpus = spark.read.parquet(indexPath)
-      // literal IN on the partition column → PartitionFilters → unprobed
-      // cell directories are never listed, let alone read
-      .filter(col("centroid_id").isin(probedIds: _*))
-      .withColumn("centroid_id", col("centroid_id").cast(LongType))
+    val corpus = readProbedCells(spark, indexPath, probes.map(_._2).distinct.sorted)
     val scored = corpus
       .join(broadcast(probeDf), Seq("centroid_id"))
       .filter(col("query_id") =!= col(codesId))
@@ -1327,18 +1353,11 @@ object Similarity {
   ): DataFrame = {
     val approx = ivfPqTopKE6(indexPath, corpusId, centroidsE6, codebooks,
       queries, queryId, queryVec, k, nprobe, residual)
-    val l2 = (a: Column, b: Column) => aggregate(
-      zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, d) => acc + d)
-    val corp = corpus.select(col(corpusId).cast(LongType).as("_nid"),
-      toE6(col(corpusVec)).as("_na"))
+    val corp = corpus.select(col(corpusId).cast(LongType).as("neighbor_id"),
+      toE6(col(corpusVec)).as("_a"))
     val qdf = queries.select(col(queryId).cast(LongType).as("query_id"),
       toE6(col(queryVec)).as("_qa"))
-    val exactScored = corp.crossJoin(broadcast(qdf))
-      .filter(col("query_id") =!= col("_nid"))
-      .select(col("query_id"), col("_nid").as("neighbor_id"),
-        (lit(0L) - l2(col("_qa"), col("_na"))).as("_negd"))
-    val exact = topKPerQuery(exactScored, "_negd", k)
+    val exact = nearestE6(allPairs(broadcast(qdf), corp), k)
       .select(col("query_id"), col("neighbor_id"))
     val hits = approx.select(col("query_id"), col("neighbor_id"))
       .join(exact, Seq("query_id", "neighbor_id"))
@@ -1394,7 +1413,6 @@ object Similarity {
       scoreCol: String = "score",
       vecCol: String = "vec"
   ): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
     val packed = candidates
       .groupBy("query_id")
       .agg(sort_array(collect_list(struct(
@@ -1412,31 +1430,6 @@ object Similarity {
         (col("_pos") + 1).cast(IntegerType).as("rank"))
   }
 
-  /** HUBNESS diagnostic: the k-NN in-degree distribution of a point
-    * set — how many points count each point among their k nearest
-    * (Radovanović et al. 2010: high-dimensional spaces grow "hubs"
-    * that appear in a huge fraction of neighbor lists and distort
-    * both ANN recall and embedding-dedup clustering; a heavy right
-    * tail here is the warning). Output: `(in_degree BIGINT,
-    * n_points BIGINT)` — one row per occurring in-degree, zero
-    * included.
-    *
-    * Exact and replayable: e6 floor quantization, BIGINT squared-L2,
-    * k-NN ties to the smallest neighbor id (the [[topKPerQuery]]
-    * heap rule). Self-pairs are excluded.
-    *
-    * Scale shape: all-pairs by construction (hubness IS a property of
-    * the full k-NN graph), so run it on the evaluation SAMPLE tier
-    * like [[ivfRecallExactE6]] — the documented cost of measuring
-    * index quality, not a corpus pass. The sample contract is a
-    * LOUD guard, not scaladoc: the point count is checked against
-    * `maxPoints` before the cross join, so a caller who hands the
-    * corpus to a diagnostic fails with the remedy in the message
-    * instead of launching an n² scan. Within the sample: the scored
-    * pairs reduce through the bounded [[graft.plans.TopKAggregate]]
-    * heaps map-side (never a per-query window), and the in-degree
-    * count is one 8-byte-id exchange.
-    */
   /** MUTUAL k-NN graph over an embedding column in exact e6 integer
     * space: directed edge (a → b) iff b is among a's k nearest by
     * squared L2 (ties to the smaller id), kept iff the REVERSE edge
@@ -1450,8 +1443,9 @@ object Similarity {
     *
     * Brute-force SAMPLE tier (n² scored pairs) with the
     * [[knnInDegreeE6]] refusal: past `maxPoints` it refuses loudly —
-    * the scale path is LSH/IVF candidate generation feeding the same
-    * mutuality filter, which composes from the existing bucketed ops.
+    * the scale path is [[mutualKnnEdgesProbedE6]] /
+    * [[mutualKnnEdgesPartitionedE6]], the same kernel over cell
+    * candidates.
     */
   def mutualKnnEdgesE6(
       points: DataFrame,
@@ -1463,41 +1457,21 @@ object Similarity {
     require(k > 0, s"mutualKnnEdgesE6: k must be positive, got $k")
     require(maxPoints >= 2,
       s"mutualKnnEdgesE6: maxPoints must be >= 2, got $maxPoints")
-    val nPoints = points.count()
-    require(nPoints <= maxPoints,
-      s"mutualKnnEdgesE6: $nPoints points > maxPoints=$maxPoints — the " +
+    val p = points.select(col(idCol).cast(LongType).as("neighbor_id"),
+      toE6(col(vecCol)).as("_a"))
+    val q = p.select(col("neighbor_id").as("query_id"), col("_a").as("_qa"))
+    mutualEdges(nearestE6(allPairs(q, p, Some((maxPoints, n =>
+      s"mutualKnnEdgesE6: $n points > maxPoints=$maxPoints — the " +
         "mutual k-NN graph is an all-pairs SAMPLE-tier construction (n² " +
         "scored pairs). Sample the point set first, raise maxPoints " +
         "knowingly, or feed LSH/IVF candidate pairs through the " +
-        "mutuality filter for the scale path.")
-    val l2 = (a: Column, b: Column) => aggregate(
-      zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, d) => acc + d)
-    val p = points.select(col(idCol).cast(LongType).as("_id"),
-      toE6(col(vecCol)).as("_a"))
-    val q = p.select(col("_id").as("query_id"), col("_a").as("_qa"))
-    val scored = q.crossJoin(p)
-      .filter(col("query_id") =!= col("_id"))
-      .select(col("query_id"), col("_id").as("neighbor_id"),
-        (lit(0L) - l2(col("_qa"), col("_a"))).as("_negd"))
-    val kn = topKPerQuery(scored, "_negd", k)
-      .select(col("query_id").as("_x"), col("neighbor_id").as("_y"))
-      .localCheckpoint() // both sides of the mutuality semi-join
-    kn.join(kn.select(col("_y").as("_x"), col("_x").as("_y")),
-        Seq("_x", "_y"), "left_semi")
-      .filter(col("_x") < col("_y"))
-      .select(col("_x").as("id_a"), col("_y").as("id_b"))
+        "mutuality filter for the scale path."))), k))
   }
 
-  /** The PRODUCTION-path sibling of [[mutualKnnEdgesE6]]: candidates
-    * restricted to points sharing a coarse IVF cell (the SemDeDup
-    * within-cluster blocking, arXiv:2303.09540) — the exact e6 argmin
-    * assignment every IVF op here uses, then the same scoring +
-    * reciprocity filter WITHIN each cell. Pair space is Σ|cell|², not
-    * n²; a hot cell refuses through a zero-action tripwire riding the
-    * candidate join's own hash distribution (the setsim hot-gram
-    * pattern — occupancy counts on a window partitioned by the join
-    * key, no extra exchange, no driver action).
+  /** [[mutualKnnEdgesProbedE6]] at `nprobe = 1`: candidates restricted
+    * to points sharing a coarse IVF cell (the SemDeDup within-cluster
+    * blocking, arXiv:2303.09540). Pair space is Σ|cell|², not n², and a
+    * hot cell refuses through the same occupancy tripwire.
     *
     * Semantics: mutual k-NN of the CELL-RESTRICTED neighbor structure —
     * cross-cell near-neighbors are invisible by design (the IVF
@@ -1515,55 +1489,19 @@ object Similarity {
       centroidsE6: DataFrame,
       k: Int,
       maxCellSize: Long = 100000L
-  ): DataFrame = {
-    require(k > 0, s"mutualKnnEdgesBlockedE6: k must be positive, got $k")
-    require(maxCellSize >= 2,
-      s"mutualKnnEdgesBlockedE6: maxCellSize must be >= 2, got $maxCellSize")
-    import org.apache.spark.sql.graft.ColumnBridge
-    val (cids, cmat, cdim) = collectE6Whole(centroidsE6)
-    val cell = ColumnBridge.column(graft.plans.NearestCentroidE6(
-      ColumnBridge.expression(col("_a")), cids, cmat, cdim))
-    val l2 = (a: Column, b: Column) => aggregate(
-      zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, d) => acc + d)
-    val p = points.select(col(idCol).cast(LongType).as("_id"),
-        toE6(col(vecCol)).as("_a"))
-      .filter(size(col("_a")) === cdim)
-      .withColumn("_cell", cell)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("_cell")
-    val home = p.withColumn("_occ", count(lit(1)).over(w))
-      .filter(assert_true(col("_occ") <= lit(maxCellSize),
-        lit(s"mutualKnnEdgesBlockedE6: a coarse cell holds more than " +
-          s"maxCellSize=$maxCellSize points — the within-cell candidate " +
-          "join is occupancy² pairs per cell. Train more (or better) " +
-          "cells, or raise maxCellSize knowingly.")).isNull)
-      .select(col("_cell"), col("_id"), col("_a"))
-      .localCheckpoint() // both sides of the within-cell join
-    val scored = home
-      .select(col("_cell"), col("_id").as("query_id"), col("_a").as("_qa"))
-      .join(home.select(col("_cell"), col("_id").as("neighbor_id"),
-        col("_a")), Seq("_cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (lit(0L) - l2(col("_qa"), col("_a"))).as("_negd"))
-    val kn = topKPerQuery(scored, "_negd", k)
-      .select(col("query_id").as("_x"), col("neighbor_id").as("_y"))
-      .localCheckpoint()
-    kn.join(kn.select(col("_y").as("_x"), col("_x").as("_y")),
-        Seq("_x", "_y"), "left_semi")
-      .filter(col("_x") < col("_y"))
-      .select(col("_x").as("id_a"), col("_y").as("id_b"))
-  }
+  ): DataFrame =
+    mutualKnnEdgesProbedE6(points, idCol, vecCol, centroidsE6, k, nprobe = 1,
+      maxCellSize)
 
-  /** MULTI-PROBE blocked mutual k-NN — [[mutualKnnEdgesBlockedE6]] with
-    * the cross-cell blind spot opened up: each point still LISTS under
-    * its single home (argmin) cell, but as a QUERY it draws candidates
-    * from its `nprobe` nearest cells (the [[ivfTopKPartitioned]] probe
+  /** MULTI-PROBE blocked mutual k-NN: each point LISTS under its single
+    * home (argmin) cell, but as a QUERY it draws candidates from its
+    * `nprobe` nearest cells (the [[ivfTopKPartitioned]] probe
     * convention), so near-neighbors sitting just across a cell boundary
-    * become visible. `nprobe = 1` reduces bit-identically to the
-    * blocked operator; recall of the exact sample-tier graph's edges
-    * rises with nprobe (measured — see the README recall-vs-nprobe
-    * table) at candidate cost ∝ nprobe.
+    * become visible. `nprobe = 1` is [[mutualKnnEdgesBlockedE6]]; recall
+    * of the exact sample-tier graph's edges rises with nprobe at
+    * candidate cost ∝ nprobe. Measured at sf0.1 (2,000 points, 16
+    * cells, k = 3), edge recall is 0.190 / 0.218 / 0.326 / 0.610 /
+    * 1.000 at nprobe 1 / 2 / 4 / 8 / 16.
     *
     * Probe sets come from ONE narrow codegen'd projection
     * ([[graft.plans.NearestCentroidsE6]] — element 0 is the home cell,
@@ -1571,12 +1509,11 @@ object Similarity {
     * shuffle. Each (query, candidate) pair appears at most once: a
     * candidate is keyed only under its unique home cell. The hot-cell
     * tripwire guards HOME occupancy (the index-side lists whose size
-    * drives the quadratic term), riding the candidate join's own hash
-    * distribution exactly as in the blocked operator.
+    * drives the quadratic term).
     *
     * Mutuality note: reciprocity is evaluated on the probed lists —
     * edge (a, b) survives iff each ranks the other top-k within its own
-    * probed candidate set. As nprobe → C the lists converge to
+    * probed candidate set. At nprobe = C the lists are
     * [[mutualKnnEdgesE6]]'s exact ones.
     */
   def mutualKnnEdgesProbedE6(
@@ -1593,56 +1530,33 @@ object Similarity {
       s"mutualKnnEdgesProbedE6: nprobe must be positive, got $nprobe")
     require(maxCellSize >= 2,
       s"mutualKnnEdgesProbedE6: maxCellSize must be >= 2, got $maxCellSize")
-    import org.apache.spark.sql.graft.ColumnBridge
-    val (cids, cmat, cdim) = collectE6Whole(centroidsE6)
-    val probeList = ColumnBridge.column(graft.plans.NearestCentroidsE6(
-      ColumnBridge.expression(col("_a")), cids, cmat, cdim, nprobe))
-    val l2 = (a: Column, b: Column) => aggregate(
-      zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, d) => acc + d)
-    val p = points.select(col(idCol).cast(LongType).as("_id"),
-        toE6(col(vecCol)).as("_a"))
-      .filter(size(col("_a")) === cdim)
-      .withColumn("_probes", probeList)
-      .filter(col("_probes").isNotNull)
-      .localCheckpoint() // index side AND query side read it
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("_cell")
-    val home = p
-      .select(element_at(col("_probes"), 1).as("_cell"), col("_id"), col("_a"))
-      .withColumn("_occ", count(lit(1)).over(w))
-      .filter(assert_true(col("_occ") <= lit(maxCellSize),
-        lit(s"mutualKnnEdgesProbedE6: a coarse cell holds more than " +
-          s"maxCellSize=$maxCellSize points — the candidate join is " +
-          "nprobe × occupancy pairs per query against that cell's list. " +
-          "Train more (or better) cells, or raise maxCellSize knowingly."))
-        .isNull)
-      .select(col("_cell"), col("_id").as("neighbor_id"), col("_a"))
-    val q = p.select(col("_id").as("query_id"), col("_a").as("_qa"),
+    val cells = collectE6Whole(centroidsE6)
+    // the index side and the query side both read the points
+    val p = Materialize.local(points
+      .select(col(idCol).cast(LongType).as("_id"), toE6(col(vecCol)).as("_a"))
+      .filter(size(col("_a")) === cells.dim)
+      .withColumn("_probes", cells.probes(col("_a"), nprobe))
+      .filter(col("_probes").isNotNull))
+    val home = occupancyTripwire(p.select(element_at(col("_probes"), 1).as("_cell"),
+        col("_id").as("neighbor_id"), col("_a")),
+      "_cell", maxCellSize, "mutualKnnEdgesProbedE6",
+      "the candidate join is nprobe × occupancy pairs per query against " +
+        "that cell's list")
+    val probes = p.select(col("_id").as("query_id"), col("_a").as("_qa"),
       explode(col("_probes")).as("_cell"))
-    val scored = q.join(home, Seq("_cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (lit(0L) - l2(col("_qa"), col("_a"))).as("_negd"))
-    val kn = topKPerQuery(scored, "_negd", k)
-      .select(col("query_id").as("_x"), col("neighbor_id").as("_y"))
-      .localCheckpoint() // both sides of the mutuality semi-join
-    kn.join(kn.select(col("_y").as("_x"), col("_x").as("_y")),
-        Seq("_x", "_y"), "left_semi")
-      .filter(col("_x") < col("_y"))
-      .select(col("_x").as("id_a"), col("_y").as("id_b"))
+    mutualEdges(nearestE6(cellPairs(probes, home, "_cell"), k))
   }
 
   /** [[mutualKnnEdgesProbedE6]] over a [[writeAssignedE6]] layout —
     * the 100 TB form: the home-cell (index) side is the PHYSICALLY
-    * partitioned corpus, filtered by the union of the query side's
-    * probe sets as a literal IN on the partition column, so the probe
-    * restriction prunes at the directory level (`PartitionFilters`,
-    * the [[ivfTopKExactE6Partitioned]] composition) instead of
-    * re-deriving home cells from an in-memory frame. The query side
-    * reads the SAME layout (one narrow id+vec scan) — the corpus never
-    * exchanges to learn its probe sets; probes come from the one
-    * codegen'd [[graft.plans.NearestCentroidsE6]] projection whose
-    * element 0 is the layout's own write-time home assignment.
+    * partitioned corpus, pruned to the union of the query side's probe
+    * sets at the directory level (`readProbedCells`, the
+    * [[ivfTopKExactE6Partitioned]] composition) instead of re-deriving
+    * home cells from an in-memory frame. The query side reads the SAME
+    * layout (one narrow id+vec scan) — the corpus never exchanges to
+    * learn its probe sets; probes come from the one codegen'd
+    * [[graft.plans.NearestCentroidsE6]] projection whose element 0 is
+    * the layout's own write-time home assignment.
     *
     * `querySubset` (an id frame) restricts the operation to a slice:
     * both the query side and the candidate lists semi-join to it, so
@@ -1672,62 +1586,53 @@ object Similarity {
     require(k > 0, s"mutualKnnEdgesPartitionedE6: k must be positive, got $k")
     require(nprobe > 0,
       s"mutualKnnEdgesPartitionedE6: nprobe must be positive, got $nprobe")
-    import org.apache.spark.sql.graft.ColumnBridge
-    val (cids, cmat, cdim) = collectE6Whole(centroidsE6)
-    val probeList = ColumnBridge.column(graft.plans.NearestCentroidsE6(
-      ColumnBridge.expression(col("_a")), cids, cmat, cdim, nprobe))
-    val l2 = (a: Column, b: Column) => aggregate(
-      zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, d) => acc + d)
+    val cells = collectE6Whole(centroidsE6)
+    // both sides semi-join to the subset
     val subsetIds = querySubset.map(q =>
-      q.select(q.columns.head).toDF("_sid").localCheckpoint())
+      Materialize.local(q.select(q.columns.head).toDF("_sid")))
     def restrict(df: DataFrame, on: String): DataFrame = subsetIds match {
       case Some(ids) => df.join(broadcast(ids),
         df(on) === ids("_sid"), "left_semi")
       case None => df
     }
-    val q = restrict(
+    // read twice: collected (the probe union), then joined
+    val probes = Materialize.local(probeRows(restrict(
         spark.read.parquet(assignedPath)
-          .select(col(idCol).cast(LongType).as("query_id"),
-            col(vecCol).as("_a"))
-          .filter(size(col("_a")) === cdim), "query_id")
-      .withColumn("_probes", probeList)
-      .filter(col("_probes").isNotNull)
-      .select(col("query_id"), col("_a").as("_qa"),
-        explode(col("_probes")).as("centroid_id"))
-      .localCheckpoint() // collected once (probe union), joined once
-    val probedIds = q.select(col("centroid_id")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    if (probedIds.isEmpty)
-      return spark.emptyDataFrame
-        .select(lit(0L).as("id_a"), lit(0L).as("id_b")).limit(0)
+          .select(col(idCol).cast(LongType).as("query_id"), col(vecCol).as("_qa")),
+        "query_id"),
+      cells, nprobe, "centroid_id"))
     val home = restrict(
-      spark.read.parquet(assignedPath)
-        // literal IN on the partition column → PartitionFilters: cells no
-        // query probes are never listed, let alone read
-        .filter(col("centroid_id").isin(probedIds: _*))
-        .withColumn("centroid_id", col("centroid_id").cast(LongType))
+      readProbedCells(spark, assignedPath, probeUnion(probes))
         .select(col("centroid_id"), col(idCol).cast(LongType).as("neighbor_id"),
-          col(vecCol).as("_na")), "neighbor_id")
-    // plain equi-join on cell id (the probed operator's join shape): the
-    // full self-kNN query side is corpus-sized, never broadcast
-    val scored = home.join(q, Seq("centroid_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (lit(0L) - l2(col("_qa"), col("_na"))).as("_negd"))
-    val kn = topKPerQuery(scored, "_negd", k)
-      .select(col("query_id").as("_x"), col("neighbor_id").as("_y"))
-    // each ordered pair appears at most once (a candidate lists only
-    // under its unique home cell), so reciprocity is a PAIR COUNT:
-    // both orientations present ⟺ count == 2 — one aggregate on the
-    // normalized pair, no checkpoint, no second read of the lists
-    kn.groupBy(least(col("_x"), col("_y")).as("id_a"),
-        greatest(col("_x"), col("_y")).as("id_b"))
-      .agg(count(lit(1)).as("_c"))
-      .filter(col("_c") === 2L)
-      .select(col("id_a"), col("id_b"))
+          col(vecCol).as("_a")), "neighbor_id")
+    mutualEdges(nearestE6(cellPairs(probes, home, "centroid_id"), k))
   }
 
+  /** HUBNESS diagnostic: the k-NN in-degree distribution of a point
+    * set — how many points count each point among their k nearest
+    * (Radovanović et al. 2010: high-dimensional spaces grow "hubs"
+    * that appear in a huge fraction of neighbor lists and distort
+    * both ANN recall and embedding-dedup clustering; a heavy right
+    * tail here is the warning). Output: `(in_degree BIGINT,
+    * n_points BIGINT)` — one row per occurring in-degree, zero
+    * included.
+    *
+    * Exact and replayable: e6 floor quantization, BIGINT squared-L2,
+    * k-NN ties to the smallest neighbor id (the [[topKPerQuery]]
+    * heap rule). Self-pairs are excluded.
+    *
+    * Scale shape: all-pairs by construction (hubness IS a property of
+    * the full k-NN graph), so run it on the evaluation SAMPLE tier
+    * like [[ivfRecallExactE6]] — the documented cost of measuring
+    * index quality, not a corpus pass. The sample contract is a
+    * LOUD guard, not scaladoc: the point count is checked against
+    * `maxPoints` before the cross join, so a caller who hands the
+    * corpus to a diagnostic fails with the remedy in the message
+    * instead of launching an n² scan. Within the sample: the scored
+    * pairs reduce through the bounded [[graft.plans.TopKAggregate]]
+    * heaps map-side (never a per-query window), and the in-degree
+    * count is one 8-byte-id exchange.
+    */
   def knnInDegreeE6(
       points: DataFrame,
       idCol: String,
@@ -1738,25 +1643,16 @@ object Similarity {
     require(k > 0, s"knnInDegreeE6: k must be positive, got $k")
     require(maxPoints >= 2,
       s"knnInDegreeE6: maxPoints must be >= 2, got $maxPoints")
-    val nPoints = points.count()
-    require(nPoints <= maxPoints,
-      s"knnInDegreeE6: $nPoints points > maxPoints=$maxPoints — hubness is an " +
-        "all-pairs SAMPLE-tier diagnostic (n² scored pairs). Sample the point " +
-        "set first, or raise maxPoints knowingly.")
-    val l2 = (a: Column, b: Column) => aggregate(
-      zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, d) => acc + d)
-    val p = points.select(col(idCol).cast(LongType).as("_id"),
+    val p = points.select(col(idCol).cast(LongType).as("neighbor_id"),
       toE6(col(vecCol)).as("_a"))
-    val q = p.select(col("_id").as("query_id"), col("_a").as("_qa"))
-    val scored = q.crossJoin(p)
-      .filter(col("query_id") =!= col("_id"))
-      .select(col("query_id"), col("_id").as("neighbor_id"),
-        (lit(0L) - l2(col("_qa"), col("_a"))).as("_negd"))
-    val indeg = topKPerQuery(scored, "_negd", k)
+    val q = p.select(col("neighbor_id").as("query_id"), col("_a").as("_qa"))
+    val indeg = nearestE6(allPairs(q, p, Some((maxPoints, n =>
+        s"knnInDegreeE6: $n points > maxPoints=$maxPoints — hubness is an " +
+          "all-pairs SAMPLE-tier diagnostic (n² scored pairs). Sample the " +
+          "point set first, or raise maxPoints knowingly."))), k)
       .groupBy(col("neighbor_id"))
       .agg(count(lit(1)).as("_c"))
-    p.join(indeg.withColumnRenamed("neighbor_id", "_id"), Seq("_id"), "left")
+    p.join(indeg, Seq("neighbor_id"), "left")
       .select(coalesce(col("_c"), lit(0L)).as("in_degree"))
       .groupBy(col("in_degree"))
       .agg(count(lit(1)).as("n_points"))
@@ -1778,7 +1674,7 @@ object Similarity {
     * center's distance via [[graft.plans.MinSqDistE6]] (1-row matrix,
     * codegen'd) folded into the running minimum — plus a k=1
     * TakeOrdered reduction; no shuffle ever carries the corpus.
-    * `localCheckpoint` cuts the per-round lineage (the
+    * [[Materialize.local]] cuts the per-round lineage (the
     * [[graft.operators.Graph.pageRankScaled]] discipline); the
     * checkpointed set carries (id, vec, dist), which is the inherent
     * state of k-center greedy — at 100 TB run it on the
@@ -1799,7 +1695,6 @@ object Similarity {
       k: Int
   ): DataFrame = {
     require(k >= 1 && k <= 64, s"kCenterGreedyE6: k must be in [1, 64], got $k")
-    import org.apache.spark.sql.graft.ColumnBridge
     val spark = df.sparkSession
     import spark.implicits._
     val base0 = df
@@ -1812,11 +1707,10 @@ object Similarity {
     val dim = seedVec.length
     def distTo(c: Seq[Long]): Column = ColumnBridge.column(
       graft.plans.MinSqDistE6(ColumnBridge.expression(col("_v")), c, dim))
-    var cur = base0
+    var cur = Materialize.local(base0
       .filter(col("_id") =!= seedId)
       .select(col("_id"), col("_v"), distTo(seedVec).as("_md"))
-      .filter(col("_md").isNotNull)
-      .localCheckpoint()
+      .filter(col("_md").isNotNull))
     val selected = scala.collection.mutable.ArrayBuffer((seedId, 0L))
     var exhausted = false
     while (selected.length < k && !exhausted) {
@@ -1828,11 +1722,10 @@ object Similarity {
         val nvec = row.getSeq[Long](1)
         selected += ((nid, row.getLong(2)))
         if (selected.length < k)
-          cur = cur
+          cur = Materialize.local(cur
             .filter(col("_id") =!= nid)
             .select(col("_id"), col("_v"),
-              least(col("_md"), distTo(nvec)).as("_md"))
-            .localCheckpoint()
+              least(col("_md"), distTo(nvec)).as("_md")))
       }
     }
     selected.toSeq.zipWithIndex

@@ -834,4 +834,95 @@ class SimilaritySpec extends SparkSpec {
       Similarity.kCenterGreedyE6(d, "id", "vec", k = 0)
     }
   }
+
+  test("empty query frame: every probed-cell operator returns zero rows with its columns") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, floor, transform}
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val noFloatQueries = Seq.empty[(Long, Array[Float])].toDF("qid", "qvec")
+    val noE6Queries = Seq.empty[(Long, Seq[Long])].toDF("qid", "qv")
+    // cosine family over the 4-point corpus
+    val cents = Similarity.seedCentroids(corpus, "id", "vec", 2)
+    val assigned = Similarity.assignToCentroids(corpus, "id", "vec", cents)
+    val cosOut = tmp("graft-empty-ivf")
+    Similarity.writeAssigned(assigned, cosOut)
+    // exact-e6 family over 16 points on a line, 4 cells
+    val corpE6 = (0 until 16).map(i => (i.toLong, Seq(i * 1000000L))).toDF("id", "v")
+    val cells = Seq((100L, Seq(1000000L)), (101L, Seq(5000000L)),
+        (102L, Seq(9000000L)), (103L, Seq(13000000L)))
+      .toDF("centroid_id", "centroid_e6")
+    val e6Out = tmp("graft-empty-e6")
+    Similarity.writeAssignedE6(corpE6, "id", "v", cells, e6Out)
+    // IVF-PQ index over 4-d vectors, 2 coarse cells, m = 2
+    val vecs = Seq(
+      (0L, Array(0.0f, 0.0f, 0.0f, 0.0f)), (1L, Array(1.0f, 1.0f, 1.0f, 1.0f)),
+      (2L, Array(0.1f, 0.1f, 0.9f, 0.9f)), (3L, Array(0.9f, 1.1f, 0.1f, 0.0f))
+    ).toDF("id", "vec")
+    val cb = Similarity.pqCodebooksFromSums(Similarity.pqTrainSumsE6(vecs, "id", "vec",
+      vecs.filter(col("id") < 2).select(col("id").as("centroid_id"),
+        col("vec").as("centroid_vec")), m = 2))
+    val coarse = vecs.filter(col("id") < 2).select(col("id").as("centroid_id"),
+      transform(col("vec"), v => floor(v.cast("double") * 1000000d).cast("long"))
+        .as("centroid_e6"))
+    val pqOut = tmp("graft-empty-pq")
+    Similarity.buildIvfPqIndex(vecs, "id", "vec", coarse, cb, pqOut)
+    val cases: Seq[(String, () => DataFrame, Seq[String])] = Seq(
+      ("ivfTopK", () => Similarity.ivfTopK(assigned, "id", "vec", cents,
+        noFloatQueries, "qid", "qvec", k = 2, nprobe = 1),
+        Seq("query_id", "neighbor_id", "cosine", "rank")),
+      ("ivfTopKPartitioned", () => Similarity.ivfTopKPartitioned(cosOut, "id",
+        "vec", cents, noFloatQueries, "qid", "qvec", k = 2, nprobe = 1),
+        Seq("query_id", "neighbor_id", "cosine", "rank")),
+      ("ivfTopKExactE6Partitioned", () => Similarity.ivfTopKExactE6Partitioned(
+        e6Out, "id", "v", cells, noE6Queries, "qid", "qv", k = 3, nprobe = 2),
+        Seq("query_id", "neighbor_id", "dist_e12", "rank")),
+      ("ivfPqTopKE6", () => Similarity.ivfPqTopKE6(pqOut, "id", coarse, cb,
+        noFloatQueries, "qid", "qvec", k = 3, nprobe = 1),
+        Seq("query_id", "neighbor_id", "adist", "rank")),
+      ("mutualKnnEdgesPartitionedE6", () => Similarity.mutualKnnEdgesPartitionedE6(
+        spark, e6Out, "id", "v", cells, k = 3, nprobe = 2,
+        querySubset = Some(Seq.empty[Long].toDF("id"))),
+        Seq("id_a", "id_b")))
+    for ((name, run, columns) <- cases) {
+      val out = run()
+      assert(out.columns.toSeq == columns, s"$name: ${out.columns.toSeq}")
+      assert(out.count() == 0L, name)
+    }
+  }
+
+  test("mutual kNN kernel on a tied integer lattice: probed and partitioned at nprobe = C equal the exact graph, blocked is probed at nprobe = 1") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    // 60 points on the 9×9 integer lattice: repeated positions and equal
+    // distances everywhere. Cells at (2,2) (2,6) (6,2) (6,6), so every
+    // point with a coordinate 4 is equidistant from two cells
+    val rnd = new scala.util.Random(60L)
+    val pts = (0 until 60).map(i =>
+      (i.toLong, Seq(rnd.nextInt(9).toFloat, rnd.nextInt(9).toFloat)))
+    val d = pts.toDF("id", "vec")
+    val e6 = pts.map { case (i, v) => (i, v.map(x => x.toLong * 1000000L)) }
+      .toDF("id", "v")
+    val cells = Seq((2, 2), (2, 6), (6, 2), (6, 6)).zipWithIndex.map {
+      case ((x, y), c) => (100L + c, Seq(x * 1000000L, y * 1000000L))
+    }.toDF("centroid_id", "centroid_e6")
+    val k = 3
+    def edges(df: DataFrame): Set[(Long, Long)] =
+      df.select(col("id_a"), col("id_b")).as[(Long, Long)].collect().toSet
+    val exact = edges(Similarity.mutualKnnEdgesE6(d, "id", "vec", k))
+    assert(exact.nonEmpty)
+    assert(edges(Similarity.mutualKnnEdgesProbedE6(d, "id", "vec", cells, k,
+      nprobe = 4)) == exact)
+    val out = java.nio.file.Files.createTempDirectory("graft-lattice").toString
+    Similarity.writeAssignedE6(e6, "id", "v", cells, out)
+    assert(edges(Similarity.mutualKnnEdgesPartitionedE6(spark, out, "id", "v",
+      cells, k, nprobe = 4)) == exact)
+    val blocked = edges(Similarity.mutualKnnEdgesBlockedE6(d, "id", "vec",
+      cells, k))
+    assert(blocked == edges(Similarity.mutualKnnEdgesProbedE6(d, "id", "vec",
+      cells, k, nprobe = 1)))
+    // every point lists min(k, n - 1) neighbors
+    val hist = Similarity.knnInDegreeE6(d, "id", "vec", k)
+      .as[(Long, Long)].collect()
+    assert(hist.map { case (deg, n) => deg * n }.sum == 60L * math.min(k, 59))
+  }
 }
