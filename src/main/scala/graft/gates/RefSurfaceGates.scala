@@ -330,8 +330,8 @@ private[graft] object RefSurfaceGates {
     //      '-0.333333', '100.000001' — verified byte-identical between
     //      Spark's Decimal.toString and DuckDB's VARCHAR cast). The
     //      decimal arithmetic stays on both sides; only the
-    //      hash-compared type changed. History: README "Driver
-    //      DECIMAL hashing".
+    //      hash-compared type changed. History: `git show
+    //      c2f17e0:README.md`, "driver DECIMAL hashing".
     "decimal_probe_dec" -> ((s, dir) =>
       s.sql(
         """SELECT i, CAST(dec_val AS STRING) AS dec_val FROM VALUES
@@ -365,7 +365,8 @@ private[graft] object RefSurfaceGates {
     //      probe closed, so the oracle side now applies the SAME
     //      canonicalization every production gate uses (explicit
     //      CAST(sum(...) AS BIGINT)). The Spark side is unchanged.
-    //      History: README "Driver HUGEINT hashing".
+    //      History: `git show c2f17e0:README.md`, "driver HUGEINT
+    //      hashing".
     "hugeint_probe" -> ((s, dir) =>
       s.sql(
         """SELECT g, sum(v) AS sum_v FROM VALUES

@@ -432,7 +432,8 @@ private[graft] object SimilarityGates {
     //      RETRAINED epoch (cells + codebooks from the drifted batch).
     //      nprobe = c isolates pure code quality (the residual_recall
     //      convention); both chains replay value-for-value in the
-    //      oracle. Gate-scale recovery numbers are recorded in README
+    //      oracle. Recovery, frozen → retrained total hits over 3
+    //      queries × recall@10: 0→7 (sf0.001), 1→7 (sf0.01), 2→5 (sf0.1).
     "pq_retrain_recall" -> ((s, dir) => {
       import graft.streaming.StreamingOps
       import graft.operators.Similarity

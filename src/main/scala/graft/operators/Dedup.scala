@@ -104,19 +104,13 @@ object Dedup {
     * Output: `(id_a, id_b)` — id_a ranked before id_b, verified
     * fingerprint-equal.
     *
-    * Scale shape: the global rank over (sortKey, id) rides a RANGE-
-    * SAMPLED two-level prefix — `repartitionByRange` splits the
-    * (sortKey, id) order into `buckets` sampled ranges (ids are unique,
-    * so the composite key is a total order and even a single dominant
-    * key prefix — the `h`-heavy http… shape of real crawl corpora —
-    * splits across buckets instead of funneling into one), each bucket
-    * sorts only its own slice, local positions come from
-    * `monotonically_increasing_id` over the sorted slice, and
-    * per-bucket (count, min-id) stats (≤ `buckets` metadata rows)
-    * prefix-sum into global offsets. No task ever sorts more than
-    * ~n/buckets rows, for ANY key distribution — this replaced the
-    * round-10 first-char bucketing whose sizes followed the data's
-    * first-char skew. The pair output is bucket-invariant (positions
+    * Scale shape: the global rank over (sortKey, id) is
+    * [[Graph.globalRank]]'s RANGE-SAMPLED two-level prefix over
+    * `buckets` ranges (ids are unique, so the composite key is a total
+    * order and even a single dominant key prefix — the `h`-heavy http…
+    * shape of real crawl corpora — splits across buckets instead of
+    * funneling into one): no task sorts more than ~n/buckets rows, for
+    * ANY key distribution. The pair output is bucket-invariant (positions
     * are the same global (sortKey, id) ranks either way). The windowed
     * self-join is `window−1` rank-shifted EQUI-joins in one explode —
     * shuffles carry (pos, id, 8-byte fingerprint), never text.
@@ -136,37 +130,12 @@ object Dedup {
         normalizeForFingerprint(col(textCol)).as("_nt"))
       .select(col("_id"), xxhash64(col("_nt")).as("_fp"),
         substring(col("_nt"), 1, keyLen).as("_bk"))
-    val parted = base
-      .repartitionByRange(buckets, col("_bk"), col("_id"))
-      .sortWithinPartitions(col("_bk"), col("_id"))
-      .select(col("_id"), col("_fp"),
-        spark_partition_id().as("_p"),
-        monotonically_increasing_id().as("_mid"))
-      .localCheckpoint() // freeze partition ids + local positions
-    val w = org.apache.spark.sql.expressions.Window
-    val stats = parted.groupBy(col("_p"))
-      .agg(count(lit(1)).as("_c"), min(col("_mid")).as("_m0"),
-        max(col("_mid")).as("_m1"))
-      // TRIPWIRE: the rank arithmetic below assumes mono_id increments by
-      // exactly 1 per row within a partition. Spark only CONTRACTS
-      // monotone-and-unique; today's implementation is consecutive, but if
-      // that ever changes, global positions would silently corrupt the
-      // window pairs — fail loudly instead (free check in this aggregate).
-      .withColumn("_consec", col("_m1") - col("_m0") + 1 === col("_c"))
-      .withColumn("_off",
-        coalesce(sum(col("_c")).over(w.orderBy("_p")
-          .rowsBetween(w.unboundedPreceding, -1)), lit(0L)))
-      .select("_p", "_m0", "_off", "_consec")
-    require(stats.filter(!col("_consec")).isEmpty,
-      "sortedNeighborhoodPairs: monotonically_increasing_id was not " +
-        "consecutive within a partition — the local-position arithmetic " +
-        "is invalid on this Spark build; switch the local rank to a " +
-        "per-partition row_number before trusting pair output")
-    val ranked = parted
-      .join(broadcast(stats), Seq("_p"))
-      .select(col("_id"), col("_fp"),
-        (col("_off") + (col("_mid") - col("_m0")) + lit(1L)).as("_pos"))
-      .localCheckpoint()
+    // positions are 1-based global (sortKey, id) ranks; two consumers
+    // (both sides of the window join)
+    val ranked = Materialize.local(
+      Graph.globalRank(base, buckets, Seq("_bk", "_id"), Seq("_id", "_fp"),
+          "sortedNeighborhoodPairs")
+        .select(col("_id"), col("_fp"), (col("_rank") + lit(1L)).as("_pos")))
     val left = ranked.select(col("_id").as("id_a"), col("_fp").as("_fpa"),
         col("_pos").as("_pa"),
         explode(sequence(lit(1L), lit((window - 1).toLong))).as("_d"))
@@ -562,57 +531,25 @@ object Dedup {
   /** Connected components over a candidate-pair edge list — the
     * transitive closure a real dedup needs: "keep one doc per CLUSTER",
     * where near-dup pairs chain (a~b, b~c ⇒ {a,b,c}), not just one doc
-    * per pair. Returns (id, comp) for every node appearing in `pairs`,
-    * comp = the minimum id reachable from the node.
+    * per pair. Returns (id, comp) for every node appearing in a pair
+    * with two non-null ids, comp = the minimum id reachable from the
+    * node; a pair with a null id contributes no rows (the convention of
+    * every [[Graph]] operator).
     *
-    * Algorithm: iterative min-label propagation (the hash-join form of
-    * MapReduce connected components): each round every node takes the min
-    * of its own label and its neighbors' labels; converges in O(cluster
-    * diameter) rounds — dup clusters from LSH candidates are near-cliques,
-    * so 2-3 rounds in practice, `maxIter` as a backstop: a chain still
-    * moving at `maxIter` refuses loudly instead of returning partial
-    * labels (the [[Graph.connectedComponentsMin]] convention). Each round is
-    * one shuffle of the EDGE list (ids only, never payloads), and the
-    * lineage is cut with localCheckpoint so plans don't grow with rounds.
-    * At 100 TB the pair list is output-bound (∝ actual duplication), so
-    * the iteration runs on a table orders of magnitude smaller than the
-    * corpus.
+    * Algorithm: [[Graph.connectedComponentsMin]]'s pointer-jumping loop
+    * ([[Graph.componentsMin]]), O(log diameter) rounds, so a long dup
+    * chain converges rather than running out of rounds. The ids iterate
+    * uncast and without a dictionary, so `comp` is the minimum in the
+    * ids' own type — numeric for long ids. Each round shuffles ids
+    * only, never payloads. At 100 TB the pair list is output-bound (∝
+    * actual duplication), so the iteration runs on a table orders of
+    * magnitude smaller than the corpus.
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val edges = pairs
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct()
-      .localCheckpoint()
-    var comp = edges.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id"))
-      .localCheckpoint()
-    var i = 0
-    var converged = false
-    while (!converged && i < maxIter) {
-      val nbrMin = edges.join(comp, edges("dst") === comp("id"))
-        .groupBy(col("src")).agg(min(col("comp")).as("nbr"))
-      // the change flag rides the round's own projection, so ONE action
-      // does everything: counting changed rows materializes the (lazy)
-      // checkpoint — every partition is computed and cached, lineage is
-      // cut — and decides convergence. The earlier shape paid a second
-      // job per round: a full next⋈prev join just to ask "did anything
-      // move?".
-      val next = comp.join(nbrMin, comp("id") === nbrMin("src"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("nbr"), col("comp"))).as("comp"),
-          (coalesce(col("nbr"), col("comp")) < col("comp")).as("_chg"))
-        .localCheckpoint(eager = false)
-      converged = next.filter(col("_chg")).count() == 0L
-      comp = next.drop("_chg")
-      i += 1
-    }
-    require(converged,
-      s"connectedComponents: labels still moving after $maxIter rounds — a dup " +
-        "chain is longer than the round budget, so the partial labels would " +
-        "split one cluster into several; raise maxIter (rounds grow with the " +
-        "longest chain) or use Graph.connectedComponentsMin (pointer jumping)")
-    comp
+  def connectedComponents(pairs: DataFrame): DataFrame = {
+    val edges = pairs.select(col("id_a").as("_s"), col("id_b").as("_d"))
+      .filter(col("_s").isNotNull && col("_d").isNotNull)
+    Graph.componentsMin(Graph.GraphIds(edges, "_s", "_d", dictThreshold = Long.MaxValue))
+      .select(col("_v").as("id"), col("_l").as("comp"))
   }
 
   /** Cluster-aware dedup: keep every row not in any dup cluster plus the
@@ -1170,28 +1107,14 @@ object Dedup {
           .as("dup_ratio"))
   }
 
-  /** Soft dedup — DOWN-WEIGHT near-duplicate clusters instead of
-    * dropping them (the public soft-dedup practice: a k-copy cluster
-    * should contribute about one document's gradient mass in
-    * aggregate, not k× and not zero): every doc gets its
-    * `cluster_size` (1 when un-clustered) and the exact integer
-    * training weight `weight_e6 = 10⁶ div cluster_size`, so a cluster
-    * totals ≈10⁶ regardless of k. Feed `weight_e6` to
-    * [[Sampling.weightedSample]] or export it with the shard manifest.
-    *
-    * `pairs` is any dup-pair table ([[minHashDupPairs]],
-    * [[simHashDupPairs]], exact-fingerprint self-join …); components
-    * come from [[connectedComponents]]. Scale: components/sizes carry
-    * ids only; the join back to `df` is on the id — full rows never
-    * shuffle twice.
-    */
   /** Duplicate-cluster SIZE histogram — the dedup health report
     * ("how much of the corpus is 2-copies vs 1000-copy boilerplate"):
     * `(cluster_size, n_clusters, n_docs)` over the connected dup
     * graph. Docs in no pair are singletons and do not appear (their
     * mass is `|df| − Σ n_docs`, driver arithmetic). Scale shape: the
-    * same min-label CC as every dedup path, then two histogram-sized
-    * aggregations — nothing corpus-scale after the pairs.
+    * [[connectedComponents]] every dedup path uses, then two
+    * histogram-sized aggregations — nothing corpus-scale after the
+    * pairs.
     */
   def clusterSizeHistogram(pairs: DataFrame): DataFrame =
     connectedComponents(pairs)
@@ -1257,13 +1180,13 @@ object Dedup {
       n: Int
   ): DataFrame = {
     require(n >= 1, s"sourceOverlapMatrix: n must be positive, got $n")
-    val pf = df
+    // three consumers of one shingle pass
+    val pf = Materialize.local(df
       .select(col(groupCol).cast("string").as("_g"),
         explode(array_distinct(shingles(col(textCol), n))).as("_s"))
       .filter(col("_g").isNotNull)
       .select(col("_g"), xxhash64(col("_s")).as("_fp"))
-      .distinct()
-      .localCheckpoint() // three consumers of one shingle pass
+      .distinct())
     val sizes = pf.groupBy(col("_g")).agg(count(lit(1)).as("n"))
     val inter = pf.select(col("_fp"), col("_g").as("src_a"))
       .join(pf.select(col("_fp"), col("_g").as("src_b")), Seq("_fp"))
@@ -1278,6 +1201,21 @@ object Dedup {
           .as("containment_ppm"))
   }
 
+  /** Soft dedup — DOWN-WEIGHT near-duplicate clusters instead of
+    * dropping them (the public soft-dedup practice: a k-copy cluster
+    * should contribute about one document's gradient mass in
+    * aggregate, not k× and not zero): every doc gets its
+    * `cluster_size` (1 when un-clustered) and the exact integer
+    * training weight `weight_e6 = 10⁶ div cluster_size`, so a cluster
+    * totals ≈10⁶ regardless of k. Feed `weight_e6` to
+    * [[Sampling.weightedSample]] or export it with the shard manifest.
+    *
+    * `pairs` is any dup-pair table ([[minHashDupPairs]],
+    * [[simHashDupPairs]], exact-fingerprint self-join …); components
+    * come from [[connectedComponents]]. Scale: components/sizes carry
+    * ids only; the join back to `df` is on the id — full rows never
+    * shuffle twice.
+    */
   def softDedupWeights(
       df: DataFrame,
       pairs: DataFrame,

@@ -179,7 +179,7 @@ object Graph {
     * Scale shape: per round, ONE shuffle of the edge list joined to the
     * current ranks (ids + longs, never payloads) and a map-side-combined
     * sum per destination; a materialization cuts the growing iteration
-    * lineage (the [[Dedup.connectedComponents]] discipline). Node and
+    * lineage (every loop in this file does the same). Node and
     * out-degree tables build once. At ≥ `dictThreshold` nodes every
     * round shuffles 8-byte longs only (file-header label-compression
     * contract). Fixed small `iterations` (web-rank practice: a handful
@@ -502,12 +502,12 @@ object Graph {
   /** Synchronous min-label propagation over the undirected
     * simplification of an edge list, a FIXED number of rounds — the
     * depth-bounded community/component labeling a curation pipeline
-    * uses when full connected components ([[Dedup.connectedComponents]]
-    * on dedup edges) is more convergence than the use case needs:
-    * after r rounds every node carries the minimum node id within
-    * undirected distance r, so labels are exact, reproducible set
-    * algebra (and converge to connected components once r reaches the
-    * graph diameter).
+    * uses when full connected components ([[connectedComponentsMin]],
+    * which [[Dedup.connectedComponents]] runs on dup pairs) is more
+    * convergence than the use case needs: after r rounds every node
+    * carries the minimum node id within undirected distance r, so
+    * labels are exact, reproducible set algebra (and converge to
+    * connected components once r reaches the graph diameter).
     *
     *   l₀(v) = v;  l_{k+1}(v) = min(l_k(v), min_{u ∈ N(v)} l_k(u))
     *
@@ -608,6 +608,19 @@ object Graph {
     require(maxRounds >= 1 && maxRounds <= 64,
       s"connectedComponentsMin: maxRounds must be in [1, 64], got $maxRounds")
     val ids = GraphIds(endpoints(edges, srcCol, dstCol), "_s", "_d", dictThreshold)
+    ids.decode(componentsMin(ids, maxRounds), "_v" -> "node", "_l" -> "label")
+      .select(col("node"), col("label"))
+  }
+
+  /** The loop behind [[connectedComponentsMin]], over `ids` built on
+    * `(_s, _d)` endpoints: `(_v, _l)` for every node, `_l` its
+    * component's minimum in the ids' own type — the dictionary longs,
+    * the strings, or whatever type the caller's endpoints carry when
+    * it builds `ids` without a dictionary ([[Dedup.connectedComponents]]
+    * hands it long ids, so its minimum is numeric). Runs [[ccMinRound]]
+    * to convergence and refuses at `maxRounds` (in [1, 64]).
+    */
+  private[graft] def componentsMin(ids: GraphIds, maxRounds: Int = 24): DataFrame = {
     val symL = ids.edges.filter(col("_s") =!= col("_d"))
     val sym = Materialize.local(symL
       .unionByName(symL.select(col("_d").as("_s"), col("_s").as("_d")))
@@ -633,7 +646,7 @@ object Graph {
         "with pointer jumping that indicates malformed input (e.g. unstable " +
         "ids), not an undersized budget; inspect the edge list or raise " +
         "maxRounds knowingly")
-    ids.decode(labels, "_v" -> "node", "_l" -> "label").select(col("node"), col("label"))
+    labels
   }
 
   /** One propagate-and-jump round over encoded labels — factored so the
@@ -657,13 +670,8 @@ object Graph {
 
   /** Order-preserving dense ids for a distinct single-column `_v`
     * STRING frame: `(_v, _id)` with `_id` the 0-based rank of `_v` in
-    * string order — long-min over ids ≡ string-min over values. The
-    * rank rides the range-sampled two-level prefix (the
-    * sortedNeighborhoodPairs machinery): `repartitionByRange` splits
-    * the value order into sampled ranges, local positions come from
-    * `monotonically_increasing_id` over each sorted slice, per-slice
-    * (count, min-id) stats prefix into global offsets — no task ever
-    * sorts more than ~n/buckets values, for any distribution.
+    * string order — long-min over ids ≡ string-min over values
+    * ([[globalRank]] over `_v`).
     */
   private[graft] def orderPreservingIdDict(
       nodes: DataFrame,
@@ -675,31 +683,49 @@ object Graph {
     // fixed-latency tax on every iteration at gate scale)
     val nb = if (buckets > 0) buckets
              else nodes.sparkSession.sessionState.conf.numShufflePartitions
+    globalRank(nodes, nb, Seq("_v"), Seq("_v"), "orderPreservingIdDict")
+      .withColumnRenamed("_rank", "_id")
+  }
+
+  /** The global 0-based rank `_rank` of `df`'s rows in `order` (a total
+    * order: ties would rank arbitrarily), returned lazily with the
+    * `keep` columns. The rank rides a range-sampled two-level prefix:
+    * `repartitionByRange` splits the order into `buckets` sampled
+    * ranges, each range sorts only its own slice, local positions come
+    * from `monotonically_increasing_id` over the sorted slice
+    * (materialized, which freezes partition ids and positions), and
+    * per-slice (count, min-id) stats — at most `buckets` rows — prefix
+    * into global offsets. No task sorts more than ~n/buckets rows, for
+    * any key distribution. `op` names the caller in the tripwire.
+    */
+  private[graft] def globalRank(df: DataFrame, buckets: Int, order: Seq[String],
+      keep: Seq[String], op: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-    // materialized: freezes partition ids + local positions
-    val parted = Materialize.local(nodes
-      .repartitionByRange(nb, col("_v"))
-      .sortWithinPartitions(col("_v"))
-      .select(col("_v"), spark_partition_id().as("_p"),
-        monotonically_increasing_id().as("_mid")))
+    val parted = Materialize.local(df
+      .repartitionByRange(buckets, order.map(col): _*)
+      .sortWithinPartitions(order.map(col): _*)
+      .select(keep.map(col) ++ Seq(spark_partition_id().as("_p"),
+        monotonically_increasing_id().as("_mid")): _*))
     val stats = parted.groupBy(col("_p"))
       .agg(count(lit(1)).as("_c"), min(col("_mid")).as("_m0"),
         max(col("_mid")).as("_m1"))
+      // TRIPWIRE: the offset arithmetic assumes the mono id increments by
+      // exactly 1 per row within a partition. Spark only contracts
+      // monotone-and-unique; if that ever changes, ranks would silently
+      // corrupt — fail loudly instead (a free check in this aggregate)
       .withColumn("_consec", col("_m1") - col("_m0") + 1 === col("_c"))
       .withColumn("_off",
         coalesce(sum(col("_c")).over(w.orderBy("_p")
           .rowsBetween(w.unboundedPreceding, -1)), lit(0L)))
       .select("_p", "_m0", "_off", "_consec")
-    // the same mono-id consecutiveness tripwire sortedNeighborhoodPairs
-    // pins: Spark contracts monotone-and-unique only
     require(stats.filter(!col("_consec")).isEmpty,
-      "orderPreservingIdDict: monotonically_increasing_id was not " +
-        "consecutive within a partition — the local-position arithmetic " +
-        "is invalid on this Spark build; switch to a per-partition " +
-        "row_number before trusting the dictionary")
+      s"$op: monotonically_increasing_id was not consecutive within a " +
+        "partition — the local-position arithmetic is invalid on this " +
+        "Spark build; switch the local rank to a per-partition row_number " +
+        "before trusting its output")
     parted
       .join(broadcast(stats), Seq("_p"))
-      .select(col("_v"), (col("_off") + (col("_mid") - col("_m0"))).as("_id"))
+      .select(keep.map(col) :+ (col("_off") + (col("_mid") - col("_m0"))).as("_rank"): _*)
   }
 
   /** One Katz walk round — factored lazy for the longs-only spec pin:
@@ -803,8 +829,9 @@ object Graph {
     * only (no small-range correction — ln() stays out of compared
     * surfaces by policy); on sets ≪ 2.5m the raw estimate sits at its
     * ~α·m floor (S ≈ m·2⁶² with nearly-all-empty registers), the bias
-    * linear counting corrects — measured and recorded in the README
-    * rather than hidden.
+    * linear counting (`ball{t}_lc_est`) corrects — measured at m = 64 on
+    * the gate lattice: exact balls of 3.0/6.0/8.9 members at depths
+    * 1/2/3 read ~46/48/50 raw.
     */
   private[graft] def anfEstimateSql(m: Int): String =
     s"CAST(CAST('${anfNumLiteral(m)}' AS DECIMAL(38,0)) div " +

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 import org.apache.spark.sql.types.{DecimalType, LongType}
 
 /**
@@ -163,17 +164,16 @@ object Preference {
     // component edges — a non-deterministic input (sampled log) must not
     // yield component labels inconsistent with the ratings they decorate
     // (the bradleyTerryScaledWithTies convention)
-    val slice = comparisons
+    val slice = Materialize.local(comparisons
       .select(col(winnerCol).cast("string").as("_a"),
         col(loserCol).cast("string").as("_b"))
       .filter(col("_a").isNotNull && col("_b").isNotNull &&
-        col("_a") =!= col("_b"))
-      .localCheckpoint()
+        col("_a") =!= col("_b")))
     val ratings = bradleyTerryScaled(slice, "_a", "_b", rounds)
     val e = slice.distinct()
-    val comp = graft.operators.Graph.connectedComponentsMin(e, "_a", "_b")
-      .select(col("node").as("item"), col("label").as("component"))
-      .localCheckpoint() // sizes, total, and the rating join all read it
+    // sizes, total, and the rating join all read it
+    val comp = Materialize.local(Graph.connectedComponentsMin(e, "_a", "_b")
+      .select(col("node").as("item"), col("label").as("component")))
     val sizes = comp.groupBy("component")
       .agg(count(lit(1)).as("component_items"))
     val total = comp.agg(count(lit(1)).as("_n"))

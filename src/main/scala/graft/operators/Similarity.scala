@@ -856,10 +856,11 @@ object Similarity {
     * — `n_hits` = |approx ∩ exact| top-k sets, `recall_ppm` =
     * n_hits·10⁶ div k (exact integer; no doubles in the surface).
     *
-    * Scale shape: centroids broadcast (the assignment is a per-row
-    * argmin over the broadcast matrix — the corpus never shuffles for
-    * it); queries are eval-sized and broadcast to both the bucket
-    * join and the exhaustive scan; per-query sets reduce through the
+    * Scale shape: the centroid matrix rides the plan (the assignment is
+    * [[graft.plans.NearestCentroidE6]], a per-row argmin with ties to
+    * the smaller id — the corpus never shuffles for it); queries are
+    * eval-sized and broadcast to both the bucket join and the
+    * exhaustive scan; per-query sets reduce through the
     * k-bounded heap. The exhaustive reference is one full corpus scan
     * per evaluation — the cost of measuring recall at all; run it on
     * a query SAMPLE, which is what the queries frame is.
@@ -891,22 +892,15 @@ object Similarity {
       k: Int
   ): DataFrame = {
     require(k > 0, s"ivfRecallExactE6: k must be positive, got $k")
-    val cents = broadcast(centroidsE6.select(
-      col("centroid_id").cast(LongType).as("_cid"),
-      col("centroid_e6").as("_c")))
-    // argmin cell by (distance, cell id), carrying the vector along
-    def assign(df: DataFrame, id: String, vec: String): DataFrame =
-      df.crossJoin(cents)
-        .select(col(id), col(vec), col("_cid"),
-          (-negL2E6(col(vec), col("_c"))).as("_d"))
-        .groupBy(id)
-        .agg(min_by(struct(col("_cid"), col(vec)),
-          struct(col("_d"), col("_cid"))).as("_w"))
-        .select(col(id), col("_w._cid").as("_cell"), col(s"_w.$vec").as(vec))
-    val points = assign(corpus.select(col(corpusId).as("neighbor_id"),
-      toE6(col(corpusVec)).as("_a")), "neighbor_id", "_a")
-    val qAssigned = assign(queries.select(col(queryId).as("query_id"),
-      toE6(col(queryVec)).as("_qa")), "query_id", "_qa")
+    // each side's home cell: one narrow projection (ties to the smaller
+    // cell id; a wrong-length or null-element vector has no cell)
+    val cells = collectE6Whole(centroidsE6)
+    val points = corpus.select(col(corpusId).as("neighbor_id"),
+        toE6(col(corpusVec)).as("_a"))
+      .withColumn("_cell", cells.home(col("_a")))
+    val qAssigned = queries.select(col(queryId).as("query_id"),
+        toE6(col(queryVec)).as("_qa"))
+      .withColumn("_cell", cells.home(col("_qa")))
     val approx = nearestE6(cellPairs(broadcast(qAssigned), points, "_cell"), k)
       .select(col("query_id"), col("neighbor_id"))
     val exact = nearestE6(allPairs(broadcast(qAssigned), points), k)

@@ -16,9 +16,10 @@ import org.apache.spark.sql.functions._
   * per-version catalog-table round-trip that is roughly CONSTANT.
   * Small states are therefore dominated by the constant catalog churn
   * (bucketing loses — the measured r15 `er_stream` negative), large
-  * states by the avoided exchange (bucketing wins). The README "when
-  * to bucket" table quotes this tool's numbers; re-run it on your own
-  * box/cluster before flipping a production store.
+  * states by the avoided exchange (bucketing wins). The crossover table
+  * on [[graft.streaming.StreamingOps.versionedBatch]] quotes this
+  * tool's numbers; re-run it on your own box/cluster before flipping a
+  * production store.
   *
   * Usage: `runMain graft.tools.StateBucketAb [rowsCsv] [nBatches]`
   * (defaults: "100000,2000000" and 8). Text/ids are synthesized with

@@ -365,13 +365,21 @@ class DedupSpec extends SparkSpec {
     val comps = Dedup.connectedComponents(pairs)
       .as[(Long, Long)].collect().toMap
     assert(comps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
-    // a 31-node chain needs more rounds than maxIter = 20: refused, not
-    // returned as 11 partial components
+    // a 31-node chain: pointer jumping converges to one component
     val chain = (0L until 30L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val e = intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(chain).collect()
-    }
-    assert(e.getMessage.contains("raise maxIter"), e.getMessage)
+    val chained = Dedup.connectedComponents(chain).as[(Long, Long)].collect()
+    assert(chained.length == 31 && chained.toMap == (0L to 30L).map(_ -> 0L).toMap,
+      chained.toSeq)
+    // the minimum is numeric, not string ("10" < "9")
+    val numeric = Dedup.connectedComponents(
+        Seq((9L, 10L), (10L, 11L)).toDF("id_a", "id_b"))
+      .as[(Long, Long)].collect().toMap
+    assert(numeric == Map(9L -> 9L, 10L -> 9L, 11L -> 9L), numeric.toString)
+    // a pair with a null id contributes no rows
+    val withNull = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (3L, null))
+      .toDF("id_a", "id_b")
+    val nn = Dedup.connectedComponents(withNull).as[(Long, Long)].collect().toMap
+    assert(nn == Map(1L -> 1L, 2L -> 1L), nn.toString)
   }
 
   test("dedupByComponents keeps cluster representatives and untouched rows") {
