@@ -332,7 +332,7 @@ private[graft] object SimilarityGates {
     // ---- streaming IVF-PQ index in RESIDUAL (IVFADC) space: batch 0
     //      trains cells + residual-space codebooks (seeds = residuals
     //      of rows c..2c−1 by id, the batch-gate convention) and
-    //      commits the space as the one-row `meta` artifact; batch 1
+    //      records the space as the one-row `meta` artifact; batch 1
     //      encodes residually against the frozen artifacts; the query
     //      reads the space from `meta` — never from the caller — and
     //      builds its LUTs per probed cell. Oracle = the residual CTE
@@ -461,21 +461,15 @@ private[graft] object SimilarityGates {
       step(drifted, 1L) // measured l1 1.35–1.49e9 across SFs → epoch 1
       val q = emb.filter(col("vec_id") < 3)
         .select(col("vec_id").as("qid"), driftVec(col("embedding")).as("qvec"))
-      val frozen = Similarity.ivfPqRecallE6(drifted, "vec_id", "embedding",
-          s"$work/frozen/codes/v" +
-            StreamingOps.currentVersionId(s, s"$work/frozen/codes").get,
-          StreamingOps.readState(s, s"$work/frozen/cells").get,
-          StreamingOps.readState(s, s"$work/frozen/codebooks").get,
-          q, "qid", "qvec", k = 10, nprobe = 4)
-        .withColumn("variant", lit("frozen"))
-      val e1 = s"$work/state/e1"
-      val retrained = Similarity.ivfPqRecallE6(drifted, "vec_id", "embedding",
-          s"$e1/codes/v0",
-          StreamingOps.readState(s, s"$e1/cells").get,
-          StreamingOps.readState(s, s"$e1/codebooks").get,
-          q, "qid", "qvec", k = 10, nprobe = 4)
-        .withColumn("variant", lit("retrained"))
-      frozen.unionByName(retrained).orderBy("variant", "query_id")
+      def recall(root: String, variant: String): DataFrame = {
+        val ix = StreamingOps.ivfPqIndex(s, root, "pq_retrain_recall")
+        Similarity.ivfPqRecallE6(drifted, "vec_id", "embedding", ix.codesDir,
+            ix.cells, ix.codebooks, q, "qid", "qvec", k = 10, nprobe = 4)
+          .withColumn("variant", lit(variant))
+      }
+      recall(s"$work/frozen", "frozen")
+        .unionByName(recall(s"$work/state/e1", "retrained"))
+        .orderBy("variant", "query_id")
     }),
     // ---- the epoch stream's documented OFFLINE step, exercised: a
     //      retrained epoch's corpus is only the data since its birth —
@@ -483,8 +477,9 @@ private[graft] object SimilarityGates {
     //      backfill re-encodes their ORIGINAL vectors into the epoch's
     //      space (codes are stored, floats are not — history must come
     //      from the caller's corpus). Top-3 ADC rows for 3 raw queries
-    //      against epoch 1 BEFORE the backfill (pinned codes v0 —
-    //      drifted docs only) and AFTER (pre-drift ids retrievable);
+    //      against epoch 1 BEFORE the backfill (its pinned codes
+    //      version — drifted docs only) and AFTER (pre-drift ids
+    //      retrievable);
     //      the second backfill call proves replay idempotence (0 rows).
     //      nprobe = c so the oracle replays pure code arithmetic
     "pq_epoch_backfill" -> ((s, dir) => {
@@ -506,34 +501,33 @@ private[graft] object SimilarityGates {
       step(raw0, 0L)
       step(drifted, 1L) // trips → epoch 1 (drift-trained artifacts)
       val e1 = s"$work/state/e1"
-      val cells = StreamingOps.readState(s, s"$e1/cells").get
-      val cb = StreamingOps.readState(s, s"$e1/codebooks").get
+      val ix = StreamingOps.ivfPqIndex(s, e1, "pq_epoch_backfill")
       val q = emb.filter(col("vec_id") < 3)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      val before = Similarity.ivfPqTopKE6(s"$e1/codes/v0", "vec_id", cells,
-          cb, q, "qid", "qvec", k = 3, nprobe = 4)
-        .withColumn("variant", lit("unbackfilled"))
+      def top3(codesDir: String, variant: String): DataFrame =
+        Similarity.ivfPqTopKE6(codesDir, "vec_id", ix.cells, ix.codebooks,
+            q, "qid", "qvec", k = 3, nprobe = 4)
+          .withColumn("variant", lit(variant))
+      val before = top3(ix.codesDir, "unbackfilled")
       val n1 = StreamingOps.backfillIvfPqEpoch(s, raw0, "vec_id",
         "embedding", s"$work/state")
       val n2 = StreamingOps.backfillIvfPqEpoch(s, raw0, "vec_id",
         "embedding", s"$work/state")
       require(n1 > 0L && n2 == 0L,
         s"pq_epoch_backfill: expected (n, 0) backfill counts, got ($n1, $n2)")
-      val vAfter = StreamingOps.currentVersionId(s, s"$e1/codes").get
-      val after = Similarity.ivfPqTopKE6(s"$e1/codes/v$vAfter", "vec_id",
-          cells, cb, q, "qid", "qvec", k = 3, nprobe = 4)
-        .withColumn("variant", lit("backfilled"))
+      val after = top3(StreamingOps.ivfPqIndex(s, e1, "pq_epoch_backfill").codesDir,
+        "backfilled")
       before.unionByName(after).orderBy("variant", "query_id", "rank")
     }),
     // ---- backfill ↔ LIVE epoch stream composition: drift opens epoch
-    //      1 in-stream, history backfills into it (high bits → 1), a
-    //      NEW stream batch then appends (low bits → 1 under the mask),
-    //      its replay no-ops against the masked guard, and a repeated
-    //      backfill no-ops against the id anti-join — the version
-    //      counter and the stream's batch arithmetic interleaving
-    //      safely is the CONTRACT this gate pins; the final index holds
-    //      history + drift batch + late batch exactly once each, and
-    //      the oracle replays the whole ADC surface over that union
+    //      1 in-stream, history backfills into it (codes v0.1), a NEW
+    //      stream batch then appends (codes v1), its replay no-ops
+    //      against the stream's guard, and a repeated backfill no-ops
+    //      against the id anti-join — the backfill versions and the
+    //      stream's batch ids interleaving safely is the CONTRACT this
+    //      gate pins; the final index holds history + drift batch +
+    //      late batch exactly once each, and the oracle replays the
+    //      whole ADC surface over that union
     "pq_epoch_stream_backfill" -> ((s, dir) => {
       import graft.streaming.StreamingOps
       import graft.operators.Similarity
@@ -561,28 +555,32 @@ private[graft] object SimilarityGates {
       val n1 = StreamingOps.backfillIvfPqEpoch(s, raw0, "vec_id",
         "embedding", s"$work/state")
       require(n1 > 0L, s"pq_epoch_stream_backfill: backfill added $n1 rows")
-      step(late, 2L) // appends into e1 AFTER the backfill bumped high bits
+      step(late, 2L) // appends into e1 on top of the backfill
       val tl = s.read.parquet(s"$work/out/batch=2")
         .select(col("epoch"), col("retrained")).head()
       require(tl.getLong(0) == 1L && !tl.getBoolean(1),
         s"pq_epoch_stream_backfill: batch 2 must APPEND to epoch 1, got $tl")
-      step(late, 2L) // replay: the masked low-bits guard must no-op
+      step(late, 2L) // replay: the stream's guard must no-op
       val e1 = s"$work/state/e1"
-      val v = StreamingOps.currentVersionId(s, s"$e1/codes").get
-      require((v >> 40) == 1L && (v & ((1L << 40) - 1)) == 1L,
-        s"pq_epoch_stream_backfill: codes version must be (backfills=1 | " +
-          s"batch=1), got $v")
+      val ix = StreamingOps.ivfPqIndex(s, e1, "pq_epoch_stream_backfill")
+      val held = s.read.parquet(ix.codesDir)
+        .agg(count(lit(1)), countDistinct(col("vec_id"))).head()
+      val fed = raw0.select("vec_id").unionByName(drifted.select("vec_id"))
+        .unionByName(late.select("vec_id")).count()
+      require(ix.codesVersion == "v1" && held.getLong(0) == fed && held.getLong(1) == fed,
+        s"pq_epoch_stream_backfill: codes must be committed at epoch-local " +
+          s"stream batch 1 and hold history, drift and late batches once each " +
+          s"($fed ids), got ${ix.codesVersion} with ${held.getLong(0)} rows, " +
+          s"${held.getLong(1)} distinct ids")
       // completed-backfill replay stays a no-op even after the stream
       // advanced past it
       val n2 = StreamingOps.backfillIvfPqEpoch(s, raw0, "vec_id",
         "embedding", s"$work/state")
       require(n2 == 0L,
         s"pq_epoch_stream_backfill: replayed backfill must no-op, got $n2")
-      val cells = StreamingOps.readState(s, s"$e1/cells").get
-      val cb = StreamingOps.readState(s, s"$e1/codebooks").get
       val q = emb.filter(col("vec_id") < 3)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      Similarity.ivfPqTopKE6(s"$e1/codes/v$v", "vec_id", cells, cb, q,
+      Similarity.ivfPqTopKE6(ix.codesDir, "vec_id", ix.cells, ix.codebooks, q,
           "qid", "qvec", k = 3, nprobe = 4)
         .orderBy("query_id", "rank")
     }),

@@ -53,7 +53,9 @@ object Graph {
     *  - `strings`: the caller's normalized STRING edge frame,
     *    materialized (a lazy upstream never runs twice);
     *  - `nodeStrings`: the node set `(_v STRING)` over both endpoint
-    *    columns, materialized, and its count `n`;
+    *    columns, materialized, and its count `n`, counted on first
+    *    use — a `Long.MaxValue` threshold turns the dictionary off
+    *    without counting;
     *  - the dictionary gate: at `n ≥ dictThreshold` the
     *    order-preserving long dictionary (materialized — encode and
     *    decode both read it), and `edges` are the encoded edges,
@@ -68,10 +70,16 @@ object Graph {
   private[graft] final class GraphIds private (
       strings: DataFrame,
       val nodeStrings: DataFrame,
-      val n: Long,
-      dict: Option[DataFrame],
+      dictThreshold: Long,
       endpointCols: Seq[String]
   ) {
+    lazy val n: Long = nodeStrings.count()
+
+    private val dict: Option[DataFrame] =
+      if (dictThreshold < Long.MaxValue && n >= dictThreshold)
+        Some(Materialize.local(orderPreservingIdDict(nodeStrings)))
+      else None
+
     val edges: DataFrame =
       dict.fold(strings)(_ => Materialize.local(encode(strings, endpointCols: _*)))
 
@@ -117,11 +125,7 @@ object Graph {
       val nodes = Materialize.local(e.select(col(endpointA).as("_v"))
         .unionByName(e.select(col(endpointB).as("_v")))
         .distinct())
-      val n = nodes.count()
-      val dict =
-        if (n >= dictThreshold) Some(Materialize.local(orderPreservingIdDict(nodes)))
-        else None
-      new GraphIds(e, nodes, n, dict, Seq(endpointA, endpointB))
+      new GraphIds(e, nodes, dictThreshold, Seq(endpointA, endpointB))
     }
   }
 

@@ -249,11 +249,12 @@ object StreamingOps {
     *     and returns the next state, or `None` to commit nothing (a
     *     scoring batch against a frozen reference, an empty first
     *     reference).
-    *  4. The next state is written to `v<batchId>`.
+    *  4. The next state is written to `v<batchId>`, partitioned by
+    *     `partitionCols` when given (the IVF-PQ codes' cell layout).
     *  5. `_CURRENT` is renamed to `v<batchId>` last (FileContext rename
-    *     with OVERWRITE, atomic on HDFS and local), and versions before
-    *     `batchId - 1` are pruned: the committed version and the one
-    *     before it stay, which a pinned-version as-of replay
+    *     with OVERWRITE, atomic on HDFS and local), and versions of
+    *     batches before `batchId - 1` are pruned: the committed version
+    *     and the one before it stay, which a pinned-version as-of replay
     *     ([[applyAsOfEnrichBatch]]) reads.
     *
     * A crash before the rename leaves `_CURRENT` at the previous
@@ -299,7 +300,8 @@ object StreamingOps {
       batchId: Long,
       stateBuckets: Option[Int] = None,
       bucketKeys: Seq[String] = Nil,
-      stateSchema: Option[StructType] = None
+      stateSchema: Option[StructType] = None,
+      partitionCols: Seq[String] = Nil
   )(step: (=> Option[DataFrame]) => Option[DataFrame]): Unit =
     currentVersionId(spark, statePath) match {
       case Some(cur) if cur >= batchId =>
@@ -323,7 +325,9 @@ object StreamingOps {
                 .format("parquet")
                 .saveAsTable(stateTableName(statePath, batchId))
             case None =>
-              next.write.mode("overwrite").parquet(s"$statePath/$version")
+              val w = next.write.mode("overwrite")
+              (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*))
+                .parquet(s"$statePath/$version")
           }
           val keepFrom = batchId - 1
           commitVersion(spark, statePath, version, keepFrom)
@@ -334,13 +338,11 @@ object StreamingOps {
           // long no-op stretches) and a bounded sweep would leak the
           // entries it skips permanently
           if (stateBuckets.isDefined) {
-            val prefix = stateTableName(statePath, 0L).dropRight(1) // "..._v"
+            val prefix = stateTableName(statePath, 0L).dropRight(2) // "..._"
             spark.catalog.listTables().collect()
               .map(_.name)
-              .filter(n => n.startsWith(prefix) &&
-                n.drop(prefix.length).nonEmpty &&
-                n.drop(prefix.length).forall(_.isDigit))
-              .map(n => n.drop(prefix.length).toLong)
+              .filter(_.startsWith(prefix))
+              .flatMap(n => versionBatchId(n.drop(prefix.length)))
               .filter(_ < keepFrom)
               .foreach(g =>
                 spark.sql(s"DROP TABLE IF EXISTS ${stateTableName(statePath, g)}"))
@@ -349,7 +351,7 @@ object StreamingOps {
     }
 
   /** The version name `_CURRENT` points at, if any. */
-  private def currentVersionName(spark: SparkSession, statePath: String): Option[String] = {
+  private[graft] def currentVersionName(spark: SparkSession, statePath: String): Option[String] = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     val cur = new org.apache.hadoop.fs.Path(statePath, "_CURRENT")
@@ -361,20 +363,33 @@ object StreamingOps {
   }
 
   /** The numeric batch id of the committed version, if any. A malformed
-    * pointer (e.g. a bare "v" — note `"".forall(_.isDigit)` is vacuously
-    * true) is treated as absent rather than thrown on.
+    * pointer (e.g. a bare "v") is treated as absent rather than thrown on.
     */
   def currentVersionId(spark: SparkSession, statePath: String): Option[Long] =
-    currentVersionName(spark, statePath)
-      .filter(v => v.length > 1 && v.startsWith("v") && v.drop(1).forall(_.isDigit))
-      .map(_.drop(1).toLong)
+    currentVersionName(spark, statePath).flatMap(versionBatchId)
+
+  private val VersionName = "v([0-9]+)(?:[.]([0-9]+))?".r
+
+  /** The one version-name parser: `v<batchId>` is `(batchId, 0)`, and
+    * `v<batchId>.<n>` is `(batchId, n)`, the n-th [[backfillIvfPqIndex]]
+    * commit on top of stream batch `batchId`. Anything else (a bare "v",
+    * `_CURRENT.tmp`, a stray file) is `None`.
+    */
+  private def parseVersion(name: String): Option[(Long, Long)] = name match {
+    case VersionName(id, n) => Some((id.toLong, Option(n).fold(0L)(_.toLong)))
+    case _ => None
+  }
+
+  private def versionBatchId(name: String): Option[Long] = parseVersion(name).map(_._1)
 
   /** Resolve the current state version via the `_CURRENT` pointer. */
   def readState(spark: SparkSession, statePath: String): Option[DataFrame] =
     currentVersionName(spark, statePath)
       .map(version => spark.read.parquet(s"$statePath/$version"))
 
-  /** Atomically point `_CURRENT` at `version`; prune versions < keepFrom. */
+  /** Atomically point `_CURRENT` at `version`; prune the versions of
+    * batches before `keepFrom`.
+    */
   private def commitVersion(
       spark: SparkSession, statePath: String, version: String, keepFrom: Long): Unit = {
     import org.apache.hadoop.fs.{FileContext, Options, Path}
@@ -387,9 +402,7 @@ object StreamingOps {
     fc.rename(tmp, new Path(statePath, "_CURRENT"), Options.Rename.OVERWRITE)
     val fs = org.apache.hadoop.fs.FileSystem.get(conf)
     fs.listStatus(new Path(statePath)).foreach { st =>
-      val n = st.getPath.getName
-      if (n.length > 1 && n.startsWith("v") && n.drop(1).forall(_.isDigit) &&
-          n.drop(1).toLong < keepFrom)
+      if (versionBatchId(st.getPath.getName).exists(_ < keepFrom))
         fs.delete(st.getPath, true)
     }
   }
@@ -1903,25 +1916,35 @@ object StreamingOps {
   /** One micro-batch of STREAMING IVF-PQ index maintenance — the
     * composed-index sibling of [[applyAnnIndexBatch]], maintaining the
     * [[graft.operators.Similarity.buildIvfPqIndex]] layout
-    * continuously. Batch 0 trains and FREEZES the two model artifacts
-    * from its own rows — coarse cells = the e6 vectors of the `c`
-    * SMALLEST-id rows (deterministic, engine-replayable seeding) and
-    * PQ codebooks = one exact k-means step per subspace over batch 0
-    * against those seeds — so every later batch encodes against
-    * identical artifacts (the drift-reference protocol; replays
-    * no-op). Each batch then runs the ONE-pass narrow encode
-    * ([[graft.operators.Similarity.ivfPqEncode]]: m subspace argmins +
-    * the coarse argmin, m bytes of payload per vector, floats never
-    * stored) and commits old ∪ new codes as the next version, WRITTEN
-    * PARTITIONED BY CELL so the committed version serves
-    * [[queryIvfPqIndex]]'s physically-pruned probe directly.
+    * continuously. The index at `statePath` is one [[versionedBatch]]
+    * store, `codes`, with three batch-0 artifacts beside it:
+    *
+    *  - `cells`: the coarse cells, the e6 vectors of batch 0's `c`
+    *    SMALLEST-id rows;
+    *  - `codebooks`: one exact k-means step per subspace over batch 0
+    *    against those seeds;
+    *  - `meta`: one row, the `residual` flag every code is encoded with.
+    *
+    * Batch 0 (no committed codes; a later first batch is refused)
+    * trains the artifacts and writes them as batch outputs: plain
+    * overwritten directories, written before the codes version, so they
+    * are complete whenever `codes/_CURRENT` names a version, and no
+    * reader ([[ivfPqIndex]]) looks at them before. Training is integer
+    * e6 math seeded by the smallest ids, so the replay of a batch 0 torn
+    * anywhere rewrites them bit-identically. Every batch then runs the
+    * ONE-pass narrow encode ([[graft.operators.Similarity.ivfPqEncode]]:
+    * m subspace argmins + the coarse argmin, m bytes of payload per
+    * vector, floats never stored) against the frozen artifacts and
+    * commits old ∪ new codes as `codes/v<batchId>`, WRITTEN PARTITIONED
+    * BY CELL so the committed version serves [[queryIvfPqIndex]]'s
+    * physically-pruned probe directly.
     *
     * Appends are append-only — re-ingested ids are the caller's to
     * dedup (compose with [[applyDedupBatch]], the
-    * [[applyAnnIndexBatch]] contract). The versioned rewrite is the
-    * cumulative-store trade every index stream here makes; a
-    * Delta/Iceberg append swaps in at real scale without touching the
-    * protocol.
+    * [[applyAnnIndexBatch]] contract), or a [[backfillIvfPqIndex]]'s
+    * anti-join. The versioned rewrite is the cumulative-store trade
+    * every index stream here makes; a Delta/Iceberg append swaps in at
+    * real scale without touching the protocol.
     *
     * `residual = true` trains and encodes the classic-IVFADC way
     * ([[graft.operators.Similarity.ivfPqEncode]]'s flag): batch 0's
@@ -1929,13 +1952,11 @@ object StreamingOps {
     * deterministic residual seeds — the residuals of the NEXT `c`
     * smallest-id rows after the cells (the cells' own residuals are
     * zero, degenerate seeds) — and every batch's codes quantize
-    * residuals. The choice is a BATCH-0 TRAINING DECISION, so it
-    * commits as a one-row `meta` artifact next to cells/codebooks;
-    * later batches and [[queryIvfPqIndex]] read it back — an index
-    * can never be silently encoded in one space and probed in the
-    * other. Later-batch calls must pass the committed flag (loud
-    * refusal otherwise); states written before `meta` existed read as
-    * `residual = false` (the only layout that code produced).
+    * residuals. The choice is a batch-0 training decision, so `meta`
+    * records it; later batches and [[queryIvfPqIndex]] read it back —
+    * an index can never be silently encoded in one space and probed in
+    * the other. Later-batch calls must pass the recorded flag (loud
+    * refusal otherwise).
     */
   def applyIvfPqIndexBatch(
       spark: SparkSession,
@@ -1948,138 +1969,113 @@ object StreamingOps {
       statePath: String,
       residual: Boolean = false
   ): Unit = {
-    import graft.operators.Similarity
     require(c >= 1, s"ivfPqIndexStream: c must be >= 1, got $c")
     require(m >= 1, s"ivfPqIndexStream: m must be >= 1, got $m")
-    require(batchId >= 0 && batchId < IvfPqLocalMask,
-      s"ivfPqIndexStream: batchId must be in [0, 2^40-1) — the all-ones " +
-        s"low-bits value is reserved (it is indistinguishable from the " +
-        s"mask itself in version arithmetic) — got $batchId")
-    val cellsPath = s"$statePath/cells"
-    val cbPath = s"$statePath/codebooks"
-    val codesPath = s"$statePath/codes"
-    // codes version = (backfill count << 40) | stream batch id: the two
-    // writers share ONE atomic pointer (see [[backfillIvfPqIndex]]), so
-    // the stream's replay arithmetic masks the low bits and a backfill
-    // bumps the high bits — neither can collide with or silently skip
-    // the other, and _CURRENT stays the single commit point
-    currentVersionId(spark, codesPath) match {
-      case Some(cur) if (cur & IvfPqLocalMask) >= batchId =>
-        log.warn(s"ivfPqIndexStream: skipping batch $batchId — codes at " +
-          s"v$cur already include it")
-      case _ =>
-        if (currentVersionId(spark, cellsPath).isEmpty) {
+    val op = "ivfPqIndexStream"
+    versionedBatch(spark, op, s"$statePath/codes", batchId,
+        partitionCols = Seq("centroid_id")) { state =>
+      val ix = state match {
+        case None =>
           require(batchId == 0L,
-            s"ivfPqIndexStream: no committed artifacts at batch $batchId — batch 0 trains them")
-          val seeds = batch
-            .select(col(idCol).as("centroid_id"), col(vecCol).as("centroid_vec"))
-            .orderBy(col("centroid_id")).limit(c)
-          val cells = seeds.select(col("centroid_id"),
-            transform(col("centroid_vec"),
-              v => floor(v.cast("double") * 1000000d).cast("long"))
-              .as("centroid_e6"))
-          val cb = if (!residual) {
-            Similarity.pqCodebooksFromSums(
-              Similarity.pqTrainSumsE6(batch, idCol, vecCol, seeds, m))
-          } else {
-            // residual seeds: rows c..2c−1 by id — deterministic and
-            // engine-replayable like the cells themselves; a batch too
-            // small to provide them cannot train residually
-            val headIds = batch
-              .select(col(idCol).cast(org.apache.spark.sql.types.LongType))
-              .orderBy(col(idCol)).limit(2 * c).collect().map(_.getLong(0))
-            require(headIds.length == 2 * c,
-              s"ivfPqIndexStream: residual training needs >= ${2 * c} rows " +
-                s"in batch 0 (c cells + c residual seeds), got ${headIds.length}")
-            val seedIds = headIds.drop(c)
-            val resSeeds = Similarity.ivfResidualsE6(
-                batch, idCol, vecCol, cells)
-              .filter(col(idCol).cast(org.apache.spark.sql.types.LongType)
-                .isin(seedIds: _*))
-              .select(col(idCol).as("centroid_id"),
-                col("residual_e6").as("centroid_e6"))
-            Similarity.pqCodebooksFromSums(
-              Similarity.pqTrainSumsResidualE6(
-                batch, idCol, vecCol, cells, resSeeds, m))
-          }
-          cells.write.mode("overwrite").parquet(s"$cellsPath/v0")
-          commitVersion(spark, cellsPath, "v0", keepFrom = 0L)
-          cb.write.mode("overwrite").parquet(s"$cbPath/v0")
-          commitVersion(spark, cbPath, "v0", keepFrom = 0L)
-          import spark.implicits._
-          Seq(residual).toDF("residual")
-            .write.mode("overwrite").parquet(s"$statePath/meta/v0")
-          commitVersion(spark, s"$statePath/meta", "v0", keepFrom = 0L)
-        } else {
-          val stored = ivfPqMetaResidual(spark, statePath)
-          require(residual == stored,
-            s"ivfPqIndexStream: the index at $statePath was trained with " +
-              s"residual=$stored — batch $batchId passed residual=$residual; " +
+            s"$op: no committed codes at batch $batchId — batch 0 trains the index")
+          trainIvfPq(spark, batch, idCol, vecCol, c, m, statePath, residual)
+        case Some(_) =>
+          val ix = ivfPqIndex(spark, statePath, op)
+          require(residual == ix.residual,
+            s"$op: the index at $statePath was trained with " +
+              s"residual=${ix.residual} — batch $batchId passed residual=$residual; " +
               "codes must all live in one space (pass the committed flag, " +
               "or train a fresh index)")
-        }
-        val cells = readState(spark, cellsPath).getOrElse(
-          sys.error(s"ivfPqIndexStream: _CURRENT exists but no cells at $cellsPath"))
-        val cb = readState(spark, cbPath).getOrElse(
-          sys.error(s"ivfPqIndexStream: _CURRENT exists but no codebooks at $cbPath"))
-        val encoded = Similarity.ivfPqEncode(
-          batch.select(col(idCol), col(vecCol)), idCol, vecCol, cells, cb,
-          residual)
-        val curOpt = currentVersionId(spark, codesPath)
-        val merged = curOpt match {
-          // partition-dir values read back as the inferred type;
-          // normalize to the encoder's BIGINT before the union
-          case Some(v) => spark.read.parquet(s"$codesPath/v$v")
-            .withColumn("centroid_id",
-              col("centroid_id").cast(org.apache.spark.sql.types.LongType))
-            .unionByName(encoded)
-          case None => encoded
-        }
-        // no checkpoint before the write: the union is consumed exactly
-        // once (by the write action below, into a DIFFERENT version dir
-        // than the one it reads), so an eager materialization here was a
-        // full extra pass over the codes per batch — measured r16
-        val high = curOpt.map(_ >> IvfPqBackfillShift).getOrElse(0L)
-        val newVer = (high << IvfPqBackfillShift) | batchId
-        merged.write.mode("overwrite").partitionBy("centroid_id")
-          .parquet(s"$codesPath/v$newVer")
-        commitVersion(spark, codesPath, s"v$newVer", keepFrom = newVer - 1)
+          ix
+      }
+      val encoded = graft.operators.Similarity.ivfPqEncode(
+        batch.select(col(idCol), col(vecCol)), idCol, vecCol, ix.cells, ix.codebooks,
+        residual)
+      // partition-dir values read back as the inferred type; normalize
+      // to the encoder's BIGINT before the union
+      Some(state.fold(encoded)(_.withColumn("centroid_id", col("centroid_id").cast(LongType))
+        .unionByName(encoded)))
     }
   }
 
-  /** Codes-version layout shared by the IVF-PQ stream and its backfill:
-    * low 40 bits = stream batch id (epoch-local for the epoched tree),
-    * high bits = completed-backfill count. One number, one `_CURRENT`
-    * pointer. The bit split prevents version-NUMBER collisions between
-    * the two writers; it does NOT make concurrent writes safe — each
-    * writer merges from the version it read, so whichever renames last
-    * would drop the other's rows. The stream is the primary writer;
-    * [[backfillIvfPqIndex]] re-checks the pointer against its read
-    * version immediately before commit and refuses on movement, which
-    * reduces the torn window to the rename itself — operationally,
-    * pause the stream during a backfill.
+  /** Batch 0 of [[applyIvfPqIndexBatch]]: train `cells`, `codebooks`
+    * and `meta` from `batch` and overwrite them under `statePath`.
+    * Returns the index as batch 0 is about to commit it.
     */
-  private[graft] val IvfPqBackfillShift: Int = 40
-  private[graft] val IvfPqLocalMask: Long = (1L << IvfPqBackfillShift) - 1
+  private def trainIvfPq(
+      spark: SparkSession,
+      batch: DataFrame,
+      idCol: String,
+      vecCol: String,
+      c: Int,
+      m: Int,
+      statePath: String,
+      residual: Boolean
+  ): IvfPqIndex = {
+    import graft.operators.Similarity
+    import spark.implicits._
+    val seeds = batch
+      .select(col(idCol).as("centroid_id"), col(vecCol).as("centroid_vec"))
+      .orderBy(col("centroid_id")).limit(c)
+    val cells = seeds.select(col("centroid_id"),
+      transform(col("centroid_vec"), v => floor(v.cast("double") * 1000000d).cast("long"))
+        .as("centroid_e6"))
+    val cb = if (!residual) {
+      Similarity.pqCodebooksFromSums(Similarity.pqTrainSumsE6(batch, idCol, vecCol, seeds, m))
+    } else {
+      // residual seeds: rows c..2c−1 by id — deterministic and
+      // engine-replayable like the cells themselves; a batch too small
+      // to provide them cannot train residually
+      val headIds = batch.select(col(idCol).cast(LongType))
+        .orderBy(col(idCol)).limit(2 * c).collect().map(_.getLong(0))
+      require(headIds.length == 2 * c,
+        s"ivfPqIndexStream: residual training needs >= ${2 * c} rows " +
+          s"in batch 0 (c cells + c residual seeds), got ${headIds.length}")
+      val resSeeds = Similarity.ivfResidualsE6(batch, idCol, vecCol, cells)
+        .filter(col(idCol).cast(LongType).isin(headIds.drop(c): _*))
+        .select(col(idCol).as("centroid_id"), col("residual_e6").as("centroid_e6"))
+      Similarity.pqCodebooksFromSums(
+        Similarity.pqTrainSumsResidualE6(batch, idCol, vecCol, cells, resSeeds, m))
+    }
+    Seq("cells" -> cells, "codebooks" -> cb, "meta" -> Seq(residual).toDF("residual"))
+      .foreach { case (name, df) => df.write.mode("overwrite").parquet(s"$statePath/$name") }
+    new IvfPqIndex(spark, statePath, "v0")
+  }
 
-  /** The committed code-space flag of an [[applyIvfPqIndexBatch]]
-    * index: true ⇔ codes quantize residuals. States written before
-    * the `meta` artifact existed read as raw-space (the only layout
-    * that code produced).
+  /** An [[applyIvfPqIndexBatch]] index as committed at `root`: the codes
+    * version `_CURRENT` names and the three batch-0 artifacts beside it,
+    * each read on first use. [[ivfPqIndex]] hands one out only when a
+    * codes version is committed, so its artifacts are never those of a
+    * torn batch 0.
     */
-  private def ivfPqMetaResidual(spark: SparkSession, statePath: String): Boolean =
-    readState(spark, s"$statePath/meta")
-      .map(_.select(col("residual")).head().getBoolean(0))
-      .getOrElse(false)
+  private[graft] final class IvfPqIndex private[StreamingOps] (
+      spark: SparkSession, root: String, val codesVersion: String) {
+    /** The committed codes directory, partitioned by `centroid_id`. */
+    val codesDir: String = s"$root/codes/$codesVersion"
+    lazy val cells: DataFrame = spark.read.parquet(s"$root/cells")
+    lazy val codebooks: DataFrame = spark.read.parquet(s"$root/codebooks")
+    /** True iff the codes quantize residuals (the `meta` row). */
+    lazy val residual: Boolean =
+      spark.read.parquet(s"$root/meta").select(col("residual")).head().getBoolean(0)
+  }
+
+  /** The committed [[IvfPqIndex]] at `statePath` — the one way serving,
+    * monitoring, backfill and the later index batches read an index.
+    * Refuses, naming `op`, when no codes version is committed.
+    */
+  private[graft] def ivfPqIndex(spark: SparkSession, statePath: String, op: String): IvfPqIndex =
+    currentVersionName(spark, s"$statePath/codes").filter(parseVersion(_).isDefined)
+      .map(new IvfPqIndex(spark, statePath, _))
+      .getOrElse(sys.error(s"$op: no committed codes under $statePath"))
 
   /** ADC top-k against the COMMITTED streaming IVF-PQ index
-    * ([[applyIvfPqIndexBatch]]) — frozen cells + codebooks, latest
-    * codes version, served through the physically-pruned
+    * ([[applyIvfPqIndexBatch]]) — frozen cells + codebooks, the
+    * committed codes version, served through the physically-pruned
     * [[graft.operators.Similarity.ivfPqTopKE6]] probe (the committed
     * version directory IS the cell-partitioned layout). The code
-    * space (raw vs residual) comes from the committed `meta`
-    * artifact, never from the caller — queries always measure in the
-    * space the codes live in.
+    * space (raw vs residual) comes from the `meta` artifact, never
+    * from the caller — queries always measure in the space the codes
+    * live in.
     */
   def queryIvfPqIndex(
       spark: SparkSession,
@@ -2091,37 +2087,42 @@ object StreamingOps {
       k: Int,
       nprobe: Int
   ): DataFrame = {
-    val cells = readState(spark, s"$statePath/cells").getOrElse(
-      sys.error(s"queryIvfPqIndex: no committed cells under $statePath"))
-    val cb = readState(spark, s"$statePath/codebooks").getOrElse(
-      sys.error(s"queryIvfPqIndex: no committed codebooks under $statePath"))
-    val curId = currentVersionId(spark, s"$statePath/codes").getOrElse(
-      sys.error(s"queryIvfPqIndex: no committed codes under $statePath"))
-    graft.operators.Similarity.ivfPqTopKE6(
-      s"$statePath/codes/v$curId", idCol, cells, cb,
-      queries, queryId, queryVec, k, nprobe,
-      residual = ivfPqMetaResidual(spark, statePath))
+    val ix = ivfPqIndex(spark, statePath, "queryIvfPqIndex")
+    graft.operators.Similarity.ivfPqTopKE6(ix.codesDir, idCol, ix.cells, ix.codebooks,
+      queries, queryId, queryVec, k, nprobe, residual = ix.residual)
+  }
+
+  /** The `epochs` store of [[applyIvfPqEpochBatch]]: one row
+    * `(epoch, since_batch)`. Read with it, the pointer skips parquet
+    * schema inference.
+    */
+  private val IvfPqEpochSchema: StructType = StructType(Seq(
+    StructField("epoch", LongType), StructField("since_batch", LongType)))
+
+  private def epochPointer(pointer: DataFrame): (Long, Long) = {
+    val r = pointer.select(col("epoch"), col("since_batch")).head()
+    (r.getLong(0), r.getLong(1))
   }
 
   /** One micro-batch of EPOCHED IVF-PQ index maintenance — the CONSUMER
-    * of the codebook-drift retrain flag ([[applyPqDriftBatch]] emits it;
-    * nothing acted on it before this): [[applyIvfPqIndexBatch]] freezes
-    * cells + codebooks at its batch 0 forever, so under real
-    * distribution drift recall decays with no error anywhere. This
-    * orchestrator keeps EPOCH GENERATIONS of that exact index:
+    * of the codebook-drift retrain flag ([[applyPqDriftBatch]] emits it):
+    * [[applyIvfPqIndexBatch]] freezes cells + codebooks at its batch 0
+    * forever, so under real distribution drift recall decays with no
+    * error anywhere. This op keeps EPOCH GENERATIONS of that exact
+    * index:
     *
-    *  - epoch g is a complete [[applyIvfPqIndexBatch]] state tree at
-    *    `statePath/e<g>` (cells/codebooks/meta/codes, each under the
-    *    `_CURRENT` protocol), maintained with EPOCH-LOCAL batch ids
+    *  - epoch g is a complete [[applyIvfPqIndexBatch]] index at
+    *    `statePath/e<g>`, maintained with EPOCH-LOCAL batch ids
     *    `batchId − since_batch` — the epoch's birth batch is its own
-    *    training batch 0, so the frozen-artifact machinery, its replay
-    *    guards, and the residual `meta` contract are reused verbatim;
-    *  - the committed pointer `statePath/epochs` holds one row
-    *    `(epoch, since_batch)`;
+    *    training batch 0, so the frozen-artifact training, the codes
+    *    store and the residual `meta` contract are reused verbatim;
+    *  - `statePath/epochs` is this op's [[versionedBatch]] store: the
+    *    one-row pointer `(epoch, since_batch)`, committed on every
+    *    non-empty batch;
     *  - each epoch carries its own drift reference `e<g>/driftref`:
     *    the birth batch's cell-occupancy histogram against the epoch's
     *    OWN cells (the [[applyPqDriftBatch]] reference protocol,
-    *    per-epoch).
+    *    per-epoch), written at the birth like the index artifacts.
     *
     * Per batch: assign the batch to the current epoch's cells (the
     * same narrow argmin projection the index uses — vectors never
@@ -2137,27 +2138,24 @@ object StreamingOps {
     *    batch too small to train refuses loudly, the
     *    [[applyIvfPqIndexBatch]] contract) and becomes the new
     *    epoch's first codes; its occupancy against the NEW cells
-    *    commits as the new epoch's drift reference, so the monitor
-    *    measures each epoch against the distribution it was trained
-    *    on.
+    *    is the new epoch's drift reference, so the monitor measures
+    *    each epoch against the distribution it was trained on.
     *
-    * Old epochs remain fully servable — [[queryIvfPqEpoch]] pins any
-    * epoch — and vectors are never re-encoded implicitly (codes, not
-    * floats, are stored): re-encoding history into a new epoch is the
-    * explicit offline [[backfillIvfPqEpoch]] job, not a steady-state
-    * cost.
+    * Epoch 0 opens at the first non-empty batch. Old epochs remain
+    * fully servable — [[queryIvfPqEpoch]] pins any epoch — and vectors
+    * are never re-encoded implicitly (codes, not floats, are stored):
+    * re-encoding history into a new epoch is the explicit offline
+    * [[backfillIvfPqEpoch]] job, not a steady-state cost.
     *
     * One timeline row `(epoch, n_ref, n_cur, l1_e9, retrained)` writes
-    * to `outPath/batch=<id>` per non-empty batch. Crash-replay: the
-    * append path writes the timeline row BEFORE the codes commit (the
-    * documented output-first order), and the retrain path commits the
-    * `epochs` pointer LAST — a torn retrain replays into the same
-    * drift compare, re-trips, and every re-done step is an idempotent
-    * overwrite or an internal-guard no-op, so the state converges
-    * bit-identically. A replayed committed batch no-ops under the
-    * epoch pointer + the epoch's codes version; empty batches skip
+    * to `outPath/batch=<id>` per non-empty batch; an empty batch skips
     * loudly (nothing to compare or encode — the [[applyPqDriftBatch]]
-    * guard).
+    * guard) and commits nothing. Crash-replay is the [[versionedBatch]]
+    * protocol: the epoch's index batch, its drift reference and the
+    * timeline row are outputs written before the pointer commits, so a
+    * torn batch replays into the same drift compare against the same
+    * committed pointer, and the nested index batch it repeats is
+    * skipped by the index's own guard once its codes are committed.
     */
   def applyIvfPqEpochBatch(
       spark: SparkSession,
@@ -2176,90 +2174,59 @@ object StreamingOps {
     import spark.implicits._
     require(retrainThresholdE9 >= 0,
       s"ivfPqEpochStream: retrainThresholdE9 must be >= 0, got $retrainThresholdE9")
-    val epochsPath = s"$statePath/epochs"
+    val op = "ivfPqEpochStream"
     def epochPath(g: Long) = s"$statePath/e$g"
     // the index's own exact-argmin cell assignment, reduced to the
     // ≤ c-row occupancy histogram (the applyPqDriftBatch projection)
-    def occAgainst(cellsPath: String): DataFrame = {
-      val cells = readState(spark, cellsPath).getOrElse(
-        sys.error(s"ivfPqEpochStream: no committed cells at $cellsPath"))
-      Similarity.ivfResidualsE6(batch, idCol, vecCol, cells)
+    def occAgainst(g: Long): DataFrame =
+      Similarity.ivfResidualsE6(batch, idCol, vecCol, ivfPqIndex(spark, epochPath(g), op).cells)
         .groupBy(col("centroid_id").as("bucket"))
         .agg(count(lit(1)).as("cnt"))
-    }
-    def writeTimeline(g: Long, nRef: Long, nCur: Long, l1: Long,
-        retrained: Boolean): Unit =
-      Seq((g, nRef, nCur, l1, retrained))
-        .toDF("epoch", "n_ref", "n_cur", "l1_e9", "retrained")
-        .coalesce(1).write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-    // open epoch g at this batch: train + first codes (internal guards
-    // make a torn replay a no-op), commit the epoch's drift reference,
-    // write the timeline row, and point `epochs` at the new generation
-    // LAST — the replay guard's trigger is the final effect
-    def openEpoch(g: Long, nRef: Long, nCur: Long, l1: Long,
-        retrained: Boolean): Unit = {
-      val ep = epochPath(g)
-      applyIvfPqIndexBatch(spark, batch, 0L, idCol, vecCol, c, m, ep, residual)
-      occAgainst(s"$ep/cells")
-        .coalesce(1).write.mode("overwrite").parquet(s"$ep/driftref/v0")
-      commitVersion(spark, s"$ep/driftref", "v0", keepFrom = 0L)
-      writeTimeline(g, nRef, nCur, l1, retrained)
-      Seq((g, batchId)).toDF("epoch", "since_batch")
-        .coalesce(1).write.mode("overwrite").parquet(s"$epochsPath/v$batchId")
-      commitVersion(spark, epochsPath, s"v$batchId", keepFrom = batchId)
-    }
-    val st = readState(spark, epochsPath)
-      .map(_.select(col("epoch"), col("since_batch")).head())
-      .map(r => (r.getLong(0), r.getLong(1)))
-    st match {
-      case Some((_, since)) if batchId < since =>
-        log.warn(s"ivfPqEpochStream: batch $batchId predates the current " +
-          s"epoch (since_batch $since) — replay no-op")
-      case Some((g, since)) if currentVersionId(spark,
-          s"${epochPath(g)}/codes")
-          .exists(v => (v & IvfPqLocalMask) >= batchId - since) =>
-        log.warn(s"ivfPqEpochStream: skipping batch $batchId — epoch $g " +
-          "codes already include it")
-      case _ if batch.isEmpty =>
-        log.warn(s"ivfPqEpochStream: batch $batchId is empty — nothing to " +
-          (if (st.isEmpty) "open an epoch from" else "compare or encode"))
-      case None =>
-        // epoch 0 opens at the first non-empty batch; there is no prior
-        // reference, so the compare columns are zero by definition
-        openEpoch(0L, 0L, 0L, 0L, retrained = false)
-      case Some((g, since)) =>
-        val ref = readState(spark, s"${epochPath(g)}/driftref").getOrElse(
-          sys.error(s"ivfPqEpochStream: epoch $g has no drift reference — " +
-            "the epoch birth was torn before its reference commit; replay " +
-            "the birth batch"))
-        val d = ImportanceScoring.l1Drift(
-          ImportanceScoring.driftFromHistograms(ref,
-            occAgainst(s"${epochPath(g)}/cells"))).head()
-        val (nRef, nCur, l1) = (d.getLong(0), d.getLong(1), d.getLong(2))
-        if (l1 >= retrainThresholdE9) {
-          openEpoch(g + 1, nRef, nCur, l1, retrained = true)
-        } else {
-          writeTimeline(g, nRef, nCur, l1, retrained = false)
-          applyIvfPqIndexBatch(spark, batch, batchId - since, idCol, vecCol,
-            c, m, epochPath(g), residual)
+    versionedBatch(spark, op, s"$statePath/epochs", batchId,
+        stateSchema = Some(IvfPqEpochSchema)) { state =>
+      if (batch.isEmpty) {
+        log.warn(s"$op: batch $batchId is empty — nothing to compare or encode")
+        None
+      } else {
+        val pointer = state.map(epochPointer)
+        // (epoch, since_batch) this batch lands in, and its drift
+        // compare; the first epoch has no reference, so its compare
+        // columns are zero by definition
+        val ((g, since), (nRef, nCur, l1)) = pointer match {
+          case None => ((0L, batchId), (0L, 0L, 0L))
+          case Some((g, since)) =>
+            val d = ImportanceScoring.l1Drift(ImportanceScoring.driftFromHistograms(
+              spark.read.parquet(s"${epochPath(g)}/driftref"), occAgainst(g))).head()
+            val l1 = d.getLong(2)
+            (if (l1 >= retrainThresholdE9) (g + 1, batchId) else (g, since),
+              (d.getLong(0), d.getLong(1), l1))
         }
+        applyIvfPqIndexBatch(spark, batch, batchId - since, idCol, vecCol, c, m,
+          epochPath(g), residual)
+        if (since == batchId)
+          occAgainst(g).coalesce(1).write.mode("overwrite").parquet(s"${epochPath(g)}/driftref")
+        Seq((g, nRef, nCur, l1, pointer.exists(_._1 != g)))
+          .toDF("epoch", "n_ref", "n_cur", "l1_e9", "retrained")
+          .coalesce(1).write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+        Some(Seq((g, since)).toDF("epoch", "since_batch").coalesce(1))
+      }
     }
   }
 
-  /** OFFLINE history backfill into an [[applyIvfPqIndexBatch]] tree —
-    * the explicit re-encode step the epoch stream documents but never
-    * ran: codes, not vectors, are stored, so data indexed under old
-    * epochs never enters a new epoch's space by itself. This job takes
-    * the ORIGINAL vectors (the caller reads its corpus — the store
-    * cannot reconstruct them from codes), drops every id the target
-    * index already holds (one anti-join — replaying the job, or feeding
+  /** OFFLINE history backfill into an [[applyIvfPqIndexBatch]] index —
+    * the explicit re-encode step the epoch stream documents: codes,
+    * not vectors, are stored, so data indexed under old epochs never
+    * enters a new epoch's space by itself. This job takes the ORIGINAL
+    * vectors (the caller reads its corpus — the store cannot
+    * reconstruct them from codes), drops every id the target index
+    * already holds (one anti-join — replaying the job, or feeding
     * overlapping history slices, appends nothing twice), encodes the
-    * remainder in the index's OWN committed space (cells + codebooks +
-    * the `meta` residual flag), and commits the union as the next codes
-    * version with the BACKFILL COUNTER in the version's high bits
-    * ([[IvfPqBackfillShift]]) — the stream's batch arithmetic masks
-    * those bits, so stream replays still skip and new stream batches
-    * still append after any number of backfills.
+    * remainder in the index's OWN space (cells + codebooks + the `meta`
+    * residual flag), and commits the union as codes version
+    * `v<batchId>.<n>`: the n-th backfill on top of committed stream
+    * batch `batchId`. The version still parses to `batchId`, so stream
+    * replays still skip and new stream batches still append after any
+    * number of backfills.
     *
     * Crash-replay: the codes `_CURRENT` rename is the ONLY commit; a
     * torn run (directory written, pointer unmoved) replays into the
@@ -2268,6 +2235,13 @@ object StreamingOps {
     * replays into an empty anti-join and no-ops. History ids must be
     * unique (refused loudly — two vectors under one id cannot both
     * enter an index keyed on it).
+    *
+    * One writer at a time: a backfill and a stream batch each merge
+    * from the version they read, so whichever renames last would drop
+    * the other's rows. The backfill re-checks the pointer against the
+    * version it read immediately before its commit and refuses on
+    * movement, which narrows the torn window to the rename itself —
+    * operationally, pause the stream during a backfill.
     *
     * Scale shape: one anti-join on the id column + one narrow encode of
     * the genuinely-missing slice; vectors shuffle once (the encode's
@@ -2281,58 +2255,42 @@ object StreamingOps {
       vecCol: String,
       statePath: String
   ): Long = {
-    import graft.operators.Similarity
+    val op = "backfillIvfPqIndex"
+    val ix = ivfPqIndex(spark, statePath, op)
     val codesPath = s"$statePath/codes"
-    val curVer = currentVersionId(spark, codesPath).getOrElse(
-      sys.error(s"backfillIvfPqIndex: no committed codes under $statePath — " +
-        "an index must exist (and have trained artifacts) before history " +
-        "can be re-encoded into its space"))
-    val cells = readState(spark, s"$statePath/cells").getOrElse(
-      sys.error(s"backfillIvfPqIndex: no committed cells under $statePath"))
-    val cb = readState(spark, s"$statePath/codebooks").getOrElse(
-      sys.error(s"backfillIvfPqIndex: no committed codebooks under $statePath"))
-    val cur = spark.read.parquet(s"$codesPath/v$curVer")
-      .withColumn("centroid_id",
-        col("centroid_id").cast(org.apache.spark.sql.types.LongType))
-      .localCheckpoint() // consumed by the anti-join AND the union
-    val slice = history.select(col(idCol), col(vecCol))
-    val missing = slice
-      .join(cur.select(col(idCol)), Seq(idCol), "left_anti")
-      .localCheckpoint()
+    // read by the anti-join and the union
+    val cur = Materialize.local(spark.read.parquet(ix.codesDir)
+      .withColumn("centroid_id", col("centroid_id").cast(LongType)))
+    // read by the count, the uniqueness check and the encode
+    val missing = Materialize.local(history.select(col(idCol), col(vecCol))
+      .join(cur.select(col(idCol)), Seq(idCol), "left_anti"))
     val n = missing.count()
     if (n == 0L) {
-      log.warn(s"backfillIvfPqIndex: every history id is already indexed " +
-        s"under $statePath — no-op (completed-backfill replay, or nothing " +
-        "to do)")
+      log.warn(s"$op: every history id is already indexed under $statePath — " +
+        "no-op (completed-backfill replay, or nothing to do)")
       return 0L
     }
     require(missing.select(col(idCol)).distinct().count() == n,
-      s"backfillIvfPqIndex: history ids must be unique — an index keyed " +
+      s"$op: history ids must be unique — an index keyed " +
         s"on $idCol cannot hold two vectors under one id")
-    val encoded = Similarity.ivfPqEncode(missing, idCol, vecCol, cells, cb,
-      ivfPqMetaResidual(spark, statePath))
-    // no checkpoint: both union inputs are already materialized (cur is
-    // checkpointed, encoded is a narrow projection of the checkpointed
-    // missing slice) and the write below is the union's only consumer
-    val merged = cur.unionByName(encoded)
-    val newVer =
-      ((curVer >> IvfPqBackfillShift) + 1) << IvfPqBackfillShift |
-        (curVer & IvfPqLocalMask)
-    merged.write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$codesPath/v$newVer")
+    val (streamBatch, backfills) = parseVersion(ix.codesVersion).get
+    val version = s"v$streamBatch.${backfills + 1}"
+    cur.unionByName(graft.operators.Similarity.ivfPqEncode(missing, idCol, vecCol,
+        ix.cells, ix.codebooks, ix.residual))
+      .write.mode("overwrite").partitionBy("centroid_id").parquet(s"$codesPath/$version")
     // _CURRENT is last-writer-wins: a stream batch that committed while
     // this job encoded would be silently DROPPED by our rename (each
     // writer merged from the version it read). Re-check the pointer
     // against the version we merged from and refuse on movement — the
-    // torn v-directory is harmless (a re-run replays over it).
-    val verAtCommit = currentVersionId(spark, codesPath)
-    require(verAtCommit.contains(curVer),
-      s"backfillIvfPqIndex: codes _CURRENT moved v$curVer -> " +
-        s"${verAtCommit.fold("<absent>")(v => s"v$v")} while the backfill " +
+    // torn version directory is harmless (a re-run replays over it).
+    val atCommit = currentVersionName(spark, codesPath)
+    require(atCommit.contains(ix.codesVersion),
+      s"$op: codes _CURRENT moved ${ix.codesVersion} -> " +
+        s"${atCommit.getOrElse("<absent>")} while the backfill " +
         "encoded — a concurrent stream batch committed, and renaming now " +
         "would drop its rows. Pause the stream (or re-run the backfill; " +
         "it merges from the new version) — refusing to commit.")
-    commitVersion(spark, codesPath, s"v$newVer", keepFrom = curVer)
+    commitVersion(spark, codesPath, version, keepFrom = streamBatch)
     n
   }
 
@@ -2340,8 +2298,9 @@ object StreamingOps {
     * [[applyIvfPqEpochBatch]] tree (default: the CURRENT epoch) — the
     * documented offline step that lets a retrained epoch serve
     * PRE-DRIFT documents: read the original vectors for data indexed
-    * under epochs < g, re-encode them in epoch g's space, append under
-    * the versioned protocol. Old epochs stay untouched and servable.
+    * under epochs < g, re-encode them in epoch g's space, and commit
+    * them as epoch g's next codes version `v<batchId>.<n>`. Old epochs
+    * stay untouched and servable.
     */
   def backfillIvfPqEpoch(
       spark: SparkSession,
@@ -2361,9 +2320,8 @@ object StreamingOps {
     * [[applyIvfPqEpochBatch]] stream, if any epoch has opened.
     */
   def currentIvfPqEpoch(spark: SparkSession, statePath: String): Option[(Long, Long)] =
-    readState(spark, s"$statePath/epochs")
-      .map(_.select(col("epoch"), col("since_batch")).head())
-      .map(r => (r.getLong(0), r.getLong(1)))
+    readVersionedState(spark, s"$statePath/epochs", bucketed = false, Some(IvfPqEpochSchema))
+      .map(epochPointer)
 
   /** ADC top-k against an [[applyIvfPqEpochBatch]] stream: serves the
     * CURRENT epoch by default, or PINS any committed epoch — old
@@ -2416,7 +2374,7 @@ object StreamingOps {
       batchId: Long,
       idCol: String,
       vecCol: String,
-      indexStatePath: String, // the applyIvfPqIndexBatch root (cells)
+      indexStatePath: String, // the applyIvfPqIndexBatch root
       statePath: String,      // this monitor's reference store
       outPath: String,
       retrainThresholdE9: Long
@@ -2425,8 +2383,7 @@ object StreamingOps {
     require(retrainThresholdE9 >= 0,
       s"pqDriftStream: retrainThresholdE9 must be >= 0, got $retrainThresholdE9")
     versionedBatch(spark, "pqDriftStream", statePath, batchId) { state =>
-      val cells = readState(spark, s"$indexStatePath/cells").getOrElse(
-        sys.error(s"pqDriftStream: no committed cells under $indexStatePath"))
+      val cells = ivfPqIndex(spark, indexStatePath, "pqDriftStream").cells
       val occ = Similarity.ivfResidualsE6(batch, idCol, vecCol, cells)
         .groupBy(col("centroid_id").as("bucket"))
         .agg(count(lit(1)).as("cnt"))

@@ -63,6 +63,11 @@ class StreamCrashReplaySpec extends SparkSpec {
   private def vecs(rows: (Long, Double)*): () => DataFrame =
     () => rows.map { case (i, x) => (i, Array(x.toFloat, (i % 3).toFloat, 1f, 0f)) }
       .toDF("id", "vec")
+  // two cells, near 0 and near 100, with two rows each
+  private val pq0 = vecs((0L, 0.0), (1L, 100.0), (2L, 0.2), (3L, 99.8))
+  private val pqEpoch = (b: DataFrame, id: Long, w: String) =>
+    StreamingOps.applyIvfPqEpochBatch(spark, b, id, "id", "vec", c = 2, m = 2,
+      s"$w/state", s"$w/out", retrainThresholdE9 = 600000000L)
   private val docs0 = () => Seq(
     ("d0", "a b c d e f g h"), ("d1", "a b c d e f g h"), ("d2", "p q r s t u v w"))
     .toDF("doc_id", "text")
@@ -187,9 +192,19 @@ class StreamCrashReplaySpec extends SparkSpec {
       (b, id, w) => StreamingOps.applyPqDriftBatch(spark, b, id, "id", "vec",
         s"$w/index", s"$w/state", s"$w/out", retrainThresholdE9 = 500000000L),
       outs = Nil,
-      setup = w => StreamingOps.applyIvfPqIndexBatch(spark,
-        vecs((0L, 0.0), (1L, 100.0), (2L, 0.2), (3L, 99.8))(),
+      setup = w => StreamingOps.applyIvfPqIndexBatch(spark, pq0(),
         0L, "id", "vec", c = 2, m = 2, s"$w/index")),
+    Op("applyIvfPqIndexBatch", pq0,
+      vecs((10L, 0.1), (11L, 99.9), (12L, 0.3)),
+      (b, id, w) => StreamingOps.applyIvfPqIndexBatch(spark, b, id, "id", "vec",
+        c = 2, m = 2, s"$w/state"),
+      outs = Nil, store = "state/codes"),
+    Op("applyIvfPqEpochBatch append", pq0,
+      vecs((10L, 0.1), (11L, 99.9)),
+      pqEpoch, store = "state/epochs"),
+    Op("applyIvfPqEpochBatch retrain", pq0,
+      vecs((20L, 500.0), (21L, 502.0), (22L, 504.0), (23L, 506.0)),
+      pqEpoch, outs = Seq("out/batch=1", "state/e1/driftref"), store = "state/epochs"),
     Op("applyLateWindowBatch",
       () => Seq(120L, 180L, 260L).toDF("us"), () => Seq(100L, 230L, 410L).toDF("us"),
       (b, id, w) => StreamingOps.applyLateWindowBatch(spark, b, id, "us", windowUs = 100L,

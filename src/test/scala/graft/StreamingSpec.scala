@@ -668,8 +668,9 @@ class StreamingSpec extends SparkSpec {
     step(b0, 0L)
     step(b1, 1L)
     step(b1, 1L) // replay: codes must not double
-    val codes = spark.read.parquet(
-      s"$work/state/codes/v1")
+    val ix = StreamingOps.ivfPqIndex(spark, s"$work/state", "spec")
+    assert(ix.codesVersion == "v1", ix.codesVersion)
+    val codes = spark.read.parquet(ix.codesDir)
     assert(codes.count() == 4, codes.count().toString)
     // query through the committed index == flat ADC against the SAME
     // frozen batch-0 artifacts over the full corpus
@@ -687,7 +688,7 @@ class StreamingSpec extends SparkSpec {
       .orderBy("query_id", "rank").as[(Long, Long, Long, Int)].collect().toSeq
     assert(got == flat, s"stream=$got flat=$flat")
     // training is frozen: a batch-1 item never moved the codebooks
-    val cbCommitted = spark.read.parquet(s"$work/state/codebooks/v0")
+    val cbCommitted = ix.codebooks
       .collect().map(r => ((r.getInt(0), r.getLong(1)), r.getSeq[Long](2))).toMap
     val cbExpect = cb0.collect()
       .map(r => ((r.getInt(0), r.getLong(1)), r.getSeq[Long](2))).toMap
@@ -714,14 +715,15 @@ class StreamingSpec extends SparkSpec {
         c = 2, m = 2, s"$work/state", residual = res)
     step(b0, 0L, res = true)
     // the space is a committed artifact, not a convention
-    assert(StreamingOps.readState(spark, s"$work/state/meta").get
-      .head().getBoolean(0))
+    assert(StreamingOps.ivfPqIndex(spark, s"$work/state", "spec").residual)
     // a later batch claiming the OTHER space refuses loudly
     val ex = intercept[IllegalArgumentException](step(b1, 1L, res = false))
     assert(ex.getMessage.contains("residual=true"), ex.getMessage)
     step(b1, 1L, res = true)
     step(b1, 1L, res = true) // replay: codes must not double
-    assert(spark.read.parquet(s"$work/state/codes/v1").count() == 6)
+    val ix = StreamingOps.ivfPqIndex(spark, s"$work/state", "spec")
+    assert(ix.codesVersion == "v1", ix.codesVersion)
+    assert(spark.read.parquet(ix.codesDir).count() == 6)
     // query (space read from meta) == the batch IVFADC construction
     // with identical batch-0 artifacts: cells = ids 0..1, residual
     // seeds = residuals of ids 2..3, codebooks trained on b0 only
@@ -752,6 +754,48 @@ class StreamingSpec extends SparkSpec {
       StreamingOps.applyIvfPqIndexBatch(spark, all.filter(col("id") < 3),
         0L, "id", "vec", c = 2, m = 2, s"$w2/state", residual = true))
     assert(tooSmall.getMessage.contains(">= 4 rows"), tooSmall.getMessage)
+  }
+
+  // A crash inside batch 0 can leave any prefix of the artifact writes
+  // (cells, codebooks, meta) on disk, with or without the codes version
+  // directory. The replay must retrain over them bit-identically: the
+  // codes pointer is the only commit, and nothing reads the artifacts
+  // before it.
+  Seq(false -> "codebooks", true -> "meta").foreach { case (res, torn) =>
+    test(s"ivfpq index stream: a batch 0 torn before its commit (residual=$res, $torn lost) replays to the uninterrupted index") {
+      val all = Seq(
+        (0L, Array(0.0f, 0.0f, 0.0f, 0.0f)),
+        (1L, Array(100f, 100f, 100f, 100f)),
+        (2L, Array(0.5f, 0.0f, 0.0f, 0.0f)),
+        (3L, Array(100.5f, 100f, 100f, 100f)),
+        (4L, Array(0.0f, 0.5f, 0.0f, 0.0f)),
+        (5L, Array(100f, 100.5f, 100f, 100f))
+      ).toDF("id", "vec")
+      val q = all.select(col("id").as("qid"), col("vec").as("qvec"))
+      val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+      def run(tear: Boolean): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
+        val state = Files.createTempDirectory("graft-ivfpq-torn0").toString + "/state"
+        def step(b: org.apache.spark.sql.DataFrame, id: Long) =
+          StreamingOps.applyIvfPqIndexBatch(spark, b, id, "id", "vec",
+            c = 2, m = 2, state, residual = res)
+        step(all.filter(col("id") < 4), 0L)
+        if (tear) {
+          Seq("codes/_CURRENT", "codes/v0", torn).foreach(p =>
+            assert(fs.delete(new org.apache.hadoop.fs.Path(s"$state/$p"), true), p))
+          val refused = intercept[RuntimeException](StreamingOps.queryIvfPqIndex(
+            spark, state, q, "qid", "qvec", "id", k = 3, nprobe = 2))
+          assert(refused.getMessage.contains("no committed codes"), refused.getMessage)
+          step(all.filter(col("id") < 4), 0L)
+        }
+        step(all.filter(col("id") >= 4), 1L)
+        (rows(StreamingOps.readState(spark, s"$state/codes").get),
+          rows(StreamingOps.queryIvfPqIndex(spark, state, q, "qid", "qvec", "id",
+            k = 3, nprobe = 2)))
+      }
+      val (state, top) = run(tear = false)
+      assert(state.length == 6 && top.nonEmpty)
+      assert(run(tear = true) == ((state, top)))
+    }
   }
 
   test("er stream exactComponents: a cross-batch duplication chain resolves fully where bounded LPA under-merges") {
@@ -907,8 +951,7 @@ class StreamingSpec extends SparkSpec {
     // each epoch's meta pins residual space; serving reads it from the
     // epoch's own tree (never from the caller) in both generations
     for (g <- Seq(0L, 1L)) {
-      val meta = StreamingOps.readState(spark, s"$work/state/e$g/meta").get
-        .select(col("residual")).head().getBoolean(0)
+      val meta = StreamingOps.ivfPqIndex(spark, s"$work/state/e$g", "spec").residual
       assert(meta, s"epoch $g meta should pin residual=true")
     }
     val near = StreamingOps.queryIvfPqEpoch(spark, s"$work/state",
@@ -947,19 +990,16 @@ class StreamingSpec extends SparkSpec {
     // the drifted set
     import graft.operators.Similarity
     val q = vecs(99L -> v(513.0)).select(col("id").as("qid"), col("vec").as("qvec"))
-    val frozenHits = Similarity.ivfPqRecallE6(b, "id", "vec",
-        s"$fr/codes/v" + StreamingOps.currentVersionId(spark, s"$fr/codes").get,
-        StreamingOps.readState(spark, s"$fr/cells").get,
-        StreamingOps.readState(spark, s"$fr/codebooks").get,
-        q, "qid", "qvec", k = 4, nprobe = 2)
-      .select(col("n_hits")).as[Long].head()
+    def hits(root: String): Long = {
+      val ix = StreamingOps.ivfPqIndex(spark, root, "spec")
+      Similarity.ivfPqRecallE6(b, "id", "vec", ix.codesDir, ix.cells, ix.codebooks,
+          q, "qid", "qvec", k = 4, nprobe = 2)
+        .select(col("n_hits")).as[Long].head()
+    }
+    val frozenHits = hits(fr)
     val e1 = s"$ep/state/e1"
-    val retrainedHits = Similarity.ivfPqRecallE6(b, "id", "vec",
-        s"$e1/codes/v0",
-        StreamingOps.readState(spark, s"$e1/cells").get,
-        StreamingOps.readState(spark, s"$e1/codebooks").get,
-        q, "qid", "qvec", k = 4, nprobe = 2)
-      .select(col("n_hits")).as[Long].head()
+    assert(StreamingOps.currentVersionName(spark, s"$e1/codes").contains("v0"))
+    val retrainedHits = hits(e1)
     // frozen: every drifted code identical → top-4 = smallest ids → 0 of
     // the true {24,25,26,27}; retrained: codes split at the 504/506
     // boundary → top-4 = {23,24,25,26} → 3 hits
@@ -991,23 +1031,24 @@ class StreamingSpec extends SparkSpec {
     val hist = a.unionByName(vecs(20L -> v(500.0)))
     assert(StreamingOps.backfillIvfPqEpoch(spark, hist, "id", "vec",
       s"$work/state") == 4L)
-    val ver = StreamingOps.currentVersionId(spark, s"$e1/codes").get
-    assert(ver == (1L << 40), s"v$ver") // backfill count in the high bits
-    assert(spark.read.parquet(s"$e1/codes/v$ver").count() == 10L)
+    def codesVersion() = StreamingOps.currentVersionName(spark, s"$e1/codes")
+    val ver = codesVersion().get
+    assert(ver == "v0.1", ver) // the first backfill on top of stream batch 0
+    assert(spark.read.parquet(s"$e1/codes/$ver").count() == 10L)
     // pre-drift documents are now retrievable from the current epoch
     assert(top(0.1, 4).exists(_ < 4L), top(0.1, 4).toString)
     // replay: nothing re-appends, the pointer is pinned
     assert(StreamingOps.backfillIvfPqEpoch(spark, hist, "id", "vec",
       s"$work/state") == 0L)
-    assert(StreamingOps.currentVersionId(spark, s"$e1/codes").contains(ver))
-    // a NEW stream batch after the backfill still appends (masked
-    // guard), and its replay still skips
+    assert(codesVersion().contains(ver))
+    // a NEW stream batch after the backfill still appends, and its
+    // replay still skips
     step(vecs(40L -> v(520.0), 41L -> v(522.0)), 2L)
-    val ver2 = StreamingOps.currentVersionId(spark, s"$e1/codes").get
-    assert(ver2 == ((1L << 40) | 1L), s"v$ver2")
-    assert(spark.read.parquet(s"$e1/codes/v$ver2").count() == 12L)
+    val ver2 = codesVersion().get
+    assert(ver2 == "v1", ver2)
+    assert(spark.read.parquet(s"$e1/codes/$ver2").count() == 12L)
     step(vecs(40L -> v(520.0), 41L -> v(522.0)), 2L)
-    assert(StreamingOps.currentVersionId(spark, s"$e1/codes").contains(ver2))
+    assert(codesVersion().contains(ver2))
     // duplicate history ids refuse loudly
     val dup = intercept[IllegalArgumentException](
       StreamingOps.backfillIvfPqEpoch(spark,
@@ -1017,13 +1058,13 @@ class StreamingSpec extends SparkSpec {
     // recomputes against the OLD version and converges
     assert(StreamingOps.backfillIvfPqEpoch(spark, vecs(8L -> v(50.0)),
       "id", "vec", s"$work/state") == 1L)
-    val ver3 = StreamingOps.currentVersionId(spark, s"$e1/codes").get
-    assert(ver3 == ((2L << 40) | 1L), s"v$ver3")
-    tearCommit(s"$e1/codes", s"v$ver2")
+    val ver3 = codesVersion().get
+    assert(ver3 == "v1.1", ver3)
+    tearCommit(s"$e1/codes", ver2)
     assert(StreamingOps.backfillIvfPqEpoch(spark, vecs(8L -> v(50.0)),
       "id", "vec", s"$work/state") == 1L)
-    assert(StreamingOps.currentVersionId(spark, s"$e1/codes").contains(ver3))
-    assert(spark.read.parquet(s"$e1/codes/v$ver3").count() == 13L)
+    assert(codesVersion().contains(ver3))
+    assert(spark.read.parquet(s"$e1/codes/$ver3").count() == 13L)
     // epoch 0 was never touched by any of it
     assert(StreamingOps.currentVersionId(spark,
       s"$work/state/e0/codes").contains(0L))
