@@ -106,7 +106,8 @@ object Dedup {
     *
     * Scale shape: the global rank over (sortKey, id) is
     * [[Graph.globalRank]]'s RANGE-SAMPLED two-level prefix over
-    * `buckets` ranges (ids are unique, so the composite key is a total
+    * `buckets` ranges (default: the session's shuffle-partition count;
+    * ids are unique, so the composite key is a total
     * order and even a single dominant key prefix — the `h`-heavy http…
     * shape of real crawl corpora — splits across buckets instead of
     * funneling into one): no task sorts more than ~n/buckets rows, for
@@ -121,11 +122,16 @@ object Dedup {
       textCol: String,
       keyLen: Int,
       window: Int,
-      buckets: Int = 256
+      buckets: Int = 0 // 0 → the session's shuffle-partition count
   ): DataFrame = {
     require(keyLen >= 1, s"sortedNeighborhoodPairs: keyLen must be >= 1, got $keyLen")
     require(window >= 2, s"sortedNeighborhoodPairs: window must be >= 2, got $window")
-    require(buckets >= 1, s"sortedNeighborhoodPairs: buckets must be >= 1, got $buckets")
+    require(buckets >= 0, s"sortedNeighborhoodPairs: buckets must be >= 0, got $buckets")
+    // the rank frame's bucket count carries into every later stage (the
+    // window join's), so it defaults to the session's shuffle
+    // parallelism, as [[Graph.orderPreservingIdDict]] does
+    val nb = if (buckets > 0) buckets
+             else df.sparkSession.sessionState.conf.numShufflePartitions
     val base = df.select(col(idCol).as("_id"),
         normalizeForFingerprint(col(textCol)).as("_nt"))
       .select(col("_id"), xxhash64(col("_nt")).as("_fp"),
@@ -133,7 +139,7 @@ object Dedup {
     // positions are 1-based global (sortKey, id) ranks; two consumers
     // (both sides of the window join)
     val ranked = Materialize.local(
-      Graph.globalRank(base, buckets, Seq("_bk", "_id"), Seq("_id", "_fp"),
+      Graph.globalRank(base, nb, Seq("_bk", "_id"), Seq("_id", "_fp"),
           "sortedNeighborhoodPairs")
         .select(col("_id"), col("_fp"), (col("_rank") + lit(1L)).as("_pos")))
     val left = ranked.select(col("_id").as("id_a"), col("_fp").as("_fpa"),
@@ -222,26 +228,9 @@ object Dedup {
     // consumers re-derive the projection from the caller's in-memory
     // blocks instead.
     val ds = if (inputMaterialized) dsRaw else Materialize.local(dsRaw)
-    // per-gram df, per-doc size and per-doc _new as WINDOW functions on
-    // the exchanges the prefix computation needs ANYWAY (hash by _g,
-    // then hash by _id for the row_number) — the former groupBy+join
-    // form paid two extra aggregate passes over ds and two joins for
-    // the identical values (r17; guide §2.4 "two operations keyed the
-    // same way share one exchange"). The unordered specs keep the
-    // whole-partition frame (an orderBy would silently turn count/max
-    // into running aggregates). Materialized: both candidate-join sides
-    // read pref, and its window chain is too much plan to compute twice
-    // (measured).
-    val widAgg = w.partitionBy("_id")
-    val pref = Materialize.local(ds
-      .withColumn("_df", count(lit(1)).over(w.partitionBy("_g")))
-      .withColumn("_sz", count(lit(1)).over(widAgg))
-      .withColumn("_n", max(col("_new")).over(widAgg))
-      .withColumn("_r", row_number().over(
-        w.partitionBy("_id").orderBy(col("_df"), col("_g"))).cast(LongType))
-      .filter(col("_r") <=
-        col("_sz") - expr(s"(($thresholdPpm * _sz) + 999999L) div 1000000L") + lit(1L))
-      .select(col("_id"), col("_g"), col("_sz"), col("_n")))
+    // Materialized: both candidate-join sides read pref, and its window
+    // chain is too much plan to compute twice (measured).
+    val pref = Materialize.local(prefixRows(ds, thresholdPpm))
     // HOT-GRAM TRIPWIRE (the chiSquareTerms refusal convention), in its
     // ZERO-ACTION form: the candidate join below produces Σ_g pdf(g)²
     // pairs, where pdf is the gram's PREFIX posting length. The prefix
@@ -285,10 +274,7 @@ object Dedup {
     // exchange then carries candidate grams, not the full gram table
     // (cand is materialized with its stored size and pair-bounded, so
     // the semi-join's build side broadcasts from the first plan)
-    val candIds = cand.select(col("id_a").as("_id"))
-      .unionByName(cand.select(col("id_b").as("_id")))
-      .distinct()
-    val dsCand = ds.join(candIds, Seq("_id"), "left_semi")
+    val dsCand = ds.join(candidateIds(cand), Seq("_id"), "left_semi")
     cand
       .join(dsCand.select(col("_id").as("id_a"), col("_g")), Seq("id_a"))
       .join(dsCand.select(col("_id").as("id_b"), col("_g")), Seq("id_b", "_g"))
@@ -298,6 +284,46 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         expr("CAST((_i * 1000000L) div (_sza + _szb - _i) AS BIGINT)").as("jaccard_ppm"))
   }
+
+  /** The prefix rows `(_id, _g, _sz, _n)` of [[setSimPairsFromGrams]]'s
+    * distinct-gram table `(_id, _g, _new)`: each doc's first
+    * `|x| − ⌈t·|x|⌉ + 1` grams in the global (df, hash) order, with the
+    * doc's size and whether it is new. Lazy, for the plan-shape pin.
+    *
+    * Per-gram df, per-doc size and per-doc `_new` are WINDOW functions
+    * on the exchanges the prefix computation needs ANYWAY (hash by _g,
+    * then hash by _id for the row number) — the former groupBy+join
+    * form paid two extra aggregate passes over the grams and two joins
+    * for the identical values (r17: two operations keyed the same way
+    * share one exchange). `_sz`, `_n` and `_r` share ONE
+    * window spec (partition by _id, order by the prefix order), so they
+    * plan as one Window operator over one sort; `_sz` and `_n` take the
+    * full frame (the ordered default frame would turn count/max into
+    * running aggregates).
+    */
+  private[graft] def prefixRows(ds: DataFrame, thresholdPpm: Long): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+    val wid = w.partitionBy("_id").orderBy(col("_df"), col("_g"))
+    val widAll = wid.rowsBetween(w.unboundedPreceding, w.unboundedFollowing)
+    ds.withColumn("_df", count(lit(1)).over(w.partitionBy("_g")))
+      .select(col("_id"), col("_g"),
+        count(lit(1)).over(widAll).as("_sz"),
+        max(col("_new")).over(widAll).as("_n"),
+        row_number().over(wid).cast(LongType).as("_r"))
+      .filter(col("_r") <=
+        col("_sz") - expr(s"(($thresholdPpm * _sz) + 999999L) div 1000000L") + lit(1L))
+      .select(col("_id"), col("_g"), col("_sz"), col("_n"))
+  }
+
+  /** The ids `(_id)` of a candidate-pair table `(id_a, id_b)`, both ids
+    * of a pair emitted by one pass, for the verify join's semi-join
+    * prefilter. Not deduplicated: a semi-join is set semantics already,
+    * and a distinct would be one more shuffle (the store-side rule of
+    * [[graft.streaming.StreamingOps.erResolve]]). Lazy, for the
+    * plan-shape pin.
+    */
+  private[graft] def candidateIds(cand: DataFrame): DataFrame =
+    cand.select(explode(array(col("id_a"), col("id_b"))).as("_id"))
 
   def prefixDupPairs(
       df: DataFrame,

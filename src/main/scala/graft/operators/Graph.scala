@@ -51,17 +51,25 @@ object Graph {
     * once per call:
     *
     *  - `strings`: the caller's normalized STRING edge frame,
-    *    materialized (a lazy upstream never runs twice);
+    *    materialized (a lazy upstream never runs twice); its
+    *    materialization's row count bounds the node count for free
+    *    ([[Materialize.localWithRows]]);
     *  - `nodeStrings`: the node set `(_v STRING)` over both endpoint
     *    columns, materialized, and its count `n`, counted on first
-    *    use — a `Long.MaxValue` threshold turns the dictionary off
-    *    without counting;
+    *    use;
     *  - the dictionary gate: at `n ≥ dictThreshold` the
     *    order-preserving long dictionary (materialized — encode and
     *    decode both read it), and `edges` are the encoded edges,
     *    materialized; below it `edges` is `strings` and ids stay
-    *    strings;
+    *    strings. A node bound under the threshold (or a `Long.MaxValue`
+    *    threshold) decides the gate without counting;
     *  - `nodes`: the node set `(_v)` in the rounds' id type.
+    *
+    * [[GraphIds.apply]] takes an edge list and materializes its node
+    * set up front (the operators built on it all read `nodes`);
+    * [[GraphIds.symmetric]] takes a symmetric adjacency, whose `_s`
+    * column already holds every node, and builds the node set only if
+    * the dictionary gate needs it.
     *
     * [[encode]] and [[decode]] are the identity and a plain rename
     * when there is no dictionary, so an operator is written once for
@@ -69,21 +77,24 @@ object Graph {
     */
   private[graft] final class GraphIds private (
       strings: DataFrame,
-      val nodeStrings: DataFrame,
+      nodeSet: => DataFrame,
+      nodeBound: Long,
       dictThreshold: Long,
       endpointCols: Seq[String]
   ) {
+    lazy val nodeStrings: DataFrame = nodeSet
+
     lazy val n: Long = nodeStrings.count()
 
     private val dict: Option[DataFrame] =
-      if (dictThreshold < Long.MaxValue && n >= dictThreshold)
+      if (dictThreshold < Long.MaxValue && nodeBound >= dictThreshold && n >= dictThreshold)
         Some(Materialize.local(orderPreservingIdDict(nodeStrings)))
       else None
 
     val edges: DataFrame =
       dict.fold(strings)(_ => Materialize.local(encode(strings, endpointCols: _*)))
 
-    val nodes: DataFrame = dict.fold(nodeStrings)(_.select(col("_id").as("_v")))
+    lazy val nodes: DataFrame = dict.fold(nodeStrings)(_.select(col("_id").as("_v")))
 
     /** Inner-join-encode string id columns to dictionary longs. The
       * dict covers every node in the edge universe by construction, so
@@ -119,13 +130,25 @@ object Graph {
   }
 
   private[graft] object GraphIds {
+    /** An edge list over `endpointA`/`endpointB`: each edge row brings
+      * at most two nodes, so n ≤ 2·rows.
+      */
     def apply(edges: DataFrame, endpointA: String, endpointB: String,
         dictThreshold: Long): GraphIds = {
-      val e = Materialize.local(edges)
+      val (e, rows) = Materialize.localWithRows(edges)
       val nodes = Materialize.local(e.select(col(endpointA).as("_v"))
         .unionByName(e.select(col(endpointB).as("_v")))
         .distinct())
-      new GraphIds(e, nodes, dictThreshold, Seq(endpointA, endpointB))
+      new GraphIds(e, nodes, 2L * rows, dictThreshold, Seq(endpointA, endpointB))
+    }
+
+    /** A symmetric adjacency `(_s, _d)`: every node is some row's `_s`,
+      * so n ≤ rows, and the node set is `_s`'s distinct values.
+      */
+    def symmetric(sym: DataFrame, dictThreshold: Long): GraphIds = {
+      val (s, rows) = Materialize.localWithRows(sym)
+      new GraphIds(s, Materialize.local(s.select(col("_s").as("_v")).distinct()),
+        rows, dictThreshold, Seq("_s", "_d"))
     }
   }
 
@@ -515,21 +538,26 @@ object Graph {
     *
     *   l₀(v) = v;  l_{k+1}(v) = min(l_k(v), min_{u ∈ N(v)} l_k(u))
     *
-    * Scale shape: the canonical edge list is materialized ONCE and both
-    * the node set and the symmetric adjacency read it. Round k is one
-    * join of the adjacency to the current labels plus ONE `min`
-    * aggregate per node over neighbor labels ∪ own label ([[lpaRound]];
-    * ids only, map-side combined): three shuffles when both sides are
-    * large, and a single shuffle when either side is under the
-    * session's broadcast threshold — every materialization carries its
-    * stored size ([[org.apache.spark.sql.graft.Materialize.local]]), so
-    * the planner broadcasts the small side up front. The
-    * checkpoint cuts the iteration lineage (the [[pageRankScaled]]
-    * discipline). At ≥ `dictThreshold`
-    * nodes the rounds carry 8-byte longs; the dict is ORDER-PRESERVING
-    * (long-min ≡ string-min), so the min-label contract survives
-    * encoding exactly — the [[connectedComponentsMin]] argument. Fixed
-    * `rounds` keeps the operator replayable; convergence detection is
+    * Scale shape: the symmetric adjacency — distinct `(_s, _d)` rows in
+    * both directions, one `(v, v)` row for a self-loop — is
+    * materialized ONCE, and its `_s` column is the node set, so no node
+    * frame is built and no count runs below the dictionary threshold
+    * (the checkpoint's row count bounds the node count). Round 1 is
+    * one `min(least(_s, _d))` aggregate grouped by `_s`, with no join:
+    * l₁(v) = min(v, min N(v)). Rounds 2..r are each one join of the
+    * adjacency to the current labels plus ONE `min` aggregate per node
+    * over neighbor labels ∪ own label ([[lpaRound]]; ids only,
+    * map-side combined): three shuffles when both sides are large, and
+    * a single shuffle when either side is under the session's
+    * broadcast threshold — every materialization carries its stored
+    * size ([[org.apache.spark.sql.graft.Materialize.local]]), so the
+    * planner broadcasts the small side up front. So r rounds are r + 1
+    * materializations. The checkpoint cuts the iteration lineage (the
+    * [[pageRankScaled]] discipline). At ≥ `dictThreshold` nodes the
+    * rounds carry 8-byte longs; the dict is ORDER-PRESERVING (long-min
+    * ≡ string-min), so the min-label contract survives encoding
+    * exactly — the [[connectedComponentsMin]] argument. Fixed `rounds`
+    * keeps the operator replayable; convergence detection is
     * deliberately a non-goal (same trade as every operator in this
     * file).
     *
@@ -544,21 +572,22 @@ object Graph {
   ): DataFrame = {
     require(rounds >= 1 && rounds <= 16,
       s"labelPropagationMin: rounds must be in [1, 16], got $rounds")
-    // canonical undirected pairs (u ≤ v), distinct, self-loops kept in
-    // the node universe; the node set and the adjacency both read the one
-    // materialized edge list, so a lazy upstream (the ER op's verified
-    // pairs) never runs twice
-    val ids = GraphIds(undirected(endpoints(edges, srcCol, dstCol)), "_u", "_v",
+    // one pass over the edge list (a lazy upstream — the ER op's
+    // verified pairs — runs once) emits both directions; a self-loop's
+    // two copies collapse to the one (v, v) row that keeps a
+    // self-loop-only node in the universe, and a (v, v) row is a no-op
+    // for every min below
+    val e = endpoints(edges, srcCol, dstCol)
+    val ids = GraphIds.symmetric(
+      e.select(explode(array(array(col("_s"), col("_d")), array(col("_d"), col("_s"))))
+          .as("_p"))
+        .select(col("_p")(0).as("_s"), col("_p")(1).as("_d"))
+        .distinct(),
       dictThreshold)
-    // self-loops are harmless no-ops (the node keeps its own label);
-    // drop them. The dict is order-preserving, so encoded pairs stay
-    // canonical (u < v), and the symmetric adjacency of distinct
-    // canonical pairs is distinct without an aggregate
-    val simple = ids.edges.filter(col("_u") =!= col("_v"))
-    val sym = simple.select(col("_u").as("_s"), col("_v").as("_d"))
-      .unionByName(simple.select(col("_v").as("_s"), col("_u").as("_d")))
-    var labels = ids.nodes.select(col("_v"), col("_v").as("_l"))
-    for (_ <- 0 until rounds) {
+    val sym = ids.edges
+    var labels = Materialize.local(sym.groupBy(col("_s").as("_v"))
+      .agg(min(least(col("_s"), col("_d"))).as("_l")))
+    for (_ <- 1 until rounds) {
       labels = Materialize.local(lpaRound(sym, labels))
     }
     ids.decode(labels, "_v" -> "node", "_l" -> "label").select(col("node"), col("label"))

@@ -143,16 +143,25 @@ object Retrieval {
         .as("term"))
       .distinct().collect().map(_.getString(0)).toSeq.sorted
     // df = DISTINCT docs per term (r16 advice): [[buildPostings]] output
-    // is distinct per (id, term) so this equals the raw row count there,
-    // but a committed streaming index built as an append-only union
-    // could in principle carry overlapping doc ids — count_distinct is
-    // defensive and costs nothing at query-term cardinality (the filter
-    // reduces the aggregate to the matched terms' postings)
-    val dfMap = postings
+    // is distinct per (id, term), so this equals the term's row count
+    // there. A postings table with a duplicated (id, term) row — an
+    // append-only streaming index that re-appended a doc — would also
+    // double-count that doc's tf in rankPostings' scores, so the same
+    // aggregate counts the rows and refuses a term whose rows exceed its
+    // distinct ids (the filter reduces the aggregate to the matched
+    // terms' postings, so the check adds no job)
+    val counts = postings
       .select(col("term"), col("id"))
       .filter(col("term").isin(terms: _*))
-      .groupBy("term").agg(count_distinct(col("id")).as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      .groupBy("term").agg(count_distinct(col("id")).as("df"), count(lit(1)).as("rows"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    counts.find { case (_, df, rows) => rows > df }.foreach { case (t, df, rows) =>
+      throw new IllegalArgumentException(
+        s"queryIdfLiteralsFromPostings: term '$t' has $rows postings rows for $df " +
+          "distinct ids — duplicate (id, term) postings would double-count tf in the " +
+          "BM25 scores; deduplicate the postings table (buildPostings output is distinct)")
+    }
+    val dfMap = counts.map { case (t, df, _) => t -> df }.toMap
     terms.map { t =>
       val df = dfMap.getOrElse(t, 0L).toDouble
       // operand order mirrors rankPostings' idf6 column exactly

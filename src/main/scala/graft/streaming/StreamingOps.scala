@@ -1361,19 +1361,24 @@ object StreamingOps {
     *
     * Scale shape: per-batch cost = the incremental prefix-filter join
     * (∝ new docs × matched rare-gram postings) + `lpaRounds` id-only
-    * rounds over the pair and star edges (each one join plus one `min`
-    * aggregate — [[graft.operators.Graph.labelPropagationMin]]) + one
-    * `min` aggregate folding in the singletons + one state rewrite.
-    * Every intermediate is materialized once and carries its stored
-    * size ([[org.apache.spark.sql.graft.Materialize.local]]), so joins
+    * rounds over the pair and star edges
+    * ([[graft.operators.Graph.labelPropagationMin]]: one materialized
+    * symmetric adjacency, a join-free first round, then one join plus
+    * one `min` aggregate a round) + one `min` aggregate folding in the
+    * singletons + one state rewrite. Every intermediate is
+    * materialized once and carries its stored size
+    * ([[org.apache.spark.sql.graft.Materialize.local]]), so joins
     * against small intermediates plan as broadcasts from the start.
-    * Measured at 100 docs a batch against a growing store (local[4]):
-    * 37 Spark jobs and 54 stages per steady-state batch. The state
-    * rewrite is the
-    * cumulative-store cost the minhash index stream already carries;
-    * at 100 TB both would move to an append-log + compaction layout —
-    * the protocol (version pointer, replay guard) is unchanged by that
-    * swap.
+    * Measured at 100 docs a batch against a growing store (local[4],
+    * adaptive execution, so every shuffle stage is a job of its own):
+    * 31 Spark jobs per steady-state batch, which ask Spark's codegen
+    * cache (100 entries by default) for 106 distinct generated classes,
+    * counting each class once per class loader that compiles it; each
+    * entry a batch asks for beyond what the cache holds is a recompile.
+    * The state rewrite is the cumulative-store cost the minhash index
+    * stream already carries; at 100 TB both would move to an
+    * append-log + compaction layout — the protocol (version pointer,
+    * replay guard) is unchanged by that swap.
     */
   def applyErBatch(
       spark: SparkSession,

@@ -2,10 +2,12 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.SparkEnv
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Statistics}
 import org.apache.spark.sql.classic
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.storage.RDDBlockId
+import org.apache.spark.util.Utils
 
 /**
  * Materialization that tells the planner its size. A `localCheckpoint()`
@@ -35,22 +37,43 @@ object Materialize {
     * and grouped aggregates over it at planning time and they run no
     * jobs.
     */
-  def local(df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint().asInstanceOf[classic.Dataset[_]]
-    val session = cp.sparkSession
-    cp.logicalPlan match {
-      case r: LogicalRDD if r.rdd.partitions.isEmpty =>
-        classic.Dataset.ofRows(session, LocalRelation(r.output))
-      case r: LogicalRDD =>
+  def local(df: DataFrame): DataFrame = localWithRows(df)._1
+
+  /** [[local]], plus the frame's row count. The checkpoint job counts
+    * each partition's rows while it stores them (Spark's eager
+    * `localCheckpoint()` runs the same per-partition count and drops
+    * it), so the count costs no job of its own: a caller that needs a
+    * size bound — [[graft.operators.Graph]]'s dictionary gate — reads it
+    * here instead of running `count()` over the stored frame.
+    */
+  def localWithRows(df: DataFrame): (DataFrame, Long) = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    val session = ds.sparkSession
+    val qe = ds.queryExecution
+    // the body of `Dataset.localCheckpoint(eager = true)`, under the same
+    // SQL execution, keeping the job's result; a plan with no partitions
+    // runs no job
+    val (rdd, rows) = SQLExecution.withNewExecutionId(qe, Some("localCheckpoint")) {
+      val rdd = qe.executedPlan.execute().map(_.copy())
+      rdd.localCheckpoint()
+      val rows =
+        if (rdd.partitions.isEmpty) 0L
+        else session.sparkContext
+          .runJob(rdd, (it: Iterator[InternalRow]) => Utils.getIteratorSize(it)).sum
+      (rdd, rows)
+    }
+    val r = LogicalRDD.fromDataset(rdd, ds, ds.isStreaming)
+    val plan =
+      if (rdd.partitions.isEmpty) LocalRelation(r.output)
+      else {
         val master = SparkEnv.get.blockManager.master
-        val stored = r.rdd.partitions.iterator.map { p =>
-          master.getBlockStatus(RDDBlockId(r.rdd.id, p.index), false)
+        val stored = rdd.partitions.iterator.map { p =>
+          master.getBlockStatus(RDDBlockId(rdd.id, p.index), false)
             .valuesIterator.map(s => s.memSize + s.diskSize).sum
         }.sum
-        classic.Dataset.ofRows(session,
-          r.copy()(session, Some(Statistics(sizeInBytes = BigInt(stored))),
-            Some(r.constraints)))
-      case _ => cp.toDF()
-    }
+        r.copy()(session, Some(Statistics(sizeInBytes = BigInt(stored))),
+          Some(r.constraints))
+      }
+    (classic.Dataset.ofRows(session, plan), rows)
   }
 }

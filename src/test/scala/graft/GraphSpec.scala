@@ -251,6 +251,41 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  test("labelPropagationMin below the dictionary threshold: r rounds run r + 1 materialization jobs and no count job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val edges = Seq(("b", "a"), ("b", "c"), ("d", "c"), ("y", "x"), ("z", "z"))
+      .toDF("src", "dst")
+    val group = "graft-lpa-jobs"
+    // a job's call site is its final stage's name: one per
+    // materialization ("local"/"localWithRows at Graph.scala:…") or
+    // count; adaptive stages and broadcasts run on other call sites
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          sites.add(e.stageInfos.sortBy(_.stageId).lastOption.map(_.name).getOrElse("?"))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for (rounds <- 1 to 3) {
+        sites.clear()
+        spark.sparkContext.setJobGroup(group, s"lpa $rounds")
+        try Graph.labelPropagationMin(edges, "src", "dst", rounds)
+        finally spark.sparkContext.clearJobGroup()
+        org.apache.spark.sql.graft.ListenerBusDrain(spark.sparkContext)
+        import scala.jdk.CollectionConverters._
+        val all = sites.asScala.toSeq
+        val materializations = all.filter(_.matches("(local|localWithRows) at .*"))
+        assert(materializations.size == rounds + 1, s"rounds $rounds: $all")
+        assert(!all.exists(_.startsWith("count at")), s"rounds $rounds: $all")
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // the same call still labels correctly (z is a self-loop-only node)
+    assert(Graph.labelPropagationMin(edges, "src", "dst", 2).as[(String, String)]
+      .collect().toMap == Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "b",
+        "x" -> "x", "y" -> "x", "z" -> "z"))
+  }
+
   test("labelPropagationMin ≡ driver-side reference LPA on seeded random graphs (self-loops, isolated nodes, duplicate edges, dict path)") {
     // the reference: synchronous rounds over the undirected simple graph,
     // every edge endpoint a node (a self-loop-only node is isolated)

@@ -733,4 +733,35 @@ class PlanShapeSpec extends SparkSpec {
     val windows = plan.linesIterator.filter(_.contains("Window")).toSeq
     assert(windows.nonEmpty && windows.forall(l => !l.contains("text#")), plan)
   }
+
+  test("set-sim prefix: one _id-partitioned Window over one sort; the candidate-id prefilter has no Union") {
+    import graft.operators.Dedup
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import spark.implicits._
+    def initial(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val grams = Seq(("a", 1L, true), ("a", 2L, true), ("a", 3L, true),
+        ("b", 2L, false), ("b", 3L, false), ("b", 4L, false))
+      .toDF("_id", "_g", "_new").localCheckpoint()
+    val pref = initial(Dedup.prefixRows(grams, 500000L))
+    val byId = pref.collect { case w: WindowExec
+      if w.partitionSpec.flatMap(_.references).map(_.name) == Seq("_id") => w }
+    assert(byId.size == 1, pref.toString)
+    // one sort for the _id window, one for the _g (df) window
+    assert(pref.collect { case s: SortExec => s }.size == 2, pref.toString)
+    val cand = Seq(("a", "b"), ("a", "c")).toDF("id_a", "id_b").localCheckpoint()
+    val ids = Dedup.candidateIds(cand)
+    assert(initial(ids).collect { case u: UnionExec => u }.isEmpty, initial(ids).toString)
+    assert(ids.as[String].collect().sorted.toSeq == Seq("a", "a", "b", "c"))
+    // the prefix rows themselves: t = 0.5 keeps |x| − ⌈|x|/2⌉ + 1 = 2 of
+    // each doc's 3 grams, rarest (df, hash) first; sizes and _new ride along
+    assert(Dedup.prefixRows(grams, 500000L).as[(String, Long, Long, Boolean)]
+      .collect().sorted.toSeq ==
+      Seq(("a", 1L, 3L, true), ("a", 2L, 3L, true),
+        ("b", 4L, 3L, false), ("b", 2L, 3L, false)).sorted)
+  }
 }

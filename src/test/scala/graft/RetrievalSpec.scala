@@ -156,6 +156,27 @@ class RetrievalSpec extends SparkSpec {
     assert(viaPostings == direct)
   }
 
+  test("queryIdfLiteralsFromPostings: equals queryIdfLiterals on distinct postings; refuses a duplicated (id, term) row by name") {
+    val q = Seq((10L, "apple banana"), (11L, "cherry zebra")).toDF("query_id", "qtext")
+    val postings = Retrieval.buildPostings(corpus, "doc_id", "text")
+    val n = corpus.count()
+    assert(Retrieval.queryIdfLiteralsFromPostings(n, postings, q, "qtext") ==
+      Retrieval.queryIdfLiterals(corpus, "text", q, "qtext"))
+    // one posting row appended twice, as a re-appending streaming index
+    // would: rankPostings would count that doc's tf for the term twice
+    val dup = postings.filter(col("term") === "apple").limit(1)
+    val e = intercept[IllegalArgumentException] {
+      Retrieval.queryIdfLiteralsFromPostings(n, postings.unionByName(dup), q, "qtext")
+    }
+    assert(e.getMessage.contains("term 'apple'") && e.getMessage.contains("duplicate"),
+      e.getMessage)
+    // a duplicate of a term no query asks for is outside the check
+    val other = postings.filter(!col("term").isin("apple", "banana", "cherry", "zebra"))
+      .limit(1)
+    assert(Retrieval.queryIdfLiteralsFromPostings(n, postings.unionByName(other), q, "qtext") ==
+      Retrieval.queryIdfLiterals(corpus, "text", q, "qtext"))
+  }
+
   test("phraseMatch: exact sequence hits with overlap, shorts excluded, counts and first positions") {
     import graft.operators.Retrieval
     val docs = Seq(
