@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.Materialize
 
 import graft.model._
 import graft.functions.{DomainFunctions, TypedAttrs, TextFunctions, VectorFunctions}
@@ -79,11 +80,11 @@ private[graft] object GraphGates {
     //      quality-prior artifact a curation mixer consumes
     "pipeline_centrality_prior" -> ((s, dir) => {
       val d = t(s, dir, "documents").select(col("doc_id"), col("source"))
-      val e = d.join(
+      // three consumers — compute the edge list once
+      val e = Materialize.local(d.join(
           d.select((col("doc_id") - 1).as("doc_id"), col("source").as("_dst")),
           Seq("doc_id"))
-        .select(col("source").as("src"), col("_dst").as("dst"))
-        .localCheckpoint() // three consumers — compute the edge list once
+        .select(col("source").as("src"), col("_dst").as("dst")))
       val pr = graft.operators.Graph.pageRankScaled(e, "src", "dst", 3)
       val hc = graft.operators.Graph.harmonicCentralityScaled(e, "src", "dst", 3)
       val kz = graft.operators.Graph.katzCentralityScaled(e, "src", "dst", 3, 100000L)
@@ -220,7 +221,7 @@ private[graft] object GraphGates {
     //      recomputes
     "graph_profile_stream" -> ((s, dir) => {
       import graft.streaming.StreamingOps
-      val e = profileLatticeEdges(s, dir).localCheckpoint()
+      val e = Materialize.local(profileLatticeEdges(s, dir))
       val work = java.nio.file.Files
         .createTempDirectory("graft-gprof-stream").toString
       def step(pred: Column, b: Long): Unit =

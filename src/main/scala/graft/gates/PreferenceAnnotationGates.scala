@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.Materialize
 
 import graft.model._
 import graft.functions.{DomainFunctions, TypedAttrs, TextFunctions, VectorFunctions}
@@ -177,12 +178,11 @@ private[graft] object PreferenceAnnotationGates {
     //      alpha hash against the BATCH oracles verbatim
     "annotation_consensus_stream" -> ((s, dir) => {
       import graft.streaming.StreamingOps
-      val r = t(s, dir, "documents")
+      val r = Materialize.local(t(s, dir, "documents")
         .filter(col("doc_id") < 2000 && col("n_chars").isNotNull)
         .select(col("doc_id"),
           expr("doc_id div 4").cast("string").as("unit"),
-          expr("(n_chars div 200) % 5").cast("string").as("label"))
-        .localCheckpoint()
+          expr("(n_chars div 200) % 5").cast("string").as("label")))
       val work = java.nio.file.Files
         .createTempDirectory("graft-ann-stream").toString
       def step(b: DataFrame, id: Long): Unit =
@@ -199,13 +199,12 @@ private[graft] object PreferenceAnnotationGates {
     //      per-rater reliability hashes against the batch oracle
     "annotation_rater_stream" -> ((s, dir) => {
       import graft.streaming.StreamingOps
-      val r = t(s, dir, "documents")
+      val r = Materialize.local(t(s, dir, "documents")
         .filter(col("doc_id") < 2000 && col("n_chars").isNotNull)
         .select(col("doc_id"),
           expr("doc_id div 4").cast("string").as("unit"),
           expr("doc_id % 4").cast("string").as("rater"),
-          expr("(n_chars div 200) % 5").cast("string").as("label"))
-        .localCheckpoint()
+          expr("(n_chars div 200) % 5").cast("string").as("label")))
       val work = java.nio.file.Files
         .createTempDirectory("graft-rater-stream").toString
       def step(b: DataFrame, id: Long): Unit =
@@ -219,12 +218,11 @@ private[graft] object PreferenceAnnotationGates {
 
     "annotation_alpha_stream" -> ((s, dir) => {
       import graft.streaming.StreamingOps
-      val r = t(s, dir, "documents")
+      val r = Materialize.local(t(s, dir, "documents")
         .filter(col("doc_id") < 2000 && col("n_chars").isNotNull)
         .select(col("doc_id"),
           expr("doc_id div 4").cast("string").as("unit"),
-          expr("(n_chars div 200) % 5").cast("string").as("label"))
-        .localCheckpoint()
+          expr("(n_chars div 200) % 5").cast("string").as("label")))
       val work = java.nio.file.Files
         .createTempDirectory("graft-ann-astream").toString
       def step(b: DataFrame, id: Long): Unit =
@@ -316,15 +314,14 @@ private[graft] object PreferenceAnnotationGates {
         .filter(col("doc_id") < 2000 && col("source").isNotNull &&
           col("n_chars").isNotNull)
         .select(col("doc_id"), col("source"), col("n_chars"))
-      val cmp = d.join(d.select((col("doc_id") - 1).as("doc_id"),
+      val cmp = Materialize.local(d.join(d.select((col("doc_id") - 1).as("doc_id"),
           col("source").as("_s2"), col("n_chars").as("_n2")), Seq("doc_id"))
         .filter(col("source") =!= col("_s2"))
         .select(col("doc_id"),
           when(col("n_chars") >= col("_n2"), col("source"))
             .otherwise(col("_s2")).as("winner"),
           when(col("n_chars") >= col("_n2"), col("_s2"))
-            .otherwise(col("source")).as("loser"))
-        .localCheckpoint()
+            .otherwise(col("source")).as("loser")))
       val work = java.nio.file.Files
         .createTempDirectory("graft-bt-stream").toString
       def step(b: DataFrame, id: Long): Unit =
@@ -349,7 +346,7 @@ private[graft] object PreferenceAnnotationGates {
           col("n_chars").isNotNull)
         .select(col("doc_id"), col("source"),
           col("n_chars").cast("long").as("n_chars"))
-      val cmp = d.join(d.select((col("doc_id") - 1).as("doc_id"),
+      val cmp = Materialize.local(d.join(d.select((col("doc_id") - 1).as("doc_id"),
           col("source").as("_s2"), col("n_chars").as("_n2")), Seq("doc_id"))
         .filter(col("source") =!= col("_s2"))
         .select(col("doc_id"), expr("n_chars div 100").as("_ta"),
@@ -359,8 +356,7 @@ private[graft] object PreferenceAnnotationGates {
             .otherwise(col("_s2")).as("winner"),
           when(col("_ta") >= col("_tb"), col("_s2"))
             .otherwise(col("source")).as("loser"),
-          (col("_ta") === col("_tb")).as("is_tie"))
-        .localCheckpoint()
+          (col("_ta") === col("_tb")).as("is_tie")))
       val work = java.nio.file.Files
         .createTempDirectory("graft-bt-ties-stream").toString
       def step(b: DataFrame, id: Long): Unit =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.Materialize
 
 import graft.model._
 import graft.functions.{DomainFunctions, TypedAttrs, TextFunctions, VectorFunctions}
@@ -234,12 +235,12 @@ private[graft] object SimilarityGates {
     }),
     // ---- ER SERVING: read-only entity lookup of incoming docs
     //      (clones + truncations) against the COMMITTED state — no
-    //      LPA, no state rewrite, no commit. The state build is keyed
-    //      on the corpus file's identity and guarded by the version
-    //      pointer, so bench re-runs measure the serving path alone
-    //      (the one-time build amortizes to the first run; min-of-runs
-    //      is serving cost, the bm25_topk_indexed discipline applied
-    //      to the lifecycle/serving split)
+    //      LPA, no state rewrite, no commit. The state build is kept
+    //      per corpus directory for the life of the JVM and guarded by
+    //      the version pointer, so bench re-runs measure the serving
+    //      path alone (the one-time build amortizes to the first run;
+    //      min-of-runs is serving cost, the bm25_topk_indexed
+    //      discipline applied to the lifecycle/serving split)
     "er_serve" -> ((s, dir) => {
       import graft.streaming.StreamingOps
       val base = t(s, dir, "documents").filter(col("doc_id") < 1000)
@@ -254,14 +255,9 @@ private[graft] object SimilarityGates {
             .as("text"))
       def pad(df: DataFrame): DataFrame = df.select(
         lpad(col("doc_id").cast("string"), 8, "0").as("doc_id"), col("text"))
-      val src = new java.io.File(s"$dir/documents.parquet")
-      // cache key = corpus identity + EVERY gate parameter that shapes
-      // the committed state (shingle/threshold/lpa/filter/pad) — a
-      // parameter edit must invalidate the cache, or serving would be
-      // compared against a mismatched store
-      val work = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_er_serve_${src.length}_${src.lastModified}" +
-          "_sh3_t500000_lpa4_f1000_p8").toString
+      // one store per corpus directory within this JVM's store root
+      val work = new java.io.File(erServeRoot,
+        new java.io.File(dir).getCanonicalPath.replace('/', '_')).toString
       if (StreamingOps.currentVersionId(s, s"$work/state").isEmpty)
         StreamingOps.applyErBatch(s, pad(base), 0L, "doc_id", "text",
           shingleSize = 3, thresholdPpm = 500000L, lpaRounds = 4,
@@ -662,22 +658,8 @@ private[graft] object SimilarityGates {
     //      FNV negatives (3 per sampled anchor, the negative_sampling
     //      machinery) — the labeled training table an embedding run
     //      consumes, end to end from the edge list
-    "pipeline_graph_embedding" -> ((s, dir) => {
-      val edges = anfLatticeEdges(s, dir).localCheckpoint()
-      val walks = graft.operators.Graph.node2vecWalks(edges, "src", "dst",
-        steps = 4, walksPerNode = 1, pPpm = 4000000L, qPpm = 250000L)
-      val pos = graft.operators.Graph.skipGramPairs(walks, window = 2)
-      val nodes = edges.select(col("src").as("node"))
-        .unionByName(edges.select(col("dst").as("node"))).distinct()
-      val anchors = nodes.filter(col("node").cast("long") % 7 === 0)
-      val neg = Sampling.negativeSamples(anchors, "node", nodes, "node",
-        k = 3, salt = "gemb")
-      pos.select(col("center"), col("context").as("other"),
-          lit(1L).as("label"), col("cnt").as("weight"))
-        .unionByName(neg.select(col("anchor").as("center"),
-          col("negative").as("other"), lit(0L).as("label"), lit(1L).as("weight")))
-        .orderBy("center", "label", "other")
-    }),
+    "pipeline_graph_embedding" -> ((s, dir) =>
+      graphEmbeddingPairs(s, dir, col("cnt")).orderBy("center", "label", "other")),
     // ---- the trainer that CONSUMES that labeled table — the embedding
     //      family's loop closed (walks → pairs → train → serve, the BPE
     //      / k-means trainer-beside-serving convention): 2 full-batch
@@ -688,21 +670,9 @@ private[graft] object SimilarityGates {
     //      from negatives, and every trained coordinate replays in the
     //      oracle bit-for-bit
     "embedding_train_sgns" -> ((s, dir) => {
-      val edges = anfLatticeEdges(s, dir).localCheckpoint()
-      val walks = graft.operators.Graph.node2vecWalks(edges, "src", "dst",
-        steps = 4, walksPerNode = 1, pPpm = 4000000L, qPpm = 250000L)
-      val pos = graft.operators.Graph.skipGramPairs(walks, window = 2)
-      val nodes = edges.select(col("src").as("node"))
-        .unionByName(edges.select(col("dst").as("node"))).distinct()
-      val anchors = nodes.filter(col("node").cast("long") % 7 === 0)
-      val neg = Sampling.negativeSamples(anchors, "node", nodes, "node",
-        k = 3, salt = "gemb")
-      val labeled = pos.select(col("center"), col("context").as("other"),
-          lit(1L).as("label"), least(col("cnt"), lit(1000L)).as("weight"))
-        .unionByName(neg.select(col("anchor").as("center"),
-          col("negative").as("other"), lit(0L).as("label"),
-          lit(1L).as("weight")))
-        .localCheckpoint() // trained on AND scored below
+      // trained on AND scored below
+      val labeled = Materialize.local(
+        graphEmbeddingPairs(s, dir, least(col("cnt"), lit(1000L))))
       val emb = graft.operators.Graph.sgnsEpochs(labeled, dims = 8,
         epochs = 2, lrPpm = 250000L, seed = "sg")
       labeled.filter(col("center").cast("long") % 7 === 0)
@@ -725,23 +695,10 @@ private[graft] object SimilarityGates {
     //      exact squared-L2 top-5 — and DuckDB replays training AND
     //      retrieval end to end
     "pipeline_train_serve_embeddings" -> ((s, dir) => {
-      val edges = anfLatticeEdges(s, dir).localCheckpoint()
-      val walks = graft.operators.Graph.node2vecWalks(edges, "src", "dst",
-        steps = 4, walksPerNode = 1, pPpm = 4000000L, qPpm = 250000L)
-      val pos = graft.operators.Graph.skipGramPairs(walks, window = 2)
-      val nodes = edges.select(col("src").as("node"))
-        .unionByName(edges.select(col("dst").as("node"))).distinct()
-      val anchors = nodes.filter(col("node").cast("long") % 7 === 0)
-      val neg = Sampling.negativeSamples(anchors, "node", nodes, "node",
-        k = 3, salt = "gemb")
-      val labeled = pos.select(col("center"), col("context").as("other"),
-          lit(1L).as("label"), least(col("cnt"), lit(1000L)).as("weight"))
-        .unionByName(neg.select(col("anchor").as("center"),
-          col("negative").as("other"), lit(0L).as("label"),
-          lit(1L).as("weight")))
-      val emb = graft.operators.Graph.sgnsEpochs(labeled, dims = 8,
-          epochs = 2, lrPpm = 250000L, seed = "sg")
-        .localCheckpoint() // corpus, cells, and queries all read it
+      // materialized by sgnsEpochs: corpus, cells, and queries all read it
+      val emb = graft.operators.Graph.sgnsEpochs(
+        graphEmbeddingPairs(s, dir, least(col("cnt"), lit(1000L))), dims = 8,
+        epochs = 2, lrPpm = 250000L, seed = "sg")
       val cells = emb.orderBy(col("node").cast("long")).limit(4)
         .select(col("node").cast("long").as("centroid_id"),
           col("emb").as("centroid_e6"))
@@ -757,23 +714,9 @@ private[graft] object SimilarityGates {
     //      connected_components_dict convention); what changes is the
     //      I/O: unprobed cell directories are never listed
     "pipeline_train_serve_partitioned" -> ((s, dir) => {
-      val edges = anfLatticeEdges(s, dir).localCheckpoint()
-      val walks = graft.operators.Graph.node2vecWalks(edges, "src", "dst",
-        steps = 4, walksPerNode = 1, pPpm = 4000000L, qPpm = 250000L)
-      val pos = graft.operators.Graph.skipGramPairs(walks, window = 2)
-      val nodes = edges.select(col("src").as("node"))
-        .unionByName(edges.select(col("dst").as("node"))).distinct()
-      val anchors = nodes.filter(col("node").cast("long") % 7 === 0)
-      val neg = Sampling.negativeSamples(anchors, "node", nodes, "node",
-        k = 3, salt = "gemb")
-      val labeled = pos.select(col("center"), col("context").as("other"),
-          lit(1L).as("label"), least(col("cnt"), lit(1000L)).as("weight"))
-        .unionByName(neg.select(col("anchor").as("center"),
-          col("negative").as("other"), lit(0L).as("label"),
-          lit(1L).as("weight")))
-      val emb = graft.operators.Graph.sgnsEpochs(labeled, dims = 8,
-          epochs = 2, lrPpm = 250000L, seed = "sg")
-        .localCheckpoint()
+      val emb = graft.operators.Graph.sgnsEpochs(
+        graphEmbeddingPairs(s, dir, least(col("cnt"), lit(1000L))), dims = 8,
+        epochs = 2, lrPpm = 250000L, seed = "sg")
       val cells = emb.orderBy(col("node").cast("long")).limit(4)
         .select(col("node").cast("long").as("centroid_id"),
           col("emb").as("centroid_e6"))
@@ -1100,6 +1043,43 @@ private[graft] object SimilarityGates {
         .orderBy("grp", "pos")
     }),
   )
+
+  /** The labeled training table the graph-embedding gates share, end
+    * to end from the lattice edge list: node2vec walks → skip-gram
+    * positives (label 1, weight `weight` over the pair's co-occurrence
+    * count `cnt`) ∪ deterministic FNV negatives (3 per anchor node,
+    * node % 7 = 0; label 0, weight 1), as `(center, other, label,
+    * weight)`. The edge list is materialized: the walks and the node
+    * set both read it.
+    */
+  private def graphEmbeddingPairs(s: SparkSession, dir: String,
+      weight: Column): DataFrame = {
+    val edges = Materialize.local(anfLatticeEdges(s, dir))
+    val walks = graft.operators.Graph.node2vecWalks(edges, "src", "dst",
+      steps = 4, walksPerNode = 1, pPpm = 4000000L, qPpm = 250000L)
+    val pos = graft.operators.Graph.skipGramPairs(walks, window = 2)
+    val nodes = edges.select(col("src").as("node"))
+      .unionByName(edges.select(col("dst").as("node"))).distinct()
+    val anchors = nodes.filter(col("node").cast("long") % 7 === 0)
+    val neg = Sampling.negativeSamples(anchors, "node", nodes, "node",
+      k = 3, salt = "gemb")
+    pos.select(col("center"), col("context").as("other"),
+        lit(1L).as("label"), weight.as("weight"))
+      .unionByName(neg.select(col("anchor").as("center"),
+        col("negative").as("other"), lit(0L).as("label"), lit(1L).as("weight")))
+  }
+
+  /** The directory that holds `er_serve`'s committed ER store: one
+    * temp directory per JVM, created on first use and deleted on exit.
+    * Later runs in the same JVM serve from the store the first run
+    * built; a store built by another process (another build of this
+    * code) is never read.
+    */
+  private lazy val erServeRoot: java.io.File = {
+    val d = java.nio.file.Files.createTempDirectory("graft-er-serve").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(d))
+    d
+  }
 
   def oracles: Map[String, String] = Map(
     // the same composed chain with codebook training RESTRICTED to the

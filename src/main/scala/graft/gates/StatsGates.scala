@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.Materialize
 
 import graft.model._
 import graft.functions.{DomainFunctions, TypedAttrs, TextFunctions, VectorFunctions}
@@ -416,8 +417,7 @@ private[graft] object StatsGates {
       // table, the scorer, AND the relevance term set (postings keys ARE
       // the distinct (doc, term) pairs) — was three private tokenize
       // passes per run (r16)
-      val postings = Retrieval.buildPostings(docs, "doc_id", "text")
-        .localCheckpoint()
+      val postings = Materialize.local(Retrieval.buildPostings(docs, "doc_id", "text"))
       val idf = Retrieval.queryIdfLiteralsFromPostings(
         docs.count(), postings, queries, "qtext")
       GateTables.put("bm25_idf_rm", idfValuesRows(idf))
@@ -443,8 +443,7 @@ private[graft] object StatsGates {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val queries = bm25GateQueries3(s)
       // one shared tokenize pass (the ranking_metrics rationale, r16)
-      val postings = Retrieval.buildPostings(docs, "doc_id", "text")
-        .localCheckpoint()
+      val postings = Materialize.local(Retrieval.buildPostings(docs, "doc_id", "text"))
       val idf = Retrieval.queryIdfLiteralsFromPostings(
         docs.count(), postings, queries, "qtext")
       GateTables.put("bm25_idf_ndcg", idfValuesRows(idf))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.Materialize
 
 import graft.model._
 import graft.functions.{DomainFunctions, TypedAttrs, TextFunctions, VectorFunctions}
@@ -153,12 +154,11 @@ private[graft] object StreamGates {
       val idx = expr("CASE WHEN margin_e6 <= -6000000 THEN 0L " +
         "WHEN margin_e6 >= 6000000 THEN 63L " +
         "ELSE ((margin_e6 + 6000000) * 64L) div 12000000L END")
-      val scored = m.join(d.select(col("doc_id"),
+      val scored = Materialize.local(m.join(d.select(col("doc_id"),
           (col("n_chars") >= 500).cast("long").as("label")), Seq("doc_id"))
         .select(col("doc_id"),
           element_at(typedLit(tbl), (idx + lit(1L)).cast("int"))
-            .as("prob_ppm"), col("label"))
-        .localCheckpoint()
+            .as("prob_ppm"), col("label")))
       val work = java.nio.file.Files
         .createTempDirectory("graft-calib-stream").toString
       def step(b: DataFrame, id: Long): Unit =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.Materialize
 
 import graft.model._
 import graft.functions.{DomainFunctions, TypedAttrs, TextFunctions, VectorFunctions}
@@ -122,11 +123,10 @@ private[graft] object TextGates {
     //      closure pattern applied to the quality model; the oracle
     //      unrolls every epoch (sigmoid table literal on both sides)
     "quality_train_serve" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
+      val d = Materialize.local(t(s, dir, "documents")
         .filter(col("doc_id") < 2000 && col("text").isNotNull &&
           col("n_chars").isNotNull)
-        .select(col("doc_id"), col("text"), col("n_chars"))
-        .localCheckpoint()
+        .select(col("doc_id"), col("text"), col("n_chars")))
       val train = d.filter(col("doc_id") < 1000)
       val labels = train.select(col("doc_id"),
         (col("n_chars") >= 500).cast("long").as("label"))
@@ -692,8 +692,7 @@ private[graft] object TextGates {
       // ONE corpus tokenize pass: the checkpointed postings feed the idf
       // table AND the scorer (identical values — r16; was one private
       // tokenize per consumer)
-      val postings = Retrieval.buildPostings(docs, "doc_id", "text")
-        .localCheckpoint()
+      val postings = Materialize.local(Retrieval.buildPostings(docs, "doc_id", "text"))
       val idf = Retrieval.queryIdfLiteralsFromPostings(
         docs.count(), postings, queries, "qtext")
       GateTables.put("bm25_idf_q3", idfValuesRows(idf))
@@ -719,8 +718,7 @@ private[graft] object TextGates {
       // driver-computed idf literals keep the lexical leg's ln out of
       // the hash-compared surface (see bm25_topk); one shared tokenize
       // pass via the checkpointed postings (r16)
-      val postings = Retrieval.buildPostings(docs, "doc_id", "text")
-        .localCheckpoint()
+      val postings = Materialize.local(Retrieval.buildPostings(docs, "doc_id", "text"))
       val idf = Retrieval.queryIdfLiteralsFromPostings(
         docs.count(), postings, queries, "qtext")
       GateTables.put("bm25_idf_q5", idfValuesRows(idf))
@@ -739,8 +737,7 @@ private[graft] object TextGates {
       val queries = bm25GateQueries3(s)
       // same driver-computed idf discipline as bm25_topk (one shared
       // tokenize pass, r16)
-      val postings = Retrieval.buildPostings(docs, "doc_id", "text")
-        .localCheckpoint()
+      val postings = Materialize.local(Retrieval.buildPostings(docs, "doc_id", "text"))
       val idf = Retrieval.queryIdfLiteralsFromPostings(
         docs.count(), postings, queries, "qtext")
       GateTables.put("bm25_idf_q3", idfValuesRows(idf))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 import org.apache.spark.sql.types.StringType
 
 /**
@@ -109,9 +110,10 @@ object Annotation {
   private[graft] def alphaNominalFromCountsE6(ucRaw: DataFrame): DataFrame = {
     val spark = ucRaw.sparkSession
     import spark.implicits._
-    val uc = ucRaw
-      .localCheckpoint() // the per-unit reduction AND the marginals read it
-    val per = uc.groupBy(col("_u"))
+    // the per-unit reduction AND the marginals read it
+    val uc = Materialize.local(ucRaw)
+    // totals AND the kept-unit semi-join read it
+    val per = Materialize.local(uc.groupBy(col("_u"))
       .agg(sum(col("_c")).as("_m"),
         sum(col("_c") * col("_c")).as("_ss"))
       .filter(col("_m") >= 2L)
@@ -120,8 +122,7 @@ object Annotation {
           "— downsample the unit (the bound keeps (m^2 - ss)*10^6 inside " +
           "exact int64)")).isNull)
       .select(col("_u"), col("_m"),
-        expr("((_m * _m - _ss) * 1000000L) div (_m - 1L)").as("_do"))
-      .localCheckpoint() // totals AND the kept-unit semi-join read it
+        expr("((_m * _m - _ss) * 1000000L) div (_m - 1L)").as("_do")))
     val tot = per.agg(count(lit(1)).as("_units"), sum(col("_m")).as("_n"),
       sum(col("_do")).as("_doe6")).head()
     if (tot.isNullAt(1) || tot.getLong(1) == 0L)
@@ -176,7 +177,8 @@ object Annotation {
         lit("krippendorffAlphaIntervalE6: |rating| must be <= 10^3 — " +
           "rescale wider scores upstream (the bound keeps the moment " +
           "products inside exact int64)")).isNull)
-    val per = r.groupBy(col("_u"))
+    // totals and the degenerate check read it
+    val per = Materialize.local(r.groupBy(col("_u"))
       .agg(count(lit(1)).as("_m"), sum(col("_v")).as("_s1"),
         sum(col("_v") * col("_v")).as("_s2"))
       .filter(col("_m") >= 2L)
@@ -191,8 +193,7 @@ object Annotation {
         // IntegralDivide then lands back in int64: per-unit do_e6 is
         // bounded by 2*m*10^12 <= 2*10^18 at m = 10^6.
         expr("(cast(_m * _s2 - _s1 * _s1 as decimal(38,0)) * 2000000L)" +
-          " div (_m - 1L)").as("_do"))
-      .localCheckpoint() // totals and the degenerate check read it
+          " div (_m - 1L)").as("_do")))
     val tot = per.agg(count(lit(1)).as("_units"), sum(col("_m")).as("_n"),
       sum(col("_s1").cast(org.apache.spark.sql.types.DecimalType(38, 0)))
         .as("_t1"),
@@ -275,7 +276,7 @@ object Annotation {
     * table by summing out the rater.
     */
   private[graft] def raterReliabilityFromCounts(urlcRaw: DataFrame): DataFrame = {
-    val urlc = urlcRaw.localCheckpoint() // consensus, join, c_rv read it
+    val urlc = Materialize.local(urlcRaw) // consensus, join, c_rv read it
     val cons = consensusFromCounts(
         urlc.groupBy(col("_u"), col("_l")).agg(sum(col("_c")).as("_c")))
       .select(col("unit").as("_u"), col("label").as("_cl"))
@@ -348,15 +349,15 @@ object Annotation {
     val spark = df.sparkSession
     import spark.implicits._
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val uc = df
+    // per-unit sizes, marginals, pair sums read it
+    val uc = Materialize.local(df
       .select(col(unitCol).cast(StringType).as("_u"),
         col(valueCol).cast(org.apache.spark.sql.types.LongType).as("_v"))
       .filter(col("_u").isNotNull && col("_v").isNotNull)
-      .groupBy(col("_u"), col("_v")).agg(count(lit(1)).as("_c"))
-      .localCheckpoint() // per-unit sizes, marginals, pair sums read it
-    val pu = uc.groupBy(col("_u")).agg(sum(col("_c")).as("_m"))
-      .filter(col("_m") >= 2L)
-      .localCheckpoint() // kept-unit semi-joins and totals read it
+      .groupBy(col("_u"), col("_v")).agg(count(lit(1)).as("_c")))
+    // kept-unit semi-joins and totals read it
+    val pu = Materialize.local(uc.groupBy(col("_u")).agg(sum(col("_c")).as("_m"))
+      .filter(col("_m") >= 2L))
     val kuc = uc.join(pu.select(col("_u")), Seq("_u"), "left_semi")
     val nvRows = kuc.groupBy(col("_v")).agg(sum(col("_c")).as("_nv"))
       .orderBy(col("_v"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 import graft.engine.Partitioning
 import graft.functions.TextFunctions._
 
@@ -31,20 +32,17 @@ object Decontamination {
       .select(xxhash64(col("_g")).as("h"))
       .distinct()
 
-  /** The probe-hash set, CACHED and sized: `(hashes, count)`. The
-    * broadcast-cap guard needs the count before the join, and without
-    * caching that count job re-runs the full probe tokenize + shingle +
-    * distinct aggregation that the join then runs a third time
-    * (uncached lineage — round-8 advice). Caching is safe by the same
-    * argument the broadcast is: probe corpora are benchmark-sized. A
-    * pipeline calling [[contaminationFlags]] and [[overlapStats]] on
+  /** The probe-hash set, materialized and sized: `(hashes, count)`.
+    * The broadcast-cap guard needs the count before the join; the
+    * materialization's row count is it, so the probe tokenize + shingle
+    * + distinct aggregation runs once. Materializing is safe by the
+    * same argument the broadcast is: probe corpora are benchmark-sized.
+    * A pipeline calling [[contaminationFlags]] and [[overlapStats]] on
     * the same probes can compute this once and pass it to both.
     */
-  def cachedProbeHashes(
-      probes: DataFrame, textCol: String, n: Int): (DataFrame, Long) = {
-    val hashes = probeShingleHashes(probes, textCol, n).cache()
-    (hashes, hashes.count())
-  }
+  def materializedProbeHashes(
+      probes: DataFrame, textCol: String, n: Int): (DataFrame, Long) =
+    Materialize.localWithRows(probeShingleHashes(probes, textCol, n))
 
   /** Every document, plus a `contaminated` flag: true iff the doc shares
     * at least one word n-gram with the probe corpus.
@@ -70,7 +68,7 @@ object Decontamination {
       precomputedProbeHashes: Option[(DataFrame, Long)] = None
   ): DataFrame = {
     val (probeHashes, probeCount) = precomputedProbeHashes
-      .getOrElse(cachedProbeHashes(probes, probeTextCol, n))
+      .getOrElse(materializedProbeHashes(probes, probeTextCol, n))
     val corpusShingles = Partitioning.spreadByKey(
         docs.select(col(idCol).as("id"), col(textCol).as("_txt")), col("id"))
       .select(col("id"), explode(array_distinct(shingles(col("_txt"), n))).as("_g"))
@@ -115,8 +113,7 @@ object Decontamination {
     val pg = probes.select(col(probeIdCol).as("_pid"),
         explode(array_distinct(shingles(col(probeTextCol), n))).as("_g"))
       .select(col("_pid"), xxhash64(col("_g")).as("_h"))
-    val pHashes = pg.select(col("_h")).distinct().cache()
-    val pCount = pHashes.count()
+    val (pHashes, pCount) = Materialize.localWithRows(pg.select(col("_h")).distinct())
     val probeSide =
       if (pCount <= maxBroadcastProbeHashes) broadcast(pHashes) else pHashes
     val corpusHashes = docs
@@ -175,15 +172,13 @@ object Decontamination {
     // probe identity = fingerprint of the normalized text (stable across
     // retries/layouts, unlike monotonically_increasing_id), deduped so a
     // benchmark item present twice counts once in n_probe_hits
-    val probeSigs = probes
+    val (probeSigs, probeCount) = Materialize.localWithRows(probes
       .select(fingerprintXx(col(probeTextCol)).as("_pid"),
         Dedup.minHashSignature(col(probeTextCol), numHashes, shingleSize)
           .as("_psig"))
       .dropDuplicates("_pid")
       .select(col("_pid"), col("_psig"),
-        explode(Dedup.lshBandKeys(col("_psig"), bands, rowsPerBand)).as("bk"))
-      .cache()
-    val probeCount = probeSigs.count()
+        explode(Dedup.lshBandKeys(col("_psig"), bands, rowsPerBand)).as("bk")))
     val probeSide =
       if (probeCount <= maxBroadcastProbes) broadcast(probeSigs)
       else probeSigs
@@ -233,7 +228,7 @@ object Decontamination {
   ): DataFrame = {
     import org.apache.spark.sql.types.DoubleType
     val (probeHashes0, probeCount) = precomputedProbeHashes
-      .getOrElse(cachedProbeHashes(probes, probeTextCol, n))
+      .getOrElse(materializedProbeHashes(probes, probeTextCol, n))
     val probeHashes = probeHashes0.withColumn("_hit", lit(1L))
     val corpusShingles = Partitioning.spreadByKey(
         docs.select(col(idCol).as("id"), col(textCol).as("_txt")), col("id"))
@@ -305,12 +300,13 @@ object Decontamination {
       tokens(lower(col(textCol))).as("_ltoks"))
     val wins = Dedup.tokenWindowFingerprints(
       base.select(col("_id"), col("_ltoks").as("_toks")), window)
-    val probeFps = Dedup.tokenWindowFingerprints(
-        probes.select(lit(0L).as("_id"),
-          tokens(lower(col(probeTextCol))).as("_toks")), window)
-      .select(col("_h")).distinct().cache()
+    val (probeFps, probeCount) = Materialize.localWithRows(
+      Dedup.tokenWindowFingerprints(
+          probes.select(lit(0L).as("_id"),
+            tokens(lower(col(probeTextCol))).as("_toks")), window)
+        .select(col("_h")).distinct())
     val probeSide =
-      if (probeFps.count() <= maxBroadcastProbeWindows) broadcast(probeFps)
+      if (probeCount <= maxBroadcastProbeWindows) broadcast(probeFps)
       else probeFps
     val cuts = wins.join(probeSide, Seq("_h"), "left_semi")
       .select(col("_id"), col("_s"),

@@ -210,8 +210,7 @@ object Dedup {
   private[graft] def setSimPairsFromGrams(
       grams: DataFrame,
       thresholdPpm: Long,
-      maxPrefixGramDf: Long = 100000L,
-      inputMaterialized: Boolean = false
+      maxPrefixGramDf: Long = 100000L
   ): DataFrame = {
     require(thresholdPpm > 0L && thresholdPpm <= 1000000L,
       s"setSimPairsFromGrams: thresholdPpm must be in (0, 1e6], got $thresholdPpm")
@@ -219,15 +218,10 @@ object Dedup {
       s"setSimPairsFromGrams: maxPrefixGramDf must be >= 1, got $maxPrefixGramDf")
     val w = org.apache.spark.sql.expressions.Window
     val hasNew = grams.columns.contains("_new")
-    val dsRaw = (if (hasNew) grams.select(col("_id"), col("_g"), col("_new"))
-              else grams.select(col("_id"), col("_g"), lit(true).as("_new")))
-    // reused: prefix, verify. When the CALLER already
-    // checkpointed the gram table (the ER batch op — its state union is
-    // read by three consumers of its own), re-checkpointing this trivial
-    // projection was one full extra materialization per batch; the
-    // consumers re-derive the projection from the caller's in-memory
-    // blocks instead.
-    val ds = if (inputMaterialized) dsRaw else Materialize.local(dsRaw)
+    // reused: prefix, verify
+    val ds = Materialize.local(
+      if (hasNew) grams.select(col("_id"), col("_g"), col("_new"))
+      else grams.select(col("_id"), col("_g"), lit(true).as("_new")))
     // Materialized: both candidate-join sides read pref, and its window
     // chain is too much plan to compute twice (measured).
     val pref = Materialize.local(prefixRows(ds, thresholdPpm))

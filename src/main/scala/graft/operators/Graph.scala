@@ -55,8 +55,8 @@ object Graph {
     *    materialization's row count bounds the node count for free
     *    ([[Materialize.localWithRows]]);
     *  - `nodeStrings`: the node set `(_v STRING)` over both endpoint
-    *    columns, materialized, and its count `n`, counted on first
-    *    use;
+    *    columns, materialized, and its count `n`, the materialization's
+    *    row count;
     *  - the dictionary gate: at `n ≥ dictThreshold` the
     *    order-preserving long dictionary (materialized — encode and
     *    decode both read it), and `edges` are the encoded edges,
@@ -77,14 +77,16 @@ object Graph {
     */
   private[graft] final class GraphIds private (
       strings: DataFrame,
-      nodeSet: => DataFrame,
+      nodeSet: => (DataFrame, Long),
       nodeBound: Long,
       dictThreshold: Long,
       endpointCols: Seq[String]
   ) {
-    lazy val nodeStrings: DataFrame = nodeSet
+    private lazy val nodeSetRows = nodeSet
 
-    lazy val n: Long = nodeStrings.count()
+    lazy val nodeStrings: DataFrame = nodeSetRows._1
+
+    lazy val n: Long = nodeSetRows._2
 
     private val dict: Option[DataFrame] =
       if (dictThreshold < Long.MaxValue && nodeBound >= dictThreshold && n >= dictThreshold)
@@ -136,7 +138,7 @@ object Graph {
     def apply(edges: DataFrame, endpointA: String, endpointB: String,
         dictThreshold: Long): GraphIds = {
       val (e, rows) = Materialize.localWithRows(edges)
-      val nodes = Materialize.local(e.select(col(endpointA).as("_v"))
+      val nodes = Materialize.localWithRows(e.select(col(endpointA).as("_v"))
         .unionByName(e.select(col(endpointB).as("_v")))
         .distinct())
       new GraphIds(e, nodes, 2L * rows, dictThreshold, Seq(endpointA, endpointB))
@@ -147,7 +149,7 @@ object Graph {
       */
     def symmetric(sym: DataFrame, dictThreshold: Long): GraphIds = {
       val (s, rows) = Materialize.localWithRows(sym)
-      new GraphIds(s, Materialize.local(s.select(col("_s").as("_v")).distinct()),
+      new GraphIds(s, Materialize.localWithRows(s.select(col("_s").as("_v")).distinct()),
         rows, dictThreshold, Seq("_s", "_d"))
     }
   }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
 import graft.functions.TextFunctions
@@ -208,13 +209,13 @@ object ImportanceScoring {
       textCol: String,
       periodCol: Column
   ): DataFrame = {
-    val pf = docs
+    // three consumers of one tokenize pass
+    val pf = Materialize.local(docs
       .select(periodCol.cast(LongType).as("_p"),
         explode(TextFunctions.tokens(lower(col(textCol)))).as("_t"))
       .filter(col("_p").isNotNull)
       .select(col("_p"), xxhash64(col("_t")).as("_fp"))
-      .distinct()
-      .localCheckpoint() // three consumers of one tokenize pass
+      .distinct())
     val sizes = pf.groupBy(col("_p")).agg(count(lit(1)).as("n"))
     val pairs = sizes.select((col("_p") + 1).as("_p"), col("n").as("n_prev"))
       .join(sizes.select(col("_p"), col("n").as("n_cur")), Seq("_p"))

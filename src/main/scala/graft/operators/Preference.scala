@@ -117,13 +117,13 @@ object Preference {
       tieCol: String,
       rounds: Int = 8
   ): DataFrame = {
-    val c = comparisons
+    // both orientations of the tie slice read it
+    val c = Materialize.local(comparisons
       .select(col(winnerCol).cast("string").as("_w"),
         col(loserCol).cast("string").as("_l"),
         col(tieCol).cast("boolean").as("_t"))
       .filter(col("_w").isNotNull && col("_l").isNotNull &&
-        col("_w") =!= col("_l") && col("_t").isNotNull)
-      .localCheckpoint() // both orientations of the tie slice read it
+        col("_w") =!= col("_l") && col("_t").isNotNull))
     val halfUnits = c
       .select(col("_w").as("_i"), col("_l").as("_j"),
         when(col("_t"), lit(1L)).otherwise(lit(2L)).as("_wn"))
@@ -202,28 +202,25 @@ object Preference {
     // completed to BOTH orientations (zero-filled), then
     // n_ij = w_ij + w_ji via one reversed self-join — symmetric pair
     // stats, no window
-    val w0 = orientedCounts
+    val w0 = Materialize.local(orientedCounts
       .select(col("_i").cast("string").as("_i"),
         col("_j").cast("string").as("_j"), col("_wn").cast("long").as("_wn"))
       .filter(col("_i").isNotNull && col("_j").isNotNull &&
-        col("_i") =!= col("_j") && col("_wn") > 0L)
-      .localCheckpoint()
-    val wBoth = w0.select(col("_i"), col("_j"), col("_wn"))
+        col("_i") =!= col("_j") && col("_wn") > 0L))
+    val wBoth = Materialize.local(w0.select(col("_i"), col("_j"), col("_wn"))
       .unionByName(w0.select(col("_j").as("_i"), col("_i").as("_j"),
         lit(0L).as("_wn")))
-      .groupBy("_i", "_j").agg(sum(col("_wn")).as("_w_ij"))
-      .localCheckpoint()
-    val ps = wBoth
+      .groupBy("_i", "_j").agg(sum(col("_wn")).as("_w_ij")))
+    val ps = Materialize.local(wBoth
       .join(wBoth.select(col("_j").as("_i"), col("_i").as("_j"),
         col("_w_ij").as("_w_ji")), Seq("_i", "_j"))
       .select(col("_i"), col("_j"), (col("_w_ij") + col("_w_ji")).as("_n_ij"))
       .filter(assert_true(col("_n_ij") <= lit(1000000L),
         lit("bradleyTerryScaled: a pair carries > 10^6 comparisons — " +
           "deduplicate or downsample the comparison log (the bound keeps " +
-          "n_ij * 10^12 inside exact int64)")).isNull)
-      .localCheckpoint()
+          "n_ij * 10^12 inside exact int64)")).isNull))
     val wins = w0.groupBy(col("_i")).agg(sum(col("_wn")).as("_wins"))
-    val items = w0.select(col("_i"))
+    val (items, nItems) = Materialize.localWithRows(w0.select(col("_i"))
       .unionByName(w0.select(col("_j").as("_i")))
       .distinct()
       .join(wins, Seq("_i"), "left")
@@ -231,12 +228,9 @@ object Preference {
       .filter(assert_true(col("_wins") <= lit(1000000L),
         lit("bradleyTerryScaled: an item carries > 10^6 wins — " +
           "downsample the comparison log (the bound keeps " +
-          "wins * 10^12 inside exact int64)")).isNull)
-      .localCheckpoint()
-    val nItems = items.count()
+          "wins * 10^12 inside exact int64)")).isNull))
     val scale = nItems * 1000000L
-    var g = items.select(col("_i"), lit(1000000L).as("_g"))
-      .localCheckpoint()
+    var g = Materialize.local(items.select(col("_i"), lit(1000000L).as("_g")))
     for (_ <- 1 to rounds) {
       val d = ps
         .join(g.select(col("_i"), col("_g").as("_gi")), Seq("_i"))
@@ -254,22 +248,20 @@ object Preference {
       // table; `g` keeps its own (now cheap) checkpoint because the next
       // round reads it twice. Measured r16: the MM joins once per round
       // instead of twice.
-      val gRaw = items.join(d, Seq("_i"), "left")
+      val gRaw = Materialize.local(items.join(d, Seq("_i"), "left")
         .select(col("_i"),
           least(lit(1000000000000L), greatest(lit(1L),
             expr("(_wins * 1000000000000L) div coalesce(_D, 1L)")))
-            .as("_g"))
-        .localCheckpoint()
+            .as("_g")))
       val tot = gRaw.agg(sum(col("_g").cast(d38)).as("_tot"))
       // the 1-floor applies AFTER the normalize too — its truncation can
       // otherwise zero a floor-rating item and reintroduce the
       // γ_i + γ_j = 0 division the pre-normalize clamp exists to prevent
-      g = gRaw.crossJoin(broadcast(tot))
+      g = Materialize.local(gRaw.crossJoin(broadcast(tot))
         .select(col("_i"),
           greatest(lit(1L),
             expr(s"CAST((CAST(_g AS DECIMAL(38,0)) * $scale) div _tot AS BIGINT)"))
-            .as("_g"))
-        .localCheckpoint()
+            .as("_g")))
     }
     items.join(g, Seq("_i"))
       .join(ps.groupBy("_i").agg(sum(col("_n_ij")).as("_cmp")), Seq("_i"), "left")

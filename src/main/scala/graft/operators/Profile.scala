@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 import org.apache.spark.sql.types._
 
 /**
@@ -253,9 +254,8 @@ object Profile {
         ") AS (g, v)")
     // the ONE pass over the data — materialized because moments, bucket
     // totals and the rank-bearing bucket collects all reduce over it
-    val hist = stacked.groupBy(col("g"), col("v"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+    val hist = Materialize.local(stacked.groupBy(col("g"), col("v"))
+      .agg(count(lit(1)).as("cnt")))
     val moments = hist.groupBy(col("g"))
       .agg(
         sum(when(col("v").isNotNull, col("cnt")).otherwise(0L)).as("n"),
@@ -516,12 +516,11 @@ object Profile {
       buckets: Int = 1024,
       directThreshold: Long = 1L << 16
   ): Option[Seq[Double]] = {
-    val h = hist
+    val h = Materialize.local(hist
       .select(lit("c").as("g"), col("v").cast(DoubleType).as("v"),
         col("cnt").cast(LongType).as("cnt"))
       .filter(col("v").isNotNull && col("cnt") > 0L)
-      .groupBy(col("g"), col("v")).agg(sum(col("cnt")).as("cnt"))
-      .localCheckpoint()
+      .groupBy(col("g"), col("v")).agg(sum(col("cnt")).as("cnt")))
     val m = h
       .agg(sum(col("cnt")).as("n"), count(lit(1)).as("d"),
         min(col("v")).as("mn"), max(col("v")).as("mx"))
@@ -561,12 +560,11 @@ object Profile {
   ): Option[Seq[Double]] = {
     require(probs.nonEmpty && probs.forall(p => p >= 0.0 && p <= 1.0),
       s"weightedPercentiles: probs must be in [0,1], got $probs")
-    val hist = df
+    val hist = Materialize.local(df
       .select(lit("c").as("g"), col(colName).cast(DoubleType).as("v"),
         weight.cast(LongType).as("_w"))
       .filter(col("v").isNotNull && col("_w").isNotNull && col("_w") > 0)
-      .groupBy(col("g"), col("v")).agg(sum(col("_w")).as("cnt"))
-      .localCheckpoint()
+      .groupBy(col("g"), col("v")).agg(sum(col("_w")).as("cnt")))
     val m = hist
       .agg(sum(col("cnt")).as("n"), count(lit(1)).as("d"),
         min(col("v")).as("mn"), max(col("v")).as("mx"))
@@ -612,14 +610,13 @@ object Profile {
       s"weightedPercentilesByGroup: probs must be in [0,1], got $probs")
     val spark = df.sparkSession
     import spark.implicits._
-    val hist = df
+    val hist = Materialize.local(df
       .select(col(groupCol).cast(StringType).as("g"),
         col(colName).cast(DoubleType).as("v"),
         weight.cast(LongType).as("_w"))
       .filter(col("g").isNotNull && col("v").isNotNull &&
         col("_w").isNotNull && col("_w") > 0)
-      .groupBy(col("g"), col("v")).agg(sum(col("_w")).as("cnt"))
-      .localCheckpoint()
+      .groupBy(col("g"), col("v")).agg(sum(col("_w")).as("cnt")))
     val statRows = hist.groupBy(col("g"))
       .agg(sum(col("cnt")).as("n"), count(lit(1)).as("d"),
         min(col("v")).as("mn"), max(col("v")).as("mx"))
@@ -1383,15 +1380,15 @@ object Profile {
   ): DataFrame = {
     require(buckets > 0, s"percentRank: buckets must be positive, got $buckets")
     val x = col(colName).cast(DoubleType)
-    // materialize the histogram ONCE (localCheckpoint, the Dedup
-    // convention): it feeds the bounds aggregate, the bin totals, the
-    // within-bin window AND the rank join — left lazy, the corpus scan
-    // + histogram shuffle re-run for each (measured: all of
+    // materialize the histogram ONCE (the Dedup convention): it feeds
+    // the bounds aggregate, the bin totals, the within-bin window AND
+    // the rank join — left lazy, the corpus scan + histogram shuffle
+    // re-run for each (measured: all of
     // percent_rank's 2.2 s at sf0.1, not the prefix sum). Size is
     // bounded by |distinct values|, the operator's working set by
     // construction.
-    val hist = df.filter(x.isNotNull).groupBy(x.as("v")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+    val hist = Materialize.local(
+      df.filter(x.isNotNull).groupBy(x.as("v")).agg(count(lit(1)).as("cnt")))
     val bounds = hist.agg(min(col("v")).as("mn"), max(col("v")).as("mx")).head()
     if (bounds.isNullAt(0)) {
       // no non-null values: every row ranks null (nothing to rank against)
@@ -1558,9 +1555,8 @@ object Profile {
         .collect()(0)
       (r, if (r.isNullAt(3)) None else Some(r.getSeq[Double](3)))
     } else {
-      val hist = df.select(lit("c").as("g"), x.as("v"))
-        .groupBy(col("g"), col("v")).agg(count(lit(1)).as("cnt"))
-        .localCheckpoint()
+      val hist = Materialize.local(df.select(lit("c").as("g"), x.as("v"))
+        .groupBy(col("g"), col("v")).agg(count(lit(1)).as("cnt")))
       val r = hist.agg(
         sum(when(col("v").isNotNull, col("cnt"))).as("n"),
         sum(round(col("v"), sumScale).cast(sumT) * col("cnt")).as("s"),
@@ -1766,7 +1762,9 @@ object Profile {
     // ([[graft.operators.Sampling.withinGroupRanks]], the percentRank
     // design) so no task ever sorts a whole group. Tie-break by _id
     // keeps both orders total either way.
-    val ranked = (if (maxN <= rankWindowThreshold) {
+    // reused by stats + the seed pass + every merge round: cut the
+    // lineage once (the pageRankScaled discipline)
+    val ranked = Materialize.local(if (maxN <= rankWindowThreshold) {
       val wx = Window.partitionBy(col("_g")).orderBy(col("_x"), col("_id"))
       val wy = Window.partitionBy(col("_g")).orderBy(col("_y"), col("_id"))
       vals
@@ -1782,9 +1780,6 @@ object Profile {
             col("_rank").as("_rx")), 1024, tieCols = Seq("_id")).get
         .select(col("_g"), col("_rx"), col("_rank").as("_ry"))
     })
-      // reused by stats + the seed pass + every merge round: cut the
-      // lineage once (the pageRankScaled discipline)
-      .localCheckpoint()
     val d38 = DecimalType(38, 0)
     val stats = ranked.groupBy(col("_g"))
       .agg(count(lit(1)).as("n"),
@@ -1830,10 +1825,10 @@ object Profile {
       .select(col("_g"), col("_d"))
     // 3. cross-grid: ONE cell histogram, then width-doubling rounds of
     // (right-cell count) × (left-span counts in strictly later buckets)
-    val cells = ranked
+    // read once per round; rows never again
+    val cells = Materialize.local(ranked
       .groupBy(col("_g"), blkOf.as("_blk"), bkyOf.as("_bky"))
-      .agg(count(lit(1)).as("_c"))
-      .localCheckpoint() // read once per round; rows never again
+      .agg(count(lit(1)).as("_c")))
     val maxBlocks = (maxN + seedBlockSize - 1) / seedBlockSize
     var partials = Seq(seedD, bucketD)
     var w = 1L

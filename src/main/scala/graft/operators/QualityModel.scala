@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.functions.TextFunctions
@@ -214,20 +215,18 @@ object QualityModel {
     val spark = docs.sparkSession
     import spark.implicits._
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val lab = labels
+    val (lab, n) = Materialize.localWithRows(labels
       .select(col(idCol), col(labelCol).cast(LongType).as("_y"))
       .filter(col(idCol).isNotNull && col("_y").isNotNull)
       .filter(assert_true(col("_y").isin(0L, 1L),
-        lit("trainLogisticEpochsE6: label must be 0/1")).isNull)
-      .localCheckpoint()
-    val n = lab.count()
+        lit("trainLogisticEpochsE6: label must be 0/1")).isNull))
     require(n > 0, "trainLogisticEpochsE6: no labeled docs")
-    val feats = hashedTokenFeatures(
+    // margins AND gradients read it, every epoch
+    val feats = Materialize.local(hashedTokenFeatures(
         docs.join(lab.select(col(idCol)), Seq(idCol), "left_semi"),
         idCol, textCol, buckets, salt)
       .unionByName(lab.select(col(idCol), lit(-1L).as("bucket"),
-        lit(1L).as("cnt")))
-      .localCheckpoint() // margins AND gradients read it, every epoch
+        lit(1L).as("cnt"))))
     val tbl = graft.operators.Graph.sigmoidTablePpm()
     val hi = 6000000L // the table's ±6.0 range in the e6 margin scale
     val idxSql = s"CASE WHEN _m <= ${-hi} THEN 0L " +
@@ -328,10 +327,10 @@ object QualityModel {
       .withColumn("gap_ppm",
         abs(expr("CAST(sum_p div n AS BIGINT)") -
           expr("CAST((CAST(n_pos AS DECIMAL(38,0)) * 1000000) div n AS BIGINT)")))
-    val ece = perBucket.groupBy(col("t_e6"))
+    // rows AND the 1-row argmin fold read it
+    val ece = Materialize.local(perBucket.groupBy(col("t_e6"))
       .agg(expr("CAST(sum(CAST(n AS DECIMAL(38,0)) * gap_ppm) div sum(n) AS BIGINT)")
-        .as("ece_ppm"))
-      .localCheckpoint() // rows AND the 1-row argmin fold read it
+        .as("ece_ppm")))
     val best = ece.agg(min(struct(col("ece_ppm"), col("t_e6"))).as("_best"))
     ece.crossJoin(broadcast(best))
       .select(col("t_e6"), col("ece_ppm"),
@@ -453,13 +452,13 @@ object QualityModel {
     * sufficient statistics (possibly merged across batches).
     */
   def calibrationFromStats(stats: DataFrame): DataFrame = {
-    val b = stats
+    // rows AND the 1-row ECE fold read the buckets
+    val b = Materialize.local(stats
       .select(col("bucket"), col("n"), col("n_pos"),
         expr("CAST(sum_p div n AS BIGINT)").as("mean_prob_ppm"),
         expr("CAST((CAST(n_pos AS DECIMAL(38,0)) * 1000000) div n AS BIGINT)")
           .as("pos_rate_ppm"))
-      .withColumn("gap_ppm", abs(col("mean_prob_ppm") - col("pos_rate_ppm")))
-      .localCheckpoint() // rows AND the 1-row ECE fold read the buckets
+      .withColumn("gap_ppm", abs(col("mean_prob_ppm") - col("pos_rate_ppm"))))
     val ece = b.agg(
       expr("CAST(sum(CAST(n AS DECIMAL(38,0)) * gap_ppm) div sum(n) AS BIGINT)")
         .as("ece_ppm"))

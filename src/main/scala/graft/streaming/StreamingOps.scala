@@ -586,10 +586,10 @@ object StreamingOps {
       // checkpoint: the survivors write AND the state-union write both
       // consume `fresh` — left lazy, the in-batch keep-one aggregate
       // and the state anti-join executed TWICE per batch (r16 measure)
-      val fresh = (state match {
+      val fresh = Materialize.local(state match {
         case Some(st) => inBatch.join(st, Seq("_fp"), "left_anti")
         case None => inBatch
-      }).localCheckpoint()
+      })
       fresh.drop("_fp").write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
       // no distinct() on the union: the store is distinct by induction
       // (in-batch keep-one + the anti-join make `fresh`'s fingerprints
@@ -635,9 +635,8 @@ object StreamingOps {
       // checkpoint: the kept-rows write and the consumed-total state
       // write both consume `q` — left lazy, the two-level prefix-sum
       // machinery executed twice per batch (r16 measure)
-      val q = graft.operators.Sampling.tokenQuotaPerGroup(
-        batch, keyCol, groupCol, tokensCol, budget)
-        .localCheckpoint()
+      val q = Materialize.local(graft.operators.Sampling.tokenQuotaPerGroup(
+        batch, keyCol, groupCol, tokensCol, budget))
       tokenQuotaStep(q, state, groupCol, keyCol, lit(budget),
         s"$outPath/batch=$batchId")
     }
@@ -671,9 +670,8 @@ object StreamingOps {
       // the within-batch cumulative machinery (keep column recomputed
       // against the offset + per-group budget); checkpointed for the
       // applyTokenQuotaBatch reason
-      val q = graft.operators.Sampling.tokenQuotaPerGroupBudgets(
-        batch, keyCol, groupCol, tokensCol, budgets)
-        .localCheckpoint()
+      val q = Materialize.local(graft.operators.Sampling.tokenQuotaPerGroupBudgets(
+        batch, keyCol, groupCol, tokensCol, budgets))
       tokenQuotaStep(q, state, groupCol, keyCol, budgetCase,
         s"$outPath/batch=$batchId")
     }
@@ -776,8 +774,7 @@ object StreamingOps {
       // cleaned-output write (keeper spans + historical semi-join) and
       // the state append both consume it — left lazy, the tokenize +
       // window-fingerprint chain executed once per consumer (r16)
-      val wins = Dedup.tokenWindowFingerprints(base, windowSize)
-        .localCheckpoint()
+      val wins = Materialize.local(Dedup.tokenWindowFingerprints(base, windowSize))
       val inBatch = Dedup.nonKeeperSpans(wins, windowSize)
       val cuts = state match {
         case Some(st) =>
@@ -973,9 +970,8 @@ object StreamingOps {
         .select(col(valueCol).cast("long").as("v"))
         .filter(col("v").isNotNull)
         .groupBy(col("v")).agg(count(lit(1)).as("cnt"))
-      val merged = state.fold(own)(_.unionByName(own))
-        .groupBy(col("v")).agg(sum(col("cnt")).as("cnt"))
-        .localCheckpoint()
+      val merged = Materialize.local(state.fold(own)(_.unionByName(own))
+        .groupBy(col("v")).agg(sum(col("cnt")).as("cnt")))
       val n = merged.agg(coalesce(sum(col("cnt")), lit(0L)))
         .collect()(0).getLong(0)
       // an empty prefix has UNDEFINED quantiles: emit zero rows (the
@@ -1029,27 +1025,24 @@ object StreamingOps {
       // batch token total (sum) and the distinct-term frame (keys) both
       // come from the same map-side-combined aggregate — tokenizing twice
       // would double the dominant cost and break the scaladoc's claim.
-      val hCounts = batch.select(
+      val hCounts = Materialize.local(batch.select(
           explode(TextFunctions.tokens(lower(col(textCol)))).as("_t"))
         .groupBy(xxhash64(col("_t")).as("h"))
-        .agg(count(lit(1)).as("_hc"))
-        .localCheckpoint()
+        .agg(count(lit(1)).as("_hc")))
       val batchTokens = hCounts.agg(coalesce(sum(col("_hc")), lit(0L)))
         .collect()(0).getLong(0)
       val batchTerms = hCounts.select(col("h"))
       val oldTerms = old.map(_.filter(col("h").isNotNull).select(col("h")))
       val oldTokens = old.map(_.filter(col("h").isNull)
         .select(col("cnt")).head().getLong(0)).getOrElse(0L)
-      val newTerms = (oldTerms match {
+      val (newTerms, nNew) = Materialize.localWithRows(oldTerms match {
         case Some(ot) => batchTerms.join(ot, Seq("h"), "left_anti")
         case None => batchTerms
-      }).localCheckpoint()
-      val nNew = newTerms.count()
-      val mergedTerms = (oldTerms match {
+      })
+      val (mergedTerms, nDistinct) = Materialize.localWithRows(oldTerms match {
         case Some(ot) => ot.unionByName(newTerms)
         case None => newTerms
-      }).localCheckpoint()
-      val nDistinct = mergedTerms.count()
+      })
       val totalTokens = oldTokens + batchTokens
       import spark.implicits._
       Seq((nDistinct, totalTokens, nNew))
@@ -1086,11 +1079,11 @@ object StreamingOps {
       val own = batch.select(col(periodCol).cast("long").as("_p"))
         .filter(col("_p").isNotNull)
         .groupBy(col("_p")).agg(count(lit(1)).as("_c"))
-      val merged = (state match {
+      val merged = Materialize.local(state match {
         case Some(st) => st.unionByName(own)
           .groupBy(col("_p")).agg(sum(col("_c")).as("_c"))
         case None => own
-      }).localCheckpoint()
+      })
       graft.operators.ImportanceScoring.cusumFromCounts(merged)
         .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
       Some(merged)
@@ -1121,18 +1114,15 @@ object StreamingOps {
     require(n >= 1, s"applyNoveltyBatch: n must be positive, got $n")
     versionedBatch(spark, "noveltyStream", statePath, batchId, stateBuckets,
         Seq("_fp")) { state =>
-      val grams = batch
+      val (grams, total) = Materialize.localWithRows(batch
         .select(explode(array_distinct(
           graft.functions.TextFunctions.shingles(col(textCol), n))).as("_s"))
         .select(xxhash64(col("_s")).as("_fp"))
-        .distinct()
-        .localCheckpoint()
-      val novel = (state match {
+        .distinct())
+      val (novel, nov) = Materialize.localWithRows(state match {
         case Some(st) => grams.join(st, Seq("_fp"), "left_anti")
         case None => grams
-      }).localCheckpoint()
-      val total = grams.count()
-      val nov = novel.count()
+      })
       Seq((batchId, nov, total, nov * 1000000L / math.max(total, 1L)))
         .toDF("batch_id", "novel_ngrams", "distinct_ngrams", "novelty_ppm")
         .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
@@ -1419,8 +1409,7 @@ object StreamingOps {
           .unionByName(newGrams.withColumn("_new", lit(true)))
         case None => newGrams.withColumn("_new", lit(true))
       })
-      val pairs = Dedup.setSimPairsFromGrams(allGrams, thresholdPpm,
-          maxPrefixGramDf, inputMaterialized = true)
+      val pairs = Dedup.setSimPairsFromGrams(allGrams, thresholdPpm, maxPrefixGramDf)
         .select(col("id_a").as("_a"), col("id_b").as("_b"))
       val starEdges = oldLabels.map(_.filter(col("node") =!= col("label"))
         .select(col("node").as("_a"), col("label").as("_b")))
@@ -1485,12 +1474,12 @@ object StreamingOps {
       .select(col("id").as("_id"), col("g").as("_g"))
     val labels = st.filter(col("kind") === "l")
       .select(col("id").as("_sid"), col("label"))
-    val qGrams = batch.select(col(idCol).cast(StringType).as("_id"),
+    // reused: in-store split + the candidate join
+    val qGrams = Materialize.local(batch.select(col(idCol).cast(StringType).as("_id"),
         explode(array_distinct(
           TextFunctions.shingles(col(textCol), shingleSize))).as("_s"))
       .select(col("_id"), xxhash64(col("_s")).as("_g"))
-      .distinct()
-      .localCheckpoint() // reused: in-store split + the candidate join
+      .distinct())
     // no distinct on the store side: semi/anti joins are set-semantics
     // already, and each distinct would be one more shuffle in the
     // serving path's fixed latency
@@ -1598,7 +1587,7 @@ object StreamingOps {
         .filter(col("src").isNotNull && col("dst").isNotNull &&
           col("src") =!= col("dst"))
         .distinct()
-      val merged = graphProfileMergeState(state, inBatch).localCheckpoint()
+      val merged = Materialize.local(graphProfileMergeState(state, inBatch))
       // NOT the over-distinct seam: the state union's partitioning is the
       // bucketed-store read ∪ the batch anti-join, and graphProfile's
       // "redundant" distinct is ALSO the AQE coalesce that collapses that
@@ -1635,11 +1624,11 @@ object StreamingOps {
     versionedBatch(spark, "annotationStream", statePath, batchId) { state =>
       val inBatch = graft.operators.Annotation
         .ratingCounts(batch, unitCol, labelCol)
-      val merged = (state match {
+      val merged = Materialize.local(state match {
         case Some(st) => st.unionByName(inBatch)
           .groupBy("_u", "_l").agg(sum(col("_c")).as("_c"))
         case None => inBatch
-      }).localCheckpoint()
+      })
       graft.operators.Annotation.consensusFromCounts(merged)
         .write.mode("overwrite").parquet(s"$outPath/consensus/batch=$batchId")
       graft.operators.Annotation.alphaNominalFromCountsE6(merged)
@@ -1676,11 +1665,11 @@ object StreamingOps {
         .filter(col("_u").isNotNull && col("_r").isNotNull &&
           col("_l").isNotNull)
         .groupBy("_u", "_r", "_l").agg(count(lit(1)).as("_c"))
-      val merged = (state match {
+      val merged = Materialize.local(state match {
         case Some(st) => st.unionByName(inBatch)
           .groupBy("_u", "_r", "_l").agg(sum(col("_c")).as("_c"))
         case None => inBatch
-      }).localCheckpoint()
+      })
       graft.operators.Annotation.raterReliabilityFromCounts(merged)
         .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
       Some(merged)
@@ -1731,13 +1720,13 @@ object StreamingOps {
             col("_i") =!= col("_j"))
           .groupBy("_i", "_j").agg(count(lit(1)).as("_wn"))
         case Some(tc) =>
-          val c = batch
+          // both orientations of the tie slice
+          val c = Materialize.local(batch
             .select(col(winnerCol).cast("string").as("_w"),
               col(loserCol).cast("string").as("_l"),
               col(tc).cast("boolean").as("_t"))
             .filter(col("_w").isNotNull && col("_l").isNotNull &&
-              col("_w") =!= col("_l") && col("_t").isNotNull)
-            .localCheckpoint() // both orientations of the tie slice
+              col("_w") =!= col("_l") && col("_t").isNotNull))
           c.select(col("_w").as("_i"), col("_l").as("_j"),
               when(col("_t"), lit(1L)).otherwise(lit(2L)).as("_wn"))
             .unionByName(c.filter(col("_t"))
@@ -1745,11 +1734,11 @@ object StreamingOps {
                 lit(1L).as("_wn")))
             .groupBy("_i", "_j").agg(sum(col("_wn")).as("_wn"))
       }
-      val merged = (state match {
+      val merged = Materialize.local(state match {
         case Some(st) => st.unionByName(inBatch)
           .groupBy("_i", "_j").agg(sum(col("_wn")).as("_wn"))
         case None => inBatch
-      }).localCheckpoint()
+      })
       graft.operators.Preference.bradleyTerryFromCounts(merged, rounds)
         .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
       Some(merged)
@@ -1782,14 +1771,14 @@ object StreamingOps {
     versionedBatch(spark, "calibrationStream", statePath, batchId) { state =>
       val inBatch = graft.operators.QualityModel.calibrationSuffStats(
         batch, probPpmCol, labelCol, buckets)
-      val merged = (state match {
+      val merged = Materialize.local(state match {
         case Some(st) => st.unionByName(inBatch)
           .groupBy("bucket").agg(sum(col("n")).as("n"),
             sum(col("n_pos")).as("n_pos"),
             sum(col("sum_p")).cast(
               org.apache.spark.sql.types.DecimalType(38, 0)).as("sum_p"))
         case None => inBatch
-      }).localCheckpoint()
+      })
       graft.operators.QualityModel.calibrationFromStats(merged)
         .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
       Some(merged)
@@ -2266,10 +2255,9 @@ object StreamingOps {
     // read by the anti-join and the union
     val cur = Materialize.local(spark.read.parquet(ix.codesDir)
       .withColumn("centroid_id", col("centroid_id").cast(LongType)))
-    // read by the count, the uniqueness check and the encode
-    val missing = Materialize.local(history.select(col(idCol), col(vecCol))
+    // read by the uniqueness check and the encode
+    val (missing, n) = Materialize.localWithRows(history.select(col(idCol), col(vecCol))
       .join(cur.select(col(idCol)), Seq(idCol), "left_anti"))
-    val n = missing.count()
     if (n == 0L) {
       log.warn(s"$op: every history id is already indexed under $statePath — " +
         "no-op (completed-backfill replay, or nothing to do)")
@@ -2389,14 +2377,13 @@ object StreamingOps {
       s"pqDriftStream: retrainThresholdE9 must be >= 0, got $retrainThresholdE9")
     versionedBatch(spark, "pqDriftStream", statePath, batchId) { state =>
       val cells = ivfPqIndex(spark, indexStatePath, "pqDriftStream").cells
-      val occ = Similarity.ivfResidualsE6(batch, idCol, vecCol, cells)
-        .groupBy(col("centroid_id").as("bucket"))
-        .agg(count(lit(1)).as("cnt"))
-        // LAZY checkpoint: read twice (the empty-occupancy guard, then
-        // the reference write or the drift compare) — left unchecked the
-        // narrow assignment + aggregate ran twice per batch
-        .localCheckpoint(eager = false)
-      if (occ.isEmpty) {
+      // the empty-occupancy guard reads the checkpoint's row count; the
+      // reference write or the drift compare reads its blocks
+      val (occ, occRows) = Materialize.localWithRows(
+        Similarity.ivfResidualsE6(batch, idCol, vecCol, cells)
+          .groupBy(col("centroid_id").as("bucket"))
+          .agg(count(lit(1)).as("cnt")))
+      if (occRows == 0L) {
         // an empty reference would null every later compare (the
         // applyShiftBatch guard), and an empty scoring occupancy puts
         // n_cur = 0 into l1Drift's `div (2·n)`: skip loudly, the next

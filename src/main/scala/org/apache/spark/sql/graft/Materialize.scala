@@ -10,49 +10,61 @@ import org.apache.spark.storage.RDDBlockId
 import org.apache.spark.util.Utils
 
 /**
- * Materialization that tells the planner its size. A `localCheckpoint()`
- * frame is a `LogicalRDD` whose statistics are the optimizer's estimate
- * for the plan that produced it. Without column statistics that estimate
- * multiplies input sizes across a join and keeps the input size across
- * an aggregate or a filter, so it can be far above the rows actually
- * stored: later joins against the frame plan as sort-merge joins, and
- * only adaptive execution, after shuffling both sides, may switch one to
- * a broadcast. [[local]] checkpoints the frame
- * and replaces that estimate with the bytes its blocks actually occupy,
- * so Spark's own `spark.sql.autoBroadcastJoinThreshold` plans a small
- * intermediate as a broadcast join up front and a large one keeps its
- * sort-merge join. No new setting: the session's threshold decides.
+ * The one way graft materializes an intermediate: every checkpoint in
+ * the library goes through [[local]] or [[localWithRows]]. Three rules,
+ * each stated once here:
+ *
+ *  1. An already-materialized frame is returned as is. A frame is
+ *     materialized when its optimized plan is a `LocalRelation`, or a
+ *     `LogicalRDD` over a checkpointed RDD that carries its row count
+ *     (every frame this object returns). The optimizer has removed a
+ *     no-op projection by then, so `df.select(df.columns.map(col): _*)`
+ *     of a materialized frame is materialized too. Callers therefore
+ *     materialize what they read twice without asking whether their
+ *     input already was.
+ *  2. The row count comes from the checkpoint job. [[localWithRows]]
+ *     counts each partition's rows while it stores them, so a caller
+ *     that needs `count()` or `isEmpty` of the frame it just
+ *     materialized reads the count here and runs no job.
+ *  3. Only a frame with two or more consumers is materialized. A frame
+ *     read once is computed once anyway; checkpointing it adds a job.
+ *
+ * A materialization also tells the planner its size. A bare
+ * `localCheckpoint()` frame's statistics are the optimizer's estimate
+ * for the plan that produced it. Without column statistics that
+ * estimate multiplies input sizes across a join and keeps the input
+ * size across an aggregate or a filter, so it can be far from the bytes
+ * actually stored. Here `sizeInBytes` is the bytes the blocks occupy,
+ * so Spark's own `spark.sql.autoBroadcastJoinThreshold` decides each
+ * later join against the frame from its real size; no setting of its
+ * own. An empty result comes back as an empty local relation, which the
+ * optimizer folds out of the joins, unions and grouped aggregates over
+ * it at planning time.
  */
 object Materialize {
 
-  /** Eagerly local-checkpoint `df` (one job, the `localCheckpoint()`
-    * contract: blocks live in executor storage, lineage is cut) and
-    * return it with `sizeInBytes` = the stored block bytes, memory plus
-    * disk, as the block manager master recorded them when the
-    * checkpoint job stored the blocks (synchronously, so the size is
-    * known once the job returns). The checkpoint's output partitioning
-    * and constraints are kept. A checkpoint with no partitions at all —
-    * adaptive execution proved the result empty — comes back as an
-    * empty local relation, so the optimizer folds the joins, unions
-    * and grouped aggregates over it at planning time and they run no
-    * jobs.
-    */
+  /** [[localWithRows]] without the row count. */
   def local(df: DataFrame): DataFrame = localWithRows(df)._1
 
-  /** [[local]], plus the frame's row count. The checkpoint job counts
-    * each partition's rows while it stores them (Spark's eager
-    * `localCheckpoint()` runs the same per-partition count and drops
-    * it), so the count costs no job of its own: a caller that needs a
-    * size bound — [[graft.operators.Graph]]'s dictionary gate — reads it
-    * here instead of running `count()` over the stored frame.
+  /** Eagerly local-checkpoint `df` (one job; blocks live in executor
+    * storage and the lineage is cut) and return it with its row count,
+    * or return `df` itself with its known count when it is already
+    * materialized. The checkpoint's output partitioning and constraints
+    * are kept.
     */
   def localWithRows(df: DataFrame): (DataFrame, Long) = {
     val ds = df.asInstanceOf[classic.Dataset[_]]
     val session = ds.sparkSession
     val qe = ds.queryExecution
-    // the body of `Dataset.localCheckpoint(eager = true)`, under the same
-    // SQL execution, keeping the job's result; a plan with no partitions
-    // runs no job
+    qe.optimizedPlan match {
+      case l: LocalRelation => return (df, l.data.size.toLong)
+      case r: LogicalRDD if r.rdd.isCheckpointed && r.stats.rowCount.isDefined =>
+        return (df, r.stats.rowCount.get.toLong)
+      case _ =>
+    }
+    // the body of Dataset's eager local checkpoint, under the same SQL
+    // execution, keeping the job's per-partition counts; a plan with no
+    // partitions runs no job
     val (rdd, rows) = SQLExecution.withNewExecutionId(qe, Some("localCheckpoint")) {
       val rdd = qe.executedPlan.execute().map(_.copy())
       rdd.localCheckpoint()
@@ -71,7 +83,8 @@ object Materialize {
           master.getBlockStatus(RDDBlockId(rdd.id, p.index), false)
             .valuesIterator.map(s => s.memSize + s.diskSize).sum
         }.sum
-        r.copy()(session, Some(Statistics(sizeInBytes = BigInt(stored))),
+        r.copy()(session,
+          Some(Statistics(sizeInBytes = BigInt(stored), rowCount = Some(BigInt(rows)))),
           Some(r.constraints))
       }
     (classic.Dataset.ofRows(session, plan), rows)
