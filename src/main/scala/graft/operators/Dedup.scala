@@ -200,12 +200,22 @@ object Dedup {
     * so the incremental join rides the identical prefix-filter plan
     * with zero text anywhere.
     *
-    * When the input carries a `_new BOOLEAN` column, candidate pairs
-    * are restricted to those with AT LEAST ONE new side — the
-    * incremental contract (old×old pairs were already resolved in the
-    * committed labels, so recomputing them is pure waste); the filter
-    * sits on the candidate join's output, before verification, so the
+    * When the input carries a `_new BOOLEAN` column — a per-doc flag,
+    * the same on every gram row of a doc — candidate pairs are
+    * restricted to those with AT LEAST ONE new side: the incremental
+    * contract (old×old pairs were already resolved in the committed
+    * labels, so recomputing them is pure waste); the filter sits on the
+    * candidate join's output, before verification, so the
     * intersect/verify stage only ever sees incremental candidates.
+    *
+    * Plan shapes are chosen so that a steady ER batch asks Spark's
+    * codegen cache for few distinct generated classes (every class not
+    * cached is a recompile on the next batch): the prefix rows carry
+    * size and new-flag packed in one long, `_szn = 2·_sz + _n`, so the
+    * hot-gram window over them has the df window's input types and
+    * shares its generated exchange, sort and window classes; both
+    * windows and the running row count are `count(1)`s, which share one
+    * set of aggregate projections.
     */
   private[graft] def setSimPairsFromGrams(
       grams: DataFrame,
@@ -223,8 +233,10 @@ object Dedup {
       if (hasNew) grams.select(col("_id"), col("_g"), col("_new"))
       else grams.select(col("_id"), col("_g"), lit(true).as("_new")))
     // Materialized: both candidate-join sides read pref, and its window
-    // chain is too much plan to compute twice (measured).
-    val pref = Materialize.local(prefixRows(ds, thresholdPpm))
+    // chain is too much plan to compute twice (measured). `_szn` packs
+    // the doc's size and new flag (see above)
+    val pref = Materialize.local(prefixRows(ds, thresholdPpm)
+      .select(col("_id"), col("_g"), (col("_sz") * 2L + col("_n").cast(LongType)).as("_szn")))
     // HOT-GRAM TRIPWIRE (the chiSquareTerms refusal convention), in its
     // ZERO-ACTION form: the candidate join below produces Σ_g pdf(g)²
     // pairs, where pdf is the gram's PREFIX posting length. The prefix
@@ -239,7 +251,8 @@ object Dedup {
     // pairs emit — no separate aggregate, no driver round trip (the
     // eager form cost a groupBy+max+collect per call: ×3 in the ER
     // lifecycle and once per erResolve serving request).
-    val cand = Materialize.local(pref
+    val prefKeyed = gramKeyed(pref)
+    val cand = Materialize.local(prefKeyed
       .withColumn("_pdf", count(lit(1)).over(w.partitionBy("_g")))
       .filter(assert_true(col("_pdf") <= lit(maxPrefixGramDf),
         concat(lit("setSimPairsFromGrams: a prefix gram appears in "),
@@ -249,12 +262,12 @@ object Dedup {
             "Raise thresholdPpm (shorter prefixes), lengthen shingles " +
             "(rarer grams), or raise maxPrefixGramDf knowingly (shuffle " +
             "grows quadratically with it)."))).isNull)
-      .select(col("_g"), col("_id").as("id_a"),
-        col("_sz").as("_sza"), col("_n").as("_na"))
-      .join(pref.select(col("_g"), col("_id").as("id_b"),
-        col("_sz").as("_szb"), col("_n").as("_nb")), Seq("_g"))
-      .filter(col("id_a") < col("id_b") &&
-        (col("_na") || col("_nb")) &&
+      .select(col("_g"), col("_id").as("id_a"), col("_szn").as("_szna"))
+      .join(prefKeyed.select(col("_g"), col("_id").as("id_b"), col("_szn").as("_sznb")), Seq("_g"))
+      .select(col("id_a"), col("id_b"),
+        shiftright(col("_szna"), 1).as("_sza"), shiftright(col("_sznb"), 1).as("_szb"),
+        (col("_szna") % 2L === 1L || col("_sznb") % 2L === 1L).as("_n"))
+      .filter(col("id_a") < col("id_b") && col("_n") &&
         lit(thresholdPpm) * greatest(col("_sza"), col("_szb")) <=
           lit(1000000L) * least(col("_sza"), col("_szb")))
       // sizes ride the candidate table (functionally dependent on the
@@ -262,16 +275,16 @@ object Dedup {
       // shape re-derived them at the end through a fresh aggregate over
       // ds and two joins against the verified pairs (r17, guide §2.4)
       .select("id_a", "id_b", "_sza", "_szb").distinct())
-    // verify-join §3.2 prefilter: only candidate ids can survive the
-    // equi-joins below, so the gram table entering them is semi-filtered
-    // to the candidate id set first — at corpus scale the second join's
-    // exchange then carries candidate grams, not the full gram table
-    // (cand is materialized with its stored size and pair-bounded, so
-    // the semi-join's build side broadcasts from the first plan)
-    val dsCand = ds.join(candidateIds(cand), Seq("_id"), "left_semi")
-    cand
-      .join(dsCand.select(col("_id").as("id_a"), col("_g")), Seq("id_a"))
-      .join(dsCand.select(col("_id").as("id_b"), col("_g")), Seq("id_b", "_g"))
+    // verify: each pair's two sides join the gram table once (cand is
+    // materialized with its stored size and pair-bounded, so the sides
+    // broadcast from the first plan and only candidate docs' grams come
+    // out of the scan); a gram both sides hold appears twice under its
+    // pair, and the number of such grams is |a ∩ b|; one exchange by
+    // the pair serves both aggregates
+    candidateIds(cand).join(ds.select(col("_id"), col("_g")), Seq("_id"))
+      .repartition(col("id_a"), col("id_b"))
+      .groupBy("id_a", "id_b", "_sza", "_szb", "_g").agg(count(lit(1)).as("_c"))
+      .filter(col("_c") === 2L)
       .groupBy("id_a", "id_b", "_sza", "_szb").agg(count(lit(1)).as("_i"))
       .filter(col("_i") * lit(1000000L) >=
         lit(thresholdPpm) * (col("_sza") + col("_szb") - col("_i")))
@@ -282,42 +295,46 @@ object Dedup {
   /** The prefix rows `(_id, _g, _sz, _n)` of [[setSimPairsFromGrams]]'s
     * distinct-gram table `(_id, _g, _new)`: each doc's first
     * `|x| − ⌈t·|x|⌉ + 1` grams in the global (df, hash) order, with the
-    * doc's size and whether it is new. Lazy, for the plan-shape pin.
+    * doc's size and whether it is new (`_new` is per doc, so the row's
+    * own flag). Rows with a null column are dropped. Lazy, for the
+    * plan-shape pin.
     *
-    * Per-gram df, per-doc size and per-doc `_new` are WINDOW functions
-    * on the exchanges the prefix computation needs ANYWAY (hash by _g,
-    * then hash by _id for the row number) — the former groupBy+join
-    * form paid two extra aggregate passes over the grams and two joins
-    * for the identical values (r17: two operations keyed the same way
-    * share one exchange). `_sz`, `_n` and `_r` share ONE
-    * window spec (partition by _id, order by the prefix order), so they
-    * plan as one Window operator over one sort; `_sz` and `_n` take the
-    * full frame (the ordered default frame would turn count/max into
-    * running aggregates).
+    * Per-gram df and per-doc size are WINDOW functions on the exchanges
+    * the prefix computation needs ANYWAY (hash by _g, then hash by _id
+    * for the row number) — the former groupBy+join form paid two extra
+    * aggregate passes over the grams and two joins for the identical
+    * values (r17: two operations keyed the same way share one
+    * exchange). `_sz` and `_r` share ONE window spec (partition by _id,
+    * order by the prefix order), so they plan as one Window operator
+    * over one sort; `_sz` counts the full frame, `_r` the frame up to
+    * the current row (a row number, as a `count(1)`).
     */
   private[graft] def prefixRows(ds: DataFrame, thresholdPpm: Long): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
     val wid = w.partitionBy("_id").orderBy(col("_df"), col("_g"))
     val widAll = wid.rowsBetween(w.unboundedPreceding, w.unboundedFollowing)
-    ds.withColumn("_df", count(lit(1)).over(w.partitionBy("_g")))
-      .select(col("_id"), col("_g"),
+    val widRun = wid.rowsBetween(w.unboundedPreceding, w.currentRow)
+    gramKeyed(ds.select(col("_id"), col("_g"), col("_new").cast(LongType).as("_nw")))
+      .withColumn("_df", count(lit(1)).over(w.partitionBy("_g")))
+      .select(col("_id"), col("_g"), col("_nw"),
         count(lit(1)).over(widAll).as("_sz"),
-        max(col("_new")).over(widAll).as("_n"),
-        row_number().over(wid).cast(LongType).as("_r"))
+        count(lit(1)).over(widRun).as("_r"))
       .filter(col("_r") <=
         col("_sz") - expr(s"(($thresholdPpm * _sz) + 999999L) div 1000000L") + lit(1L))
-      .select(col("_id"), col("_g"), col("_sz"), col("_n"))
+      .select(col("_id"), col("_g"), col("_sz"), (col("_nw") === 1L).as("_n"))
   }
 
-  /** The ids `(_id)` of a candidate-pair table `(id_a, id_b)`, both ids
-    * of a pair emitted by one pass, for the verify join's semi-join
-    * prefilter. Not deduplicated: a semi-join is set semantics already,
-    * and a distinct would be one more shuffle (the store-side rule of
-    * [[graft.streaming.StreamingOps.erResolve]]). Lazy, for the
-    * plan-shape pin.
+  /** `df` without rows that have a null column: the df window and the
+    * hot-gram window then see the same (non-null) input types. */
+  private def gramKeyed(df: DataFrame): DataFrame =
+    df.filter(df.columns.map(c => col(c).isNotNull).reduce(_ && _))
+
+  /** A candidate-pair table `(id_a, id_b, …)` with each row twice,
+    * once per side, the side's id as `_id`: both ids of a pair emitted
+    * by one pass, for the verify join. Lazy, for the plan-shape pin.
     */
   private[graft] def candidateIds(cand: DataFrame): DataFrame =
-    cand.select(explode(array(col("id_a"), col("id_b"))).as("_id"))
+    cand.select(cand.columns.map(col) :+ explode(array(col("id_a"), col("id_b"))).as("_id"): _*)
 
   def prefixDupPairs(
       df: DataFrame,

@@ -515,18 +515,21 @@ object Graph {
     ids.decode(out, "_s" -> "node").select(col("node"), col("deg"))
   }
 
-  /** One synchronous min-label round — factored lazy for the longs-only
-    * spec pin: every node's next label is the `min` over its neighbors'
-    * labels (the symmetric adjacency joined to the current labels on the
-    * source) together with its own label, as ONE aggregate grouped by
-    * node; the own-label rows ride the union, so isolated nodes keep
-    * their label. The caller checkpoints.
+  /** One synchronous min-label round after the first — factored lazy
+    * for the longs-only spec pin: every node's next label is the `min`
+    * over its neighbors' labels (the symmetric adjacency joined to the
+    * current labels on the source), as ONE aggregate grouped by node.
+    * The own label needs no term of its own once `labels` are a round
+    * k ≥ 1 labeling (l_k(v) = min of v's k-ball): v's smallest
+    * k-ball member w is v itself, which lies in every neighbor's
+    * k-ball, or is reached through a neighbor u with w in u's k-ball, so
+    * some neighbor's label is ≤ l_k(v). Every node of the adjacency has
+    * a neighbor (a self-loop-only node is its own). The caller
+    * checkpoints.
     */
   private[graft] def lpaRound(sym: DataFrame, labels: DataFrame): DataFrame =
     sym.join(labels.withColumnRenamed("_v", "_s"), Seq("_s"))
-      .select(col("_d").as("_v"), col("_l"))
-      .unionByName(labels.select(col("_v"), col("_l")))
-      .groupBy(col("_v")).agg(min(col("_l")).as("_l"))
+      .groupBy(col("_d").as("_v")).agg(min(col("_l")).as("_l"))
 
   /** Synchronous min-label propagation over the undirected
     * simplification of an edge list, a FIXED number of rounds — the
@@ -548,9 +551,9 @@ object Graph {
     * one `min(least(_s, _d))` aggregate grouped by `_s`, with no join:
     * l₁(v) = min(v, min N(v)). Rounds 2..r are each one join of the
     * adjacency to the current labels plus ONE `min` aggregate per node
-    * over neighbor labels ∪ own label ([[lpaRound]]; ids only,
-    * map-side combined): three shuffles when both sides are large, and
-    * a single shuffle when either side is under the session's
+    * over neighbor labels ([[lpaRound]]; ids only, map-side combined,
+    * no union with the own labels): three shuffles when both sides are
+    * large, and a single shuffle when either side is under the session's
     * broadcast threshold — every materialization carries its stored
     * size ([[org.apache.spark.sql.graft.Materialize.local]]), so the
     * planner broadcasts the small side up front. So r rounds are r + 1
@@ -572,23 +575,37 @@ object Graph {
       rounds: Int,
       dictThreshold: Long = GraphDictThreshold
   ): DataFrame = {
-    require(rounds >= 1 && rounds <= 16,
-      s"labelPropagationMin: rounds must be in [1, 16], got $rounds")
-    // one pass over the edge list (a lazy upstream — the ER op's
-    // verified pairs — runs once) emits both directions; a self-loop's
+    // one pass over the edge list emits both directions; a self-loop's
     // two copies collapse to the one (v, v) row that keeps a
     // self-loop-only node in the universe, and a (v, v) row is a no-op
     // for every min below
-    val e = endpoints(edges, srcCol, dstCol)
-    val ids = GraphIds.symmetric(
-      e.select(explode(array(array(col("_s"), col("_d")), array(col("_d"), col("_s"))))
-          .as("_p"))
-        .select(col("_p")(0).as("_s"), col("_p")(1).as("_d"))
-        .distinct(),
-      dictThreshold)
+    lpaOverAdjacency(bothDirections(endpoints(edges, srcCol, dstCol)).distinct(),
+      rounds, dictThreshold)
+  }
+
+  /** An `(_s, _d)` edge list's rows in both directions, lazily. */
+  private[graft] def bothDirections(e: DataFrame): DataFrame =
+    e.select(explode(array(array(col("_s"), col("_d")), array(col("_d"), col("_s")))).as("_p"))
+      .select(col("_p")(0).as("_s"), col("_p")(1).as("_d"))
+
+  /** The rounds of [[labelPropagationMin]] over a symmetric adjacency
+    * `(_s, _d)` of non-null string ids: every edge in both directions.
+    * Duplicate rows change no label (every step is a `min`); a caller
+    * whose adjacency is distinct by construction skips the distinct
+    * aggregate [[labelPropagationMin]] runs on an arbitrary edge list.
+    */
+  private[graft] def lpaOverAdjacency(
+      adjacency: DataFrame,
+      rounds: Int,
+      dictThreshold: Long = GraphDictThreshold
+  ): DataFrame = {
+    require(rounds >= 1 && rounds <= 16,
+      s"labelPropagationMin: rounds must be in [1, 16], got $rounds")
+    val ids = GraphIds.symmetric(adjacency, dictThreshold)
     val sym = ids.edges
-    var labels = Materialize.local(sym.groupBy(col("_s").as("_v"))
-      .agg(min(least(col("_s"), col("_d"))).as("_l")))
+    var labels = Materialize.local(sym.select(col("_s").as("_v"),
+        least(col("_s"), col("_d")).as("_l"))
+      .groupBy(col("_v")).agg(min(col("_l")).as("_l")))
     for (_ <- 1 until rounds) {
       labels = Materialize.local(lpaRound(sym, labels))
     }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 import org.apache.spark.sql.types._
 
 import graft.functions.TextFunctions
@@ -480,8 +481,7 @@ object Retrieval {
     */
   def rankingMetrics(ranked: DataFrame, relevant: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"rankingMetrics: k must be positive, got $k")
-    val rel = relevant
-      .select(col("query_id"), col("doc_id").as("neighbor_id")).distinct()
+    val rel = relevanceSet(relevant)
     // tolerate over-long input: metrics are @k, so ranks past k never
     // count (else hits_at_k could exceed k and prec_at_k_ppm 10⁶)
     val topk = ranked.filter(col("rank") <= k)
@@ -499,6 +499,16 @@ object Retrieval {
         expr(s"CAST(coalesce(_h, 0L) * 1000000 div ${k}L AS BIGINT)")
           .as("prec_at_k_ppm"))
   }
+
+  /** The distinct relevance pairs `(query_id, neighbor_id)` of
+    * [[rankingMetrics]] and [[ndcgAtK]], materialized: both read it twice
+    * (the join against the ranked list and the per-query count), and
+    * materialized it is computed once and the joins against it plan
+    * with its real size.
+    */
+  private def relevanceSet(relevant: DataFrame): DataFrame =
+    Materialize.local(relevant
+      .select(col("query_id"), col("doc_id").as("neighbor_id")).distinct())
 
   /** The ×10⁹-scaled DCG position weights 1/log₂(rank+1) for ranks
     * 1..k, computed ONCE on the driver and treated as literals — the
@@ -534,8 +544,7 @@ object Retrieval {
     val idcgCase = (1 to k).foldRight(lit(prefix.last): Column) { case (n, els) =>
       when(col("n_relevant") === n, lit(prefix(n - 1))).otherwise(els)
     }
-    val rel = relevant
-      .select(col("query_id"), col("doc_id").as("neighbor_id")).distinct()
+    val rel = relevanceSet(relevant)
     val dcg = ranked.join(rel, Seq("query_id", "neighbor_id"))
       .select(col("query_id"), wCase.as("_w"))
       .groupBy("query_id").agg(sum(col("_w")).as("_dcg"))

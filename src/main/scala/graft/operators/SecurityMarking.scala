@@ -52,20 +52,27 @@ object SecurityMarking {
     array(when(extracted === "", lit("")).otherwise(official))
   }
 
+  /** The names, in list order, for which `hit` holds: the config list
+    * is a plan-time constant, so it unrolls into one codegen'd
+    * `flatten(array(when(hit, [name]) …))` instead of a `filter` lambda,
+    * which Spark evaluates interpreted on every row. Typed as the
+    * `filter(lit(list), …)` it replaces: a non-null string list.
+    */
+  private def hits(names: Seq[String])(hit: String => Column): Column = {
+    val none = typedLit(Array.empty[String])
+    if (names.isEmpty) none
+    else flatten(array(names.map(n => when(hit(n), array(lit(n))).otherwise(none)): _*))
+      .cast(ArrayType(StringType, containsNull = true))
+  }
+
   def compartments(raw: Column, cfg: SecurityConfig): Column =
-    filter(
-      lit(cfg.compartments.toArray),
-      c => raw.contains(concat(lit(cfg.delim), c, lit(cfg.delim)))
-    )
+    hits(cfg.compartments)(c => raw.contains(lit(cfg.delim + c + cfg.delim)))
 
   def releasabilities(raw: Column, cfg: SecurityConfig): Column =
-    filter(
-      lit(cfg.releasabilities.toArray),
-      r => raw.contains(concat(lit(cfg.delim), r))
-    )
+    hits(cfg.releasabilities)(r => raw.contains(lit(cfg.delim + r)))
 
   def disseminationControls(raw: Column, cfg: SecurityConfig): Column = {
-    val direct = filter(lit(cfg.disseminationControls.toArray), d => raw.contains(d))
+    val direct = hits(cfg.disseminationControls)(d => raw.contains(lit(d)))
     // fallback: bare contains of any releasability (no delimiter, :271)
     val anyRel = cfg.releasabilities
       .map(r => raw.contains(lit(r)))

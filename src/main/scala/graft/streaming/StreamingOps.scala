@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Materialize
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType}
 import graft.model._
 import graft.operators.{Binning, Merge}
 
@@ -210,25 +210,11 @@ object StreamingOps {
     * `_CURRENT` still decides WHICH version is committed state.
     */
   private def readVersionedState(
-      spark: SparkSession, statePath: String, bucketed: Boolean,
-      schema: Option[StructType]): Option[DataFrame] =
+      spark: SparkSession, statePath: String, bucketed: Boolean): Option[DataFrame] =
     if (bucketed)
       currentVersionId(spark, statePath)
         .map(v => spark.table(stateTableName(statePath, v)))
-    else schema match {
-      case Some(sc) => currentVersionName(spark, statePath)
-        .map(version => spark.read.schema(sc).parquet(s"$statePath/$version"))
-      case None => readState(spark, statePath)
-    }
-
-  /** The ER store's fixed row shape ([[applyErBatch]]): gram rows
-    * `(kind = "g", id, g)` and label rows `(kind = "l", id, label)`.
-    * Read with it, a batch skips parquet schema inference — a footer
-    * job per batch.
-    */
-  private val ErStateSchema: StructType = StructType(Seq(
-    StructField("kind", StringType), StructField("id", StringType),
-    StructField("g", LongType), StructField("label", StringType)))
+    else readState(spark, statePath)
 
   /** The versioned-store protocol of the `apply*Batch` ops: one batch
     * against a store that is a directory of versions `v<batchId>` plus a
@@ -242,9 +228,8 @@ object StreamingOps {
     *     `statePath`, and every batch would be skipped until the ids pass
     *     it: that warns loudly.
     *  2. State read, on the step's first use of it: the bucketed catalog
-    *     table when `stateBuckets` is set, parquet with `stateSchema` when
-    *     given (no schema-inference job), plain parquet otherwise; `None`
-    *     before the first commit.
+    *     table when `stateBuckets` is set, [[readState]] otherwise (no
+    *     schema-inference job); `None` before the first commit.
     *  3. `step` writes the batch's outputs (whole-directory overwrites)
     *     and returns the next state, or `None` to commit nothing (a
     *     scoring batch against a frozen reference, an empty first
@@ -300,7 +285,6 @@ object StreamingOps {
       batchId: Long,
       stateBuckets: Option[Int] = None,
       bucketKeys: Seq[String] = Nil,
-      stateSchema: Option[StructType] = None,
       partitionCols: Seq[String] = Nil
   )(step: (=> Option[DataFrame]) => Option[DataFrame]): Unit =
     currentVersionId(spark, statePath) match {
@@ -312,8 +296,7 @@ object StreamingOps {
               s"batchIds pass v$cur. Use a fresh statePath (or restore the old checkpoint)."
           else ""))
       case _ =>
-        lazy val state =
-          readVersionedState(spark, statePath, stateBuckets.isDefined, stateSchema)
+        lazy val state = readVersionedState(spark, statePath, stateBuckets.isDefined)
         step(state).foreach { next =>
           val version = s"v$batchId"
           stateBuckets match {
@@ -384,8 +367,44 @@ object StreamingOps {
 
   /** Resolve the current state version via the `_CURRENT` pointer. */
   def readState(spark: SparkSession, statePath: String): Option[DataFrame] =
-    currentVersionName(spark, statePath)
-      .map(version => spark.read.parquet(s"$statePath/$version"))
+    currentVersionName(spark, statePath).map(version => readVersion(spark, s"$statePath/$version"))
+
+  /** A committed version directory as parquet, read with the schema of
+    * one of its part files' footers: the driver reads that footer and
+    * converts it with Spark's own footer conversion, so the read runs no
+    * schema-inference job (a plain `spark.read.parquet` runs one task
+    * to read the same footer). Every part file of a version comes from
+    * one write, so any one holds the version's schema. Partition columns
+    * are still discovered from the directory names, as a plain read
+    * does; a directory without a part file falls back to that read.
+    */
+  private def readVersion(spark: SparkSession, dir: String): DataFrame = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+      ParquetToSparkSchemaConverter}
+    import org.apache.spark.sql.internal.SQLConf
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    val rootDir = fs.makeQualified(root).toUri.getPath.stripSuffix("/")
+    // the file Spark itself would read: a data file outside hidden
+    // (`_`/`.`) files and directories
+    def visible(p: Path): Boolean =
+      p.toUri.getPath.stripPrefix(rootDir).split('/')
+        .forall(c => !c.startsWith("_") && !c.startsWith("."))
+    val files = fs.listFiles(root, true)
+    Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+      .find(p => p.getName.endsWith(".parquet") && visible(p))
+      .fold(spark.read.parquet(dir)) { p =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+        val footer = try reader.getFooter finally reader.close()
+        val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(p, footer),
+          new ParquetToSparkSchemaConverter(SQLConf.get))
+        spark.read.schema(schema).parquet(dir)
+      }
+  }
 
   /** Atomically point `_CURRENT` at `version`; prune the versions of
     * batches before `keepFrom`.
@@ -494,7 +513,7 @@ object StreamingOps {
       val out = fs.create(marker, true)
       try out.write(version.toString.getBytes("UTF-8")) finally out.close()
     }
-    val state = spark.read.parquet(s"$statePath/v$version")
+    val state = readVersion(spark, s"$statePath/v$version")
     graft.operators.AsOf
       .joinBackward(batch, state, keys, leftTs, rightTs, payloadCols,
         tolerance = tolerance)
@@ -1361,10 +1380,12 @@ object StreamingOps {
     * against small intermediates plan as broadcasts from the start.
     * Measured at 100 docs a batch against a growing store (local[4],
     * adaptive execution, so every shuffle stage is a job of its own):
-    * 31 Spark jobs per steady-state batch, which ask Spark's codegen
-    * cache (100 entries by default) for 106 distinct generated classes,
-    * counting each class once per class loader that compiles it; each
-    * entry a batch asks for beyond what the cache holds is a recompile.
+    * 28 Spark jobs per steady-state batch, which ask Spark's codegen
+    * cache (100 entries by default, in four segments of 25) for 81
+    * distinct generated classes, counting each class once per class
+    * loader that compiles it (`tools/codegen_working_set.py`); each
+    * entry a batch asks for beyond what its cache segment holds is a
+    * recompile.
     * The state rewrite is the cumulative-store cost the minhash index
     * stream already carries; at 100 TB both would move to an
     * append-log + compaction layout — the protocol (version pointer,
@@ -1384,8 +1405,7 @@ object StreamingOps {
       exactComponents: Boolean = false,
       maxPrefixGramDf: Long = 100000L
   ): Unit =
-    versionedBatch(spark, "erStream", statePath, batchId,
-        stateSchema = Some(ErStateSchema)) { old =>
+    versionedBatch(spark, "erStream", statePath, batchId) { old =>
       import graft.operators.{Dedup, Graph}
       import graft.functions.TextFunctions
       val newGramsRaw = batch.select(col(idCol).cast(StringType).as("_id"),
@@ -1413,10 +1433,19 @@ object StreamingOps {
         .select(col("id_a").as("_a"), col("id_b").as("_b"))
       val starEdges = oldLabels.map(_.filter(col("node") =!= col("label"))
         .select(col("node").as("_a"), col("label").as("_b")))
-      val edges = starEdges.map(pairs.unionByName(_)).getOrElse(pairs)
       val lpa =
-        if (exactComponents) Graph.connectedComponentsMin(edges, "_a", "_b")
-        else Graph.labelPropagationMin(edges, "_a", "_b", lpaRounds)
+        if (exactComponents)
+          Graph.connectedComponentsMin(starEdges.foldLeft(pairs)(_ unionByName _), "_a", "_b")
+        else {
+          // the pairs (a new doc on one side, distinct by the verify
+          // aggregate, no self-pair) and the star edges (two stored docs,
+          // one per non-canonical node) are distinct and disjoint in both
+          // directions, so the adjacency needs no distinct aggregate;
+          // each side turns both ways before the union
+          def bothWays(e: DataFrame) = Graph.bothDirections(e.toDF("_s", "_d"))
+          Graph.lpaOverAdjacency(
+            (pairs +: starEdges.toSeq).map(bothWays).reduce(_ unionByName _), lpaRounds)
+        }
       // singletons label themselves: a min label never exceeds its own
       // node, so ONE min aggregate over (LPA labels ∪ every doc as its
       // own label) is the full table. Singletons stay out of the LPA
@@ -2086,13 +2115,6 @@ object StreamingOps {
       queries, queryId, queryVec, k, nprobe, residual = ix.residual)
   }
 
-  /** The `epochs` store of [[applyIvfPqEpochBatch]]: one row
-    * `(epoch, since_batch)`. Read with it, the pointer skips parquet
-    * schema inference.
-    */
-  private val IvfPqEpochSchema: StructType = StructType(Seq(
-    StructField("epoch", LongType), StructField("since_batch", LongType)))
-
   private def epochPointer(pointer: DataFrame): (Long, Long) = {
     val r = pointer.select(col("epoch"), col("since_batch")).head()
     (r.getLong(0), r.getLong(1))
@@ -2176,8 +2198,7 @@ object StreamingOps {
       Similarity.ivfResidualsE6(batch, idCol, vecCol, ivfPqIndex(spark, epochPath(g), op).cells)
         .groupBy(col("centroid_id").as("bucket"))
         .agg(count(lit(1)).as("cnt"))
-    versionedBatch(spark, op, s"$statePath/epochs", batchId,
-        stateSchema = Some(IvfPqEpochSchema)) { state =>
+    versionedBatch(spark, op, s"$statePath/epochs", batchId) { state =>
       if (batch.isEmpty) {
         log.warn(s"$op: batch $batchId is empty — nothing to compare or encode")
         None
@@ -2313,8 +2334,7 @@ object StreamingOps {
     * [[applyIvfPqEpochBatch]] stream, if any epoch has opened.
     */
   def currentIvfPqEpoch(spark: SparkSession, statePath: String): Option[(Long, Long)] =
-    readVersionedState(spark, s"$statePath/epochs", bucketed = false, Some(IvfPqEpochSchema))
-      .map(epochPointer)
+    readState(spark, s"$statePath/epochs").map(epochPointer)
 
   /** ADC top-k against an [[applyIvfPqEpochBatch]] stream: serves the
     * CURRENT epoch by default, or PINS any committed epoch — old

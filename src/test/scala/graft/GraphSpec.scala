@@ -252,34 +252,19 @@ class GraphSpec extends SparkSpec {
   }
 
   test("labelPropagationMin below the dictionary threshold: r rounds run r + 1 materialization jobs and no count job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val edges = Seq(("b", "a"), ("b", "c"), ("d", "c"), ("y", "x"), ("z", "z"))
       .toDF("src", "dst")
-    val group = "graft-lpa-jobs"
-    // a job's call site is its final stage's name: one per
-    // materialization ("local"/"localWithRows at Graph.scala:…") or
-    // count; adaptive stages and broadcasts run on other call sites
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          sites.add(e.stageInfos.sortBy(_.stageId).lastOption.map(_.name).getOrElse("?"))
+    // call sites come from each job's SQL execution: one execution per
+    // materialization ("local"/"localWithRows at Graph.scala:…", every
+    // adaptive stage of it reports the same), and a count would report
+    // "count at …" whatever thread its stages run on
+    for (rounds <- 1 to 3) {
+      val (_, all) = jobs(Graph.labelPropagationMin(edges, "src", "dst", rounds))
+      val materializations = all.filter(_._2.matches("(local|localWithRows) at .*"))
+        .flatMap(_._1).distinct
+      assert(materializations.size == rounds + 1, s"rounds $rounds: $all")
+      assert(!all.exists(_._2.startsWith("count at")), s"rounds $rounds: $all")
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      for (rounds <- 1 to 3) {
-        sites.clear()
-        spark.sparkContext.setJobGroup(group, s"lpa $rounds")
-        try Graph.labelPropagationMin(edges, "src", "dst", rounds)
-        finally spark.sparkContext.clearJobGroup()
-        org.apache.spark.sql.graft.ListenerBusDrain(spark.sparkContext)
-        import scala.jdk.CollectionConverters._
-        val all = sites.asScala.toSeq
-        val materializations = all.filter(_.matches("(local|localWithRows) at .*"))
-        assert(materializations.size == rounds + 1, s"rounds $rounds: $all")
-        assert(!all.exists(_.startsWith("count at")), s"rounds $rounds: $all")
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
     // the same call still labels correctly (z is a self-loop-only node)
     assert(Graph.labelPropagationMin(edges, "src", "dst", 2).as[(String, String)]
       .collect().toMap == Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "b",
@@ -392,11 +377,12 @@ class GraphSpec extends SparkSpec {
     assert(wr.as[(Long, Long)].collect().toMap == Map(0L -> 1L, 1L -> 1L, 2L -> 1L))
     val sym = Seq((0L, 1L), (1L, 0L), (1L, 2L), (2L, 1L)).toDF("_s", "_d")
       .localCheckpoint()
-    val labels = Seq((0L, 0L), (1L, 1L), (2L, 2L)).toDF("_v", "_l").localCheckpoint()
+    // round-1 labels of the path 0-1-2 (lpaRound takes a round k ≥ 1 labeling)
+    val labels = Seq((0L, 0L), (1L, 0L), (2L, 1L)).toDF("_v", "_l").localCheckpoint()
     val lr = Graph.lpaRound(sym, labels)
     pinLongsOnly(lr, "lpaRound")
     assert(lr.as[(Long, Long)].collect().toMap ==
-      Map(0L -> 0L, 1L -> 0L, 2L -> 1L))
+      Map(0L -> 0L, 1L -> 0L, 2L -> 0L))
     val kr = Graph.kCoreRound(sym, k = 2)
     pinLongsOnly(kr, "kCoreRound")
     // only node 1 has degree 2; no edge keeps BOTH endpoints → empty

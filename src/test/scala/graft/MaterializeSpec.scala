@@ -2,55 +2,16 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{ListenerBusDrain, Materialize}
+import org.apache.spark.sql.graft.Materialize
 
 import graft.operators.Graph
 import graft.streaming.StreamingOps
 
 class MaterializeSpec extends SparkSpec {
   import spark.implicits._
-
-  /** `body`'s result and the call sites of the jobs it ran, in order. A
-    * job that belongs to a SQL execution reports the execution's call
-    * site (`count at …`, `isEmpty at …`, `local at …` or
-    * `localWithRows at …`): adaptive execution runs a query's stages on
-    * pool threads whose own call sites name no caller. Other jobs
-    * report their final stage's name. The jobs are selected by a job
-    * tag, which, unlike a job group, leaves the call sites in place.
-    */
-  private def jobSites[T](body: => T): (T, Seq[String]) = {
-    val tag = "graft-materialize-jobs"
-    val executions = new java.util.concurrent.ConcurrentHashMap[Long, String]
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Option[Long], String)]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val props = Option(e.properties)
-        def prop(k: String) = props.flatMap(p => Option(p.getProperty(k)))
-        if (prop("spark.job.tags").exists(_.split(",").contains(tag)))
-          jobs.add((prop("spark.sql.execution.id").map(_.toLong),
-            e.stageInfos.sortBy(_.stageId).lastOption.map(_.name).getOrElse("?")))
-      }
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart => executions.put(s.executionId, s.description)
-        case _ =>
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.addJobTag(tag)
-      val out = try body finally sc.removeJobTag(tag)
-      ListenerBusDrain(sc)
-      import scala.jdk.CollectionConverters._
-      (out, jobs.asScala.toSeq.map { case (id, stage) =>
-        id.flatMap(i => Option(executions.get(i))).getOrElse(stage) })
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def nums: DataFrame = spark.range(0, 1000, 1, 4).toDF("x")
 

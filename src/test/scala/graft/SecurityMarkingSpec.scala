@@ -60,6 +60,29 @@ class SecurityMarkingSpec extends SparkSpec {
     assert(out(0) == Seq.empty)
   }
 
+  test("classification keeps the filter form's struct type and runs no higher-order function; list order is config order") {
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    import org.apache.spark.sql.types._
+    // the type the `filter(lit(list), …)` form produced
+    val list = ArrayType(StringType, containsNull = true)
+    val expected = StructType(Seq(
+      StructField("levels", ArrayType(StringType, containsNull = false), nullable = false),
+      StructField("compartments", list, nullable = false),
+      StructField("releasabilities", list, nullable = false),
+      StructField("disseminationControls", list, nullable = false)))
+    for (c <- Seq(cfg, cfg.copy(compartments = Nil, releasabilities = Nil,
+        disseminationControls = Nil))) {
+      val df = Seq("A_CMPB_CMPA_YY_XX").toDF("m")
+        .select(SecurityMarking.classification(col("m"), c).as("c"))
+      assert(df.schema("c").dataType == expected && !df.schema("c").nullable, df.schema)
+      val hof = df.queryExecution.analyzed.expressions
+        .flatMap(_.collect { case h: HigherOrderFunction => h })
+      assert(hof.isEmpty, hof)
+    }
+    val Array(r) = parse("A_CMPB_CMPA_YY_XX_DCB_DCA")
+    assert(r._2 == Seq("CMPA", "CMPB") && r._3 == Seq("XX", "YY") && r._4 == Seq("DCA", "DCB"))
+  }
+
   test("blank marking is a HARD error, not a failure route") {
     val e = intercept[Exception] { parse("  ") }
     assert(e.getMessage.toLowerCase.contains("blank"))

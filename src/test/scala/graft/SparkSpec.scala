@@ -38,6 +38,54 @@ abstract class SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** `body`'s result and, in order, each job it ran as (the SQL
+    * execution it belongs to, its call site). A job that belongs to a SQL
+    * execution reports the execution's call site (`count at …`,
+    * `isEmpty at …`, `local at …` or `localWithRows at …`): adaptive
+    * execution runs a query's stages on pool threads whose own call
+    * sites name no caller (their stage names read
+    * `$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java:…`).
+    * Other jobs report their final stage's name. The jobs are selected
+    * by a job tag, which, unlike a job group, leaves the call sites in
+    * place.
+    */
+  def jobs[T](body: => T): (T, Seq[(Option[Long], String)]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val tag = "graft-spec-jobs"
+    val executions = new java.util.concurrent.ConcurrentHashMap[Long, String]
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[(Option[Long], String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        def prop(k: String) = props.flatMap(p => Option(p.getProperty(k)))
+        if (prop("spark.job.tags").exists(_.split(",").contains(tag)))
+          started.add((prop("spark.sql.execution.id").map(_.toLong),
+            e.stageInfos.sortBy(_.stageId).lastOption.map(_.name).getOrElse("?")))
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => executions.put(s.executionId, s.description)
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.addJobTag(tag)
+      val out = try body finally sc.removeJobTag(tag)
+      org.apache.spark.sql.graft.ListenerBusDrain(sc)
+      import scala.jdk.CollectionConverters._
+      (out, started.asScala.toSeq.map { case (id, stage) =>
+        (id, id.flatMap(i => Option(executions.get(i))).getOrElse(stage)) })
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** [[jobs]]' call sites only. */
+  def jobSites[T](body: => T): (T, Seq[String]) = {
+    val (out, js) = jobs(body)
+    (out, js.map(_._2))
+  }
+
   /** Shuffle Exchange nodes of a query's physical plan, unwrapping the
     * AQE root (AdaptiveSparkPlanExec reports no children to `collect`,
     * so a naive collect over executedPlan is VACUOUSLY empty; its

@@ -1308,6 +1308,40 @@ class StreamingSpec extends SparkSpec {
     assert(jobs > 0 && jobs <= 31, s"batch 3 ran $jobs jobs")
   }
 
+  test("readState reads a committed version through its footer's schema: no job, the schema a plain parquet read infers") {
+    val work = Files.createTempDirectory("graft-read-state").toString
+    val spec = MergeSpec(Seq("k"),
+      Seq(MergeFieldSpec("s", MergeOp.Set), MergeFieldSpec("n", MergeOp.Inc)))
+    StreamingOps.applyMergeBatch(spark,
+      Seq((1L, "a", 10L, 1), (2L, "b", 5L, 1)).toDF("k", "s", "n", "seq"), 0L, spec, "seq",
+      s"$work/merge")
+    StreamingOps.applyDedupBatch(spark,
+      Seq(("d1", "the cat sat on the mat"), ("d2", "a dog ran in the park")).toDF("id", "text"),
+      0L, "text", "id", s"$work/dedup", s"$work/dedup_out")
+    StreamingOps.applyErBatch(spark,
+      Seq(("d1", "the quick brown fox jumps over the lazy dog"),
+        ("d2", "the quick brown fox jumps over the lazy dog today")).toDF("doc_id", "text"),
+      0L, "doc_id", "text", shingleSize = 3, thresholdPpm = 500000L, lpaRounds = 2,
+      s"$work/er", s"$work/er_out")
+    // the codes version is partitioned by cell: its partition column
+    // comes from the directory names, as in a plain read
+    StreamingOps.applyIvfPqIndexBatch(spark,
+      Seq((0L, 0.0), (1L, 100.0), (2L, 0.2), (3L, 99.8))
+        .map { case (id, x) => (id, Array.fill(4)(x.toFloat)) }.toDF("id", "vec"),
+      0L, "id", "vec", c = 2, m = 2, s"$work/ivfpq")
+    for (store <- Seq("merge", "dedup", "er", "ivfpq/codes")) {
+      val path = s"$work/$store"
+      val version = StreamingOps.currentVersionName(spark, path).get
+      val (state, js) = jobs(StreamingOps.readState(spark, path).get)
+      assert(js.isEmpty, s"$store: $js")
+      val plain = spark.read.parquet(s"$path/$version")
+      assert(state.schema == plain.schema, s"$store: ${state.schema} vs ${plain.schema}")
+      assert(state.count() == plain.count() && state.count() > 0, store)
+    }
+    assert(StreamingOps.readState(spark, s"$work/ivfpq/codes").get.columns
+      .contains("centroid_id"))
+  }
+
   test("er stream: cross-batch merges, incremental equals batch pipeline, replay + re-delivery no-op") {
     import graft.operators.{Dedup, Graph}
     val work = Files.createTempDirectory("graft-er-spec").toString
