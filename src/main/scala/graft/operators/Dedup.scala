@@ -275,16 +275,16 @@ object Dedup {
       // shape re-derived them at the end through a fresh aggregate over
       // ds and two joins against the verified pairs (r17, guide §2.4)
       .select("id_a", "id_b", "_sza", "_szb").distinct())
-    // verify: each pair's two sides join the gram table once (cand is
-    // materialized with its stored size and pair-bounded, so the sides
-    // broadcast from the first plan and only candidate docs' grams come
-    // out of the scan); a gram both sides hold appears twice under its
-    // pair, and the number of such grams is |a ∩ b|; one exchange by
-    // the pair serves both aggregates
-    candidateIds(cand).join(ds.select(col("_id"), col("_g")), Seq("_id"))
-      .repartition(col("id_a"), col("id_b"))
-      .groupBy("id_a", "id_b", "_sza", "_szb", "_g").agg(count(lit(1)).as("_c"))
-      .filter(col("_c") === 2L)
+    // verify-join §3.2 prefilter: only candidate ids can survive the
+    // equi-joins below, so the gram table entering them is semi-filtered
+    // to the candidate id set first — at corpus scale the second join's
+    // exchange then carries candidate grams, not the full gram table
+    // (cand is materialized with its stored size and pair-bounded, so
+    // the semi-join's build side broadcasts from the first plan)
+    val dsCand = ds.join(candidateIds(cand), Seq("_id"), "left_semi")
+    cand
+      .join(dsCand.select(col("_id").as("id_a"), col("_g")), Seq("id_a"))
+      .join(dsCand.select(col("_id").as("id_b"), col("_g")), Seq("id_b", "_g"))
       .groupBy("id_a", "id_b", "_sza", "_szb").agg(count(lit(1)).as("_i"))
       .filter(col("_i") * lit(1000000L) >=
         lit(thresholdPpm) * (col("_sza") + col("_szb") - col("_i")))
@@ -329,12 +329,15 @@ object Dedup {
   private def gramKeyed(df: DataFrame): DataFrame =
     df.filter(df.columns.map(c => col(c).isNotNull).reduce(_ && _))
 
-  /** A candidate-pair table `(id_a, id_b, …)` with each row twice,
-    * once per side, the side's id as `_id`: both ids of a pair emitted
-    * by one pass, for the verify join. Lazy, for the plan-shape pin.
+  /** The ids `(_id)` of a candidate-pair table `(id_a, id_b)`, both ids
+    * of a pair emitted by one pass, for the verify join's semi-join
+    * prefilter. Not deduplicated: a semi-join is set semantics already,
+    * and a distinct would be one more shuffle (the store-side rule of
+    * [[graft.streaming.StreamingOps.erResolve]]). Lazy, for the
+    * plan-shape pin.
     */
   private[graft] def candidateIds(cand: DataFrame): DataFrame =
-    cand.select(cand.columns.map(col) :+ explode(array(col("id_a"), col("id_b"))).as("_id"): _*)
+    cand.select(explode(array(col("id_a"), col("id_b"))).as("_id"))
 
   def prefixDupPairs(
       df: DataFrame,

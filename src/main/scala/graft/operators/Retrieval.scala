@@ -475,40 +475,42 @@ object Retrieval {
     * present in `ranked` gets a row (zero metrics when nothing
     * relevant).
     *
-    * Scale shape: one equi-join of the k-bounded ranked list against
-    * the relevance pairs (ids only), two metadata-sized aggregates —
-    * evaluation is rank-list-bound, never corpus-bound.
+    * Scale shape: one left join of the ranked list against the
+    * materialized relevance pairs (ids only), one aggregate per query
+    * over it and one over the relevance pairs — evaluation is
+    * rank-list-bound, never corpus-bound.
     */
   def rankingMetrics(ranked: DataFrame, relevant: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"rankingMetrics: k must be positive, got $k")
-    val rel = relevanceSet(relevant)
+    val (flagged, nrel) = flagRelevant(ranked, relevant)
     // tolerate over-long input: metrics are @k, so ranks past k never
     // count (else hits_at_k could exceed k and prec_at_k_ppm 10⁶)
-    val topk = ranked.filter(col("rank") <= k)
-    val hits = topk.join(rel, Seq("query_id", "neighbor_id"))
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("_h"), min(col("rank")).as("_fr"))
-    val nrel = rel.groupBy("query_id").agg(count(lit(1)).as("_nr"))
-    ranked.select("query_id").distinct()
+    val hit = col("_hit") && col("rank") <= k
+    flagged.groupBy("query_id")
+      .agg(count(when(hit, lit(1))).as("_h"), min(when(hit, col("rank"))).as("_fr"))
       .join(nrel, Seq("query_id"), "left")
-      .join(hits, Seq("query_id"), "left")
       .select(col("query_id"),
         coalesce(col("_nr"), lit(0L)).as("n_relevant"),
-        coalesce(col("_h"), lit(0L)).as("hits_at_k"),
+        col("_h").as("hits_at_k"),
         coalesce(expr("CAST(1000000 div _fr AS BIGINT)"), lit(0L)).as("mrr_e6"),
-        expr(s"CAST(coalesce(_h, 0L) * 1000000 div ${k}L AS BIGINT)")
-          .as("prec_at_k_ppm"))
+        expr(s"CAST(_h * 1000000 div ${k}L AS BIGINT)").as("prec_at_k_ppm"))
   }
 
-  /** The distinct relevance pairs `(query_id, neighbor_id)` of
-    * [[rankingMetrics]] and [[ndcgAtK]], materialized: both read it twice
-    * (the join against the ranked list and the per-query count), and
-    * materialized it is computed once and the joins against it plan
-    * with its real size.
+  /** `ranked`'s rows with `_hit = true` where `(query_id, neighbor_id)`
+    * is a relevance pair of `relevant` (null elsewhere), and each
+    * query's relevant count `(query_id, _nr)` — the two inputs of
+    * [[rankingMetrics]] and [[ndcgAtK]]. One left join keeps every
+    * ranked row, so the per-query aggregate over it covers every query
+    * id of `ranked` and `ranked` is read once. The distinct relevance
+    * pairs are materialized: they have two readers, and materialized
+    * the joins against them plan with their real size.
     */
-  private def relevanceSet(relevant: DataFrame): DataFrame =
-    Materialize.local(relevant
+  private def flagRelevant(ranked: DataFrame, relevant: DataFrame): (DataFrame, DataFrame) = {
+    val rel = Materialize.local(relevant
       .select(col("query_id"), col("doc_id").as("neighbor_id")).distinct())
+    (ranked.join(rel.withColumn("_hit", lit(true)), Seq("query_id", "neighbor_id"), "left"),
+      rel.groupBy("query_id").agg(count(lit(1)).as("_nr")))
+  }
 
   /** The ×10⁹-scaled DCG position weights 1/log₂(rank+1) for ranks
     * 1..k, computed ONCE on the driver and treated as literals — the
@@ -544,16 +546,11 @@ object Retrieval {
     val idcgCase = (1 to k).foldRight(lit(prefix.last): Column) { case (n, els) =>
       when(col("n_relevant") === n, lit(prefix(n - 1))).otherwise(els)
     }
-    val rel = relevanceSet(relevant)
-    val dcg = ranked.join(rel, Seq("query_id", "neighbor_id"))
-      .select(col("query_id"), wCase.as("_w"))
-      .groupBy("query_id").agg(sum(col("_w")).as("_dcg"))
-    val nrel = rel.groupBy("query_id").agg(count(lit(1)).as("n_relevant"))
-    ranked.select("query_id").distinct()
+    val (flagged, nrel) = flagRelevant(ranked, relevant)
+    flagged.groupBy("query_id").agg(sum(when(col("_hit"), wCase).otherwise(lit(0L))).as("_dcg"))
       .join(nrel, Seq("query_id"), "left")
-      .join(dcg, Seq("query_id"), "left")
       .select(col("query_id"),
-        coalesce(col("n_relevant"), lit(0L)).as("n_relevant"),
+        coalesce(col("_nr"), lit(0L)).as("n_relevant"),
         coalesce(col("_dcg"), lit(0L)).as("dcg_e9"))
       .withColumn("idcg_e9",
         when(col("n_relevant") === 0, lit(0L)).otherwise(idcgCase))

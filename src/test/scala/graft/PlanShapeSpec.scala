@@ -756,7 +756,7 @@ class PlanShapeSpec extends SparkSpec {
     val cand = Seq(("a", "b"), ("a", "c")).toDF("id_a", "id_b").localCheckpoint()
     val ids = Dedup.candidateIds(cand)
     assert(initial(ids).collect { case u: UnionExec => u }.isEmpty, initial(ids).toString)
-    assert(ids.select("_id").as[String].collect().sorted.toSeq == Seq("a", "a", "b", "c"))
+    assert(ids.as[String].collect().sorted.toSeq == Seq("a", "a", "b", "c"))
     // the prefix rows themselves: t = 0.5 keeps |x| − ⌈|x|/2⌉ + 1 = 2 of
     // each doc's 3 grams, rarest (df, hash) first; sizes and _new ride along
     assert(Dedup.prefixRows(grams, 500000L).as[(String, Long, Long, Boolean)]

@@ -261,6 +261,29 @@ class RetrievalSpec extends SparkSpec {
     assert(clamped == Retrieval.dcgWeightLiteralsE9(10).map(_._2).sum, clamped.toString)
   }
 
+  test("rankingMetrics and ndcgAtK read the ranked list once; ranks past k count for nothing") {
+    import org.apache.spark.sql.execution.RDDScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val ranked = Seq((0L, 10L, 1), (0L, 11L, 2), (0L, 12L, 3), (1L, 20L, 3))
+      .toDF("query_id", "neighbor_id", "rank").localCheckpoint()
+    val rel = Seq((0L, 12L), (1L, 20L), (1L, 21L)).toDF("query_id", "doc_id")
+    // k = 2: every relevant doc that ranks, ranks 3
+    val rm = Retrieval.rankingMetrics(ranked, rel, k = 2)
+    assert(rm.as[(Long, Long, Long, Long, Long)].collect().sorted.toSeq ==
+      Seq((0L, 1L, 0L, 0L, 0L), (1L, 2L, 0L, 0L, 0L)))
+    val nd = Retrieval.ndcgAtK(ranked, rel, k = 2)
+    assert(nd.select("query_id", "dcg_e9", "ndcg_e6").as[(Long, Long, Long)]
+      .collect().sorted.toSeq == Seq((0L, 0L, 0L), (1L, 0L, 0L)))
+    for (df <- Seq(rm, nd)) {
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      assert(plan.collect { case s: RDDScanExec if s.output.exists(_.name == "rank") => s }
+        .size == 1, plan.toString)
+    }
+  }
+
   test("dirichletTopK: e18 fixed-point QL likelihood, contract-model parity, semantics") {
     val docs = Seq(
       (1L, "a a b"),   // dl 3

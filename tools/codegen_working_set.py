@@ -2,8 +2,7 @@
 """Codegen cache working set of the er_ingest benchmark, per steady op.
 
     python3 tools/codegen_working_set.py --scratch <dir> [--rev <commit>]
-        [--seeds 2 3 4] [--exact-seed 2] [--seconds 12] [--max-entries N]
-        [--phases] [--json <file>]
+        [--seeds 2 3 4] [--exact-seed 2] [--max-entries N] [--phases]
 
 Run from the root of a checkout. The tool never edits the checkout:
 
@@ -18,9 +17,9 @@ Run from the root of a checkout. The tool never edits the checkout:
     logger and the markers to one file per run, each line prefixed with
     its thread's name.
  4. It runs `perfbench/run.py --workload er_ingest --trace 0` in the
-    copy: once per --seeds seed at the default cache (or at
-    --max-entries N, e.g. 0 for an unbounded cache, the ceiling probe),
-    and once at --exact-seed with a cache of one entry and DEBUG
+    copy for BENCHMARK.json's run_seconds: once per --seeds seed at the
+    default cache (or at --max-entries N, e.g. 0 for an unbounded cache,
+    the ceiling probe), and once at --exact-seed with a cache of one entry and DEBUG
     sources, where every lookup compiles and logs its source.
 
 It prints, per timed op (every timed op is steady: the store holds the
@@ -29,7 +28,7 @@ the cache-of-one run, the distinct (class loader, source) entries the
 op asks for, by class kind (with --phases, also by the materialization
 each entry is first asked for in). A compile on a thread named
 `Executor task launch ...` is the executor's loader; any other thread
-is the driver's. With --json the summary is also written as JSON.
+is the driver's.
 """
 import argparse
 import collections
@@ -121,9 +120,11 @@ def patch_phases(tree):
         f.write(src.replace(MATERIALIZE_START, MATERIALIZE_START + PHASE_MARKER, 1))
 
 
-def run(tree, log4j, log, seed, seconds, extra):
+def run(tree, log4j, log, seed, extra):
     if os.path.exists(log):
         os.remove(log)
+    with open(os.path.join(tree, "BENCHMARK.json")) as f:
+        seconds = json.load(f)["run_seconds"]
     opts = ["-Dlog4j2.configurationFile=" + log4j, "-Dcg.log=" + log] + extra
     env = dict(os.environ, JAVA_TOOL_OPTIONS=" ".join(opts))
     r = subprocess.run([sys.executable, "perfbench/run.py", "--workload", "er_ingest",
@@ -195,7 +196,6 @@ def main():
                     help="seeds of the default-cache runs")
     ap.add_argument("--exact-seed", type=int, default=2,
                     help="seed of the cache-of-one run (-1: skip it)")
-    ap.add_argument("--seconds", type=float, default=12)
     ap.add_argument("--max-entries", type=int, default=None,
                     help="spark.sql.codegen.cache.maxEntries for the --seeds runs "
                          "(0: unbounded; default: Spark's)")
@@ -204,7 +204,6 @@ def main():
                          "and split each op's entries by phase: a phase runs from one "
                          "materialization's start to the next (the last one also holds "
                          "the writes after it; '-' is what runs before the first)")
-    ap.add_argument("--json", default=None, help="also write the summary here")
     args = ap.parse_args()
 
     scratch = os.path.abspath(args.scratch)
@@ -218,62 +217,44 @@ def main():
         f.write(LOG4J2)
     print("measuring %s in %s" % (commit, tree), flush=True)
 
-    summary = {"commit": commit, "default_cache": {}, "exact": None}
+    totals = []
     probe = [] if args.max_entries is None else [
         "-Dspark.sql.codegen.cache.maxEntries=%d" % args.max_entries]
     for seed in args.seeds:
         log = os.path.join(scratch, "cg-s%d.log" % seed)
-        res = run(tree, log4j, log, seed, args.seconds, probe)
-        ops = parse(log)
-        per_op = [{"driver": o["compiles"]["driver"], "executor": o["compiles"]["executor"]}
-                  for o in ops.values()]
-        summary["default_cache"][seed] = {"ops": per_op, "correct": res["correct"],
-                                          "records_per_s": res["metrics"]["records_per_s"]["value"]}
+        res = run(tree, log4j, log, seed, probe)
+        per_op = [(o["compiles"]["driver"], o["compiles"]["executor"])
+                  for o in parse(log).values()]
+        totals += [d + e for d, e in per_op]
         print("seed %d%s: compiles per op (driver+executor) %s; correct=%s" % (
             seed, "" if not probe else " (maxEntries=%d)" % args.max_entries,
-            ", ".join("%d+%d" % (p["driver"], p["executor"]) for p in per_op),
-            res["correct"]), flush=True)
-    if args.seeds:
-        totals = [p["driver"] + p["executor"]
-                  for s in summary["default_cache"].values() for p in s["ops"]]
-        summary["median_compiles_per_op"] = statistics.median(totals) if totals else None
-        print("median compiles per steady op: %s" % summary["median_compiles_per_op"])
+            ", ".join("%d+%d" % p for p in per_op), res["correct"]), flush=True)
+    if totals:
+        print("median compiles per steady op: %s" % statistics.median(totals))
 
     if args.exact_seed >= 0:
         log = os.path.join(scratch, "cg-exact-s%d.log" % args.exact_seed)
-        res = run(tree, log4j, log, args.exact_seed, args.seconds,
-                  ["-Dcg.level=debug", "-Dspark.sql.codegen.cache.maxEntries=1"])
-        ops = parse(log)
-        exact = []
-        for i, o in ops.items():
+        run(tree, log4j, log, args.exact_seed,
+            ["-Dcg.level=debug", "-Dspark.sql.codegen.cache.maxEntries=1"])
+        for i, o in parse(log).items():
             first = {}  # (loader, source) -> the phase that first asks for it
             for ld, src, ph in o["sources"]:
                 first.setdefault((ld, src), ph)
             by_kind = collections.Counter((ld, kind(src)) for ld, src in first)
-            row = {"op": i, "entries": len(first),
-                   "driver": sum(1 for ld, _ in first if ld == "driver"),
-                   "executor": sum(1 for ld, _ in first if ld == "executor"),
-                   "sources": len({src for _, src in first}),
-                   "by_kind": {"%s/%s" % k: n for k, n in sorted(by_kind.items())}}
             print("seed %d, cache of 1, op %d: %d entries (%d driver, %d executor) from %d "
-                  "sources" % (args.exact_seed, i, row["entries"], row["driver"],
-                               row["executor"], row["sources"]))
+                  "sources" % (args.exact_seed, i, len(first),
+                               sum(1 for ld, _ in first if ld == "driver"),
+                               sum(1 for ld, _ in first if ld == "executor"),
+                               len({src for _, src in first})))
             for k, n in sorted(by_kind.items()):
                 print("    %-9s %-28s %3d" % (k[0], k[1], n))
             if args.phases:
                 by_phase = collections.OrderedDict()
                 for (ld, src), ph in first.items():
                     by_phase.setdefault(ph, collections.Counter())[(ld, kind(src))] += 1
-                row["by_phase"] = {ph: {"%s/%s" % k: n for k, n in sorted(c.items())}
-                                   for ph, c in by_phase.items()}
                 for ph, c in by_phase.items():
                     print("  in %-44s %3d  %s" % (ph, sum(c.values()), ", ".join(
                         "%s %s %d" % (k[0][0], k[1], n) for k, n in sorted(c.items()))))
-            exact.append(row)
-        summary["exact"] = {"seed": args.exact_seed, "ops": exact, "correct": res["correct"]}
-    if args.json:
-        with open(args.json, "w") as f:
-            json.dump(summary, f, indent=1)
 
 
 if __name__ == "__main__":
