@@ -1380,8 +1380,8 @@ object StreamingOps {
     * against small intermediates plan as broadcasts from the start.
     * Measured at 100 docs a batch against a growing store (local[4],
     * adaptive execution, so every shuffle stage is a job of its own):
-    * 28 Spark jobs per steady-state batch, which ask Spark's codegen
-    * cache (100 entries by default, in four segments of 25) for 81
+    * 30 Spark jobs per steady-state batch, which ask Spark's codegen
+    * cache (100 entries by default, in four segments of 25) for 84
     * distinct generated classes, counting each class once per class
     * loader that compiles it (`tools/codegen_working_set.py`); each
     * entry a batch asks for beyond what its cache segment holds is a
